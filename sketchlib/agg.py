@@ -52,6 +52,16 @@ _COUNT_FIELDS = [
 
 VALUE_KINDS = ("tokens", "int64", "int32", "double", "string")
 
+# Arrow and Spark type of ONE value of each kind, for operators that emit or
+# probe raw values (CMS heavy hitters / point estimates, Bloom membership);
+# "double" values only feed quantile sketches, which never emit them.
+_VALUE_TYPES = {
+    "tokens": (pa.int32(), T.IntegerType()),
+    "int32": (pa.int32(), T.IntegerType()),
+    "int64": (pa.int64(), T.LongType()),
+    "string": (pa.string(), T.StringType()),
+}
+
 
 _NAN_KEY = object()  # sentinel: one group for all float-NaN key values
 
@@ -790,7 +800,55 @@ class SketchAggregator:
         return merged.mapInPandas(expand, schema)
 
 
-class HllAggregator(SketchAggregator):
+class _DistinctAggregator(SketchAggregator):
+    """Aggregators finalized to one distinct-count estimate per key;
+    subclasses define ``estimate_udf``."""
+
+    def estimate_udf(self) -> Callable:
+        raise NotImplementedError
+
+    def estimates(
+        self,
+        source: DataFrame | str,
+        salt: int | None = None,
+        *,
+        is_partials: bool = False,
+        spark=None,
+    ) -> DataFrame:
+        """key cols + ``est_distinct`` (+ n_rows/n_items rollups)."""
+        merged = self.merged(source, salt=salt, is_partials=is_partials, spark=spark)
+        return merged.select(
+            *self.key_cols,
+            self.estimate_udf()(F.col("sketch")).alias("est_distinct"),
+            "n_rows",
+            "n_items",
+        )
+
+
+class _QuantileAggregator(SketchAggregator):
+    """Aggregators finalized to per-key quantiles; ``_sketch_cls`` is the
+    sketch class whose ``from_bytes``/``quantiles`` answer them."""
+
+    _sketch_cls: type
+
+    def quantiles(
+        self, source, qs, *, salt: int | None = None, spark=None
+    ) -> DataFrame:
+        qs = [float(q) for q in qs]
+        sketch_cls = self._sketch_cls
+
+        def row_fn(blob: bytes) -> pd.DataFrame:
+            s = sketch_cls.from_bytes(blob)
+            return pd.DataFrame({"q": qs, "value": s.quantiles(qs)})
+
+        fields = [
+            T.StructField("q", T.DoubleType(), False),
+            T.StructField("value", T.DoubleType(), False),
+        ]
+        return self.finalize_rows(self.merged(source, salt=salt, spark=spark), row_fn, fields)
+
+
+class HllAggregator(_DistinctAggregator):
     """Distributed HyperLogLog distinct-count over any key grouping."""
 
     def __init__(
@@ -931,23 +989,6 @@ class HllAggregator(SketchAggregator):
 
         return est
 
-    def estimates(
-        self,
-        source: DataFrame | str,
-        salt: int | None = None,
-        *,
-        is_partials: bool = False,
-        spark=None,
-    ) -> DataFrame:
-        """key cols + ``est_distinct`` (+ n_rows/n_items rollups)."""
-        merged = self.merged(source, salt=salt, is_partials=is_partials, spark=spark)
-        return merged.select(
-            *self.key_cols,
-            self.estimate_udf()(F.col("sketch")).alias("est_distinct"),
-            "n_rows",
-            "n_items",
-        )
-
 
 class CmsAggregator(SketchAggregator):
     """Distributed count-min: frequency point queries / heavy hitters.
@@ -1037,18 +1078,7 @@ class CmsAggregator(SketchAggregator):
             df = source
         key_cols, value_col, kind = self.key_cols, self.value_col, self.value_kind
 
-        arrow_type = {
-            "tokens": pa.int32(),
-            "int32": pa.int32(),
-            "int64": pa.int64(),
-            "string": pa.string(),
-        }[kind]
-        value_field = {
-            "tokens": T.IntegerType(),
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-        }[kind]
+        arrow_type, value_field = _VALUE_TYPES[kind]
         by_name = {f.name: f for f in df.schema.fields}
         cand_schema = T.StructType(
             [by_name[k] for k in key_cols] + [T.StructField("value", value_field, False)]
@@ -1209,12 +1239,7 @@ class CmsAggregator(SketchAggregator):
         probes_arr = (
             list(probes) if kind == "string" else np.asarray(probes)
         )
-        probe_field = {
-            "tokens": T.IntegerType(),
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-        }[kind]
+        probe_field = _VALUE_TYPES[kind][1]
 
         def row_fn(blob: bytes) -> pd.DataFrame:
             s = CountMinSketch.from_bytes(blob)
@@ -1259,12 +1284,7 @@ class BloomAggregator(SketchAggregator):
         """key cols + (value, present) for each probe value."""
         kind = self.value_kind
         probes_arr = list(probes) if kind == "string" else np.asarray(probes)
-        probe_field = {
-            "tokens": T.IntegerType(),
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-        }[kind]
+        probe_field = _VALUE_TYPES[kind][1]
 
         def row_fn(blob: bytes) -> pd.DataFrame:
             s = BloomFilter.from_bytes(blob)
@@ -1299,8 +1319,10 @@ class BloomAggregator(SketchAggregator):
         return make
 
 
-class KllAggregator(SketchAggregator):
+class KllAggregator(_QuantileAggregator):
     """Distributed KLL: rank/quantile queries over numeric columns."""
+
+    _sketch_cls = KllSketch
 
     def __init__(
         self,
@@ -1323,23 +1345,8 @@ class KllAggregator(SketchAggregator):
     def _merge_blobs(self, blobs) -> KllSketch:
         return KllSketch.merge_blobs(blobs, self.k, self.seed)
 
-    def quantiles(
-        self, source, qs, *, salt: int | None = None, spark=None
-    ) -> DataFrame:
-        qs = [float(q) for q in qs]
 
-        def row_fn(blob: bytes) -> pd.DataFrame:
-            s = KllSketch.from_bytes(blob)
-            return pd.DataFrame({"q": qs, "value": s.quantiles(qs)})
-
-        fields = [
-            T.StructField("q", T.DoubleType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-        return self.finalize_rows(self.merged(source, salt=salt, spark=spark), row_fn, fields)
-
-
-class KmvAggregator(SketchAggregator):
+class KmvAggregator(_DistinctAggregator):
     """Distributed KMV/theta sketch: distinct counts with native set
     intersection/Jaccard (no inclusion–exclusion), order-exact merge."""
 
@@ -1372,22 +1379,6 @@ class KmvAggregator(SketchAggregator):
             ).astype("int64")
 
         return est
-
-    def estimates(
-        self,
-        source: DataFrame | str,
-        salt: int | None = None,
-        *,
-        is_partials: bool = False,
-        spark=None,
-    ) -> DataFrame:
-        merged = self.merged(source, salt=salt, is_partials=is_partials, spark=spark)
-        return merged.select(
-            *self.key_cols,
-            self.estimate_udf()(F.col("sketch")).alias("est_distinct"),
-            "n_rows",
-            "n_items",
-        )
 
 
 class ProfileAggregator(SketchAggregator):
@@ -1492,8 +1483,10 @@ class ProfileAggregator(SketchAggregator):
         return out
 
 
-class TDigestAggregator(SketchAggregator):
+class TDigestAggregator(_QuantileAggregator):
     """Distributed t-digest: quantile/CDF queries, tight at the tails."""
+
+    _sketch_cls = TDigest
 
     def __init__(
         self,
@@ -1514,21 +1507,6 @@ class TDigestAggregator(SketchAggregator):
 
     def _merge_blobs(self, blobs) -> TDigest:
         return TDigest.merge_blobs(blobs, self.delta)
-
-    def quantiles(
-        self, source, qs, *, salt: int | None = None, spark=None
-    ) -> DataFrame:
-        qs = [float(q) for q in qs]
-
-        def row_fn(blob: bytes) -> pd.DataFrame:
-            s = TDigest.from_bytes(blob)
-            return pd.DataFrame({"q": qs, "value": s.quantiles(qs)})
-
-        fields = [
-            T.StructField("q", T.DoubleType(), False),
-            T.StructField("value", T.DoubleType(), False),
-        ]
-        return self.finalize_rows(self.merged(source, salt=salt, spark=spark), row_fn, fields)
 
 
 class FiAggregator(SketchAggregator):

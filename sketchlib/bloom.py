@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_BLOOM, pack_header, unpack_header
+from .codec import KIND_BLOOM, PayloadReader, pack_header, unpack_header
 from .cms import _H2_SEED_XOR
 from .kernels import (
     DEFAULT_SEED,
@@ -133,18 +133,17 @@ class BloomFilter:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "BloomFilter":
         m_log2, seed, payload = unpack_header(blob, KIND_BLOOM)
-        (kfield,) = struct.unpack_from("<H", payload, 0)
+        r = PayloadReader(payload)
+        (kfield,) = r.unpack("<H")
         k = kfield & ~cls._SPARSE_FLAG
         if kfield & cls._SPARSE_FLAG:
-            (nnz,) = struct.unpack_from("<I", payload, 2)
-            idx = np.frombuffer(payload, dtype=np.uint64, count=nnz, offset=6)
+            (nnz,) = r.unpack("<I")
+            idx = r.array(np.uint64, nnz)
             bits = np.zeros(1 << m_log2, dtype=bool)
             bits[idx.astype(np.int64)] = True
         else:
-            packed = np.frombuffer(
-                payload, dtype=np.uint8, offset=2, count=(1 << m_log2) // 8
-            )
-            bits = np.unpackbits(packed).astype(bool)
+            bits = np.unpackbits(r.array(np.uint8, (1 << m_log2) // 8)).astype(bool)
+        r.end()
         return cls(m_log2=m_log2, k=k, seed=seed, bits=bits)
 
     @staticmethod

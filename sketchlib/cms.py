@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_CMS, pack_header, unpack_header
+from .codec import KIND_CMS, PayloadReader, pack_header, unpack_header
 from .kernels import (
     DEFAULT_SEED,
     murmur64a_int32,
@@ -210,22 +210,20 @@ class CountMinSketch:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CountMinSketch":
         width_log2, seed, payload = unpack_header(blob, KIND_CMS)
-        (dfield,) = struct.unpack_from("<H", payload, 0)
+        r = PayloadReader(payload)
+        (dfield,) = r.unpack("<H")
         depth = dfield & ~cls._SPARSE_FLAG
         n_cells = depth * (1 << width_log2)
         if dfield & cls._SPARSE_FLAG:
-            (nnz,) = struct.unpack_from("<I", payload, 2)
-            idx = np.frombuffer(payload, dtype=np.uint64, count=nnz, offset=6)
-            vals = np.frombuffer(payload, dtype=np.uint64, count=nnz, offset=6 + 8 * nnz)
+            (nnz,) = r.unpack("<I")
+            idx = r.array(np.uint64, nnz)
+            vals = r.array(np.uint64, nnz)
             flat = np.zeros(n_cells, dtype=np.uint64)
             flat[idx.astype(np.int64)] = vals
             counters = flat.reshape(depth, 1 << width_log2)
         else:
-            counters = (
-                np.frombuffer(payload, dtype=np.uint64, count=n_cells, offset=2)
-                .reshape(depth, 1 << width_log2)
-                .copy()
-            )
+            counters = r.array(np.uint64, n_cells).reshape(depth, 1 << width_log2).copy()
+        r.end()
         return cls(width_log2=width_log2, depth=depth, seed=seed, counters=counters)
 
     @staticmethod
@@ -243,16 +241,16 @@ class CountMinSketch:
                 continue
             b = bytes(b)
             b_width, b_seed, payload = unpack_header(b, KIND_CMS)
-            (dfield,) = struct.unpack_from("<H", payload, 0)
+            r = PayloadReader(payload)
+            (dfield,) = r.unpack("<H")
             b_depth = dfield & ~CountMinSketch._SPARSE_FLAG
             if (b_width, b_depth, b_seed) != (width_log2, depth, seed):
                 raise ValueError("cannot merge count-min sketches with different configs")
             if dfield & CountMinSketch._SPARSE_FLAG:
-                (nnz,) = struct.unpack_from("<I", payload, 2)
-                idx = np.frombuffer(payload, dtype=np.uint64, count=nnz, offset=6)
-                vals = np.frombuffer(
-                    payload, dtype=np.uint64, count=nnz, offset=6 + 8 * nnz
-                )
+                (nnz,) = r.unpack("<I")
+                idx = r.array(np.uint64, nnz)
+                vals = r.array(np.uint64, nnz)
+                r.end()
                 np.add.at(flat, idx.astype(np.int64), vals)
             else:
                 out.merge(CountMinSketch.from_bytes(b))

@@ -8,11 +8,17 @@ Every sketch serializes to a BinaryType cell as::
 This replaces the reference's pickle protocol (src/hll.c:826-985) with an
 explicit, versioned, language-agnostic layout suitable for checkpoint tables
 (SURVEY.md §3.4). Derivable state (histograms, caches) is never persisted.
+
+Decoders read the payload through ``PayloadReader``, so every blob must be
+exactly as long as its own fields say: a truncated or over-long blob raises
+``ValueError`` instead of decoding garbage.
 """
 
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 MAGIC = 0x534B4C53  # "SKLS"
 VERSION = 1
@@ -46,3 +52,47 @@ def unpack_header(blob: bytes, expect_kind: int) -> tuple[int, int, bytes]:
     if kind != expect_kind:
         raise ValueError(f"kind mismatch: blob has {kind}, expected {expect_kind}")
     return p, seed, blob[HEADER_LEN:]
+
+
+class PayloadReader:
+    """Cursor over a sketch payload that enforces the exact-length rule.
+
+    Every read raises ``ValueError`` when the payload is too short for it,
+    and ``end()`` raises when bytes are left over once the decoder has read
+    every field."""
+
+    def __init__(self, payload: bytes):
+        self._buf = payload
+        self._off = 0
+
+    def _advance(self, n: int) -> int:
+        start = self._off
+        if n < 0 or start + n > len(self._buf):
+            raise ValueError(
+                f"truncated sketch payload: field of {n} bytes at offset {start}, "
+                f"payload is {len(self._buf)} bytes"
+            )
+        self._off = start + n
+        return start
+
+    def unpack(self, fmt: str) -> tuple:
+        """struct-unpack the next ``struct.calcsize(fmt)`` bytes."""
+        return struct.unpack_from(fmt, self._buf, self._advance(struct.calcsize(fmt)))
+
+    def array(self, dtype, count: int) -> np.ndarray:
+        """Read-only view of the next ``count`` items of ``dtype``."""
+        dtype = np.dtype(dtype)
+        start = self._advance(dtype.itemsize * int(count))
+        return np.frombuffer(self._buf, dtype=dtype, count=int(count), offset=start)
+
+    def raw(self, n: int) -> bytes:
+        """The next ``n`` bytes."""
+        start = self._advance(int(n))
+        return self._buf[start : self._off]
+
+    def end(self) -> None:
+        """Raise unless the whole payload has been read."""
+        if self._off != len(self._buf):
+            raise ValueError(
+                f"{len(self._buf) - self._off} trailing bytes after sketch payload"
+            )

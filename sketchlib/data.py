@@ -39,10 +39,8 @@ ROWS_BY_SF = {"sf0.001": 2_000, "sf0.01": 20_000, "sf0.1": 200_000}
 # load_table's unconditional input-skew rescue floor (see load_table):
 # a SINGLE-row-group file at least this large forces one task to stream
 # the whole decode+compute pipeline alone — repartition right after the
-# read no matter who the consumer is. Override via env for unusual hosts.
-_AUTO_RESCUE_BYTES = int(
-    os.environ.get("SKETCHLIB_AUTO_RESCUE_BYTES", str(16 << 20))
-)
+# read no matter who the consumer is.
+_AUTO_RESCUE_BYTES = 16 << 20
 
 
 def rows_for_sf_dir(sf_dir: str, default: int = 20_000) -> int:

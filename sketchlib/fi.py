@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_FI, pack_header, unpack_header
+from .codec import KIND_FI, PayloadReader, pack_header, unpack_header
 
 _MODE_INT64 = 1
 _MODE_STRING = 2
@@ -268,17 +268,15 @@ class FrequentItemsSketch:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "FrequentItemsSketch":
         mode, _seed, payload = unpack_header(blob, KIND_FI)
-        capacity, n, error, total = struct.unpack_from("<IIqq", payload, 0)
-        off = struct.calcsize("<IIqq")
-        counts = np.frombuffer(payload, dtype=np.int64, count=n, offset=off).copy()
-        off += 8 * n
+        r = PayloadReader(payload)
+        capacity, n, error, total = r.unpack("<IIqq")
+        counts = r.array(np.int64, n).copy()
         if mode == _MODE_INT64:
-            items = np.frombuffer(payload, dtype=np.int64, count=n, offset=off).copy()
+            items = r.array(np.int64, n).copy()
             kind = "int64"
         elif mode == _MODE_STRING:
-            offs = np.frombuffer(payload, dtype=np.uint32, count=n + 1, offset=off)
-            off += 4 * (n + 1)
-            raw = payload[off : off + int(offs[-1])]
+            offs = r.array(np.uint32, n + 1)
+            raw = r.raw(offs[-1])
             items = np.array(
                 [raw[offs[i] : offs[i + 1]].decode("utf-8") for i in range(n)],
                 dtype=object,
@@ -286,6 +284,7 @@ class FrequentItemsSketch:
             kind = "string"
         else:
             raise ValueError(f"unknown frequent-items mode {mode}")
+        r.end()
         return cls(
             capacity=capacity,
             item_kind=kind,

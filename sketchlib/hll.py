@@ -37,7 +37,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import HEADER_LEN, KIND_HLL, pack_header, unpack_header
+from .codec import HEADER_LEN, KIND_HLL, PayloadReader, pack_header, unpack_header
 from .kernels import (
     DEFAULT_SEED,
     hll_index_rank,
@@ -604,44 +604,47 @@ class HllSketch:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "HllSketch":
         p, seed, payload = unpack_header(blob, KIND_HLL)
-        mode, payload = payload[0], payload[1:]
+        r = PayloadReader(payload)
+        (mode,) = r.unpack("<B")
         if mode == 3 or p > DENSE_MAX_P:
             out = cls.empty(p, seed)
             if mode == 3:
-                (n,) = struct.unpack_from("<Q", payload, 0)
-                idx = np.frombuffer(payload, dtype=np.int64, count=n, offset=8)
-                ranks = np.frombuffer(payload, dtype=np.uint8, count=n, offset=8 + 8 * n)
+                (n,) = r.unpack("<Q")
+                idx = r.array(np.int64, n)
+                ranks = r.array(np.uint8, n)
             elif mode == 1:  # defensive: u32-index sparse blob at sparse-repr p
-                (n,) = struct.unpack_from("<I", payload, 0)
-                idx = np.frombuffer(payload, dtype=np.uint32, count=n, offset=4).astype(np.int64)
-                ranks = np.frombuffer(payload, dtype=np.uint8, count=n, offset=4 + 4 * n)
+                (n,) = r.unpack("<I")
+                idx = r.array(np.uint32, n).astype(np.int64)
+                ranks = r.array(np.uint8, n)
             else:
                 raise ValueError(
                     f"dense HLL encoding {mode} is invalid at sparse-only p={p}"
                 )
+            r.end()
             if out.is_sparse:
                 out._sparse_update(idx, ranks)
             else:  # mode-3 blob at dense-representable p
                 update_registers(out.registers, idx.astype(np.int64), ranks)
             return out
         if mode == 0:
-            regs = np.frombuffer(payload, dtype=np.uint8, count=1 << p).copy()
+            regs = r.array(np.uint8, 1 << p).copy()
         elif mode == 1:
-            (n,) = struct.unpack_from("<I", payload, 0)
-            idx = np.frombuffer(payload, dtype=np.uint32, count=n, offset=4)
-            ranks = np.frombuffer(payload, dtype=np.uint8, count=n, offset=4 + 4 * n)
+            (n,) = r.unpack("<I")
+            idx = r.array(np.uint32, n)
+            ranks = r.array(np.uint8, n)
             regs = np.zeros(1 << p, dtype=np.uint8)
             regs[idx.astype(np.int64)] = ranks
         elif mode == 2:
             m = 1 << p
             bits = np.unpackbits(
-                np.frombuffer(payload, dtype=np.uint8), bitorder="little"
+                r.array(np.uint8, (6 * m + 7) // 8), bitorder="little"
             )[: 6 * m].reshape(m, 6)
             regs = np.packbits(
                 np.pad(bits, ((0, 0), (0, 2))), axis=1, bitorder="little"
             ).reshape(m)
         else:
             raise ValueError(f"unknown HLL register encoding {mode}")
+        r.end()
         return cls(p=p, seed=seed, registers=regs)
 
     @staticmethod

@@ -29,7 +29,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_KLL, pack_header, unpack_header
+from .codec import KIND_KLL, PayloadReader, pack_header, unpack_header
 from .kernels import murmur64a_int64
 
 _C = 2.0 / 3.0
@@ -204,14 +204,11 @@ class KllSketch:
                 f"unsupported KLL blob layout v{layout_v} (expected v{cls._LAYOUT_V}; "
                 f"v0 blobs carry a serialized compaction counter this version dropped)"
             )
-        k, n, min_v, max_v, n_levels = struct.unpack_from("<HQddI", payload, 0)
-        off = struct.calcsize("<HQddI")
-        lens = struct.unpack_from(f"<{n_levels}I", payload, off)
-        off += 4 * n_levels
-        levels = []
-        for ln in lens:
-            levels.append(np.frombuffer(payload, dtype=np.float64, count=ln, offset=off).copy())
-            off += 8 * ln
+        r = PayloadReader(payload)
+        k, n, min_v, max_v, n_levels = r.unpack("<HQddI")
+        lens = r.array(np.uint32, n_levels)
+        levels = [r.array(np.float64, ln).copy() for ln in lens]
+        r.end()
         return cls(k=k, seed=seed, levels=levels, n=n, min_v=min_v, max_v=max_v)
 
     @staticmethod

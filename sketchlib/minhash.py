@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import pack_header, unpack_header
+from .codec import PayloadReader, pack_header, unpack_header
 from .kernels import DEFAULT_SEED, murmur64a_int64
 
 KIND_MINHASH = 6
@@ -198,8 +198,10 @@ class MinHashSketch:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "MinHashSketch":
         _, seed, payload = unpack_header(blob, KIND_MINHASH)
-        (k,) = struct.unpack_from("<I", payload, 0)
-        sig = np.frombuffer(payload, dtype=np.uint64, count=k, offset=4).copy()
+        r = PayloadReader(payload)
+        (k,) = r.unpack("<I")
+        sig = r.array(np.uint64, k).copy()
+        r.end()
         return cls(k=k, seed=seed, sig=sig)
 
 

@@ -19,7 +19,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .codec import KIND_PROFILE, pack_header, unpack_header
+from .codec import KIND_PROFILE, PayloadReader, pack_header, unpack_header
 from .hll import HllSketch
 from .kernels import DEFAULT_SEED
 from .kll import KllSketch
@@ -75,10 +75,11 @@ class ProfileSketch:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "ProfileSketch":
         _, _, payload = unpack_header(blob, KIND_PROFILE)
-        lh, lk = struct.unpack_from("<II", payload, 0)
-        off = 8
-        hll = HllSketch.from_bytes(payload[off : off + lh])
-        kll = KllSketch.from_bytes(payload[off + lh : off + lh + lk])
+        r = PayloadReader(payload)
+        lh, lk = r.unpack("<II")
+        hll = HllSketch.from_bytes(r.raw(lh))
+        kll = KllSketch.from_bytes(r.raw(lk))
+        r.end()
         return cls(hll=hll, kll=kll)
 
     @staticmethod

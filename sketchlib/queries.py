@@ -8,17 +8,33 @@ oracles. Column aliases here are load-bearing: they must match the oracle SQL.
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .agg import HllAggregator
+from .agg import (
+    BloomAggregator,
+    CmsAggregator,
+    FiAggregator,
+    HllAggregator,
+    KllAggregator,
+    KmvAggregator,
+    ProfileAggregator,
+    TDigestAggregator,
+)
+from .cms import CountMinSketch
 from .data import load_table, rows_for_sf_dir, sequences_parquet
+from .fi import FrequentItemsSketch
 from .hll import HllSketch
 from .io import scratch_dir as _scratch_dir
+from .kmv import KmvSketch
+from .session import release
 
 DEFAULT_P = 14
 
@@ -36,6 +52,147 @@ def _overlap(*thunks):
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
         futs = [ex.submit(t) for t in thunks]
         return [f.result() for f in futs]
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the block, restoring the old value after."""
+    before = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _utc_session(spark: SparkSession):
+    """Pin the session time zone to UTC for the block: window() aligns
+    1-day windows on UTC epoch boundaries while date_trunc('day') and
+    date_format follow the session TZ — they only agree (and match the
+    TZ-free DuckDB oracle) under UTC."""
+    return _session_conf(spark, "spark.sql.session.timeZone", "UTC")
+
+
+def _streaming_conf(spark: SparkSession, shuffle_partitions: str = "4"):
+    """Pin shuffle partitions low for the stateful streaming queries: every
+    micro-batch pays a state-store commit + shuffle task PER PARTITION, and
+    the keyed state here is a few hundred rows — 32 partitions is pure
+    overhead at test scale (measured: 4 beats 8 beats 32 on every streaming
+    query). On a real cluster the session value (sized to executors)
+    applies as usual; this only scopes the toy-SF driver queries.
+    """
+    return _session_conf(spark, "spark.sql.shuffle.partitions", shuffle_partitions)
+
+
+def _within_3sigma(est, exact, p: int):
+    """The HLL error law every distinct-count estimate is checked against:
+    |est/exact - 1| <= 3 * 1.04/sqrt(2^p). A boolean Column for Column
+    operands, a bool for Python numbers."""
+    bound = 3.0 * HllSketch.std_error(p)
+    rel = est / exact - 1.0
+    if isinstance(rel, Column):
+        return F.abs(rel) <= F.lit(bound)
+    return bool(abs(rel) <= bound)
+
+
+def _rank_accuracy(
+    spark: SparkSession, table: DataFrame, est_df: DataFrame, value_col: str, tol: float
+) -> DataFrame:
+    """Exact rank of each estimated quantile (``est_df`` rows of q, value)
+    within ``table[value_col]``, asserted within ``tol`` of q — the
+    oracle-checkable statement about an approximate quantile."""
+    # the row count and the sketch build are independent — overlap (§2.6)
+    n, est_rows = _overlap(table.count, est_df.collect)
+    ranks = table.agg(
+        *[
+            (F.sum((F.col(value_col) <= F.lit(r["value"])).cast("long")) / F.lit(n)).alias(f"r{i}")
+            for i, r in enumerate(est_rows)
+        ]
+    ).collect()[0]
+    rows = [
+        (float(r["q"]), bool(abs(ranks[f"r{i}"] - r["q"]) <= tol)) for i, r in enumerate(est_rows)
+    ]
+    return spark.createDataFrame(rows, "q double, within_bound boolean").orderBy("q")
+
+
+def _source_topk_probes(spark: SparkSession, sf_dir: str, agg, k: int, probe, **per_source):
+    """Each source's exact top-k tokens (ties on (count desc, token asc);
+    reproduces in SQL) scored against that source's merged sketch.
+
+    The sketch build and the exact top-k scan are independent — overlapped
+    (guide §2.6) — and the k x #sources exact rows re-enter the plan as
+    literals, so the explode+window scan runs exactly once. Probe tokens are
+    grouped per source BEFORE the sketch join: one blob copy and one decode
+    per source (the per-row variant replicated the merged blob through the
+    join and decoded it once per token). ``probe(blob, tokens)`` returns one
+    estimate per token; each ``per_source`` column is evaluated once per
+    joined (source, sketch, n_items) row. Returns ``(merged, scored)`` with
+    scored rows of (source, n_items, *per_source, token, exact_cnt, est).
+    """
+    w = Window.partitionBy("source").orderBy(F.desc("exact_cnt"), F.asc("token"))
+    exact_top_plan = (
+        sequences_for(spark, sf_dir)
+        .select("source", F.explode("tokens").alias("token"))
+        .groupBy("source", "token")
+        .agg(F.count("*").alias("exact_cnt"))
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .drop("rk")
+    )
+    path = sequences_path(spark, sf_dir)
+    merged, exact_rows = _overlap(
+        lambda: agg.merged(path, spark=spark).localCheckpoint(eager=True),
+        exact_top_plan.collect,
+    )
+    exact_top = spark.createDataFrame(
+        [(r["source"], int(r["token"]), int(r["exact_cnt"])) for r in exact_rows],
+        "source string, token int, exact_cnt long",
+    )
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def probe_udf(blobs: pd.Series, tok_lists: pd.Series) -> pd.Series:
+        return pd.Series(
+            [[int(x) for x in probe(bytes(b), toks)] for b, toks in zip(blobs, tok_lists)]
+        )
+
+    grouped = exact_top.groupBy("source").agg(
+        F.collect_list("token").alias("toks"),
+        F.collect_list("exact_cnt").alias("cnts"),
+    )
+    joined = (
+        grouped.join(merged.select("source", "sketch", "n_items"), "source")
+        .withColumn("ests", probe_udf(F.col("sketch"), F.col("toks")))
+        .withColumns(per_source)
+    )
+    scored = joined.select(
+        "source", "n_items", *per_source, F.explode(F.arrays_zip("toks", "cnts", "ests")).alias("z")
+    ).select(
+        "source",
+        "n_items",
+        *per_source,
+        F.col("z.toks").alias("token"),
+        F.col("z.cnts").alias("exact_cnt"),
+        F.col("z.ests").alias("est"),
+    )
+    return merged, scored
+
+
+def _es_key() -> Column:
+    """Efraimidis–Spirakis A-Res sampling key u^(1/weight), weight = n_tok:
+    each doc draws u in (0,1] DETERMINISTICALLY from md5(doc_id) (no RNG
+    state — reruns, resumes, and any partitioning pick the identical
+    sample), and the top keys ARE a weighted sample without replacement.
+
+    15 hex chars = 60 bits: add 1 in INT64 first, THEN round to double —
+    double(v)+1.0 and double(v+1) differ for ~2.6% of 60-bit values, so the
+    integer-domain add is what makes the oracle's (v+1)::DOUBLE arithmetic
+    bit-identical in both engines."""
+    u = (
+        (F.conv(F.substring(F.md5("doc_id"), 1, 15), 16, 10).cast("long") + F.lit(1)).cast(
+            "double"
+        )
+    ) / F.lit(float(1 << 60))
+    return F.pow(u, F.lit(1.0) / F.greatest(F.col("n_tok"), F.lit(1)).cast("double"))
 
 
 def sequences_path(spark: SparkSession, sf_dir: str) -> str:
@@ -61,42 +218,29 @@ def hll_tokens_per_source(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) 
     return agg.estimates(sequences_path(spark, sf_dir), spark=spark).orderBy("source")
 
 
-def hll_tokens_global(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Approximate distinct tokens over the whole table (keyless rollup)."""
-    agg = HllAggregator(p=p, key_cols=[], value_col="tokens", value_kind="tokens")
-    return agg.estimates(sequences_path(spark, sf_dir), salt=8, spark=spark)
-
-
-def exact_distinct_tokens_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact oracle companion of hll_tokens_per_source (small scales only —
-
-    this explodes every token; the thing the sketch exists to avoid)."""
-    seqs = sequences_for(spark, sf_dir)
-    return (
-        seqs.select("source", F.explode("tokens").alias("tok"))
-        .groupBy("source")
-        .agg(F.countDistinct("tok").alias("distinct_tokens"))
-        .orderBy("source")
-    )
-
-
 def hll_tokens_accuracy(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
     """Per-source sketch estimate vs exact, with the published-bound check.
 
     within_3sigma asserts |est/exact - 1| <= 3 * 1.04/sqrt(2^p): an
-    SQL-expressible correctness statement about an approximate result.
+    SQL-expressible correctness statement about an approximate result. The
+    exact companion explodes every token — the thing the sketch exists to
+    avoid — so it is an oracle-scale check only.
     """
     est = hll_tokens_per_source(spark, sf_dir, p).select("source", "est_distinct")
-    exact = exact_distinct_tokens_per_source(spark, sf_dir)
-    bound = 3.0 * HllSketch.std_error(p)
+    exact = (
+        sequences_for(spark, sf_dir)
+        .select("source", F.explode("tokens").alias("tok"))
+        .groupBy("source")
+        .agg(F.countDistinct("tok").alias("distinct_tokens"))
+    )
     return (
         exact.join(est, "source")
         .select(
             "source",
             "distinct_tokens",
-            (
-                F.abs(F.col("est_distinct") / F.col("distinct_tokens") - 1.0) <= F.lit(bound)
-            ).alias("within_3sigma"),
+            _within_3sigma(F.col("est_distinct"), F.col("distinct_tokens"), p).alias(
+                "within_3sigma"
+            ),
         )
         .orderBy("source")
     )
@@ -105,81 +249,29 @@ def hll_tokens_accuracy(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) ->
 # ---- HLL over driver-provided tables -----------------------------------------
 
 
-def hll_users_per_event_type(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Approximate distinct user_id per event_type (int64 keys)."""
-    events = load_table(spark, sf_dir, "events")
-    agg = HllAggregator(p=p, key_cols=["event_type"], value_col="user_id", value_kind="int64")
-    return agg.estimates(events).orderBy("event_type")
-
-
-def hll_users_accuracy(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Estimate-vs-exact bound check on the events table (oracle-checkable)."""
-    events = load_table(spark, sf_dir, "events")
-    exact = (
-        events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("exact_users"))
-    )
-    est = hll_users_per_event_type(spark, sf_dir, p).select("event_type", "est_distinct")
-    bound = 3.0 * HllSketch.std_error(p)
-    return (
-        exact.join(est, "event_type")
-        .select(
-            "event_type",
-            "exact_users",
-            (F.abs(F.col("est_distinct") / F.col("exact_users") - 1.0) <= F.lit(bound)).alias(
-                "within_3sigma"
-            ),
-        )
-        .orderBy("event_type")
-    )
-
-
-def exact_distinct_parts_per_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct l_partkey per l_returnflag (built-in Spark agg path)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_partkey").alias("distinct_parts"))
-        .orderBy("l_returnflag")
-    )
-
-
-def hll_parts_accuracy(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Bound check for distinct l_partkey per l_returnflag via the sketch."""
-    li = load_table(spark, sf_dir, "lineitem")
-    agg = HllAggregator(p=p, key_cols=["l_returnflag"], value_col="l_partkey", value_kind="int64")
-    est = agg.estimates(li).select("l_returnflag", "est_distinct")
-    exact = exact_distinct_parts_per_returnflag(spark, sf_dir)
-    bound = 3.0 * HllSketch.std_error(p)
-    return (
-        exact.join(est, "l_returnflag")
-        .select(
-            "l_returnflag",
-            "distinct_parts",
-            (F.abs(F.col("est_distinct") / F.col("distinct_parts") - 1.0) <= F.lit(bound)).alias(
-                "within_3sigma"
-            ),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
 def hll_accuracy_users_parts(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Folds the events-table and lineitem-table estimate-vs-exact bound
-    checks into one driver entry (same two computations, one slot): per
-    group, the exact distinct count plus the 3-sigma sketch-bound boolean.
-    Groups are tagged ``users:<event_type>`` / ``parts:<l_returnflag>``."""
-    u = hll_users_accuracy(spark, sf_dir, p).select(
-        F.concat(F.lit("users:"), F.col("event_type")).alias("grp"),
-        F.col("exact_users").alias("exact_distinct"),
-        "within_3sigma",
-    )
-    pr = hll_parts_accuracy(spark, sf_dir, p).select(
-        F.concat(F.lit("parts:"), F.col("l_returnflag")).alias("grp"),
-        F.col("distinct_parts").alias("exact_distinct"),
-        "within_3sigma",
-    )
-    return u.unionByName(pr).orderBy("grp")
+    """Estimate-vs-exact bound checks on two driver tables in one entry:
+    distinct user_id per event_type (events) and distinct l_partkey per
+    l_returnflag (lineitem), each an int64 HLL build next to Spark's exact
+    countDistinct. Per group: the exact distinct count plus the 3-sigma
+    sketch-bound boolean. Groups are tagged ``users:<event_type>`` /
+    ``parts:<l_returnflag>``."""
+
+    def facet(table: str, key: str, value: str, tag: str) -> DataFrame:
+        df = load_table(spark, sf_dir, table)
+        agg = HllAggregator(p=p, key_cols=[key], value_col=value, value_kind="int64")
+        exact = df.groupBy(key).agg(F.countDistinct(value).alias("exact_distinct"))
+        return exact.join(agg.estimates(df).select(key, "est_distinct"), key).select(
+            F.concat(F.lit(tag), F.col(key)).alias("grp"),
+            "exact_distinct",
+            _within_3sigma(F.col("est_distinct"), F.col("exact_distinct"), p).alias(
+                "within_3sigma"
+            ),
+        )
+
+    users = facet("events", "event_type", "user_id", "users:")
+    parts = facet("lineitem", "l_returnflag", "l_partkey", "parts:")
+    return users.unionByName(parts).orderBy("grp")
 
 
 def asof_clicks_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,7 +331,6 @@ def cms_user_freq_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits the published guarantees as booleans: never undercounts, and
     overcount <= eps*N (eps = e/width) — both must be TRUE.
     """
-    from .agg import CmsAggregator
 
     events_path = f"{sf_dir}/events.parquet"
     events = load_table(spark, sf_dir, "events")
@@ -275,7 +366,6 @@ def cms_token_freq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFra
     candidate path (per-partition heavy hitters, no full-vocab probe) is
     exercised in tests/test_sibling_agg_spark.py.
     """
-    from .agg import CmsAggregator
 
     path = sequences_path(spark, sf_dir)
     seqs = sequences_for(spark, sf_dir)
@@ -327,22 +417,6 @@ def cms_heavy_hitters_per_source(spark: SparkSession, sf_dir: str, k: int = 3) -
     (a near-uniform corpus has no true heavy hitters: every token sits
     within the CMS error band of the top ranks, so top-k CONTAINMENT is
     the wrong contract at this data shape, as round-3 sf0.1 runs showed)."""
-    from pyspark.sql import Window
-
-    from .agg import CmsAggregator
-    from .cms import CountMinSketch
-
-    path = sequences_path(spark, sf_dir)
-    seqs = sequences_for(spark, sf_dir)
-    w = Window.partitionBy("source").orderBy(F.desc("exact_cnt"), F.asc("token"))
-    exact_top_plan = (
-        seqs.select("source", F.explode("tokens").alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count("*").alias("exact_cnt"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .drop("rk")
-    )
     # PER-KEY width from the sizing rule (VERDICT r03 #9), not the global
     # default: eps=2e-4 -> 2^14 -> 655 KB per source instead of 10 MB, so
     # 10^4 sources checkpoint 6.5 GB, not 100 GB. All bound booleans below
@@ -350,58 +424,23 @@ def cms_heavy_hitters_per_source(spark: SparkSession, sf_dir: str, k: int = 3) -
     agg = CmsAggregator(
         eps=2e-4, depth=5, key_cols=["source"], value_col="tokens", value_kind="tokens"
     )
-    # sketch build and exact top-k companion are independent scans —
-    # overlap them (guide §2.6); the k*sources exact rows re-enter the
-    # plan as literals so the explode+window scan runs exactly once
-    merged, exact_rows = _overlap(
-        lambda: agg.merged(path, spark=spark).localCheckpoint(eager=True),
-        exact_top_plan.collect,
-    )
-    exact_top = spark.createDataFrame(
-        [(r["source"], int(r["token"]), int(r["exact_cnt"])) for r in exact_rows],
-        "source string, token int, exact_cnt long",
+    merged, scored = _source_topk_probes(
+        spark,
+        sf_dir,
+        agg,
+        k,
+        lambda b, toks: CountMinSketch.from_bytes(b).query_batch(np.asarray(toks, dtype=np.int32)),
     )
     eps = float(np.e) / (1 << agg.width_log2)
-
-    # group the k probe tokens per source BEFORE the sketch join: one blob
-    # copy and one from_bytes per source (the per-row variant replicated
-    # the ~10 MB dense merged blob through the join and decoded it once
-    # per token — k x #sources redundant decodes)
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def point_ests(blobs: pd.Series, tok_lists: pd.Series) -> pd.Series:
-        out = []
-        for b, toks in zip(blobs, tok_lists):
-            s = CountMinSketch.from_bytes(bytes(b))
-            out.append(
-                [int(x) for x in s.query_batch(np.asarray(toks, dtype=np.int32))]
-            )
-        return pd.Series(out)
-
-    grouped = exact_top.groupBy("source").agg(
-        F.collect_list("token").alias("toks"),
-        F.collect_list("exact_cnt").alias("cnts"),
-    )
-    scored = (
-        grouped.join(merged.select("source", "sketch", "n_items"), "source")
-        .withColumn("ests", point_ests(F.col("sketch"), F.col("toks")))
-        .select(
-            "source",
-            "n_items",
-            F.explode(F.arrays_zip("toks", "cnts", "ests")).alias("z"),
-        )
-        .select(
-            "source",
-            F.col("z.toks").alias("token"),
-            F.col("z.cnts").alias("exact_cnt"),
-            F.col("z.ests").alias("est"),
-            "n_items",
-        )
-    )
     # candidate budget sized for the shape check (the old 4000/task budget
     # existed only to make near-tie CONTAINMENT deterministic — the
     # contract this query no longer claims)
     hh = agg.heavy_hitters(
-        path, topk=k + 2, candidates_per_task=64, spark=spark, merged_df=merged
+        sequences_path(spark, sf_dir),
+        topk=k + 2,
+        candidates_per_task=64,
+        spark=spark,
+        merged_df=merged,
     )
     hh_ok = (
         hh.groupBy(F.col(hh.columns[0]).alias("source"))
@@ -447,45 +486,6 @@ def fi_token_topk_accuracy(
     count. The exact top-k companion pays the explode+groupBy the sketch
     path avoids.
     """
-    from pyspark.sql import Window
-
-    from .agg import FiAggregator
-    from .fi import FrequentItemsSketch
-
-    path = sequences_path(spark, sf_dir)
-    seqs = sequences_for(spark, sf_dir)
-    w = Window.partitionBy("source").orderBy(F.desc("exact_cnt"), F.asc("token"))
-    exact_top_plan = (
-        seqs.select("source", F.explode("tokens").alias("token"))
-        .groupBy("source", "token")
-        .agg(F.count("*").alias("exact_cnt"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .drop("rk")
-    )
-    agg = FiAggregator(capacity=capacity, key_cols=["source"])
-    # MG sketch build and exact top-k companion are independent scans —
-    # overlap them (guide §2.6); exact rows re-enter the plan as literals
-    merged, exact_rows = _overlap(
-        lambda: agg.merged(path, spark=spark).localCheckpoint(eager=True),
-        exact_top_plan.collect,
-    )
-    exact_top = spark.createDataFrame(
-        [(r["source"], int(r["token"]), int(r["exact_cnt"])) for r in exact_rows],
-        "source string, token int, exact_cnt long",
-    )
-
-    # one decode per source: probes grouped before the sketch join (same
-    # lifecycle as cms_heavy_hitters_per_source's point_ests)
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def lower_bounds(blobs: pd.Series, tok_lists: pd.Series) -> pd.Series:
-        out = []
-        for b, toks in zip(blobs, tok_lists):
-            s = FrequentItemsSketch.from_bytes(bytes(b))
-            out.append(
-                [int(x) for x in s.estimate_batch(np.asarray(toks, dtype=np.int64))]
-            )
-        return pd.Series(out)
 
     @F.pandas_udf(T.LongType())
     def fi_err(blobs: pd.Series) -> pd.Series:
@@ -493,35 +493,27 @@ def fi_token_topk_accuracy(
             lambda b: FrequentItemsSketch.from_bytes(bytes(b)).error
         ).astype("int64")
 
-    grouped = exact_top.groupBy("source").agg(
-        F.collect_list("token").alias("toks"),
-        F.collect_list("exact_cnt").alias("cnts"),
+    _, scored = _source_topk_probes(
+        spark,
+        sf_dir,
+        FiAggregator(capacity=capacity, key_cols=["source"]),
+        k,
+        lambda b, toks: FrequentItemsSketch.from_bytes(b).estimate_batch(
+            np.asarray(toks, dtype=np.int64)
+        ),
+        err=fi_err(F.col("sketch")),
     )
-    return (
-        grouped.join(merged.select("source", "sketch", "n_items"), "source")
-        .withColumn("lows", lower_bounds(F.col("sketch"), F.col("toks")))
-        .withColumn("err", fi_err(F.col("sketch")))
-        .select(
-            "source",
-            "n_items",
-            "err",
-            F.explode(F.arrays_zip("toks", "cnts", "lows")).alias("z"),
-        )
-        .select(
-            "source",
-            F.col("z.toks").alias("token"),
-            F.col("z.cnts").alias("exact_cnt"),
-            (F.col("z.lows") <= F.col("exact_cnt")).alias("lower_le_exact"),
-            (F.col("exact_cnt") <= F.col("z.lows") + F.col("err")).alias("within_error"),
-            (F.col("err") <= F.floor(F.col("n_items") / F.lit(capacity + 1))).alias(
-                "error_law"
-            ),
-            ((F.col("exact_cnt") <= F.col("err")) | (F.col("z.lows") > 0)).alias(
-                "guaranteed_retained"
-            ),
-        )
-        .orderBy("source", "token")
-    )
+    return scored.select(
+        "source",
+        "token",
+        "exact_cnt",
+        (F.col("est") <= F.col("exact_cnt")).alias("lower_le_exact"),
+        (F.col("exact_cnt") <= F.col("est") + F.col("err")).alias("within_error"),
+        (F.col("err") <= F.floor(F.col("n_items") / F.lit(capacity + 1))).alias("error_law"),
+        ((F.col("exact_cnt") <= F.col("err")) | (F.col("est") > 0)).alias(
+            "guaranteed_retained"
+        ),
+    ).orderBy("source", "token")
 
 
 def hll_customers_per_orderpriority(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
@@ -537,7 +529,6 @@ def hll_customers_per_orderpriority(spark: SparkSession, sf_dir: str, p: int = D
         r["o_orderpriority"]: int(r["est_distinct"])
         for r in agg.estimates(orders).collect()
     }
-    bound = 3.0 * HllSketch.std_error(p)
     exact = (
         orders.groupBy("o_orderpriority")
         .agg(F.countDistinct("o_custkey").alias("distinct_customers"))
@@ -548,10 +539,7 @@ def hll_customers_per_orderpriority(spark: SparkSession, sf_dir: str, p: int = D
             (
                 r["o_orderpriority"],
                 int(r["distinct_customers"]),
-                bool(
-                    abs(est[r["o_orderpriority"]] / r["distinct_customers"] - 1.0)
-                    <= bound
-                ),
+                _within_3sigma(est[r["o_orderpriority"]], r["distinct_customers"], p),
             )
             for r in exact
         ],
@@ -566,8 +554,6 @@ def cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure) and (2) |lineitem JOIN part| on partkey, each from two KB-scale
     sketches instead of a shuffle of the tables. Published guarantees as
     booleans: never undercounts; over by <= eps * N_a * N_b."""
-    from .agg import CmsAggregator
-    from .cms import CountMinSketch
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey").cast("long").alias("k")
@@ -615,80 +601,65 @@ def cms_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- bloom: membership / semi-join prefilter ------------------------------------
 
 
-def bloom_users_no_false_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Membership of the 100 lowest user_ids — Bloom law: every present key
-
-    reports present (no false negatives), so `present` is provably TRUE."""
-    from .agg import BloomAggregator
-
-    events_path = f"{sf_dir}/events.parquet"
-    events = load_table(spark, sf_dir, "events")
-    probes = [
-        r["user_id"]
-        for r in events.select("user_id").distinct().orderBy("user_id").limit(100).collect()
-    ]
-    agg = BloomAggregator(m_log2=20, k=7, key_cols=[], value_col="user_id", value_kind="int64")
-    member = agg.membership(events_path, probes, spark=spark)
-    return member.withColumnRenamed("value", "user_id").orderBy("user_id")
-
-
-def bloom_semijoin_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter semi-join pushdown: build a filter over a small key set
-
-    (parts with p_size < 10), prefilter the big side with a broadcast-blob
-    pandas UDF, and prove the prefilter is a superset of the exact semi-join
-    (no false negatives) while reporting the exact match count."""
-    from .agg import BloomAggregator
-
-    part = load_table(spark, sf_dir, "part").where(F.col("p_size") < 10)
-    li = load_table(spark, sf_dir, "lineitem")
-    agg = BloomAggregator(m_log2=18, k=7, key_cols=[], value_col="p_partkey", value_kind="int64")
-    blob = bytes(agg.merged(part).collect()[0]["sketch"])
-    maybe_member = agg.filter_column_udf()(blob)
-    # the three counts are independent jobs over the built filter — overlap
-    # them (guide §2.6)
-    pre_cnt, exact_cnt, keys_missed = _overlap(
-        lambda: li.where(maybe_member(F.col("l_partkey"))).count(),
-        lambda: li.join(
-            part.select("p_partkey").distinct(),
-            li["l_partkey"] == F.col("p_partkey"),
-            "left_semi",
-        ).count(),
-        lambda: part.select("p_partkey").where(~maybe_member(F.col("p_partkey"))).count(),
-    )
-    return spark.createDataFrame(
-        [(exact_cnt, keys_missed == 0 and pre_cnt >= exact_cnt)],
-        "exact_semi_count long, no_false_negatives boolean",
-    )
-
-
 def bloom_laws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Folds both Bloom-law driver entries into one slot (VERDICT r04 #1
-    pattern): the membership facet (100 lowest user_ids, no false
-    negatives on the events filter) and the semi-join-prefilter facet
-    (exact semi-join count + superset proof on lineitem/part). Facet rows
-    share a sparse schema; not-applicable fields carry the sentinel -1
-    rather than NULL (the driver compare sorts raw value tuples, and
-    NULL-vs-int is unorderable in python)."""
+    """Both Bloom laws in one driver entry (VERDICT r04 #1 pattern):
+
+    - ``membership``: the 100 lowest user_ids probed against a filter over
+      events.user_id — every present key reports present (no false
+      negatives), so ``law_holds`` is provably TRUE per user;
+    - ``semijoin``: semi-join pushdown — a filter over the small key set
+      (parts with p_size < 10) prefilters lineitem with a broadcast-blob
+      pandas UDF; the prefilter must be a superset of the exact semi-join
+      (no false negatives), and the exact match count is reported.
+
+    Facet rows share a sparse schema; not-applicable fields carry the
+    sentinel -1 rather than NULL (the driver compare sorts raw value
+    tuples, and NULL-vs-int is unorderable in python)."""
+
+    def membership_leg() -> DataFrame:
+        events = load_table(spark, sf_dir, "events")
+        probes = [
+            r["user_id"]
+            for r in events.select("user_id").distinct().orderBy("user_id").limit(100).collect()
+        ]
+        agg = BloomAggregator(
+            m_log2=20, k=7, key_cols=[], value_col="user_id", value_kind="int64"
+        )
+        return agg.membership(f"{sf_dir}/events.parquet", probes, spark=spark).select(
+            F.lit("membership").alias("facet"),
+            F.col("value").alias("user_id"),
+            F.lit(-1).cast("long").alias("exact_semi_count"),
+            F.col("present").alias("law_holds"),
+        )
+
+    def semijoin_leg() -> DataFrame:
+        part = load_table(spark, sf_dir, "part").where(F.col("p_size") < 10)
+        li = load_table(spark, sf_dir, "lineitem")
+        agg = BloomAggregator(
+            m_log2=18, k=7, key_cols=[], value_col="p_partkey", value_kind="int64"
+        )
+        blob = bytes(agg.merged(part).collect()[0]["sketch"])
+        maybe_member = agg.filter_column_udf()(blob)
+        # the three counts are independent jobs over the built filter —
+        # overlap them (guide §2.6)
+        pre_cnt, exact_cnt, keys_missed = _overlap(
+            lambda: li.where(maybe_member(F.col("l_partkey"))).count(),
+            lambda: li.join(
+                part.select("p_partkey").distinct(),
+                li["l_partkey"] == F.col("p_partkey"),
+                "left_semi",
+            ).count(),
+            lambda: part.select("p_partkey").where(~maybe_member(F.col("p_partkey"))).count(),
+        )
+        return spark.createDataFrame(
+            [("semijoin", -1, exact_cnt, keys_missed == 0 and pre_cnt >= exact_cnt)],
+            "facet string, user_id long, exact_semi_count long, law_holds boolean",
+        )
+
     # the two facets are independent pipelines (events membership vs
     # lineitem/part semi-join) with their own internal eager jobs — build
     # them concurrently (guide §2.6)
-    member_df, semi_df = _overlap(
-        lambda: bloom_users_no_false_negatives(spark, sf_dir),
-        lambda: bloom_semijoin_prefilter(spark, sf_dir),
-    )
-    member = member_df.select(
-        F.lit("membership").alias("facet"),
-        "user_id",
-        F.lit(-1).cast("long").alias("exact_semi_count"),
-        F.col("present").alias("law_holds"),
-    )
-    semi = semi_df.select(
-        F.lit("semijoin").alias("facet"),
-        F.lit(-1).cast("long").alias("user_id"),
-        "exact_semi_count",
-        F.col("no_false_negatives").alias("law_holds"),
-    )
+    member, semi = _overlap(membership_leg, semijoin_leg)
     return member.unionByName(semi).orderBy("facet", "user_id")
 
 
@@ -748,93 +719,50 @@ def interval_join_error_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kll_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deciles of sequence length (n_tok) from one merged KLL sketch,
     rank-checked: the exact rank of each estimated decile value must sit
-    within the published KLL rank-error bound (~1.65% at k=200; tol 3%) —
-    the oracle-checkable statement about an approximate quantile."""
-    from .agg import KllAggregator
-
+    within the published KLL rank-error bound (~1.65% at k=200; tol 3%)."""
     agg = KllAggregator(k=200, key_cols=[], value_col="n_tok", value_kind="int32")
-    qs = [i / 10 for i in range(1, 10)]
-    est = agg.quantiles(sequences_path(spark, sf_dir), qs, spark=spark)
-    seqs = sequences_for(spark, sf_dir)
-    # the sketch build and the row count are independent — overlap (§2.6)
-    est_rows, n = _overlap(est.collect, seqs.count)
-    pairs = [(r["q"], r["value"]) for r in est_rows]
-    aggs = [
-        (F.sum((F.col("n_tok") <= F.lit(v)).cast("long")) / F.lit(n)).alias(f"r{i}")
-        for i, (_, v) in enumerate(pairs)
-    ]
-    ranks = seqs.agg(*aggs).collect()[0]
-    rows = [
-        (float(q), bool(abs(ranks[f"r{i}"] - q) <= 0.03)) for i, (q, _) in enumerate(pairs)
-    ]
-    return spark.createDataFrame(rows, "q double, within_bound boolean").orderBy("q")
-
-
-_KLL_QS = [0.1, 0.25, 0.5, 0.75, 0.9]
-_TD_QS = [0.01, 0.25, 0.5, 0.75, 0.99]
-
-
-def _rank_accuracy(spark, sf_dir, est_df, value_col: str, tol: float) -> DataFrame:
-    """Exact rank of each estimated quantile, asserted within tolerance."""
-    events = load_table(spark, sf_dir, "events")
-    # count and sketch build are independent — overlap (guide §2.6)
-    n, est_rows = _overlap(events.count, est_df.collect)
-    pairs = [(r["q"], r["value"]) for r in est_rows]
-    aggs = [
-        (F.sum((F.col(value_col) <= F.lit(v)).cast("long")) / F.lit(n)).alias(f"r{i}")
-        for i, (_, v) in enumerate(pairs)
-    ]
-    ranks = events.agg(*aggs).collect()[0]
-    rows = [(float(q), bool(abs(ranks[f"r{i}"] - q) <= tol)) for i, (q, _) in enumerate(pairs)]
-    return spark.createDataFrame(rows, "q double, within_bound boolean").orderBy("q")
-
-
-def kll_value_rank_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KLL quantiles of events.value: estimated value's exact rank must sit
-
-    within the published rank-error bound (~1.65% at k=200; tol 3%)."""
-    from .agg import KllAggregator
-
-    agg = KllAggregator(k=200, key_cols=[], value_col="value", value_kind="double")
-    est = agg.quantiles(f"{sf_dir}/events.parquet", _KLL_QS, spark=spark)
-    return _rank_accuracy(spark, sf_dir, est, "value", tol=0.03)
-
-
-def kll_value_quantiles_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PER-KEY quantiles: one KLL sketch per event_type, quartiles expanded
-    in a distributed applyInPandas finalize (no driver collect of sketches),
-    each estimate's exact within-key rank asserted inside the published
-    bound. Exercises the keyed finalize path through the driver surface."""
-    from .agg import KllAggregator
-
-    qs = [0.25, 0.5, 0.75]
-    events = load_table(spark, sf_dir, "events")
-    agg = KllAggregator(k=200, key_cols=["event_type"], value_col="value", value_kind="double")
-    est = agg.quantiles(f"{sf_dir}/events.parquet", qs, spark=spark)
-    ranks = (
-        events.join(est.withColumnRenamed("value", "est_v"), "event_type")
-        .groupBy("event_type", "q")
-        .agg(F.avg((F.col("value") <= F.col("est_v")).cast("double")).alias("rank"))
+    est = agg.quantiles(
+        sequences_path(spark, sf_dir), [i / 10 for i in range(1, 10)], spark=spark
     )
-    return ranks.select(
-        "event_type",
-        "q",
-        (F.abs(F.col("rank") - F.col("q")) <= F.lit(0.03)).alias("within_bound"),
-    ).orderBy("event_type", "q")
+    return _rank_accuracy(spark, sequences_for(spark, sf_dir), est, "n_tok", tol=0.03)
 
 
 def kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Folds the global rank-accuracy check and the per-event-type quartile
-    check into one driver entry (same two computations, one slot): global
-    rows are tagged event_type='__all__'. Both facets assert the published
-    KLL rank-error bound (~1.65% at k=200; tol 3%) via exact ranks."""
+    """KLL quantiles of events.value, globally and PER event_type, each
+    estimate's exact rank asserted within the published KLL rank-error
+    bound (~1.65% at k=200; tol 3%). Global rows (five quantiles) are
+    tagged event_type='__all__'; the per-type quartiles come from one KLL
+    sketch per event_type, expanded in the distributed keyed finalize (no
+    driver collect of sketches) and rank-checked within their key."""
+    events_path = f"{sf_dir}/events.parquet"
+
+    def global_leg() -> DataFrame:
+        agg = KllAggregator(k=200, key_cols=[], value_col="value", value_kind="double")
+        est = agg.quantiles(events_path, [0.1, 0.25, 0.5, 0.75, 0.9], spark=spark)
+        return _rank_accuracy(
+            spark, load_table(spark, sf_dir, "events"), est, "value", tol=0.03
+        ).select(F.lit("__all__").alias("event_type"), "q", "within_bound")
+
+    def per_type_leg() -> DataFrame:
+        agg = KllAggregator(
+            k=200, key_cols=["event_type"], value_col="value", value_kind="double"
+        )
+        est = agg.quantiles(events_path, [0.25, 0.5, 0.75], spark=spark)
+        ranks = (
+            load_table(spark, sf_dir, "events")
+            .join(est.withColumnRenamed("value", "est_v"), "event_type")
+            .groupBy("event_type", "q")
+            .agg(F.avg((F.col("value") <= F.col("est_v")).cast("double")).alias("rank"))
+        )
+        return ranks.select(
+            "event_type",
+            "q",
+            (F.abs(F.col("rank") - F.col("q")) <= F.lit(0.03)).alias("within_bound"),
+        )
+
     # the global and per-type facets are independent pipelines with their
     # own internal eager jobs — build them concurrently (guide §2.6)
-    glob_df, per = _overlap(
-        lambda: kll_value_rank_accuracy(spark, sf_dir),
-        lambda: kll_value_quantiles_per_type(spark, sf_dir),
-    )
-    glob = glob_df.select(F.lit("__all__").alias("event_type"), "q", "within_bound")
+    glob, per = _overlap(global_leg, per_type_leg)
     return per.unionByName(glob).orderBy("event_type", "q")
 
 
@@ -861,7 +789,6 @@ def hll_users_time_rollup(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) 
     register-collision discreteness where the relative bound is below one
     user (tiny per-hour cardinalities, n << sqrt(2^p)).
     """
-    from .session import release
 
     grains = ("hour", "day", "week")
     events = load_table(spark, sf_dir, "events")
@@ -926,47 +853,34 @@ def tdigest_value_rank_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-digest quantiles of events.value with tail checks (tol 2%, tails
 
     are tighter by construction)."""
-    from .agg import TDigestAggregator
-
     agg = TDigestAggregator(delta=200, key_cols=[], value_col="value", value_kind="double")
-    est = agg.quantiles(f"{sf_dir}/events.parquet", _TD_QS, spark=spark)
-    return _rank_accuracy(spark, sf_dir, est, "value", tol=0.02)
+    est = agg.quantiles(
+        f"{sf_dir}/events.parquet", [0.01, 0.25, 0.5, 0.75, 0.99], spark=spark
+    )
+    return _rank_accuracy(spark, load_table(spark, sf_dir, "events"), est, "value", tol=0.02)
 
 
 # ---- documents table: tokenizer + sketches over real text ------------------------
 
 
-def exact_distinct_words_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distinct whitespace-token count per language on `documents` —
-
-    the tokenizer-parity anchor (same split semantics as the DuckDB oracle)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("lang", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"))
-        .where(F.col("word") != "")
-        .groupBy("lang")
-        .agg(F.countDistinct("word").alias("distinct_words"))
-        .orderBy("lang")
-    )
-
-
 def hll_words_accuracy_per_lang(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """HLL over tokenized documents (string keys) vs exact, bound-checked."""
-    docs = load_table(spark, sf_dir, "documents")
+    """HLL over tokenized documents (string keys) vs the exact distinct
+    whitespace-token count per language — the tokenizer-parity anchor (same
+    split semantics as the DuckDB oracle), bound-checked."""
     words = (
-        docs.select("lang", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"))
+        load_table(spark, sf_dir, "documents")
+        .select("lang", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("word"))
         .where(F.col("word") != "")
     )
     agg = HllAggregator(p=p, key_cols=["lang"], value_col="word", value_kind="string")
     est = agg.estimates(words).select("lang", "est_distinct")
-    exact = exact_distinct_words_per_lang(spark, sf_dir)
-    bound = 3.0 * HllSketch.std_error(p)
+    exact = words.groupBy("lang").agg(F.countDistinct("word").alias("distinct_words"))
     return (
         exact.join(est, "lang")
         .select(
             "lang",
             "distinct_words",
-            (F.abs(F.col("est_distinct") / F.col("distinct_words") - 1.0) <= F.lit(bound)).alias(
+            _within_3sigma(F.col("est_distinct"), F.col("distinct_words"), p).alias(
                 "within_3sigma"
             ),
         )
@@ -1034,15 +948,7 @@ def hll_tokens_rollup(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> D
     est, (srcs, (masks, cnts)) = _overlap(sketch_leg, exact_leg)
     exact = {s: int(cnts[(masks & (1 << i)) != 0].sum()) for i, s in enumerate(srcs)}
     exact["ALL"] = int(cnts.sum())
-    bound = 3.0 * HllSketch.std_error(p)
-    rows = [
-        (
-            s,
-            exact[s],
-            bool(abs(est[s] / exact[s] - 1.0) <= bound),
-        )
-        for s in sorted(exact)
-    ]
+    rows = [(s, exact[s], _within_3sigma(est[s], exact[s], p)) for s in sorted(exact)]
     return spark.createDataFrame(
         rows, "source string, distinct_tokens long, within_3sigma boolean"
     ).orderBy("source")
@@ -1056,11 +962,7 @@ def hll_users_cube(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> Data
     a driver-side sketch. Exact counts come from Spark's native cube() and
     reproduce in DuckDB GROUP BY CUBE; each sketch estimate is asserted
     within 3 sigma. Aggregated-out dimensions surface as 'ALL'."""
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        from .agg import HllAggregator
-
+    with _utc_session(spark):
         events = load_table(spark, sf_dir, "events").withColumn(
             "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
         )
@@ -1103,7 +1005,6 @@ def hll_users_cube(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> Data
             ],
             "day string, event_type string, grouping_id long, distinct_users long",
         )
-        bound = 3.0 * HllSketch.std_error(p)
         return (
             exact.join(est_df, ["day", "event_type", "grouping_id"])
             .drop("grouping_id")
@@ -1111,25 +1012,17 @@ def hll_users_cube(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> Data
                 "day",
                 "event_type",
                 "distinct_users",
-                (
-                    F.abs(F.col("est") / F.col("distinct_users") - 1.0) <= bound
-                ).alias("within_3sigma"),
+                _within_3sigma(F.col("est"), F.col("distinct_users"), p).alias("within_3sigma"),
             )
             .orderBy("day", "event_type")
         )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
 
 
 # ---- set operations between sources (union / intersection / jaccard) -------------
 def weighted_sample_docs(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFrame:
     """Deterministic weighted sampling without replacement over the corpus —
-    the reproducible subsample primitive of a training-data pipeline.
-
-    Efraimidis–Spirakis A-Res: each doc draws u in (0,1] DETERMINISTICALLY
-    from md5(doc_id) (no RNG state — reruns, resumes, and any partitioning
-    pick the identical sample) and is ranked by u^(1/weight), weight =
-    n_tok; the global top-k IS a weighted sample without replacement.
+    the reproducible subsample primitive of a training-data pipeline: the
+    global top-k by the md5-keyed Efraimidis–Spirakis key (``_es_key``).
 
     Scale shape: pure projection + distributed top-k — Spark executes
     orderBy().limit(k) as TakeOrderedAndProject (per-partition heap, driver
@@ -1137,19 +1030,10 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str, k: int = 100) -> Data
     oracle recomputes the identical sample in DuckDB from the same md5
     bits — exact row-set equality, not a statistical check.
     """
-    seqs = sequences_for(spark, sf_dir).select("doc_id", "n_tok")
-    # 15 hex chars = 60 bits: add 1 in INT64 first, THEN round to double —
-    # double(v)+1.0 and double(v+1) differ for ~2.6% of 60-bit values, so
-    # the integer-domain add is what makes the oracle's (v+1)::DOUBLE
-    # arithmetic bit-identical in both engines
-    u = (
-        (F.conv(F.substring(F.md5("doc_id"), 1, 15), 16, 10).cast("long") + F.lit(1)).cast(
-            "double"
-        )
-    ) / F.lit(float(1 << 60))
-    key = F.pow(u, F.lit(1.0) / F.greatest(F.col("n_tok"), F.lit(1)).cast("double"))
     picked = (
-        seqs.withColumn("__key", key)
+        sequences_for(spark, sf_dir)
+        .select("doc_id", "n_tok")
+        .withColumn("__key", _es_key())
         .orderBy(F.col("__key").desc(), F.col("doc_id"))
         .limit(k)
     )
@@ -1221,31 +1105,37 @@ def _exact_pair_counts(spark: SparkSession, seqs: DataFrame, srcs: list) -> Data
     )
 
 
-def stratified_sample_docs(spark: SparkSession, sf_dir: str, per_source: int = 10) -> DataFrame:
-    """Deterministic weighted sample of ``per_source`` docs PER STRATUM
-    (source) — the per-domain quota subsample every corpus-mixing pipeline
-    runs. Same Efraimidis–Spirakis key as weighted_sample_docs (u from
-    md5(doc_id), ranked by u^(1/n_tok)), so the sample is reproducible at
-    any partitioning with no RNG state.
+def sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both deterministic sampling primitives in one driver entry (round-5
+    consolidation, VERDICT r04 #1 pattern), each an exact row-set match
+    against the DuckDB oracle recomputing the identical md5-keyed
+    Efraimidis–Spirakis draw:
 
-    Skew-safe two-stage top-k: stage 1 takes each (source, input-partition)
-    group's local top-k — the shuffle fans every source over all its scan
-    partitions, so a hot source never lands on one reducer with all its
-    rows — stage 2 ranks the surviving <= k x P rows per source. Both
-    stages move candidate rows only. The DuckDB oracle reproduces the
-    IDENTICAL row set from the same md5 bits.
-    """
-    from pyspark.sql import Window
+    - ``weighted``: the global weighted sample (weighted_sample_docs);
+    - ``stratified``: 10 docs PER STRATUM (source) — the per-domain quota
+      subsample every corpus-mixing pipeline runs. Skew-safe two-stage
+      top-k: stage 1 takes each (source, input-partition) group's local
+      top-k — the shuffle fans every source over all its scan partitions,
+      so a hot source never lands on one reducer with all its rows — stage
+      2 ranks the surviving <= k x P rows per source. Both stages move
+      candidate rows only.
 
-    seqs = sequences_for(spark, sf_dir).select("doc_id", "source", "n_tok")
-    # int64 add BEFORE the double cast — see weighted_sample_docs
-    u = (
-        (F.conv(F.substring(F.md5("doc_id"), 1, 15), 16, 10).cast("long") + F.lit(1)).cast(
-            "double"
-        )
-    ) / F.lit(float(1 << 60))
-    key = F.pow(u, F.lit(1.0) / F.greatest(F.col("n_tok"), F.lit(1)).cast("double"))
-    keyed = seqs.withColumn("__key", key).withColumn("__pid", F.spark_partition_id())
+    ``mode`` tags the leg; the stratified leg keeps its source, the global
+    leg uses '*' (a literal, not NULL — the engines disagree on NULL
+    ordering defaults and the row ORDER is part of the oracle contract)."""
+    weighted = weighted_sample_docs(spark, sf_dir).select(
+        F.lit("weighted").alias("mode"),
+        F.lit("*").alias("source"),
+        "doc_id",
+        "n_tok",
+    )
+    per_source = 10
+    keyed = (
+        sequences_for(spark, sf_dir)
+        .select("doc_id", "source", "n_tok")
+        .withColumn("__key", _es_key())
+        .withColumn("__pid", F.spark_partition_id())
+    )
     w1 = Window.partitionBy("source", "__pid").orderBy(F.desc("__key"), "doc_id")
     local = (
         keyed.withColumn("__rk", F.row_number().over(w1))
@@ -1253,31 +1143,10 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str, per_source: int = 1
         .drop("__rk", "__pid")
     )
     w2 = Window.partitionBy("source").orderBy(F.desc("__key"), "doc_id")
-    return (
+    stratified = (
         local.withColumn("__rk", F.row_number().over(w2))
         .where(F.col("__rk") <= per_source)
-        .select("source", "doc_id", "n_tok")
-        .orderBy("source", "doc_id")
-    )
-
-
-def sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both deterministic sampling primitives in one driver entry (round-5
-    consolidation, VERDICT r04 #1 pattern): the global weighted sample and
-    the per-source stratified quota sample, each an exact row-set match
-    against the DuckDB oracle recomputing the identical md5-keyed
-    Efraimidis–Spirakis draw. ``mode`` tags the leg; the stratified leg
-    keeps its source, the global leg uses '*' (a literal, not NULL — the
-    engines disagree on NULL ordering defaults and the row ORDER is part of
-    the oracle contract)."""
-    weighted = weighted_sample_docs(spark, sf_dir).select(
-        F.lit("weighted").alias("mode"),
-        F.lit("*").alias("source"),
-        "doc_id",
-        "n_tok",
-    )
-    stratified = stratified_sample_docs(spark, sf_dir).select(
-        F.lit("stratified").alias("mode"), "source", "doc_id", "n_tok"
+        .select(F.lit("stratified").alias("mode"), "source", "doc_id", "n_tok")
     )
     return weighted.unionByName(stratified).orderBy("mode", "source", "doc_id")
 
@@ -1302,9 +1171,6 @@ def doc_rarity_mass(spark: SparkSession, sf_dir: str, bottom_k: int = 10) -> Dat
     quality-filter concern, not a rarity signal).
     """
     import pyarrow as pa
-
-    from .agg import CmsAggregator
-    from .cms import CountMinSketch
 
     path = sequences_path(spark, sf_dir)
     seqs = sequences_for(spark, sf_dir)
@@ -1445,7 +1311,6 @@ def decontamination_check(
     """
     import pyarrow as pa
 
-    from .agg import BloomAggregator
     from .minhash import shingles_flat
 
     raw = load_table(spark, sf_dir, "documents").select(
@@ -1571,7 +1436,6 @@ def sessionized_events(spark: SparkSession, sf_dir: str, gap_secs: int = 1800) -
     only on the sorted ts values, so same-ts ties cannot flip assignments
     — the result is deterministic at any partitioning.
     """
-    from pyspark.sql import Window
 
     events = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     w = Window.partitionBy("user_id").orderBy("ts")
@@ -1612,7 +1476,6 @@ def corpus_profile_per_source(
     [P(n_tok < v), P(n_tok <= v)] must intersect [q-eps, q+eps] (n_tok is
     integer-valued, so tied masses make the naive point-rank criterion
     unsatisfiable at small scales)."""
-    from .agg import ProfileAggregator
 
     agg = ProfileAggregator(p=p, kll_k=200, key_cols=["source"])
     seqs = sequences_for(spark, sf_dir)
@@ -1652,7 +1515,6 @@ def corpus_profile_per_source(
             "rank_lt_p90"
         ),
     )
-    sigma = HllSketch.std_error(p)
     # published KLL rank error ~1.65% at k=200; 3% tolerance matches the
     # library's other KLL bound assertions (kll_ntok_quantiles et al.)
     eps = 0.03
@@ -1664,7 +1526,7 @@ def corpus_profile_per_source(
             "n_rows",
             "n_items",
             "exact_distinct",
-            (F.abs(F.col("est_distinct") / F.col("exact_distinct") - 1.0) <= sigma * 3).alias(
+            _within_3sigma(F.col("est_distinct"), F.col("exact_distinct"), p).alias(
                 "distinct_within_3sigma"
             ),
             (
@@ -1794,7 +1656,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operators themselves are partition-agnostic.
     """
     from .dedup import connected_components, ngram_jaccard_edges
-    from .session import release
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     # edge generation wants full session parallelism (it scans the corpus);
@@ -1825,7 +1686,6 @@ def minhash_jaccard_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimate vs exact shingle Jaccard over every pair of a
 
     deterministic 40-doc subset: binomial(k=128) error bounds must hold."""
-    import numpy as np
 
     from .dedup import exact_jaccard
     from .minhash import minhash_signature, token_shingles
@@ -1852,7 +1712,6 @@ def near_dup_topk_pairs(spark: SparkSession, sf_dir: str, topk: int = 10) -> Dat
     shingle Jaccard: every top-k pair's estimate must sit within the
     binomial(k=128) error bound of the exact value (|err| <= 0.25 ~ 5.6
     sigma). Oracle-checkable statement about the approximate pipeline."""
-    import numpy as np
 
     from .dedup import exact_jaccard, near_dup_pairs
 
@@ -1992,9 +1851,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, threshold: float 
     vectors); at 10^9+ the production path is the capped bucket self-join,
     whose recall this query certifies.
     """
-    import numpy as np
     import pyarrow as pa
-    from pyspark.sql import types as T
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n_corpus = emb.count()
@@ -2074,12 +1931,12 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str, threshold: float 
 # ---- multimodal plumbing over binary asset columns -----------------------------------
 # ---- checkpoint/resume demonstrated through the driver surface ------------------------
 def sql_over_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-SQL analytics over a checkpointed partial-sketch table via the
+    """SQL analytics over a checkpointed partial-sketch table via the
     registered sketch UDFs: per-source exact row/item rollups (SQL-exact,
-    oracle-checked) plus the sketch estimate asserted within 3 sigma of the
-    exact distinct count — all computed IN SQL over the checkpoint table."""
+    oracle-checked) and the sketch estimate are computed IN SQL over the
+    checkpoint table; the estimate is then asserted within 3 sigma of the
+    exact distinct count."""
 
-    from .agg import HllAggregator
     from .functions import register
     from .io import CheckpointedBuild
 
@@ -2108,38 +1965,21 @@ def sql_over_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg.merged(ckpt.partials(spark).drop("shard_id", "wall_secs"), is_partials=True).createOrReplaceTempView(
         "merged_sketches"
     )
-    bound = 3.0 * HllSketch.std_error(14)
     return spark.sql(
-        f"""
+        """
         SELECT m.source, m.n_rows, m.n_items,
-               abs(hll_estimate(m.sketch) / e.exact_distinct - 1.0) <= {bound}
-                   AS within_3sigma
+               hll_estimate(m.sketch) AS est, e.exact_distinct
         FROM merged_sketches m
         JOIN exact_for_sql e
         USING (source)
         ORDER BY m.source
         """
+    ).select(
+        "source",
+        "n_rows",
+        "n_items",
+        _within_3sigma(F.col("est"), F.col("exact_distinct"), 14).alias("within_3sigma"),
     )
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _streaming_conf(spark: SparkSession, shuffle_partitions: str = "4"):
-    """Pin shuffle partitions low for the stateful streaming queries: every
-    micro-batch pays a state-store commit + shuffle task PER PARTITION, and
-    the keyed state here is a few hundred rows — 32 partitions is pure
-    overhead at test scale (measured: 4 beats 8 beats 32 on every streaming
-    query). On a real cluster the session value (sized to executors)
-    applies as usual; this only scopes the toy-SF driver queries.
-    """
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def streaming_hll_parity(spark: SparkSession, sf_dir: str, p: int = 12) -> DataFrame:
@@ -2150,9 +1990,7 @@ def streaming_hll_parity(spark: SparkSession, sf_dir: str, p: int = 12) -> DataF
     item count (merge associativity makes the registers byte-identical, so
     the estimates are equal integers, not merely close). n_rows/n_items are
     SQL-exact; the parity booleans are provable."""
-    import uuid
 
-    from .agg import HllAggregator
     from .streaming import hll_streaming_estimates
 
     import glob as _glob
@@ -2260,61 +2098,57 @@ def _timeordered_events_dir(spark: SparkSession, sf_dir: str, sentinels: int) ->
     return src_dir
 
 
-def streaming_windowed_users(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
-    """Event-time WINDOWED streaming through the driver: per (1-day window,
-    event_type) distinct-user HLL state via applyInPandasWithState with a
-    watermark, consumed as a time-ordered multi-file stream; the final
-    window states must match a batch build over the same rows exactly
-    (same registers -> equal estimates and counts). The watermark is set
-    beyond the data span so no row is late-dropped — parity is then a
-    deterministic law; late-drop/eviction behavior is pinned separately in
-    tests/test_streaming.py. Emits SQL-exact per-window row counts + the
-    provable parity boolean."""
-    # pin the session TZ for this query: window() aligns 1-day windows on
-    # UTC epoch boundaries while date_trunc('day') follows the session TZ —
-    # they only agree (and match the TZ-free DuckDB oracle) under UTC
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _streaming_windowed_users_utc(spark, sf_dir, p)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
+def _daily_window_parity(
+    spark: SparkSession,
+    sf_dir: str,
+    p: int,
+    windowed_estimates,
+    *,
+    sentinels: int,
+    watermark: str,
+    output_mode: str,
+    tag: str,
+) -> tuple:
+    """Shared harness of the windowed streaming queries: stream the
+    time-ordered events copy through ``windowed_estimates`` (1-day windows
+    of distinct users per event_type) into a memory sink and, while the
+    stream drains, build the batch per-(day, event_type) estimates over the
+    same rows. Returns (stream rows of day, event_type, est_distinct,
+    n_rows — sentinel rows dropped; batch rows keyed by (day, event_type)).
 
-
-def _streaming_windowed_users_utc(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
-    import uuid
-
-    from .agg import HllAggregator
-    from .streaming import hll_windowed_streaming_estimates
-
+    Runs under the caller's ``_utc_session``: the day strings are derived IN
+    SPARK (date_format under the pinned UTC session TZ) — collecting the raw
+    timestamp and strftime-ing it on the driver converts through the
+    driver's SYSTEM timezone and flips the parity booleans on a non-UTC
+    host (ADVICE r02)."""
     events = load_table(spark, sf_dir, "events")
     # multi-file, time-ordered copy (cached dataset prep) so the stream sees
     # several micro-batches with advancing event time; ts cast to TIMESTAMP
-    # (the parquet NTZ type cannot carry a watermark; session TZ pinned UTC)
-    src_dir = _timeordered_events_dir(spark, sf_dir, sentinels=0)
+    # (the parquet NTZ type cannot carry a watermark)
+    src_dir = _timeordered_events_dir(spark, sf_dir, sentinels=sentinels)
     schema = spark.read.parquet(src_dir).schema
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
     )
-    est = hll_windowed_streaming_estimates(
+    est = windowed_estimates(
         stream,
         ts_col="ts",
         window_duration="1 day",
-        watermark="60 days",
+        watermark=watermark,
         p=p,
         key_col="event_type",
         value_col="user_id",
         value_kind="int64",
     )
-    name = f"win_stream_{uuid.uuid4().hex[:8]}"
+    name = f"{tag}_stream_{uuid.uuid4().hex[:8]}"
     # start the stream, then run the batch companion while it drains (the
     # stream executes JVM-side; conf is captured at stream START)
     with _streaming_conf(spark):
         q = (
             est.writeStream.format("memory")
             .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch_dir(prefix="sketchlib_winck_"))
+            .outputMode(output_mode)
+            .option("checkpointLocation", _scratch_dir(prefix=f"sketchlib_{tag}ck_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -2331,15 +2165,38 @@ def _streaming_windowed_users_utc(spark: SparkSession, sf_dir: str, p: int) -> D
         q.awaitTermination()
     finally:
         q.stop()
-    # derive the day string IN SPARK (date_format under the pinned UTC
-    # session TZ) — collecting the raw timestamp and strftime-ing it on the
-    # driver converts through the driver's SYSTEM timezone and flips the
-    # parity booleans on a non-UTC host (ADVICE r02)
     rows = spark.sql(
         f"SELECT date_format(window_start, 'yyyy-MM-dd') AS day, "
-        f"event_type, est_distinct, n_rows FROM {name}"
+        f"event_type, est_distinct, n_rows FROM {name} "
+        f"WHERE event_type != '__sentinel__'"
     ).collect()
     spark.catalog.dropTempView(name)
+    return rows, batch
+
+
+def streaming_windowed_users(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
+    """Event-time WINDOWED streaming through the driver: per (1-day window,
+    event_type) distinct-user HLL state via applyInPandasWithState with a
+    watermark, consumed as a time-ordered multi-file stream; the final
+    window states must match a batch build over the same rows exactly
+    (same registers -> equal estimates and counts). The watermark is set
+    beyond the data span so no row is late-dropped — parity is then a
+    deterministic law; late-drop/eviction behavior is pinned separately in
+    tests/test_streaming.py. Emits SQL-exact per-window row counts + the
+    provable parity boolean."""
+    from .streaming import hll_windowed_streaming_estimates
+
+    with _utc_session(spark):
+        rows, batch = _daily_window_parity(
+            spark,
+            sf_dir,
+            p,
+            hll_windowed_streaming_estimates,
+            sentinels=0,
+            watermark="60 days",
+            output_mode="update",
+            tag="win",
+        )
     latest: dict = {}
     for r in rows:
         key = (r["day"], r["event_type"])
@@ -2379,77 +2236,29 @@ def streaming_finalized_windows(spark: SparkSession, sf_dir: str, p: int = DEFAU
     closes; the finalized rows must then match a batch build over the same
     rows EXACTLY (byte-identical registers -> equal estimates and counts)
     and each window must be emitted exactly once."""
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _streaming_finalized_windows_utc(spark, sf_dir, p)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-
-
-def _streaming_finalized_windows_utc(spark: SparkSession, sf_dir: str, p: int) -> DataFrame:
-    import uuid
-
-    from .agg import HllAggregator
     from .streaming import hll_windowed_finalized_estimates
 
-    events = load_table(spark, sf_dir, "events")
     # 2 time-ordered data files + 2 sentinel heartbeat files = 4
     # micro-batches (cached dataset prep): windows accumulate across the
     # data batches, then close on the sentinel pair — the first sentinel
     # advances the watermark past every real window's end, the second
     # triggers the timed-out state handlers (timeouts fire in the
     # micro-batch AFTER the watermark advance). The sentinel's own window
-    # stays open forever and is filtered out below.
-    src_dir = _timeordered_events_dir(spark, sf_dir, sentinels=2)
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
-    )
-    # watermark wider than the data span so out-of-order REAL rows are never
-    # late-dropped; the sentinel is 400 days out, so watermark still passes
-    # every real window end when it arrives
-    fin = hll_windowed_finalized_estimates(
-        stream,
-        ts_col="ts",
-        window_duration="1 day",
-        watermark="90 days",
-        p=p,
-        key_col="event_type",
-        value_col="user_id",
-        value_kind="int64",
-    )
-    name = f"fin_stream_{uuid.uuid4().hex[:8]}"
-    # start the stream, then run the batch companion while it drains (the
-    # stream executes JVM-side; conf is captured at stream START)
-    with _streaming_conf(spark):
-        q = (
-            fin.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch_dir(prefix="sketchlib_finck_"))
-            .trigger(availableNow=True)
-            .start()
+    # stays open forever and is dropped from the rows. The watermark is
+    # wider than the data span so out-of-order REAL rows are never
+    # late-dropped; the sentinel is 400 days out, so the watermark still
+    # passes every real window end when it arrives.
+    with _utc_session(spark):
+        rows, batch = _daily_window_parity(
+            spark,
+            sf_dir,
+            p,
+            hll_windowed_finalized_estimates,
+            sentinels=2,
+            watermark="90 days",
+            output_mode="append",
+            tag="fin",
         )
-    try:
-        batch_keyed = events.withColumn(
-            "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-        )
-        agg = HllAggregator(
-            p=p, key_cols=["day", "event_type"], value_col="user_id", value_kind="int64"
-        )
-        batch = {
-            (r["day"], r["event_type"]): r for r in agg.estimates(batch_keyed).collect()
-        }
-        q.awaitTermination()
-    finally:
-        q.stop()
-    rows = spark.sql(
-        f"SELECT date_format(window_start, 'yyyy-MM-dd') AS day, "
-        f"event_type, est_distinct, n_rows FROM {name} "
-        f"WHERE event_type != '__sentinel__'"
-    ).collect()
-    spark.catalog.dropTempView(name)
     finalized = {}
     dup_emit = False
     for r in rows:
@@ -2479,6 +2288,8 @@ def _streaming_finalized_windows_utc(spark: SparkSession, sf_dir: str, p: int) -
         )
         .orderBy("day", "event_type")
     )
+
+
 def _docs_fp_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """2-file deterministic (doc_id, fp) stream source for the documents
     table — dataset PREP, cached per sf_dir like the other stream sources.
@@ -2533,7 +2344,6 @@ def curation_pipeline(
     rows, never text. The naive 4-stage formulation scanned the parquet 12
     times — at 100 TB that is 12 reads of the text column vs one.
     """
-    from pyspark.sql import Window
 
     from .textstats import repetition_signals
 
@@ -2618,7 +2428,6 @@ def duplicate_ngram_spans(
     measured fpp. The exact companion (and the DuckDB oracle) count real
     gram strings, so the integers compared are hash-free.
     """
-    from .agg import BloomAggregator
     from .bloom import BloomFilter
     from .dedup import word_span_bloom_scores, word_span_fps
 
@@ -2644,7 +2453,6 @@ def duplicate_ngram_spans(
     scored = word_span_bloom_scores(based, blob, "doc_id", "words", n)
 
     # exact companion (oracle-scale): REAL gram strings, window count
-    from pyspark.sql import Window
 
     grams = _word_gram_strings(n)
     span_rows = based.select("doc_id", F.explode(grams).alias("gram"))
@@ -2699,7 +2507,6 @@ def ngram_decontamination(spark: SparkSession, sf_dir: str, n: int = 8) -> DataF
     strings (oracle-reproduced); false positives are fpp-bounded and only
     ever widen the (human-reviewed) flag list.
     """
-    from .agg import BloomAggregator
     from .dedup import word_span_bloom_scores, word_span_fps
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True).select("doc_id", "text")
@@ -2751,7 +2558,6 @@ def ngram_decontamination(spark: SparkSession, sf_dir: str, n: int = 8) -> DataF
     flagged_ids, exact_ids, n_bench, n_train = _overlap(
         bloom_leg, exact_leg, bench.count, train.count
     )
-    from .session import release
 
     release(based)
     return spark.createDataFrame(
@@ -2801,7 +2607,6 @@ def merge_law_identity(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> 
     # three merge shapes from the same rows. End-to-end independence (a
     # fully separate scan + build) is still asserted by the checkpointed
     # resume leg below, which re-reads the parquet shard by shard.
-    from .session import release
 
     def merges_leg():
         partials = agg.partials_from_parquet(spark, path).localCheckpoint(eager=True)
@@ -2939,10 +2744,6 @@ def source_overlap(
     """
     import math
 
-    from .agg import KmvAggregator
-    from .kmv import KmvSketch
-    from .session import release
-
     a_src, b_src = "s00", "s01"
     filtered = (
         sequences_for(spark, sf_dir)
@@ -3013,7 +2814,7 @@ def source_overlap(
                 b_src,
                 exact_union,
                 exact_inter,
-                bool(abs(hll_union / exact_union - 1.0) <= 3 * hll_sigma),
+                _within_3sigma(hll_union, exact_union, p),
                 # inclusion-exclusion: ~3 estimates' errors, each O(sigma*union)
                 bool(abs(hll_inter - exact_inter) <= 3 * hll_sigma * 3 * exact_union),
                 bool(abs(kmv_union / exact_union - 1.0) <= 3 * kmv_sigma),
@@ -3041,10 +2842,7 @@ def source_jaccard_matrix(
     KMV pairs through the registered kmv_* SQL functions (native ratio
     estimator, ~3x tighter bounds). Fuses round-4's
     hll_source_jaccard_matrix + kmv_source_jaccard_matrix."""
-    from .agg import KmvAggregator
     from .functions import register
-    from .kmv import KmvSketch
-    from .session import release
 
     register(spark)
     path = sequences_path(spark, sf_dir)
@@ -3127,7 +2925,7 @@ def source_jaccard_matrix(
                 "source_b",
                 "exact_union",
                 "exact_intersection",
-                (F.abs(F.col("hll_union") / F.col("exact_union") - 1.0) <= 3 * hll_sigma).alias(
+                _within_3sigma(F.col("hll_union"), F.col("exact_union"), p).alias(
                     "hll_union_within_3sigma"
                 ),
                 (
@@ -3304,7 +3102,6 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs / n_after_dedup are SQL-exact. Fuses round-4's
     streaming_exact_dedup_docs + streaming_bloom_dedup_docs.
     """
-    import uuid
 
     from .streaming import streaming_bloom_dedup, streaming_first_seen
 
@@ -3411,7 +3208,6 @@ def bucketed_join_docs(spark: SparkSession, sf_dir: str, n_buckets: int = 8) -> 
     ``join_zero_exchange`` boolean asserts the executed plan fact itself.
     """
     import re
-    import uuid
 
     from .io import write_bucketed
 
@@ -3419,31 +3215,29 @@ def bucketed_join_docs(spark: SparkSession, sf_dir: str, n_buckets: int = 8) -> 
     tag = uuid.uuid4().hex[:8]
     t_meta, t_stats = f"docs_meta_{tag}", f"docs_stats_{tag}"
     base = _scratch_dir(prefix="sketchlib_bkt_")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(
-            docs.select("doc_id", "source"), t_meta, "doc_id",
-            n_buckets=n_buckets, path=f"{base}/meta",
-        )
-        write_bucketed(
-            docs.select("doc_id", F.length("text").alias("n_chars")), t_stats, "doc_id",
-            n_buckets=n_buckets, path=f"{base}/stats",
-        )
-        joined = spark.table(t_meta).join(spark.table(t_stats), "doc_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        zero_exchange = bool(
-            "SortMergeJoin" in plan and len(re.findall(r"Exchange", plan)) == 0
-        )
-        rows = (
-            joined.groupBy("source")
-            .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-            .collect()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql(f"DROP TABLE IF EXISTS {t_meta}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_stats}")
+    with _session_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        try:
+            write_bucketed(
+                docs.select("doc_id", "source"), t_meta, "doc_id",
+                n_buckets=n_buckets, path=f"{base}/meta",
+            )
+            write_bucketed(
+                docs.select("doc_id", F.length("text").alias("n_chars")), t_stats, "doc_id",
+                n_buckets=n_buckets, path=f"{base}/stats",
+            )
+            joined = spark.table(t_meta).join(spark.table(t_stats), "doc_id")
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            zero_exchange = bool(
+                "SortMergeJoin" in plan and len(re.findall(r"Exchange", plan)) == 0
+            )
+            rows = (
+                joined.groupBy("source")
+                .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
+                .collect()
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_meta}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_stats}")
     return spark.createDataFrame(
         [
             (r["source"], int(r["n_docs"]), int(r["total_chars"]), zero_exchange)
@@ -3475,7 +3269,6 @@ def training_mix_pack(
     by the DuckDB oracle; partition-count invariance is a tested law.
     """
     from .pack import mixture_budgets, pack_offsets, select_mixture
-    from .session import release
     from .textstats import token_count_bpe_ish
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True).select(

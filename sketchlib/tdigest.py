@@ -20,7 +20,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_TDIGEST, pack_header, unpack_header
+from .codec import KIND_TDIGEST, PayloadReader, pack_header, unpack_header
 
 _BUFFER_FACTOR = 5
 
@@ -181,13 +181,12 @@ class TDigest:
     @classmethod
     def from_bytes(cls, blob: bytes) -> "TDigest":
         _, _, payload = unpack_header(blob, KIND_TDIGEST)
-        delta, min_v, max_v, n_c = struct.unpack_from("<dddI", payload, 0)
-        off = struct.calcsize("<dddI")
-        means = np.frombuffer(payload, dtype=np.float64, count=n_c, offset=off).copy()
-        off += 8 * n_c
-        weights = np.frombuffer(payload, dtype=np.float64, count=n_c, offset=off).copy()
-        td = cls(delta=delta, means=means, weights=weights, min_v=min_v, max_v=max_v)
-        return td
+        r = PayloadReader(payload)
+        delta, min_v, max_v, n_c = r.unpack("<dddI")
+        means = r.array(np.float64, n_c).copy()
+        weights = r.array(np.float64, n_c).copy()
+        r.end()
+        return cls(delta=delta, means=means, weights=weights, min_v=min_v, max_v=max_v)
 
     @staticmethod
     def merge_blobs(blobs, delta: float = 200.0) -> "TDigest":

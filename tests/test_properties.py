@@ -5,6 +5,7 @@ inputs, not just the fixtures."""
 import struct
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -380,3 +381,110 @@ def test_sparse_dense_equivalence_any_op_sequence(ops, p, max_list, max_buf):
         assert np.array_equal(sp._dense_registers(), dn.registers)
     else:
         assert np.array_equal(sp.registers, dn.registers)
+
+
+def _codec_cases():
+    """(name, blob builder from a token list, decoder) for every at-rest
+    sketch encoding."""
+    from sketchlib.fi import FrequentItemsSketch
+    from sketchlib.kll import KllSketch
+    from sketchlib.kmv import KmvSketch
+    from sketchlib.minhash import MinHashSketch, token_shingles
+    from sketchlib.profile import ProfileSketch
+    from sketchlib.tdigest import TDigest
+
+    def hll(mode, p=10):
+        def build(arr):
+            s = HllSketch.empty(p)
+            s.update_batch(arr)
+            return s.to_bytes(mode=mode)
+
+        return build
+
+    def cms(arr):
+        s = CountMinSketch.empty(6, 3)
+        s.update_batch(arr)
+        return s.to_bytes()
+
+    def bloom(arr):
+        s = BloomFilter.empty(10, 3)
+        s.update_batch(arr)
+        return s.to_bytes()
+
+    def kll(arr):
+        s = KllSketch.empty(16)
+        s.update_batch(arr.astype(np.float64))
+        return s.to_bytes()
+
+    def tdigest(arr):
+        s = TDigest.empty(20.0)
+        s.update_batch(arr.astype(np.float64))
+        return s.to_bytes()
+
+    def kmv(mode):
+        def build(arr):
+            s = KmvSketch.empty(16)
+            s.update_batch(arr)
+            return s.to_bytes(mode=mode)
+
+        return build
+
+    def fi(kind):
+        def build(arr):
+            s = FrequentItemsSketch.empty(8, kind)
+            vals = arr.astype(np.int64) if kind == "int64" else [str(v) for v in arr]
+            s.update_batch(vals, kind=kind)
+            return s.to_bytes()
+
+        return build
+
+    def profile(arr):
+        s = ProfileSketch.empty(p=8, k=16)
+        s.update_values(arr)
+        s.update_row_lengths(np.array([len(arr)]))
+        return s.to_bytes()
+
+    def minhash(arr):
+        s = MinHashSketch.empty(16)
+        s.update_elements(token_shingles(arr.astype(np.int64)))
+        return s.to_bytes()
+
+    return [
+        ("hll_dense", hll("dense"), HllSketch.from_bytes),
+        ("hll_sparse", hll("sparse"), HllSketch.from_bytes),
+        ("hll_packed6", hll("packed6"), HllSketch.from_bytes),
+        ("hll_sparse64", hll(None, p=30), HllSketch.from_bytes),
+        ("cms", cms, CountMinSketch.from_bytes),
+        ("bloom", bloom, BloomFilter.from_bytes),
+        ("kll", kll, KllSketch.from_bytes),
+        ("tdigest", tdigest, TDigest.from_bytes),
+        ("kmv_raw", kmv("raw"), KmvSketch.from_bytes),
+        ("kmv_delta", kmv("delta"), KmvSketch.from_bytes),
+        ("fi_int64", fi("int64"), FrequentItemsSketch.from_bytes),
+        ("fi_string", fi("string"), FrequentItemsSketch.from_bytes),
+        ("profile", profile, ProfileSketch.from_bytes),
+        ("minhash", minhash, MinHashSketch.from_bytes),
+    ]
+
+
+_CODEC_CASES = _codec_cases()
+
+
+@given(
+    st.sampled_from(_CODEC_CASES),
+    token_lists,
+    st.binary(min_size=1, max_size=16),
+    st.integers(1, 1 << 16),
+)
+@settings(max_examples=300, deadline=None)
+def test_decoders_reject_trailing_and_truncated_bytes(case, toks, extra, cut):
+    """Every decoder consumes its payload exactly: a valid blob decodes, the
+    same blob with bytes appended or cut off raises ValueError (not
+    struct.error/IndexError, and never a silent decode of garbage)."""
+    name, build, decode = case
+    blob = build(np.array(toks, dtype=np.int32))
+    decode(blob)
+    with pytest.raises(ValueError):
+        decode(blob + extra)
+    with pytest.raises(ValueError):
+        decode(blob[: len(blob) - min(cut, len(blob))])
