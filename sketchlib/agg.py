@@ -149,6 +149,24 @@ def _extract_values(batch: pa.RecordBatch, value_col: str, kind: str):
     return arr.to_numpy(zero_copy_only=False).astype(np_dtype), counts
 
 
+def _shard_table(spark, shards: list, parallelism: int | None = None):
+    """Deal ``(file, row_group)`` shards round-robin into one group per task
+    and return ``(spark.range(n, numPartitions=n), groups)``.
+
+    Range puts exactly id i in partition i, so the task that reads id i
+    builds ``groups[i]`` (looked up in the mapInArrow closure): exactly one
+    group per task, deterministically, with no Python RDD stage and no
+    shuffle. Every Python task pays a fixed ~0.2-0.3 s start-up on top of its
+    work (PLANS.md §6), so the task count is the session's parallelism, not
+    a multiple of it; the max-merge law makes merged sketches independent
+    of the shard-to-task assignment. The closure carries the whole shard
+    list; pyspark ships commands over 1 MB as a broadcast, once per
+    executor.
+    """
+    n = min(len(shards), parallelism or spark.sparkContext.defaultParallelism)
+    return spark.range(n, numPartitions=n), [shards[i::n] for i in range(n)]
+
+
 class SketchAggregator:
     """Base distributed aggregator for any MergeableSketch.
 
@@ -356,39 +374,13 @@ class SketchAggregator:
             shards = [(f, -1) for f in files]
         if not shards:
             raise ValueError(f"no parquet row groups under {path}")
-        parallelism = parallelism or spark.sparkContext.defaultParallelism
-        # group shards round-robin into n_tasks rows; 4x the core count so the
-        # scheduler load-balances dynamically (a straggler task costs 1/4 of a
-        # wave, not a whole wave). The shard list rides as a pandas/Arrow
-        # DataFrame: no Python-RDD pickle stage, nothing sizable shuffled.
-        n_tasks = min(len(shards), parallelism * 4)
-        groups: list[list] = [[] for _ in range(n_tasks)]
-        for i, s in enumerate(shards):
-            groups[i % n_tasks].append(s)
-        # EXACTLY one shard group per task partition. repartition(n_tasks)
-        # round-robins each input partition from a RANDOM start, so groups
-        # collide: measured at 32 cores, some tasks got zero groups and one
-        # got 4x (min 0.0s / max 7.0s task times) — a straggler tail that
-        # was the single largest N->4N scaling loss. parallelize with
-        # numSlices=len(groups) places each group in its own partition
-        # deterministically; the list is tiny (one row per task).
-        from pyspark.sql import Row
-
-        rows = [
-            Row(files=[s[0] for s in g], rgs=[s[1] for s in g]) for g in groups
-        ]
-        sdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, len(rows)),
-            "files array<string>, rgs array<int>",
-        )
+        source, groups = _shard_table(spark, shards, parallelism)
         build = self._make_build_fn()
 
         def shard_units(batches):
             for b in batches:
-                for files, rgs in zip(
-                    b.column("files").to_pylist(), b.column("rgs").to_pylist()
-                ):
-                    for f, rg in zip(files, rgs):
+                for task in b.column("id").to_pylist():
+                    for f, rg in groups[task]:
                         pf = papq.ParquetFile(f)
                         row_groups = (
                             list(range(pf.metadata.num_row_groups)) if rg < 0 else [rg]
@@ -420,7 +412,7 @@ class SketchAggregator:
         # partial schema: map the parquet arrow schema to Spark types via a
         # zero-row read on the driver (footer only)
         probe = spark.read.parquet(path).select(*cols)
-        return sdf.mapInArrow(scan_and_build, self._partial_schema(probe))
+        return source.mapInArrow(scan_and_build, self._partial_schema(probe))
 
     # -- tree merge -------------------------------------------------------------
 

@@ -25,16 +25,22 @@ import uuid
 import pyarrow as pa
 import pyarrow.dataset as pads
 import pyarrow.parquet as papq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .agg import SketchAggregator
+from .agg import SketchAggregator, _shard_table
 
 _LINEAGE_FIELDS = [
     T.StructField("shard_id", T.StringType(), False),
     T.StructField("wall_secs", T.DoubleType(), False),
 ]
+
+# reader error conditions that mean "no partial committed yet"
+_NOTHING_CHECKPOINTED = frozenset(
+    {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+)
 
 
 def scratch_dir(prefix: str) -> str:
@@ -175,9 +181,18 @@ class CheckpointedBuild:
     # -- state ------------------------------------------------------------------
 
     def completed_shards(self, spark: SparkSession) -> set[str]:
+        """Shard ids already in the checkpoint. Only a checkpoint that holds
+        nothing yet reads as empty: a missing path or table, or the empty
+        directory a failed first append leaves behind. Any other error
+        (a corrupt file, an unreadable store) raises — swallowing it would
+        make :meth:`run` re-sketch every shard and append duplicates."""
         try:
             rows = read_partials(spark, self.ckpt_dir).select("shard_id").distinct().collect()
-        except Exception:
+        except FileNotFoundError:
+            return set()
+        except AnalysisException as e:
+            if e.getCondition() not in _NOTHING_CHECKPOINTED:
+                raise
             return set()
         return {r["shard_id"] for r in rows}
 
@@ -214,25 +229,12 @@ class CheckpointedBuild:
         build = agg._make_build_fn()
         out_schema = self._partial_schema(spark, input_path)
 
-        parallelism = parallelism or spark.sparkContext.defaultParallelism
-        n_tasks = min(len(pending), parallelism * 4)
-        groups: list[list] = [[] for _ in range(n_tasks)]
-        for i, s in enumerate(pending):
-            groups[i % n_tasks].append(s)
-        import pandas as pd
-
-        shard_pdf = pd.DataFrame(
-            {
-                "files": [[s[0] for s in g] for g in groups],
-                "rgs": [[s[1] for s in g] for g in groups],
-            }
-        )
-        sdf = spark.createDataFrame(shard_pdf).repartition(n_tasks)
+        source, groups = _shard_table(spark, pending, parallelism)
 
         def scan_build_tagged(batches):
             for b in batches:
-                for files, rgs in zip(b.column("files").to_pylist(), b.column("rgs").to_pylist()):
-                    for f, rg in zip(files, rgs):
+                for task in b.column("id").to_pylist():
+                    for f, rg in groups[task]:
                         t0 = time.perf_counter()
                         pf = papq.ParquetFile(f)
                         rb_iter = pf.iter_batches(
@@ -248,7 +250,7 @@ class CheckpointedBuild:
                                 names=out.schema.names + ["shard_id", "wall_secs"],
                             )
 
-        partials = sdf.mapInArrow(scan_build_tagged, out_schema)
+        partials = source.mapInArrow(scan_build_tagged, out_schema)
         append_partials(partials, self.ckpt_dir, spark)
         return len(pending)
 

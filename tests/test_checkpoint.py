@@ -120,3 +120,88 @@ def test_checkpoint_is_aggregator_generic_kmv_and_profile(spark, seq_path, tmp_p
         s = ProfileSketch.from_bytes(bytes(r["sketch"]))
         assert s.distinct_values() > 0
         assert s.kll.n == r["n_rows"]  # every row's length landed in the KLL
+
+
+@pytest.fixture(scope="module")
+def sharded_path(tmp_path_factory):
+    """8 (file, row group) shards: 2 files x 4 row groups of 1000 rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from sketchlib.data import gen_sequences_pandas
+
+    root = tmp_path_factory.mktemp("sharded")
+    table = pa.Table.from_pandas(gen_sequences_pandas(8_000), preserve_index=False)
+    for i in range(2):
+        papq.write_table(
+            table.slice(i * 4_000, 4_000), str(root / f"part-{i}.parquet"), row_group_size=1_000
+        )
+    return str(root)
+
+
+def test_corrupt_checkpoint_raises_instead_of_reappending(spark, sharded_path, tmp_path):
+    """A checkpoint that exists but cannot be read must fail the resume: if
+    it read as empty, run() would re-sketch every shard and append a second
+    copy, doubling every merged count."""
+    from sketchlib.agg import CmsAggregator
+
+    agg = CmsAggregator(width_log2=8, key_cols=["source"])
+    ckpt = CheckpointedBuild(agg, str(tmp_path), run_id="bad")
+    assert ckpt.run(spark, sharded_path) == 8
+    with open(f"{ckpt.ckpt_dir}/part-zz-garbage.parquet", "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        ckpt.run(spark, sharded_path)
+
+
+def test_empty_checkpoint_dir_reads_as_nothing_done(spark, sharded_path, tmp_path):
+    """The empty output directory a failed first append leaves behind holds
+    no partials: resuming sketches every shard, exactly once."""
+    import os
+
+    from sketchlib.agg import CmsAggregator
+
+    ckpt = CheckpointedBuild(CmsAggregator(width_log2=8, key_cols=["source"]), str(tmp_path))
+    os.makedirs(ckpt.ckpt_dir)
+    assert ckpt.completed_shards(spark) == set()
+    assert ckpt.run(spark, sharded_path) == 8
+    assert ckpt.run(spark, sharded_path) == 0
+
+
+@pytest.mark.parametrize("parallelism", [1, 3, None, 11])
+def test_every_shard_checkpointed_exactly_once(spark, sharded_path, tmp_path, parallelism):
+    """Whatever the task count (one task, fewer tasks than shards, the
+    session default, more tasks than shards), every shard lands in the
+    checkpoint once, the row counts add up to the input's, and the merged
+    sketches are byte-identical to the default-parallelism builds."""
+    from collections import Counter
+
+    from sketchlib.agg import KllAggregator
+    from sketchlib.io import shard_id
+
+    hll = HllAggregator(p=12, key_cols=["source"])
+    kll = KllAggregator(k=200, key_cols=["source"], value_col="n_tok")
+    all_shards = {shard_id(*s) for s in enumerate_shards(sharded_path)}
+    assert len(all_shards) == 8
+
+    def blobs(df):
+        return {r["source"]: bytes(r["sketch"]) for r in df.collect()}
+
+    expected = {
+        "hll": blobs(hll.merged(sharded_path, spark=spark)),
+        "kll": blobs(kll.merged(
+            kll.partials_from_parquet(spark, sharded_path, per_shard=True), is_partials=True
+        )),
+    }
+    for name, agg in (("hll", hll), ("kll", kll)):
+        ckpt = CheckpointedBuild(agg, str(tmp_path), run_id=name)
+        assert ckpt.run(spark, sharded_path, parallelism=parallelism) == 8
+        rows = ckpt.partials(spark).select("shard_id", "source", "n_rows").collect()
+        assert {r["shard_id"] for r in rows} == all_shards
+        assert max(Counter((r["shard_id"], r["source"]) for r in rows).values()) == 1
+        assert sum(r["n_rows"] for r in rows) == 8_000
+        assert blobs(ckpt.merged(spark)) == expected[name]
+
+    partials = hll.partials_from_parquet(spark, sharded_path, parallelism=parallelism)
+    assert sum(r["n_rows"] for r in partials.select("n_rows").collect()) == 8_000
+    assert blobs(hll.merged(partials, is_partials=True)) == expected["hll"]

@@ -4,6 +4,8 @@ These lock in the properties that matter at 100 TB — a regression that
 widens the scan or shuffles raw tokens should fail here, not in production.
 """
 
+import pytest
+
 from sketchlib.agg import HllAggregator
 from sketchlib.data import sequences_parquet
 
@@ -324,3 +326,48 @@ def test_repetition_signals_zero_shuffle(spark):
     assert "Exchange" not in plan
     assert "Join" not in plan
     assert "Window" not in plan
+
+
+def _row_group_layout(root, n_files: int, rgs_per_file: int, rg_rows: int = 200) -> str:
+    """n_files parquet files of rgs_per_file row groups each, under root/input."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from sketchlib.data import gen_sequences_pandas
+
+    per_file = rgs_per_file * rg_rows
+    table = pa.Table.from_pandas(gen_sequences_pandas(n_files * per_file), preserve_index=False)
+    (root / "input").mkdir()
+    for i in range(n_files):
+        out = str(root / "input" / f"part-{i}.parquet")
+        papq.write_table(table.slice(i * per_file, per_file), out, row_group_size=rg_rows)
+    return str(root / "input")
+
+
+@pytest.mark.parametrize("n_files,rgs_per_file", [(1, 2), (2, 3)])
+def test_parquet_and_checkpoint_partials_read_a_range_shard_table(
+    spark, tmp_path, monkeypatch, n_files, rgs_per_file
+):
+    """Both shard planners (partials_from_parquet in either mode, and the
+    checkpointed build) feed the partial MapInArrow from a Range source with
+    one task per shard group: no Python-RDD scan, no Exchange before the
+    build, and min(#row groups, defaultParallelism) partitions."""
+    import sketchlib.io as sio
+    from sketchlib.io import CheckpointedBuild
+
+    path = _row_group_layout(tmp_path, n_files, rgs_per_file)
+    n_tasks = min(n_files * rgs_per_file, spark.sparkContext.defaultParallelism)
+    agg = HllAggregator(p=10, key_cols=["source"])
+    captured = []
+    monkeypatch.setattr(sio, "append_partials", lambda df, target, spark: captured.append(df))
+    CheckpointedBuild(agg, str(tmp_path / "ckpt")).run(spark, path)
+    partials = [
+        agg.partials_from_parquet(spark, path),
+        agg.partials_from_parquet(spark, path, per_shard=True),
+        captured[0],
+    ]
+    for df in partials:
+        plan = _plan(df)
+        assert "Range" in plan and "Scan ExistingRDD" not in plan, plan
+        assert "MapInArrow" in plan and "Exchange" not in plan, plan
+        assert df.rdd.getNumPartitions() == n_tasks
