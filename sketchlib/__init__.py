@@ -6,7 +6,8 @@ Built from scratch on the semantics of ascv/HyperLogLog (reference at
 /root/reference, surveyed in SURVEY.md): MurmurHash64A keys, dense register
 arrays, element-wise-max merge, bias-corrected estimator. The architecture is
 idiomatic Spark — Arrow-batched partial sketches built with ``mapInArrow``,
-tree-merged with ``groupBy(...).applyInPandas`` — never per-row Python.
+merged by a key repartition + ``sortWithinPartitions`` and a runs-merge
+``mapInArrow`` — never per-row Python.
 """
 
 from .bloom import BloomFilter, optimal_params

@@ -9,8 +9,14 @@ Python surfaces and *no per-row Python anywhere*:
       -> mapInArrow(build partials)                    -- numpy kernel per batch;
          one output row per (task-partition, key):        map-side combine by
          (key..., sketch binary, n_rows, n_items)         construction
-      -> groupBy(key).applyInPandas(merge)             -- np.maximum/elementwise
+      -> repartition(key).sortWithinPartitions(key)    -- the one shuffle
+      -> mapInArrow(merge runs of equal keys)          -- np.maximum/elementwise,
+                                                          one call per batch
       -> finalize pandas_udf (estimate, quantile, ...)
+
+PLANS.md §1 shows this plan. ``partials_from_parquet`` replaces the scan and
+the first mapInArrow with pyarrow row-group reads inside the tasks; its
+per-shard mode is also what ``io.CheckpointedBuild`` appends.
 
 Physical property that makes this scale: the shuffle payload is *sketches*
 (KB each), never raw values. At 100 TB input the shuffle is
@@ -22,6 +28,8 @@ associative + commutative, src/hll.c:776-815 semantics).
 from __future__ import annotations
 
 import math
+import os
+import time
 from typing import Callable, Sequence
 
 import numpy as np
@@ -49,6 +57,15 @@ _COUNT_FIELDS = [
     T.StructField("n_rows", T.LongType(), False),
     T.StructField("n_items", T.LongType(), False),
 ]
+
+# lineage a per-shard partial row carries: the checkpoint table's row format
+_LINEAGE_FIELDS = [
+    T.StructField("shard_id", T.StringType(), False),
+    T.StructField("wall_secs", T.DoubleType(), False),
+]
+
+# past this many files partials_from_parquet plans whole files, not row groups
+_RG_PLAN_MAX_FILES = 512
 
 VALUE_KINDS = ("tokens", "int64", "int32", "double", "string")
 
@@ -149,6 +166,25 @@ def _extract_values(batch: pa.RecordBatch, value_col: str, kind: str):
     return arr.to_numpy(zero_copy_only=False).astype(np_dtype), counts
 
 
+def enumerate_shards(path: str) -> list[tuple[str, int]]:
+    """(file, row_group) work units for a parquet table — the lineage grain.
+
+    Zero-row row groups are skipped: pyarrow writes an empty table as one,
+    it builds no partial row, and a checkpoint would wait for it forever.
+    """
+    shards = []
+    for frag in pads.dataset(path, format="parquet").get_fragments():
+        md = frag.metadata
+        shards.extend(
+            (frag.path, rg) for rg in range(md.num_row_groups) if md.row_group(rg).num_rows
+        )
+    return shards
+
+
+def shard_id(file: str, rg: int) -> str:
+    return f"{os.path.basename(file)}#rg{rg}"
+
+
 def _shard_table(spark, shards: list, parallelism: int | None = None):
     """Deal ``(file, row_group)`` shards round-robin into one group per task
     and return ``(spark.range(n, numPartitions=n), groups)``.
@@ -161,9 +197,9 @@ def _shard_table(spark, shards: list, parallelism: int | None = None):
     a multiple of it; the max-merge law makes merged sketches independent
     of the shard-to-task assignment. The closure carries the whole shard
     list; pyspark ships commands over 1 MB as a broadcast, once per
-    executor.
+    executor. No shards (a table with no rows) still gets one, empty, task.
     """
-    n = min(len(shards), parallelism or spark.sparkContext.defaultParallelism)
+    n = max(1, min(len(shards), parallelism or spark.sparkContext.defaultParallelism))
     return spark.range(n, numPartitions=n), [shards[i::n] for i in range(n)]
 
 
@@ -220,10 +256,9 @@ class SketchAggregator:
 
     # -- schemas --------------------------------------------------------------
 
-    def _partial_schema(self, df: DataFrame, extra: Sequence[T.StructField] = ()) -> T.StructType:
+    def _partial_schema(self, df: DataFrame) -> T.StructType:
         by_name = {f.name: f for f in df.schema.fields}
-        fields = [by_name[k] for k in self.key_cols]
-        return T.StructType(fields + list(extra) + _COUNT_FIELDS)
+        return T.StructType([by_name[k] for k in self.key_cols] + _COUNT_FIELDS)
 
     # -- partial build ----------------------------------------------------------
 
@@ -325,13 +360,7 @@ class SketchAggregator:
         return 1024 if self.value_kind == "tokens" else 16384
 
     def partials_from_parquet(
-        self,
-        spark,
-        path: str,
-        parallelism: int | None = None,
-        batch_rows: int | None = None,
-        rg_plan_max_files: int = 512,
-        per_shard: bool = False,
+        self, spark, path: str, parallelism: int | None = None, per_shard: bool = False
     ) -> DataFrame:
         """Partial build with task-local vectorized parquet IO.
 
@@ -350,14 +379,11 @@ class SketchAggregator:
         canonical sorted-blob merge order in ``merge_blobs``, makes the
         merged KLL/t-digest sketch byte-identical at any parallelism (the
         property HLL/CMS/Bloom get for free from their order-exact algebra).
-        Costs one partial row per (row group, key) — the same grain the
-        checkpoint table uses.
+        Each row also carries its lineage (``shard_id``, ``wall_secs``): these
+        are exactly the rows ``io.CheckpointedBuild`` appends, and
+        ``merged(is_partials=True)`` ignores the extra columns.
         """
-        cols = self.key_cols + [self.value_col]
-        if batch_rows is None:
-            batch_rows = self._default_batch_rows()
-        dset = pads.dataset(path, format="parquet")
-        files = list(dset.files)
+        files = pads.dataset(path, format="parquet").files
         if not files:
             raise ValueError(f"no parquet files under {path}")
         # Shard granularity: row groups give the best load balance, but
@@ -365,17 +391,24 @@ class SketchAggregator:
         # O(files) round trips, prohibitive at 10^5-10^6 files. Past the
         # threshold, plan by whole file (rg = -1 -> the task iterates that
         # file's row groups itself; it opens the footer anyway to read).
-        if len(files) <= rg_plan_max_files:
-            shards = []
-            for frag in dset.get_fragments():
-                n_rg = frag.metadata.num_row_groups
-                shards.extend((frag.path, rg) for rg in range(n_rg))
+        if len(files) <= _RG_PLAN_MAX_FILES:
+            shards = enumerate_shards(path)
         else:
             shards = [(f, -1) for f in files]
-        if not shards:
-            raise ValueError(f"no parquet row groups under {path}")
-        source, groups = _shard_table(spark, shards, parallelism)
+        return self._scan_shards(spark, path, shards, parallelism, per_shard)
+
+    def _scan_shards(
+        self, spark, path: str, shards: list, parallelism: int | None, per_shard: bool
+    ) -> DataFrame:
+        """The one direct-parquet build: ``(file, row_group)`` shards dealt
+        over ``_shard_table`` tasks, each reading its row groups with pyarrow
+        into ``_make_build_fn``. One partial per task, or with ``per_shard``
+        one per row group tagged with ``shard_id`` and ``wall_secs`` (the
+        seconds spent reading and sketching it)."""
+        cols = self.key_cols + [self.value_col]
+        batch_rows = self._default_batch_rows()
         build = self._make_build_fn()
+        source, groups = _shard_table(spark, shards, parallelism)
 
         def shard_units(batches):
             for b in batches:
@@ -385,34 +418,35 @@ class SketchAggregator:
                         row_groups = (
                             list(range(pf.metadata.num_row_groups)) if rg < 0 else [rg]
                         )
-                        yield pf, row_groups
+                        yield f, pf, row_groups
 
-        if per_shard:
+        def read(pf, row_groups):
+            return pf.iter_batches(batch_size=batch_rows, row_groups=row_groups, columns=cols)
 
-            def scan_and_build(batches):
-                for pf, row_groups in shard_units(batches):
-                    for one_rg in row_groups:
-                        yield from build(
-                            pf.iter_batches(
-                                batch_size=batch_rows, row_groups=[one_rg], columns=cols
-                            )
+        def scan_and_build(batches):
+            if not per_shard:
+                yield from build(b for _, pf, rgs in shard_units(batches) for b in read(pf, rgs))
+                return
+            for f, pf, row_groups in shard_units(batches):
+                for rg in row_groups:
+                    t0 = time.perf_counter()
+                    for out in build(read(pf, [rg])):
+                        n = out.num_rows
+                        lineage = [
+                            pa.array([shard_id(f, rg)] * n, type=pa.string()),
+                            pa.array([time.perf_counter() - t0] * n, type=pa.float64()),
+                        ]
+                        yield pa.RecordBatch.from_arrays(
+                            list(out.columns) + lineage,
+                            names=out.schema.names + ["shard_id", "wall_secs"],
                         )
-
-        else:
-
-            def scan_and_build(batches):
-                def rb_iter():
-                    for pf, row_groups in shard_units(batches):
-                        yield from pf.iter_batches(
-                            batch_size=batch_rows, row_groups=row_groups, columns=cols
-                        )
-
-                yield from build(rb_iter())
 
         # partial schema: map the parquet arrow schema to Spark types via a
         # zero-row read on the driver (footer only)
-        probe = spark.read.parquet(path).select(*cols)
-        return source.mapInArrow(scan_and_build, self._partial_schema(probe))
+        schema = self._partial_schema(spark.read.parquet(path).select(*cols))
+        if per_shard:
+            schema = T.StructType(schema.fields + _LINEAGE_FIELDS)
+        return source.mapInArrow(scan_and_build, schema)
 
     # -- tree merge -------------------------------------------------------------
 
@@ -852,6 +886,9 @@ class HllAggregator(_DistinctAggregator):
         value_kind: str = "tokens",
     ):
         super().__init__(key_cols, value_col, value_kind)
+        if value_kind == "double":
+            # fail fast on the driver: there is no double hash to sketch
+            raise ValueError("HLL does not support value_kind='double'")
         if not (2 <= int(p) <= 63):
             # fail fast on the driver, not inside an executor task
             raise ValueError(f"p={p} is out of range [2, 63]")
@@ -867,11 +904,8 @@ class HllAggregator(_DistinctAggregator):
             sketch.update_batch(values)
         elif kind == "int64":
             sketch.update_batch_int64(values)
-        elif kind == "string":
-            if len(values):
-                sketch.update_hashes(murmur64a_str_array(values, self.seed))
-        else:
-            raise ValueError(f"HLL does not support value_kind={kind!r}")
+        elif len(values):  # string
+            sketch.update_hashes(murmur64a_str_array(values, self.seed))
 
     def _merge_blobs(self, blobs) -> HllSketch:
         return HllSketch.merge_blobs(blobs, self.p, self.seed)
@@ -924,10 +958,8 @@ class HllAggregator(_DistinctAggregator):
                 from .kernels import murmur64a_int64
 
                 hashes = murmur64a_int64(values, self.seed)
-            elif kind == "string":
+            else:  # string
                 hashes = murmur64a_str_array(values, self.seed)
-            else:
-                raise ValueError(f"HLL does not support value_kind={kind!r}")
             idx, rank = hll_index_rank(hashes, self.p)
         if n_groups == 1:
             update_registers(sketches[0].registers, idx, rank)

@@ -3,8 +3,10 @@
 The distributed analogue of the reference's pickle persistence
 (src/hll.c:847-985) plus its `_get_meta()` debug metadata (src/hll.c:569-591),
 made durable: every parquet row-group shard that has been sketched is recorded
-as a partial-sketch row with lineage (shard id, row/item counts, wall time,
-task partition). Resuming a run:
+as its partial-sketch rows with lineage (shard id, row/item counts, wall time).
+These rows ARE the per-shard partials of
+``SketchAggregator.partials_from_parquet(per_shard=True)`` — one build,
+restricted to the pending shards. Resuming a run:
 
     pending = all input shards  ANTI-JOIN  checkpointed shard ids
     build only pending -> append to the checkpoint table
@@ -19,23 +21,13 @@ Iceberg-ready (append-only partials keyed by shard) — swap the writer for
 from __future__ import annotations
 
 import os
-import time
 import uuid
 
-import pyarrow as pa
-import pyarrow.dataset as pads
-import pyarrow.parquet as papq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .agg import SketchAggregator, _shard_table
-
-_LINEAGE_FIELDS = [
-    T.StructField("shard_id", T.StringType(), False),
-    T.StructField("wall_secs", T.DoubleType(), False),
-]
+from .agg import SketchAggregator, enumerate_shards, shard_id
 
 # reader error conditions that mean "no partial committed yet"
 _NOTHING_CHECKPOINTED = frozenset(
@@ -135,20 +127,6 @@ def read_partials(spark: SparkSession, target: str) -> DataFrame:
     return spark.read.parquet(target)
 
 
-def enumerate_shards(path: str) -> list[tuple[str, int]]:
-    """(file, row_group) work units for a parquet table — the lineage grain."""
-    dset = pads.dataset(path, format="parquet")
-    shards = []
-    for frag in dset.get_fragments():
-        for rg in range(frag.metadata.num_row_groups):
-            shards.append((frag.path, rg))
-    return shards
-
-
-def shard_id(file: str, rg: int) -> str:
-    return f"{os.path.basename(file)}#rg{rg}"
-
-
 class CheckpointedBuild:
     """Resumable partial-sketch build over a parquet table.
 
@@ -202,55 +180,21 @@ class CheckpointedBuild:
 
     # -- build ------------------------------------------------------------------
 
-    def _partial_schema(self, spark: SparkSession, input_path: str) -> T.StructType:
-        cols = self.agg.key_cols + [self.agg.value_col]
-        probe = spark.read.parquet(input_path).select(*cols)
-        base = self.agg._partial_schema(probe)
-        return T.StructType(list(base.fields) + _LINEAGE_FIELDS)
-
     def run(
         self,
         spark: SparkSession,
         input_path: str,
         max_shards: int | None = None,
         parallelism: int | None = None,
-        batch_rows: int | None = None,
     ) -> int:
-        """Sketch pending shards into the checkpoint; returns #shards done now."""
-        if batch_rows is None:
-            batch_rows = self.agg._default_batch_rows()
-        pending = self.pending_shards(spark, input_path)
-        if max_shards is not None:
-            pending = pending[:max_shards]
+        """Sketch pending shards into the checkpoint; returns #shards done now.
+
+        The rows appended are ``partials_from_parquet(per_shard=True)``'s,
+        restricted to the pending shards."""
+        pending = self.pending_shards(spark, input_path)[:max_shards]
         if not pending:
             return 0
-        agg = self.agg
-        cols = agg.key_cols + [agg.value_col]
-        build = agg._make_build_fn()
-        out_schema = self._partial_schema(spark, input_path)
-
-        source, groups = _shard_table(spark, pending, parallelism)
-
-        def scan_build_tagged(batches):
-            for b in batches:
-                for task in b.column("id").to_pylist():
-                    for f, rg in groups[task]:
-                        t0 = time.perf_counter()
-                        pf = papq.ParquetFile(f)
-                        rb_iter = pf.iter_batches(
-                            batch_size=batch_rows, row_groups=[rg], columns=cols
-                        )
-                        for out in build(rb_iter):
-                            wall = time.perf_counter() - t0
-                            n = out.num_rows
-                            sid = pa.array([shard_id(f, rg)] * n, type=pa.string())
-                            ws = pa.array([wall] * n, type=pa.float64())
-                            yield pa.RecordBatch.from_arrays(
-                                list(out.columns) + [sid, ws],
-                                names=out.schema.names + ["shard_id", "wall_secs"],
-                            )
-
-        partials = source.mapInArrow(scan_build_tagged, out_schema)
+        partials = self.agg._scan_shards(spark, input_path, pending, parallelism, per_shard=True)
         append_partials(partials, self.ckpt_dir, spark)
         return len(pending)
 

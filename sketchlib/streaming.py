@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from .hll import HllSketch
-from .kernels import DEFAULT_SEED, murmur64a_str_array
+from .agg import HllAggregator
+from .kernels import DEFAULT_SEED
 
 _STATE_SCHEMA = T.StructType(
     [
@@ -32,7 +32,7 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _values_from_pandas(series: pd.Series, kind: str, seed: int):
+def _values_from_pandas(series: pd.Series, kind: str):
     if kind == "tokens":
         if len(series) == 0:
             return np.empty(0, dtype=np.int32), 0
@@ -87,7 +87,7 @@ def sketch_streaming(
         else:
             sketch, n_rows, n_items = empty(), 0, 0
         for pdf in pdfs:
-            values, n_new = _values_from_pandas(pdf[value_col], value_kind, agg_seed(agg))
+            values, n_new = _values_from_pandas(pdf[value_col], value_kind)
             update(sketch, values)
             n_rows += len(pdf)
             n_items += n_new
@@ -109,8 +109,14 @@ def sketch_streaming(
     )
 
 
-def agg_seed(agg) -> int:
-    return getattr(agg, "seed", 0)
+def _hll_args(p: int, seed: int, value_col: str, value_kind: str) -> dict:
+    """The HLL aggregator and ``est_distinct`` finalizer the hll_* wrappers
+    hand to the generic state machines."""
+    return dict(
+        agg=HllAggregator(p=p, seed=seed, key_cols=[], value_col=value_col, value_kind=value_kind),
+        finalize_fields=[T.StructField("est_distinct", T.LongType(), False)],
+        finalize_fn=lambda s: {"est_distinct": s.cardinality()},
+    )
 
 
 def hll_streaming_estimates(
@@ -124,56 +130,10 @@ def hll_streaming_estimates(
     """Per-key running HLL distinct estimates over a streaming DataFrame.
 
     Output (update mode): key_col, est_distinct, n_rows, n_items — one row
-    per key per micro-batch in which that key appeared.
+    per key per micro-batch in which that key appeared. Thin wrapper over
+    ``sketch_streaming``.
     """
-    key_field = stream.schema[key_col]
-    out_schema = T.StructType(
-        [
-            key_field,
-            T.StructField("est_distinct", T.LongType(), False),
-            T.StructField("n_rows", T.LongType(), False),
-            T.StructField("n_items", T.LongType(), False),
-        ]
-    )
-
-    def update_fn(key, pdfs, state: GroupState):
-        if state.exists:
-            blob, n_rows, n_items = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
-        else:
-            sketch, n_rows, n_items = HllSketch.empty(p, seed), 0, 0
-        for pdf in pdfs:
-            values, n_new = _values_from_pandas(pdf[value_col], value_kind, seed)
-            if value_kind == "tokens" or value_kind == "int32":
-                sketch.update_batch(values)
-            elif value_kind == "int64":
-                sketch.update_batch_int64(values)
-            elif value_kind == "string":
-                if n_new:
-                    sketch.update_hashes(murmur64a_str_array(values, seed))
-            n_rows += len(pdf)
-            n_items += n_new
-        state.update((sketch.to_bytes(), n_rows, n_items))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "est_distinct": [sketch.cardinality()],
-                "n_rows": [n_rows],
-                "n_items": [n_items],
-            }
-        )
-
-    return (
-        stream.select(key_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update_fn,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return sketch_streaming(stream, key_col=key_col, **_hll_args(p, seed, value_col, value_kind))
 
 
 def hll_windowed_streaming_estimates(
@@ -194,70 +154,17 @@ def hll_windowed_streaming_estimates(
     dropped by Spark before they reach the state function, and window state
     is evicted once the watermark passes the window end (event-time timeout)
     — the standard Structured Streaming windowed-aggregate discipline, but
-    the aggregate value is a mergeable sketch.
+    the aggregate value is a mergeable sketch. Output (update mode):
+    window_start, key_col, est_distinct, n_rows. Thin wrapper over
+    ``sketch_streaming_windowed``.
     """
-    from pyspark.sql import functions as F
-
-    key_field = stream.schema[key_col]
-    out_schema = T.StructType(
-        [
-            T.StructField("window_start", T.TimestampType(), False),
-            key_field,
-            T.StructField("est_distinct", T.LongType(), False),
-            T.StructField("n_rows", T.LongType(), False),
-        ]
-    )
-
-    def update_fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            # watermark passed the window: final state already emitted in
-            # update mode; evict
-            state.remove()
-            return
-        if state.exists:
-            blob, n_rows, _ = state.get
-            sketch = HllSketch.from_bytes(bytes(blob))
-        else:
-            sketch, n_rows = HllSketch.empty(p, seed), 0
-        for pdf in pdfs:
-            values, _ = _values_from_pandas(pdf[value_col], value_kind, seed)
-            if value_kind in ("tokens", "int32"):
-                sketch.update_batch(values)
-            elif value_kind == "int64":
-                sketch.update_batch_int64(values)
-            else:
-                sketch.update_hashes(murmur64a_str_array(values, seed))
-            n_rows += len(pdf)
-        state.update((sketch.to_bytes(), n_rows, 0))
-        window_start = key[0]
-        # evict this window's state once the event-time watermark passes its
-        # end (start + duration)
-        end_ms = int(pd.Timestamp(window_start).value // 10**6) + int(
-            pd.Timedelta(window_duration).total_seconds() * 1000
-        )
-        state.setTimeoutTimestamp(end_ms)
-        yield pd.DataFrame(
-            {
-                "window_start": [window_start],
-                key_col: [key[1]],
-                "est_distinct": [sketch.cardinality()],
-                "n_rows": [n_rows],
-            }
-        )
-
-    windowed = (
-        stream.withWatermark(ts_col, watermark)
-        .withColumn("window_start", F.window(ts_col, window_duration)["start"])
-        # the event-time column must survive the projection or the watermark
-        # tag is lost and EventTimeTimeout is rejected
-        .select("window_start", key_col, value_col, ts_col)
-    )
-    return windowed.groupBy("window_start", key_col).applyInPandasWithState(
-        update_fn,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return sketch_streaming_windowed(
+        stream,
+        ts_col=ts_col,
+        key_col=key_col,
+        window_duration=window_duration,
+        watermark=watermark,
+        **_hll_args(p, seed, value_col, value_kind),
     )
 
 
@@ -288,18 +195,14 @@ def hll_windowed_finalized_estimates(
     Thin wrapper over ``sketch_streaming_windowed(mode="append")`` — the one
     windowed-state machine serves every aggregator.
     """
-    from .agg import HllAggregator
-
     return sketch_streaming_windowed(
         stream,
-        HllAggregator(p=p, seed=seed, key_cols=[], value_col=value_col, value_kind=value_kind),
         ts_col=ts_col,
         key_col=key_col,
-        finalize_fields=[T.StructField("est_distinct", T.LongType(), False)],
-        finalize_fn=lambda s: {"est_distinct": s.cardinality()},
         window_duration=window_duration,
         watermark=watermark,
         mode="append",
+        **_hll_args(p, seed, value_col, value_kind),
     )
 
 
@@ -362,7 +265,7 @@ def sketch_streaming_windowed(
         else:
             sketch, n_rows = empty(), 0
         for pdf in pdfs:
-            values, _ = _values_from_pandas(pdf[value_col], value_kind, agg_seed(agg))
+            values, _ = _values_from_pandas(pdf[value_col], value_kind)
             update(sketch, values)
             n_rows += len(pdf)
         state.update((sketch.to_bytes(), n_rows, 0))

@@ -187,6 +187,10 @@ def test_every_shard_checkpointed_exactly_once(spark, sharded_path, tmp_path, pa
     def blobs(df):
         return {r["source"]: bytes(r["sketch"]) for r in df.collect()}
 
+    def lineage_rows(df):
+        cols = ["shard_id", "source", "sketch", "n_rows", "n_items"]
+        return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
+
     expected = {
         "hll": blobs(hll.merged(sharded_path, spark=spark)),
         "kll": blobs(kll.merged(
@@ -201,7 +205,39 @@ def test_every_shard_checkpointed_exactly_once(spark, sharded_path, tmp_path, pa
         assert max(Counter((r["shard_id"], r["source"]) for r in rows).values()) == 1
         assert sum(r["n_rows"] for r in rows) == 8_000
         assert blobs(ckpt.merged(spark)) == expected[name]
+        # the checkpoint rows ARE the per-shard partials of the direct build
+        per_shard = agg.partials_from_parquet(
+            spark, sharded_path, parallelism=parallelism, per_shard=True
+        )
+        assert lineage_rows(ckpt.partials(spark)) == lineage_rows(per_shard)
 
     partials = hll.partials_from_parquet(spark, sharded_path, parallelism=parallelism)
     assert sum(r["n_rows"] for r in partials.select("n_rows").collect()) == 8_000
     assert blobs(hll.merged(partials, is_partials=True)) == expected["hll"]
+
+
+def test_empty_file_does_not_stall_the_checkpoint(spark, tmp_path):
+    """pyarrow writes an empty table as one zero-row row group. It builds no
+    partial row, so as a shard it would never be recorded and every resume
+    would retry it: it is not a shard, and a bounded resume finishes."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from sketchlib.data import gen_sequences_pandas
+
+    root = tmp_path / "input"
+    root.mkdir()
+    table = pa.Table.from_pandas(gen_sequences_pandas(100), preserve_index=False)
+    papq.write_table(table, str(root / "part-0.parquet"))
+    papq.write_table(table.slice(0, 0), str(root / "part-1.parquet"))
+    assert papq.ParquetFile(str(root / "part-1.parquet")).metadata.num_row_groups == 1
+
+    agg = HllAggregator(p=10, key_cols=["source"])
+    ckpt = CheckpointedBuild(agg, str(tmp_path), run_id="empty")
+    assert [ckpt.run(spark, str(root), max_shards=1) for _ in range(3)] == [1, 0, 0]
+    assert ckpt.run_to_completion(spark, str(root), max_shards=1) == 0
+    direct = {r["source"]: bytes(r["sketch"]) for r in agg.merged(str(root), spark=spark).collect()}
+    resumed = {r["source"]: bytes(r["sketch"]) for r in ckpt.merged(spark).collect()}
+    assert resumed == direct and len(direct) > 0
+    # a table of nothing but the empty file sketches to no rows
+    assert agg.merged(str(root / "part-1.parquet"), spark=spark).count() == 0

@@ -118,8 +118,8 @@ def test_kll_compaction_parity_is_content_seeded():
     assert a.to_bytes() == b.to_bytes()
 
 
-def test_hll_merged_bytes_invariant_to_batch_size(spark, tmp_path):
-    """The cache-sizing knobs (reader batch_rows, Arrow batch slicing) must
+def test_hll_merged_bytes_invariant_to_batch_size(spark, tmp_path, monkeypatch):
+    """The cache-sizing knobs (reader batch rows, Arrow batch slicing) must
     never change HLL results: register max is batching-independent, so the
     merged bytes are identical at any chunking."""
     from sketchlib.agg import HllAggregator
@@ -132,9 +132,8 @@ def test_hll_merged_bytes_invariant_to_batch_size(spark, tmp_path):
     agg = HllAggregator(p=12, key_cols=["source"])
     outs = []
     for br in (256, 1024, 16384):
-        merged = agg.merged(
-            agg.partials_from_parquet(spark, path, batch_rows=br), is_partials=True
-        )
+        monkeypatch.setattr(agg, "_default_batch_rows", lambda br=br: br)
+        merged = agg.merged(agg.partials_from_parquet(spark, path), is_partials=True)
         outs.append({r["source"]: bytes(r["sketch"]) for r in merged.collect()})
     assert outs[0] == outs[1] == outs[2]
 

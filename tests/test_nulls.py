@@ -116,7 +116,7 @@ def test_streaming_values_null_tokens():
     from sketchlib.streaming import _values_from_pandas
 
     s = pd.Series([np.array([1, 2], dtype=np.int32), None, np.array([3], dtype=np.int32)])
-    flat, n = _values_from_pandas(s, "tokens", 314)
+    flat, n = _values_from_pandas(s, "tokens")
     assert n == 3
     assert flat.tolist() == [1, 2, 3]
 

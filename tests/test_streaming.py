@@ -73,6 +73,19 @@ def test_streaming_matches_batch_oracle(spark, tmp_path):
         q.stop()
 
 
+def test_hll_rejects_double_values_on_the_driver(spark):
+    """HLL hashes integers and strings only: a double value column must fail
+    at construction, on the driver, instead of answering est_distinct 0 in
+    the streaming wrapper (or failing inside an executor task in batch)."""
+    from sketchlib.agg import HllAggregator
+
+    with pytest.raises(ValueError, match="double"):
+        HllAggregator(value_col="v", value_kind="double")
+    df = spark.createDataFrame([("a", 1.5)], "source string, v double")
+    with pytest.raises(ValueError, match="double"):
+        hll_streaming_estimates(df, value_col="v", value_kind="double")
+
+
 def test_windowed_streaming_with_watermark(spark, tmp_path):
     """Event-time windowed sketches: per-(window, key) estimates match the
 
