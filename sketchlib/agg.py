@@ -110,12 +110,20 @@ def _adjacent_not_equal(arr: pa.Array) -> np.ndarray:
 
 def _group_codes(batch: pa.RecordBatch, key_cols: list[str]):
     """(codes int64 per row, unique key tuples) with Spark groupBy null
-    semantics: null is a valid group key.
+    semantics: null is a valid group key. Only distinct values ever become
+    Python objects; int keys stay ints (no pandas float coercion).
 
-    Single key: Arrow dictionary_encode (null rows get the appended null
-    group; unique values converted to Python only at uniques granularity, so
-    int keys stay ints — no pandas float coercion). Multi key: null-safe
-    Python tuples (tuples are never NA, so pd.factorize can't emit -1).
+    Single key: Arrow dictionary_encode, null rows in an appended null group.
+
+    Multi key: codes in first-appearance order of the key tuple, null one
+    group per column. Each column is dictionary-encoded (nulls encoded as
+    their own entry) and folded into the running code as ``code * len(dict)
+    + index``, re-factorized after every column so the mixed-radix value
+    stays below rows x dictionary size and cannot overflow int64. Float
+    columns encode ``x + 0.0``, so -0.0 and 0.0 form one group as under
+    Python equality (NaN is already one dictionary entry); their key values
+    are read raw from each group's first row. Other columns' key values come
+    from their dictionary, converted once per distinct value.
     """
     if len(key_cols) == 1:
         enc = batch.column(key_cols[0]).dictionary_encode()
@@ -131,9 +139,30 @@ def _group_codes(batch: pa.RecordBatch, key_cols: list[str]):
         else:
             codes = idx.to_numpy(zero_copy_only=False).astype(np.int64)
         return codes, uniq_tuples
-    tuples = pd.Series(list(zip(*[batch.column(k).to_pylist() for k in key_cols])))
-    codes, uniques = pd.factorize(tuples, sort=False)
-    return codes.astype(np.int64), list(uniques)
+    cols, indices, lookups = [], [], []
+    codes = None
+    for k in key_cols:
+        col = batch.column(k)
+        floating = pa.types.is_floating(col.type)
+        enc = (pc.add(col, 0.0) if floating else col).dictionary_encode(null_encoding="encode")
+        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        if codes is None:
+            codes = idx  # dictionary order is first-appearance order
+        else:
+            codes, _ = pd.factorize(codes * len(enc.dictionary) + idx, sort=False)
+        cols.append(col)
+        indices.append(idx)
+        lookups.append(None if floating else enc.dictionary.to_pylist())
+    # codes number groups in first-appearance order, so a row is its group's
+    # first iff its code exceeds every earlier code
+    first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1) > 0)
+    uniq_cols = [
+        col.take(pa.array(first)).to_pylist()
+        if lookup is None
+        else [lookup[i] for i in idx[first].tolist()]
+        for col, idx, lookup in zip(cols, indices, lookups)
+    ]
+    return codes, list(zip(*uniq_cols))
 
 
 def _extract_values(batch: pa.RecordBatch, value_col: str, kind: str):

@@ -46,12 +46,19 @@ def scratch_dir(prefix: str) -> str:
     durability is irrelevant here; production callers pass their own
     durable checkpoint locations explicitly. Override the root with
     ``SKETCHLIB_SCRATCH`` (set it to a disk path to opt out of tmpfs).
+
+    tmpfs is only picked with no active session or a ``local`` master. On a
+    cluster /dev/shm is node memory the executors compete for (often a
+    64 MB container mount), so the default there is the ordinary temp
+    directory.
     """
     import tempfile
 
     root = os.environ.get("SKETCHLIB_SCRATCH")
     if root is None and os.path.isdir("/dev/shm"):
-        root = "/dev/shm/sketchlib_scratch"
+        active = SparkSession.getActiveSession()
+        if active is None or active.sparkContext.master.startswith("local"):
+            root = "/dev/shm/sketchlib_scratch"
     if root:
         try:
             os.makedirs(root, exist_ok=True)

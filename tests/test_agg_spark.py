@@ -345,3 +345,55 @@ def test_time_rollup_coarser_grains_byte_identical(spark):
         agg.time_rollup(events, "ts", grains=("fortnight",))
     with pytest.raises(ValueError, match="duplicate grains"):
         agg.time_rollup(events, "ts", grains=("hour", "day", "day"))
+
+
+def test_time_rollup_multi_key_byte_identical_across_batches(spark):
+    """Two-key rollup over (event_type, hour) on a tz-aware ``ts``, with a
+    null event_type and Arrow batches of 7 rows so groups and merge runs
+    straddle batches: every grain equals a direct build at that grain,
+    byte for byte."""
+    import datetime as dt
+
+    from sketchlib.session import release
+
+    utc = dt.timezone.utc
+    rows = [
+        (
+            None if i == 11 else f"e{i % 3}",
+            i % 13,
+            dt.datetime(2024, 1, 1 + i % 9, i % 24, i % 60, tzinfo=utc),
+        )
+        for i in range(600)
+    ]
+    events = spark.createDataFrame(rows, "event_type string, user_id long, ts timestamp")
+    agg = HllAggregator(
+        p=10, key_cols=["event_type", "hour"], value_col="user_id", value_kind="int64"
+    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "7")
+    try:
+        roll = agg.time_rollup(events, "ts", grains=("hour", "day", "week"))
+        rolled = roll.collect()
+        got = {
+            (r["grain"], r["event_type"], r["hour"]): (bytes(r["sketch"]), r["n_rows"])
+            for r in rolled
+        }
+        assert len(got) == len(rolled)  # one row per key and grain
+        for grain in ("hour", "day", "week"):
+            direct = agg.merged(
+                events.withColumn("hour", F.date_trunc(grain, "ts").cast("timestamp"))
+            ).collect()
+            want = {
+                (r["event_type"], r["hour"]): (bytes(r["sketch"]), r["n_rows"])
+                for r in direct
+            }
+            assert len(want) == len(direct)
+            assert {k[1:]: v for k, v in got.items() if k[0] == grain} == want, grain
+            assert any(et is None for et, _ in want), grain
+        release(roll)
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)

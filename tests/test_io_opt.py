@@ -64,3 +64,28 @@ def test_scratch_dir_fresh_and_overridable(tmp_path, monkeypatch):
     monkeypatch.setenv("SKETCHLIB_SCRATCH", str(tmp_path / "override"))
     c = scratch_dir(prefix="t_")
     assert c.startswith(str(tmp_path / "override"))
+
+
+def test_scratch_dir_tmpfs_only_under_a_local_master(monkeypatch):
+    """/dev/shm is the default only with no session or a local master; a
+    cluster master (yarn here, stubbed) gets the ordinary temp directory."""
+    import tempfile
+    from types import SimpleNamespace
+
+    from pyspark.sql import SparkSession
+
+    monkeypatch.delenv("SKETCHLIB_SCRATCH", raising=False)
+    tmpfs = os.path.isdir("/dev/shm")
+
+    def with_master(master):
+        session = None if master is None else SimpleNamespace(
+            sparkContext=SimpleNamespace(master=master)
+        )
+        monkeypatch.setattr(SparkSession, "getActiveSession", lambda: session)
+        return scratch_dir(prefix="t_")
+
+    for master in (None, "local[4]", "local"):
+        assert with_master(master).startswith("/dev/shm/") == tmpfs, master
+    cluster = with_master("yarn")
+    assert not cluster.startswith("/dev/shm/")
+    assert os.path.dirname(cluster) == tempfile.gettempdir()
