@@ -45,8 +45,8 @@ from pyspark.sql import types as T
 from .bloom import BloomFilter
 from .cms import CountMinSketch
 from .fi import FrequentItemsSketch
-from .hll import HllSketch
-from .kernels import DEFAULT_SEED, murmur64a_int32, murmur64a_str_array
+from .hll import DENSE_MAX_P, HllSketch
+from .kernels import DEFAULT_SEED, hll_build_into, murmur64a, rechunk_record_batches
 from .kll import KllSketch
 from .kmv import KmvSketch
 from .profile import ProfileSketch
@@ -195,6 +195,33 @@ def _extract_values(batch: pa.RecordBatch, value_col: str, kind: str):
     return arr.to_numpy(zero_copy_only=False).astype(np_dtype), counts
 
 
+def _batch_groups(batch: pa.RecordBatch, key_cols: list[str], counts: np.ndarray, kind: str):
+    """(row codes, value codes, unique key tuples) of one batch: the group
+    code of every row, and of every value ``_extract_values`` returned for
+    it. No key columns is one group, ``()``."""
+    if key_cols:
+        codes, uniq_tuples = _group_codes(batch, key_cols)
+    else:
+        codes, uniq_tuples = np.zeros(batch.num_rows, dtype=np.int64), [()]
+    if kind == "tokens":
+        # int32 codes: halves the per-token code-stream traffic (group count
+        # per batch is far below 2^31)
+        return codes, np.repeat(codes.astype(np.int32), counts), uniq_tuples
+    return codes, codes[counts.astype(bool)], uniq_tuples
+
+
+def _group_slices(values, codes: np.ndarray, n_groups: int) -> list:
+    """One slice of ``values`` per group code 0..n_groups-1, each in batch
+    order: a stable argsort of ``codes``, then ``searchsorted`` bounds, so
+    the split is one sort rather than a pass over the batch per group.
+    Numpy values are gathered by indexing, Arrow arrays (strings) by
+    ``take``; empty groups get empty slices."""
+    order = np.argsort(codes, kind="stable")
+    bounds = np.searchsorted(codes[order], np.arange(n_groups + 1)).tolist()
+    grouped = values.take(pa.array(order)) if isinstance(values, pa.Array) else values[order]
+    return [grouped[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
+
+
 def enumerate_shards(path: str) -> list[tuple[str, int]]:
     """(file, row_group) work units for a parquet table — the lineage grain.
 
@@ -266,21 +293,16 @@ class SketchAggregator:
     def _update_grouped(self, sketches, values, value_codes, n_groups: int) -> None:
         """Update one sketch per group from a flattened value batch.
 
-        Generic fallback: boolean-mask per group (O(groups x values) passes).
-        Subclasses with composite-address scatter kernels override this with
-        a single-pass version (see HllAggregator).
+        ``value_codes`` gives each value's group. Every group's values reach
+        ``_update`` as one slice in batch order (``_group_slices``), so
+        order-sensitive sketches (KLL, t-digest, frequent items) see the same
+        sequence as a per-group scan would give them. HllAggregator overrides
+        this with one grouped scatter-max over the whole batch.
         """
         if n_groups == 1:
             self._update(sketches[0], values)
             return
-        for gi, s in enumerate(sketches):
-            mask = value_codes == gi
-            if isinstance(values, pa.Array):
-                gvals = values.filter(pa.array(mask))
-            elif isinstance(values, list):
-                gvals = [v for v, mk in zip(values, mask) if mk]
-            else:
-                gvals = values[mask]
+        for s, gvals in zip(sketches, _group_slices(values, value_codes, n_groups)):
             self._update(s, gvals)
 
     # -- schemas --------------------------------------------------------------
@@ -310,8 +332,6 @@ class SketchAggregator:
         # (Spark's default is 10k rows) down to cache-resident chunks before
         # the kernels — zero-copy, same fix as _default_batch_rows for the
         # task-local reader (measured ~1.5x at 32 cores)
-        from .kernels import rechunk_record_batches
-
         def sliced(batches):
             return rechunk_record_batches(batches) if kind == "tokens" else batches
 
@@ -324,17 +344,7 @@ class SketchAggregator:
                 if key_types is None:
                     key_types = [batch.schema.field(k).type for k in key_cols]
                 values, counts = _extract_values(batch, value_col, kind)
-                if key_cols:
-                    codes, uniq_tuples = _group_codes(batch, key_cols)
-                else:
-                    codes = np.zeros(batch.num_rows, dtype=np.int64)
-                    uniq_tuples = [()]
-                if kind == "tokens":
-                    # int32 codes: halves the per-token code-stream traffic
-                    # (group count per batch is far below 2^31)
-                    value_codes = np.repeat(codes.astype(np.int32), counts)
-                else:
-                    value_codes = codes[counts.astype(bool)]
+                codes, value_codes, uniq_tuples = _batch_groups(batch, key_cols, counts, kind)
                 row_counts = np.bincount(codes, minlength=len(uniq_tuples))
                 item_counts = np.bincount(codes, weights=counts, minlength=len(uniq_tuples))
                 slots = []
@@ -928,106 +938,31 @@ class HllAggregator(_DistinctAggregator):
         return HllSketch.empty(self.p, self.seed)
 
     def _update(self, sketch: HllSketch, values) -> None:
-        kind = self.value_kind
-        if kind == "tokens" or kind == "int32":
-            sketch.update_batch(values)
-        elif kind == "int64":
-            sketch.update_batch_int64(values)
-        elif len(values):  # string
-            sketch.update_hashes(murmur64a_str_array(values, self.seed))
+        sketch.update_hashes(murmur64a(values, self.value_kind, self.seed))
 
     def _merge_blobs(self, blobs) -> HllSketch:
         return HllSketch.merge_blobs(blobs, self.p, self.seed)
 
     def _update_grouped(self, sketches, values, value_codes, n_groups: int) -> None:
-        """Single-pass grouped build: hash the whole batch once, then one
+        """Grouped build through the one kernel, ``kernels.hll_build_into``.
 
-        composite-address scatter-max into a flat (groups x 2^p) matrix —
-        measured ~5x over the per-group mask loop at 12 groups."""
-        from .kernels import (
-            grouped_addresses,
-            hll_build_into,
-            hll_index_rank,
-            update_registers,
-        )
-
-        kind = self.value_kind
-        if len(values) == 0:
-            return
-        if kind in ("tokens", "int32", "int64") and self.p >= 12:
-            # fused windowed hot path: hash/split/scatter per cache-resident
-            # window, no full-batch intermediate arrays (VERDICT r03 #3)
-            m = 1 << self.p
-            if n_groups == 1:
-                hll_build_into(
-                    sketches[0].registers, values, None, self.seed, self.p, kind
-                )
-                return
-            if n_groups * m <= (64 << 20):
-                # reusable zeroed scratch, NOT np.zeros: a fresh allocation
-                # per Arrow chunk pays page faults + DRAM zero-fill; the
-                # reused buffer (and its re-zeroing) stays L2-resident
-                # across chunks (VERDICT r03 #3)
-                from .kernels import _scratch
-
-                flat = _scratch("hll_flat", n_groups * m, np.uint8)
-                flat[:] = 0
-                hll_build_into(flat, values, value_codes, self.seed, self.p, kind)
-                mat = flat.reshape(n_groups, m)
-                for g, s in enumerate(sketches):
-                    np.maximum(s.registers, mat[g], out=s.registers)
-                return
-            from .kernels import hll_hash_index_rank_fast
-
-            idx, rank = hll_hash_index_rank_fast(values, self.seed, self.p, kind)
+        - p > DENSE_MAX_P (sketches held sparse, no register array), or a
+          groups x 2^p matrix over 64 MB: the base per-group slices, each
+          hashed into its own sketch by ``_update``.
+        - one group: straight into that sketch's registers.
+        - otherwise: one scatter-max into a zeroed (groups x 2^p) matrix,
+          then a per-group ``np.maximum`` into each sketch.
+        """
+        p, m = self.p, 1 << self.p
+        if p > DENSE_MAX_P or n_groups * m > (64 << 20):
+            super()._update_grouped(sketches, values, value_codes, n_groups)
+        elif n_groups == 1:
+            hll_build_into(sketches[0].registers, values, None, self.seed, p, self.value_kind)
         else:
-            if kind in ("tokens", "int32"):
-                hashes = murmur64a_int32(values, self.seed)
-            elif kind == "int64":
-                from .kernels import murmur64a_int64
-
-                hashes = murmur64a_int64(values, self.seed)
-            else:  # string
-                hashes = murmur64a_str_array(values, self.seed)
-            idx, rank = hll_index_rank(hashes, self.p)
-        if n_groups == 1:
-            update_registers(sketches[0].registers, idx, rank)
-            return
-        m = 1 << self.p
-        if n_groups * m <= (64 << 20):
-            # dense path: one scatter-max into a flat (groups x m) matrix
             flat = np.zeros(n_groups * m, dtype=np.uint8)
-            np.maximum.at(flat, grouped_addresses(value_codes, idx, m), rank)
-            mat = flat.reshape(n_groups, m)
-            for g, s in enumerate(sketches):
-                np.maximum(s.registers, mat[g], out=s.registers)
-            return
-        # high-cardinality path (e.g. per-doc grouping): O(n) memory —
-        # pack (code, idx, rank) into uint64, sort, keep each (code, idx)
-        # run's max, then write per-group slices. code must fit 64-6-p bits.
-        if n_groups >= (1 << (58 - self.p)):
-            raise ValueError(f"too many groups ({n_groups}) for p={self.p} packed update")
-        shift_code, shift_idx = np.uint64(self.p + 6), np.uint64(6)
-        packed = (
-            (value_codes.astype(np.uint64) << shift_code)
-            | (idx.astype(np.uint64) << shift_idx)
-            | rank.astype(np.uint64)
-        )
-        packed.sort()
-        key = packed >> np.uint64(6)
-        last = np.empty(len(packed), dtype=bool)
-        last[-1] = True
-        np.not_equal(key[1:], key[:-1], out=last[:-1])
-        tops = packed[last]
-        tcode = (tops >> shift_code).astype(np.int64)
-        tidx = ((tops >> shift_idx) & np.uint64(m - 1)).astype(np.int64)
-        trank = (tops & np.uint64(63)).astype(np.uint8)
-        starts = np.searchsorted(tcode, np.arange(n_groups + 1))
-        for g, s in enumerate(sketches):
-            lo, hi = starts[g], starts[g + 1]
-            if lo < hi:
-                regs = s.registers
-                regs[tidx[lo:hi]] = np.maximum(regs[tidx[lo:hi]], trank[lo:hi])
+            hll_build_into(flat, values, value_codes, self.seed, p, self.value_kind)
+            for s, regs in zip(sketches, flat.reshape(n_groups, m)):
+                np.maximum(s.registers, regs, out=s.registers)
 
     # -- finalize ---------------------------------------------------------------
 
@@ -1173,29 +1108,12 @@ class CmsAggregator(SketchAggregator):
                 if key_types is None:
                     key_types = [batch.schema.field(k).type for k in key_cols]
                 values, item_counts = _extract_values(batch, value_col, kind)
-                if key_cols:
-                    codes, uniq_tuples = _group_codes(batch, key_cols)
-                    value_codes = (
-                        np.repeat(codes, item_counts)
-                        if kind == "tokens"
-                        else codes[item_counts.astype(bool)]
-                    )
-                else:
-                    uniq_tuples = [()]
-                    value_codes = np.zeros(
-                        int(item_counts.sum()) if kind == "tokens" else len(values),
-                        dtype=np.int64,
-                    )
-                for gi, keyt in enumerate(uniq_tuples):
+                _, value_codes, uniq_tuples = _batch_groups(batch, key_cols, item_counts, kind)
+                groups = _group_slices(values, value_codes, len(uniq_tuples))
+                for keyt, gvals in zip(uniq_tuples, groups):
                     if kind == "string":
-                        gvals = (
-                            values.filter(pa.array(value_codes == gi)).to_pylist()
-                            if isinstance(values, pa.Array)
-                            else [v for v, m in zip(values, value_codes == gi) if m]
-                        )
-                        counts.setdefault(keyt, Counter()).update(gvals)
+                        counts.setdefault(keyt, Counter()).update(gvals.to_pylist())
                     else:
-                        gvals = values[value_codes == gi]
                         uniq, cnt = np.unique(gvals, return_counts=True)
                         fold(keyt, uniq, cnt)
             keys_out, vals_out = [], []
@@ -1465,17 +1383,8 @@ class ProfileAggregator(SketchAggregator):
             sketch.update_values(values)
 
     def _update_rows_grouped(self, sketches, counts, codes, n_groups: int) -> None:
-        if n_groups == 1:
-            sketches[0].update_row_lengths(counts)
-            return
-        order = np.argsort(codes, kind="stable")
-        sorted_codes = codes[order]
-        sorted_counts = counts[order]
-        starts = np.searchsorted(sorted_codes, np.arange(n_groups + 1))
-        for g, s in enumerate(sketches):
-            lo, hi = starts[g], starts[g + 1]
-            if lo < hi:
-                s.update_row_lengths(sorted_counts[lo:hi])
+        for s, group_counts in zip(sketches, _group_slices(counts, codes, n_groups)):
+            s.update_row_lengths(group_counts)
 
     def _merge_blobs(self, blobs) -> ProfileSketch:
         return ProfileSketch.merge_blobs(blobs, self.p, self.kll_k, self.seed)

@@ -17,13 +17,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .codec import KIND_BLOOM, PayloadReader, pack_header, unpack_header
-from .cms import _H2_SEED_XOR
-from .kernels import (
-    DEFAULT_SEED,
-    murmur64a_int32,
-    murmur64a_int64,
-    murmur64a_str_array,
-)
+from .kernels import DEFAULT_SEED, hash_pair
 
 
 def optimal_params(n_expected: int, fpp: float) -> tuple[int, int]:
@@ -64,22 +58,10 @@ class BloomFilter:
     def m(self) -> int:
         return 1 << self.m_log2
 
-    def _hash_pair(self, values, kind: str) -> tuple[np.ndarray, np.ndarray]:
-        seed2 = (self.seed ^ _H2_SEED_XOR) & ((1 << 64) - 1)
-        if kind in ("tokens", "int32"):
-            h1, h2 = murmur64a_int32(values, self.seed), murmur64a_int32(values, seed2)
-        elif kind == "int64":
-            h1, h2 = murmur64a_int64(values, self.seed), murmur64a_int64(values, seed2)
-        elif kind == "string":
-            h1, h2 = murmur64a_str_array(values, self.seed), murmur64a_str_array(values, seed2)
-        else:
-            raise ValueError(f"unsupported kind {kind!r}")
-        return h1, h2 | np.uint64(1)
-
     def update_batch(self, values, kind: str = "tokens") -> None:
         if len(values) == 0:
             return
-        h1, h2 = self._hash_pair(values, kind)
+        h1, h2 = hash_pair(values, kind, self.seed)
         mask = np.uint64(self.m - 1)
         for j in range(self.k):
             self.bits[((h1 + np.uint64(j) * h2) & mask).astype(np.int64)] = True
@@ -87,7 +69,7 @@ class BloomFilter:
     def contains_batch(self, values, kind: str = "tokens") -> np.ndarray:
         if len(values) == 0:
             return np.zeros(0, dtype=bool)
-        h1, h2 = self._hash_pair(values, kind)
+        h1, h2 = hash_pair(values, kind, self.seed)
         mask = np.uint64(self.m - 1)
         out = np.ones(len(h1), dtype=bool)
         for j in range(self.k):

@@ -20,14 +20,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .codec import KIND_CMS, PayloadReader, pack_header, unpack_header
-from .kernels import (
-    DEFAULT_SEED,
-    murmur64a_int32,
-    murmur64a_int64,
-    murmur64a_str_array,
-)
-
-_H2_SEED_XOR = 0x9E3779B97F4A7C15  # golden-ratio constant, second hash family
+from .kernels import DEFAULT_SEED, hash_pair
 
 
 @dataclass
@@ -65,23 +58,6 @@ class CountMinSketch:
         """N — total weight added (row sums are all equal)."""
         return int(self.counters[0].sum())
 
-    # -- hashing ---------------------------------------------------------------
-
-    def _hash_pair(self, values, kind: str) -> tuple[np.ndarray, np.ndarray]:
-        seed2 = (self.seed ^ _H2_SEED_XOR) & ((1 << 64) - 1)
-        if kind in ("tokens", "int32"):
-            h1 = murmur64a_int32(values, self.seed)
-            h2 = murmur64a_int32(values, seed2)
-        elif kind == "int64":
-            h1 = murmur64a_int64(values, self.seed)
-            h2 = murmur64a_int64(values, seed2)
-        elif kind == "string":
-            h1 = murmur64a_str_array(values, self.seed)
-            h2 = murmur64a_str_array(values, seed2)
-        else:
-            raise ValueError(f"unsupported kind {kind!r}")
-        return h1, h2 | np.uint64(1)
-
     def _positions(self, h1: np.ndarray, h2: np.ndarray, j: int) -> np.ndarray:
         mask = np.uint64(self.width - 1)
         return ((h1 + np.uint64(j) * h2) & mask).astype(np.int64)
@@ -100,7 +76,7 @@ class CountMinSketch:
                     f"weights must be an integer array (got {weights.dtype}); "
                     "round explicitly before updating"
                 )
-        h1, h2 = self._hash_pair(values, kind)
+        h1, h2 = hash_pair(values, kind, self.seed)
         for j in range(self.depth):
             pos = self._positions(h1, h2, j)
             if weights is None:
@@ -113,7 +89,7 @@ class CountMinSketch:
         """Estimated frequency per value: min over depth rows (never undercounts)."""
         if len(values) == 0:
             return np.zeros(0, dtype=np.uint64)
-        h1, h2 = self._hash_pair(values, kind)
+        h1, h2 = hash_pair(values, kind, self.seed)
         est = self.counters[0][self._positions(h1, h2, 0)]
         for j in range(1, self.depth):
             np.minimum(est, self.counters[j][self._positions(h1, h2, j)], out=est)

@@ -1,17 +1,24 @@
 """Vectorized numpy kernels shared by all sketches.
 
-Semantics anchor: the reference MurmurHash64A (``/root/reference/lib/murmur2.c:18-59``)
-and the HLL index/rank split (``/root/reference/src/hll.c:639-641``). The code
-here is a from-scratch numpy implementation of the *published* MurmurHash64A
-algorithm (Austin Appleby, public domain) — verified bit-identical to the
-reference on golden vectors (FIXTURES.md §3.1).
+Semantics anchor: the reference MurmurHash64A (``lib/murmur2.c:18-59``) and
+the HLL index/rank split (``src/hll.c:639-641``). The code here is a
+from-scratch numpy implementation of the *published* MurmurHash64A algorithm
+(Austin Appleby, public domain), bit-identical to the reference on golden
+vectors (FIXTURES.md §3.1).
 
-Design notes (scale):
-- ``murmur64a_int32`` hashes an entire Arrow batch of int32 tokens in 5
-  vector ops — there is never per-row Python in the hot path.
-- ``vclz64`` is an *exact* count-leading-zeros (6-step masked binary
-  search). Never float ``log2``: it is off-by-one at 2^k boundaries, which
-  breaks bit-parity with the reference.
+One path per decision:
+- ``murmur64a(values, kind, seed)`` is the only place a ``value_kind`` picks
+  its hash (int32/tokens, int64, Arrow strings); ``hash_pair`` derives the
+  odd-h2 double hash that count-min and Bloom probe with.
+- ``hll_build_into`` is the one HLL batch kernel: per cache-sized window,
+  ``hll_index_rank(murmur64a(...))`` then one ``np.maximum.at`` into a flat
+  register array, grouped or not, for every kind and every dense p.
+- ``vclz64`` is an *exact* count-leading-zeros. Never float ``log2`` on a
+  raw uint64: it is off by one at 2^k boundaries, which breaks bit-parity
+  with the reference.
+
+Every kernel works on a whole Arrow batch at once; there is no per-row
+Python in the hot path.
 """
 
 from __future__ import annotations
@@ -171,6 +178,32 @@ def murmur64a_str_array(values, seed: int = DEFAULT_SEED) -> np.ndarray:
     return out
 
 
+def murmur64a(values, kind: str, seed: int = DEFAULT_SEED) -> np.ndarray:
+    """MurmurHash64A of a batch of one value kind: the one place a
+    ``value_kind`` picks its hash. ``tokens``/``int32`` hash 4-byte and
+    ``int64`` 8-byte little-endian encodings; ``string`` hashes the UTF-8
+    bytes of a pyarrow string array (or an iterable of str/bytes)."""
+    if kind in ("tokens", "int32"):
+        return murmur64a_int32(values, seed)
+    if kind == "int64":
+        return murmur64a_int64(values, seed)
+    if kind == "string":
+        return murmur64a_str_array(values, seed)
+    raise ValueError(f"unsupported kind {kind!r}")
+
+
+_H2_SEED_XOR = 0x9E3779B97F4A7C15  # golden-ratio constant, second hash family
+
+
+def hash_pair(values, kind: str, seed: int = DEFAULT_SEED) -> tuple[np.ndarray, np.ndarray]:
+    """(h1, h2) for Kirsch–Mitzenmacher double hashing, g_j = h1 + j*h2:
+    h2 is a second MurmurHash64A family (seed xor a golden-ratio constant)
+    forced odd, so its multiples cycle through every slot of a power-of-two
+    table. Count-min and Bloom probe with it."""
+    seed2 = (seed ^ _H2_SEED_XOR) & _MASK64
+    return murmur64a(values, kind, seed), murmur64a(values, kind, seed2) | np.uint64(1)
+
+
 def vclz64(x: np.ndarray) -> np.ndarray:
     """Exact count-leading-zeros of each uint64; clz(0) == 64.
 
@@ -223,117 +256,35 @@ def hll_index_rank(hashes: np.ndarray, p: int) -> tuple[np.ndarray, np.ndarray]:
     return idx, rank
 
 
-_SCRATCH: dict[str, np.ndarray] = {}
-
-
-def _scratch(name: str, n: int, dtype) -> np.ndarray:
-    """Worker-local reusable buffer (Python workers are single-threaded and
-
-    long-lived under spark.python.worker.reuse). Fresh numpy allocations per
-    Arrow batch cost page-zeroing + faults — measured ~2x the whole kernel
-    under 32-way concurrency on this box — so the hot path writes into
-    preallocated scratch with ``out=`` ufuncs instead.
-    """
-    buf = _SCRATCH.get(name)
-    if buf is None or buf.shape[0] < n:
-        buf = np.empty(max(int(n * 1.25), 1 << 16), dtype=dtype)
-        _SCRATCH[name] = buf
-    return buf[:n]
-
-
-def hll_hash_index_rank_fast(
-    values: np.ndarray, seed: int, p: int, kind: str = "int32"
-) -> tuple[np.ndarray, np.ndarray]:
-    """Hot-path murmur+split for int32/int64 keys using scratch buffers.
-
-    Returns (idx uint64, rank uint8) VIEWS INTO SCRATCH — consume them before
-    the next call. Requires p >= 12 (q <= 52 exact-float fast path); callers
-    fall back to the allocating functions otherwise. Bit-identical to
-    murmur64a_int32/int64 + hll_index_rank (tested).
-    """
-    n = len(values)
-    h = _scratch("h", n, np.uint64)
-    t = _scratch("t", n, np.uint64)
-    if kind in ("int32", "tokens"):
-        v = np.ascontiguousarray(values, dtype=np.int32)
-        h[:] = v.view(np.uint32)  # cast-assign, no intermediate
-        h ^= np.uint64((seed ^ (4 * 0xC6A4A7935BD1E995)) & _MASK64)
-        h *= _M64
-    else:  # int64: one full 8-byte block, then avalanche
-        v = np.ascontiguousarray(values, dtype=np.int64)
-        h[:] = v.view(np.uint64)
-        h *= _M64
-        np.right_shift(h, _R47, out=t)
-        h ^= t
-        h *= _M64
-        h ^= np.uint64((seed ^ ((8 * 0xC6A4A7935BD1E995) & _MASK64)) & _MASK64)
-        h *= _M64
-    np.right_shift(h, _R47, out=t)
-    h ^= t
-    h *= _M64
-    np.right_shift(h, _R47, out=t)
-    h ^= t
-    # split
-    q = 64 - p
-    if q > 52:
-        raise ValueError("fast path requires p >= 12")
-    idx = _scratch("idx", n, np.uint64)
-    np.right_shift(h, np.uint64(q), out=idx)
-    np.bitwise_and(h, np.uint64((1 << q) - 1), out=t)
-    f = _scratch("f", n, np.float64)
-    np.copyto(f, t, casting="unsafe")  # exact: q <= 52 payload bits
-    np.right_shift(f.view(np.uint64), np.uint64(52), out=t)
-    np.subtract(np.uint64(q + 1023), t, out=t)
-    np.minimum(t, np.uint64(q + 1), out=t)
-    rank = _scratch("rank", n, np.uint8)
-    np.copyto(rank, t, casting="unsafe")
-    return idx, rank
-
-
 def hll_build_into(
     flat_regs: np.ndarray,
-    values: np.ndarray,
+    values,
     value_codes: np.ndarray | None,
     seed: int,
     p: int,
     kind: str = "int32",
     window: int = 1 << 15,
 ) -> None:
-    """Fused hash + index/rank split + scatter-max, windowed for cache
-    residency (VERDICT r03 #3).
+    """Hash + index/rank split + scatter-max of ``values`` into ``flat_regs``.
 
-    Processes ``values`` in ``window``-element slices so the uint64 scratch
-    streams (~33 B/element across h/t/idx/f/rank) live in the core-private
-    L2 instead of streaming through the SHARED L3/DRAM — at 32 workers the
-    un-windowed per-batch scratch (~4-7 MB each) thrashes the shared cache,
-    which is exactly the measured 8->32 efficiency cliff. DRAM traffic per
-    token drops to the 4-byte value read plus the (tiny, cache-resident)
-    register matrix. Results are byte-identical at any window size:
-    scatter-max is associative and commutative.
+    ``flat_regs`` is the uint8 register array: 2^p for one sketch, or
+    n_groups * 2^p with ``value_codes`` giving each value's group, which
+    scatters to address ``code * 2^p + index``. Any ``kind`` that
+    :func:`murmur64a` takes and any dense p (<= 26).
 
-    ``flat_regs`` is the uint8 register array — 2^p for a single sketch, or
-    n_groups * 2^p with ``value_codes`` giving each element's group.
+    ``values`` is processed in ``window``-element slices so each slice's
+    temporaries (hashes, indices, ranks) stay cache-resident instead of
+    streaming a whole batch's worth through the shared cache (PLANS.md §6).
+    Results are byte-identical at any window size: scatter-max is
+    associative and commutative.
     """
     n = len(values)
-    m = 1 << p
     for lo in range(0, n, window):
         hi = min(lo + window, n)
-        idx, rank = hll_hash_index_rank_fast(values[lo:hi], seed, p, kind)
-        if value_codes is None:
-            np.maximum.at(flat_regs, idx, rank)
-        else:
-            addr = grouped_addresses(value_codes[lo:hi], idx, m)
-            np.maximum.at(flat_regs, addr, rank)
-
-
-def grouped_addresses(value_codes: np.ndarray, idx: np.ndarray, m: int) -> np.ndarray:
-    """code*m + idx into scratch (for the grouped scatter-max)."""
-    addr = _scratch("addr", len(idx), np.uint64)
-    np.copyto(addr, value_codes, casting="unsafe")
-    addr *= np.uint64(m)
-    # idx may be int64 (generic path) or uint64 (fast path); both non-negative
-    np.add(addr, idx, out=addr, casting="unsafe")
-    return addr
+        idx, rank = hll_index_rank(murmur64a(values[lo:hi], kind, seed), p)
+        if value_codes is not None:
+            idx += value_codes[lo:hi].astype(np.int64) << p
+        np.maximum.at(flat_regs, idx, rank)
 
 
 def update_registers(registers: np.ndarray, idx: np.ndarray, rank: np.ndarray) -> None:

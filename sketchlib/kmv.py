@@ -34,24 +34,9 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .codec import KIND_KMV, PayloadReader, pack_header, unpack_header
-from .kernels import (
-    DEFAULT_SEED,
-    murmur64a_int32,
-    murmur64a_int64,
-    murmur64a_str_array,
-)
+from .kernels import DEFAULT_SEED, murmur64a
 
 _TWO64 = float(1 << 64)
-
-
-def _hash_kind(values, kind: str, seed: int) -> np.ndarray:
-    if kind in ("tokens", "int32"):
-        return murmur64a_int32(values, seed)
-    if kind == "int64":
-        return murmur64a_int64(values, seed)
-    if kind == "string":
-        return murmur64a_str_array(values, seed)
-    raise ValueError(f"unsupported kind {kind!r}")
 
 
 @dataclass
@@ -96,7 +81,7 @@ class KmvSketch:
     def update_batch(self, values, kind: str = "tokens") -> None:
         if len(values) == 0:
             return
-        self._absorb(_hash_kind(values, kind, self.seed))
+        self._absorb(murmur64a(values, kind, self.seed))
 
     def _check(self, other: "KmvSketch") -> None:
         if (self.k, self.seed) != (other.k, other.seed):

@@ -143,7 +143,7 @@ def test_distributed_generator_matches_pandas(spark, tiny_pdf):
 
 
 def test_high_cardinality_grouping(spark, tiny_pdf):
-    """Per-doc grouping (2000 keys) exercises the O(n)-memory packed path
+    """Per-doc grouping (2000 keys) exercises the per-group slice path
 
     and must agree with the numpy oracle per key."""
     from sketchlib.agg import HllAggregator
@@ -152,7 +152,7 @@ def test_high_cardinality_grouping(spark, tiny_pdf):
 
     df = spark.createDataFrame(tiny_pdf, schema=SEQUENCES_SCHEMA).repartition(3)
     # p=16: 2000 groups x 64KB registers = 131MB > the 64MB dense-matrix
-    # budget, forcing the packed high-cardinality path
+    # budget, forcing the per-group slice path
     agg = HllAggregator(p=16, key_cols=["doc_id"])
     rows = agg.merged(df).collect()
     assert len(rows) == len(tiny_pdf)
@@ -162,6 +162,39 @@ def test_high_cardinality_grouping(spark, tiny_pdf):
         oracle = HllSketch.empty(16)
         oracle.update_batch(np.asarray(row["tokens"], dtype=np.int32))
         assert got[row["doc_id"]] == oracle.to_bytes(), row["doc_id"]
+
+
+def test_build_above_dense_p_equals_direct_sketch(tiny_pdf):
+    """p=30 sketches are held sparse (no register array): the partial build
+    must still give, per key, the bytes of a direct HllSketch build."""
+    import pyarrow as pa
+
+    sub = tiny_pdf.head(300)
+    batch = pa.RecordBatch.from_pandas(sub[["source", "tokens"]], preserve_index=False)
+    agg = HllAggregator(p=30, key_cols=["source"])
+    rows = [r for b in agg._make_build_fn()(iter([batch])) for r in b.to_pylist()]
+    assert {r["source"] for r in rows} == set(sub["source"])
+    for r in rows:
+        direct = HllSketch(p=30)
+        toks = sub.loc[sub["source"] == r["source"], "tokens"].to_list()
+        direct.update_batch(np.concatenate(toks).astype(np.int32))
+        assert r["sketch"] == direct.to_bytes(), r["source"]
+
+
+def test_estimates_above_dense_p_are_exact(spark, tiny_pdf):
+    """At p=30 a few thousand distinct tokens per key never share a
+    register, so the estimate is the exact distinct count."""
+    sub = tiny_pdf.head(300)
+    df = spark.createDataFrame(sub, schema=SEQUENCES_SCHEMA).repartition(3)
+    got = {
+        r["source"]: r["est_distinct"]
+        for r in HllAggregator(p=30, key_cols=["source"]).estimates(df).collect()
+    }
+    exact = {
+        src: len(np.unique(np.concatenate(grp["tokens"].to_list())))
+        for src, grp in sub.groupby("source")
+    }
+    assert got == exact
 
 
 def test_auto_salt_equals_unsalted(spark, tiny_pdf):

@@ -108,25 +108,6 @@ def test_update_registers_equals_naive(n):
     assert np.array_equal(fast, naive)
 
 
-def test_fast_hash_index_rank_parity():
-    """Scratch-buffer hot path must be bit-identical to the plain kernels."""
-    from sketchlib.kernels import hll_hash_index_rank_fast
-
-    rng = np.random.default_rng(11)
-    toks = rng.integers(-(2**31), 2**31, 100_000).astype(np.int32)
-    for p in (12, 14, 18):
-        i1, r1 = hll_index_rank(murmur64a_int32(toks, 314), p)
-        i2, r2 = hll_hash_index_rank_fast(toks, 314, p, "int32")
-        assert np.array_equal(i1.astype(np.uint64), i2) and np.array_equal(r1, r2), p
-    vals = rng.integers(-(2**62), 2**62, 50_000).astype(np.int64)
-    i1, r1 = hll_index_rank(murmur64a_int64(vals, 314), 14)
-    i2, r2 = hll_hash_index_rank_fast(vals, 314, 14, "int64")
-    assert np.array_equal(i1.astype(np.uint64), i2) and np.array_equal(r1, r2)
-    # second call reuses scratch; results must still be right
-    i3, r3 = hll_hash_index_rank_fast(vals[:10], 314, 14, "int64")
-    assert np.array_equal(i1[:10].astype(np.uint64), i3) and np.array_equal(r1[:10], r3)
-
-
 def test_varlen_string_hash_parity():
     """Arrow buffer-path string hashing == scalar murmur64a_bytes per key."""
     import pyarrow as pa
@@ -154,39 +135,39 @@ def test_varlen_string_hash_parity():
 
 
 def test_hll_build_into_window_invariance():
-    """The fused windowed kernel must be byte-identical to the classic
+    """The windowed build kernel must be byte-identical to the classic
     hash -> index/rank -> scatter-max pipeline at ANY window size
-    (scatter-max is associative/commutative), for both int32 and int64
-    kinds, grouped and ungrouped."""
-    import numpy as np
+    (scatter-max is associative/commutative), for every value kind, for p
+    on both sides of the exact-float split (p < 12 takes the vclz path),
+    grouped and ungrouped."""
+    import pyarrow as pa
 
-    from sketchlib.kernels import (
-        hll_build_into,
-        hll_index_rank,
-        murmur64a_int32,
-        murmur64a_int64,
-        update_registers,
-    )
+    from sketchlib.kernels import hll_build_into, murmur64a_str_array
 
     rng = np.random.default_rng(41)
-    p, m, seed = 13, 1 << 13, 314
+    seed = 314
     n = 100_001  # deliberately not a multiple of any window size
-    for kind, vals in (
-        ("int32", rng.integers(0, 500_000, n).astype(np.int32)),
-        ("int64", rng.integers(0, 1 << 40, n).astype(np.int64)),
-    ):
-        hashes = (murmur64a_int32 if kind == "int32" else murmur64a_int64)(vals, seed)
-        idx, rank = hll_index_rank(hashes, p)
-        ref = np.zeros(m, dtype=np.uint8)
-        update_registers(ref, idx, rank)
-        for window in (1 << 10, 1 << 15, 1 << 20):
-            got = np.zeros(m, dtype=np.uint8)
-            hll_build_into(got, vals, None, seed, p, kind, window=window)
-            assert np.array_equal(got, ref), (kind, window)
-        # grouped: codes scatter into a (groups x m) flat matrix
-        codes = rng.integers(0, 7, n).astype(np.int32)
-        ref_g = np.zeros(7 * m, dtype=np.uint8)
-        np.maximum.at(ref_g, codes.astype(np.int64) * m + idx, rank)
-        got_g = np.zeros(7 * m, dtype=np.uint8)
-        hll_build_into(got_g, vals, codes, seed, p, kind, window=1 << 14)
-        assert np.array_equal(got_g, ref_g), kind
+    ints = rng.integers(0, 500_000, n).astype(np.int32)
+    cases = (
+        ("int32", ints, murmur64a_int32),
+        ("tokens", ints, murmur64a_int32),
+        ("int64", rng.integers(0, 1 << 40, n).astype(np.int64), murmur64a_int64),
+        ("string", pa.array([f"k{v}" for v in ints[:20_001]]), murmur64a_str_array),
+    )
+    for kind, vals, murmur in cases:
+        codes = rng.integers(0, 7, len(vals)).astype(np.int32)
+        for p in (4, 11, 13):
+            m = 1 << p
+            idx, rank = hll_index_rank(murmur(vals, seed), p)
+            ref = np.zeros(m, dtype=np.uint8)
+            update_registers(ref, idx, rank)
+            for window in (1 << 10, 1 << 15, 1 << 20):
+                got = np.zeros(m, dtype=np.uint8)
+                hll_build_into(got, vals, None, seed, p, kind, window=window)
+                assert np.array_equal(got, ref), (kind, p, window)
+            # grouped: codes scatter into a (groups x m) flat matrix
+            ref_g = np.zeros(7 * m, dtype=np.uint8)
+            np.maximum.at(ref_g, codes.astype(np.int64) * m + idx, rank)
+            got_g = np.zeros(7 * m, dtype=np.uint8)
+            hll_build_into(got_g, vals, codes, seed, p, kind, window=1 << 14)
+            assert np.array_equal(got_g, ref_g), (kind, p)

@@ -578,3 +578,39 @@ def test_group_codes_wide_keys_do_not_overflow():
     )
     assert np.prod([float(len(set(c.to_pylist()))) for c in batch.columns]) > 2.0**63
     _assert_group_codes_match_oracle(batch, batch.schema.names)
+
+
+@given(
+    st.sampled_from(["int", "float", "string"]),
+    st.integers(1, 6),
+    st.lists(st.integers(0, 5), min_size=0, max_size=80),
+    st.data(),
+)
+@settings(max_examples=150, deadline=None)
+def test_group_slices_equal_mask_oracle(kind, n_groups, raw_codes, data):
+    """``_group_slices`` hands each group exactly the values a boolean mask
+    over the batch would, in batch order: numpy ints and floats and Arrow
+    strings, groups with no values, and a single group."""
+    import pyarrow as pa
+
+    from sketchlib.agg import _group_slices
+
+    codes = np.array([c % n_groups for c in raw_codes], dtype=np.int64)
+    n = len(codes)
+    draw = lambda elems: data.draw(st.lists(elems, min_size=n, max_size=n))  # noqa: E731
+    if kind == "int":
+        values = np.array(draw(st.integers(-(2**40), 2**40)), dtype=np.int64)
+    elif kind == "float":
+        values = np.array(draw(st.floats(allow_nan=False)), dtype=np.float64)
+    else:
+        values = pa.array(draw(st.text(max_size=4)), type=pa.string())
+    slices = _group_slices(values, codes, n_groups)
+    assert len(slices) == n_groups
+    for g, got in enumerate(slices):
+        mask = codes == g
+        if kind == "string":
+            assert isinstance(got, pa.Array)
+            assert got.to_pylist() == values.filter(pa.array(mask)).to_pylist()
+        else:
+            assert got.dtype == values.dtype
+            assert np.array_equal(got, values[mask])
