@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_BLOOM, PayloadReader, pack_header, unpack_header
+from .codec import KIND_BLOOM, PayloadReader, checked_indices, pack_header, unpack_header
 from .kernels import DEFAULT_SEED, hash_pair
 
 
@@ -120,9 +120,8 @@ class BloomFilter:
         k = kfield & ~cls._SPARSE_FLAG
         if kfield & cls._SPARSE_FLAG:
             (nnz,) = r.unpack("<I")
-            idx = r.array(np.uint64, nnz)
             bits = np.zeros(1 << m_log2, dtype=bool)
-            bits[idx.astype(np.int64)] = True
+            bits[checked_indices(r.array(np.uint64, nnz), 1 << m_log2)] = True
         else:
             bits = np.unpackbits(r.array(np.uint8, (1 << m_log2) // 8)).astype(bool)
         r.end()

@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import KIND_CMS, PayloadReader, pack_header, unpack_header
+from .codec import KIND_CMS, PayloadReader, checked_indices, pack_header, unpack_header
 from .kernels import DEFAULT_SEED, hash_pair
 
 
@@ -184,23 +184,46 @@ class CountMinSketch:
         return head + struct.pack("<H", self.depth) + self.counters.tobytes()
 
     @classmethod
-    def from_bytes(cls, blob: bytes) -> "CountMinSketch":
+    def _parse(cls, blob: bytes):
+        """The one count-min blob parser -> (width_log2, depth, seed,
+        counters, pairs). Exactly one of ``counters`` (the flat dense
+        counters, a read-only view of ``blob``) and ``pairs`` (range-checked
+        int64 flat indices, uint64 counts of a sparse blob) is set."""
         width_log2, seed, payload = unpack_header(blob, KIND_CMS)
         r = PayloadReader(payload)
         (dfield,) = r.unpack("<H")
         depth = dfield & ~cls._SPARSE_FLAG
-        n_cells = depth * (1 << width_log2)
+        n_cells = depth << width_log2
+        counters = pairs = None
         if dfield & cls._SPARSE_FLAG:
             (nnz,) = r.unpack("<I")
             idx = r.array(np.uint64, nnz)
-            vals = r.array(np.uint64, nnz)
-            flat = np.zeros(n_cells, dtype=np.uint64)
-            flat[idx.astype(np.int64)] = vals
-            counters = flat.reshape(depth, 1 << width_log2)
+            # an aligned copy: ufunc.at drops to its slow path on the
+            # payload's 22-byte-offset view
+            pairs = (checked_indices(idx, n_cells), r.array(np.uint64, nnz).copy())
         else:
-            counters = r.array(np.uint64, n_cells).reshape(depth, 1 << width_log2).copy()
+            counters = r.array(np.uint64, n_cells)
         r.end()
-        return cls(width_log2=width_log2, depth=depth, seed=seed, counters=counters)
+        return width_log2, depth, seed, counters, pairs
+
+    def _fold(self, counters, pairs) -> None:
+        """Add one parsed blob into this sketch's counters."""
+        flat = self.counters.reshape(-1)
+        if counters is not None:
+            flat += counters
+        else:
+            np.add.at(flat, *pairs)
+
+    @classmethod
+    def from_bytes(cls, blob: bytes) -> "CountMinSketch":
+        """The blob added into an empty sketch of its own config:
+        ``merge_blobs([blob], ...)`` by construction."""
+        width_log2, depth, seed, counters, pairs = cls._parse(blob)
+        if counters is not None:  # added into zeros, a dense blob is its copy
+            return cls(width_log2, depth, seed, counters.reshape(depth, -1).copy())
+        out = cls.empty(width_log2, depth, seed)
+        out._fold(None, pairs)
+        return out
 
     @staticmethod
     def merge_blobs(blobs, width_log2: int, depth: int, seed: int = DEFAULT_SEED) -> "CountMinSketch":
@@ -211,23 +234,11 @@ class CountMinSketch:
         dominant merge cost at depth 5 x 2^18; counts are identical either
         way — addition is the same arithmetic in any order)."""
         out = CountMinSketch.empty(width_log2, depth, seed)
-        flat = out.counters.reshape(-1)
         for b in blobs:
             if b is None:
                 continue
-            b = bytes(b)
-            b_width, b_seed, payload = unpack_header(b, KIND_CMS)
-            r = PayloadReader(payload)
-            (dfield,) = r.unpack("<H")
-            b_depth = dfield & ~CountMinSketch._SPARSE_FLAG
+            b_width, b_depth, b_seed, counters, pairs = CountMinSketch._parse(bytes(b))
             if (b_width, b_depth, b_seed) != (width_log2, depth, seed):
                 raise ValueError("cannot merge count-min sketches with different configs")
-            if dfield & CountMinSketch._SPARSE_FLAG:
-                (nnz,) = r.unpack("<I")
-                idx = r.array(np.uint64, nnz)
-                vals = r.array(np.uint64, nnz)
-                r.end()
-                np.add.at(flat, idx.astype(np.int64), vals)
-            else:
-                out.merge(CountMinSketch.from_bytes(b))
+            out._fold(counters, pairs)
         return out

@@ -12,6 +12,17 @@ explicit, versioned, language-agnostic layout suitable for checkpoint tables
 Decoders read the payload through ``PayloadReader``, so every blob must be
 exactly as long as its own fields say: a truncated or over-long blob raises
 ``ValueError`` instead of decoding garbage.
+
+Each layout has exactly one parser, and every consumer (``from_bytes``,
+``merge_blobs``, the batch decoders) folds that parser's output into its
+target with the sketch's own merge operator: HLL takes the max, count-min
+adds, Bloom ORs. ``from_bytes(b)`` is therefore ``merge_blobs([b])`` under
+the blob's own config. The same fold fixes what input the encoders never
+write means: a sparse (index, value) list need not be sorted or unique,
+and a repeated index folds by the merge law, exactly as if each entry
+came from its own blob. An index outside the sketch's grid raises
+``ValueError`` (``checked_indices``), and so does an HLL rank above
+64-p+1, in any encoding.
 """
 
 from __future__ import annotations
@@ -52,6 +63,17 @@ def unpack_header(blob: bytes, expect_kind: int) -> tuple[int, int, bytes]:
     if kind != expect_kind:
         raise ValueError(f"kind mismatch: blob has {kind}, expected {expect_kind}")
     return p, seed, blob[HEADER_LEN:]
+
+
+def checked_indices(idx: np.ndarray, size: int) -> np.ndarray:
+    """Sparse-entry positions as int64; ``ValueError`` unless every one lies
+    in ``[0, size)``."""
+    if len(idx):
+        lo = int(idx.min()) if idx.dtype.kind == "i" else 0
+        hi = int(idx.max())
+        if lo < 0 or hi >= size:
+            raise ValueError(f"sparse index range [{lo}, {hi}] outside a grid of {size} cells")
+    return idx.astype(np.int64)
 
 
 class PayloadReader:

@@ -20,7 +20,14 @@ from pyspark.sql import types as T
 
 from .bloom import BloomFilter
 from .cms import CountMinSketch
-from .hll import HllSketch
+from .codec import HEADER_LEN
+from .hll import (
+    DENSE_MAX_P,
+    HllSketch,
+    estimates_from_histograms,
+    histograms_from_registers,
+    registers_from_blobs,
+)
 from .kll import KllSketch
 from .kmv import KmvSketch
 from .tdigest import TDigest
@@ -35,124 +42,140 @@ _REGISTERED_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
 )
 
 
+def _config_groups(cols, rows, key_len: int = HEADER_LEN) -> list[np.ndarray]:
+    """Split the positions ``rows`` into groups whose blobs, in every column
+    of ``cols``, agree on the first ``key_len`` bytes: the codec header
+    (kind, p, seed), plus the k field for KMV. A column may mix configs
+    across rows; each group decodes as one batch."""
+    groups: dict[tuple, list[int]] = {}
+    for i in rows:
+        groups.setdefault(tuple(c[i][:key_len] for c in cols), []).append(int(i))
+    return [np.asarray(g) for g in groups.values()]
+
+
+def _dense_p(*blobs) -> bool:
+    """True iff every HLL blob's p is dense-representable, i.e. its group
+    can take the register-matrix path; above DENSE_MAX_P rows go through
+    ``HllSketch`` objects, which never allocate 2^p registers."""
+    return all(HllSketch.from_bytes(b).p <= DENSE_MAX_P for b in blobs)
+
+
 def _hll_estimates_np(blobs: list) -> np.ndarray:
     """Batch cardinality estimates for a list of non-null HLL blobs.
 
-    Groups rows by sketch config (a single column may legitimately mix p or
-    seed across tables), batch-decodes each group with one frombuffer
-    reshape, and runs the vectorized estimator once per group — the
-    K²-pairwise-matrix path previously paid a per-row Python
+    Groups rows by sketch config, batch-decodes each group with one
+    frombuffer reshape, and runs the vectorized estimator once per group —
+    the K²-pairwise-matrix path previously paid a per-row Python
     from_bytes + power-series (VERDICT r03 #5).
     """
-    from .hll import (
-        estimates_from_histograms,
-        histograms_from_registers,
-        registers_from_blobs,
-    )
-
     out = np.zeros(len(blobs), dtype=np.int64)
-    by_cfg: dict[bytes, list[int]] = {}
-    for i, b in enumerate(blobs):
-        by_cfg.setdefault(bytes(b[:16]), []).append(i)  # header = config key
-    for idx in by_cfg.values():
-        regs, p, _ = registers_from_blobs([blobs[i] for i in idx])
-        out[np.asarray(idx)] = estimates_from_histograms(
-            histograms_from_registers(regs), p
-        )
+    for idx in _config_groups([blobs], range(len(blobs))):
+        group = [blobs[i] for i in idx]
+        if _dense_p(group[0]):
+            regs, p, _ = registers_from_blobs(group)
+            out[idx] = estimates_from_histograms(histograms_from_registers(regs), p)
+        else:
+            out[idx] = [HllSketch.from_bytes(b).cardinality() for b in group]
     return out
 
 
+def _pair_rows(a: pd.Series, b: pd.Series, empty_like) -> tuple[list, list, list[int]]:
+    """Blob lists and the rows a pair UDF answers: those with at least one
+    side present. An absent side becomes ``empty_like(present blob)``, the
+    empty sketch of the other side's config, so the NULL convention — a
+    one-sided NULL is algebra with the EMPTY set, both NULL is NULL —
+    falls out of the ordinary pair path."""
+    a_list = [None if x is None else bytes(x) for x in a]
+    b_list = [None if x is None else bytes(x) for x in b]
+    rows = []
+    for i, (x, y) in enumerate(zip(a_list, b_list)):
+        if x is None and y is None:
+            continue
+        if x is None:
+            a_list[i] = empty_like(y)
+        elif y is None:
+            b_list[i] = empty_like(x)
+        rows.append(i)
+    return a_list, b_list, rows
+
+
+def _null_outside(res: np.ndarray, rows: list[int], dtype: str) -> pd.Series:
+    """``res`` as a Series of ``dtype`` that is NULL outside ``rows``."""
+    out = pd.Series(res, dtype=dtype)
+    missing = np.ones(len(res), dtype=bool)
+    missing[rows] = False
+    out[missing] = None
+    return out
+
+
+def _hll_pair_groups(a_list: list, b_list: list, rows):
+    """Yield ``(idx, a_blobs, b_blobs, dense)`` per config group of the
+    pair. ``dense`` is ``(ra, rb, p, seed)``, both sides' register
+    matrices, at dense-representable p, and None above DENSE_MAX_P, where
+    the caller goes through ``HllSketch`` objects. A row whose two sides
+    disagree on (p, seed) raises, matching ``merge``."""
+    for idx in _config_groups([a_list, b_list], rows):
+        a_blobs, b_blobs = [a_list[i] for i in idx], [b_list[i] for i in idx]
+        if not _dense_p(a_blobs[0], b_blobs[0]):
+            yield idx, a_blobs, b_blobs, None
+            continue
+        ra, p, seed = registers_from_blobs(a_blobs)
+        rb, pb, seedb = registers_from_blobs(b_blobs)
+        if (p, seed) != (pb, seedb):
+            raise ValueError(
+                f"cannot combine sketches of different config: p={p}/seed={seed} vs p={pb}/seed={seedb}"
+            )
+        yield idx, a_blobs, b_blobs, (ra, rb, p, seed)
+
+
+def _empty_hll_like(blob: bytes) -> bytes:
+    s = HllSketch.from_bytes(blob)
+    return HllSketch.empty(s.p, s.seed).to_bytes()
+
+
 def _hll_pair_estimates(a: pd.Series, b: pd.Series, op: str) -> pd.Series:
-    """Vectorized union/intersection/jaccard estimates over paired blob
-    columns — ONE decode serves whichever estimates the op needs (review
-    catch: jaccard previously ran the whole pipeline twice).
+    """Vectorized union/intersection/difference/jaccard estimates over
+    paired blob columns — ONE decode per config group serves whichever
+    estimates the op needs.
 
     NULL convention (documented below at the registration site): both-NULL →
-    NULL; one-sided NULL is jaccard/union/intersection against the EMPTY
-    set, computed literally — union degrades to the present side's estimate,
+    NULL; one-sided NULL is the op against the EMPTY set (``_pair_rows``),
+    computed literally — union degrades to the present side's estimate,
     intersection to 0, jaccard to 0.0 unless the present side is itself an
     empty sketch (then 1.0: two empty sets are identical). This is the same
     empty-set algebra as the KMV pair functions (ADVICE r04). Pairs must
     agree on (p, seed) — same contract as ``merge`` (src/hll.c:781-788).
     """
-    from .hll import (
-        estimates_from_histograms,
-        histograms_from_registers,
-        registers_from_blobs,
-    )
-
-    a_np = np.array([None if x is None else bytes(x) for x in a], dtype=object)
-    b_np = np.array([None if x is None else bytes(x) for x in b], dtype=object)
-    n = len(a_np)
-    a_null = np.array([x is None for x in a_np])
-    b_null = np.array([x is None for x in b_np])
-    res = np.zeros(n, dtype=np.float64 if op == "jaccard" else np.int64)
-    valid = ~(a_null & b_null)
-    one_sided = valid & (a_null | b_null)
-    if one_sided.any():
-        if op in ("union", "jaccard"):
-            singles = [a_np[i] if a_np[i] is not None else b_np[i] for i in np.flatnonzero(one_sided)]
-            single_est = _hll_estimates_np(singles)
-            if op == "union":
-                res[one_sided] = single_est
-            else:
-                # literal jaccard vs the empty set: 0.0 when the present side
-                # is non-empty, 1.0 when it is itself empty (two empty sets
-                # are identical) — same convention as kmv_jaccard
-                res[one_sided] = np.where(single_est == 0, 1.0, 0.0)
-        elif op == "difference":
-            # A minus the absent (empty) set is A's estimate; the absent
-            # set minus B is 0 (already zeros) — same as kmv_difference
-            a_present = one_sided & ~a_null
-            if a_present.any():
-                res[a_present] = _hll_estimates_np(
-                    [a_np[i] for i in np.flatnonzero(a_present)]
-                )
-        # intersection with the absent (empty) side is 0 — already zeros
-    both = valid & ~one_sided
-    if both.any():
-        # group by the PAIR's config (header bytes): a column unioned from
-        # checkpoint tables at different p/seed is legitimate as long as
-        # each row's own pair matches — decode/estimate per config group
-        # (the one-decode-per-batch fast path when configs are uniform).
-        # A row whose two sides disagree still raises, matching merge().
-        by_cfg: dict[tuple, list[int]] = {}
-        for i in np.flatnonzero(both):
-            by_cfg.setdefault((a_np[i][:16], b_np[i][:16]), []).append(int(i))
-        for idx_list in by_cfg.values():
-            idx = np.asarray(idx_list)
-            ra, p, seed = registers_from_blobs(a_np[idx])
-            rb, pb, seedb = registers_from_blobs(b_np[idx])
-            if (p, seed) != (pb, seedb):
-                raise ValueError(
-                    f"cannot combine sketches of different config: p={p}/seed={seed} vs p={pb}/seed={seedb}"
-                )
-            u = np.maximum(ra, rb)
-            est_u = estimates_from_histograms(histograms_from_registers(u), p)
-            if op == "union":
-                res[idx] = est_u
-            elif op == "difference":
-                # |A \ B| = |A∪B| - |B| by inclusion–exclusion, clamped
-                est_b = estimates_from_histograms(histograms_from_registers(rb), p)
-                res[idx] = np.maximum(0, est_u - est_b)
-            else:
-                est_a = estimates_from_histograms(histograms_from_registers(ra), p)
-                est_b = estimates_from_histograms(histograms_from_registers(rb), p)
-                inter = np.maximum(0, est_a + est_b - est_u)
-                if op == "jaccard":
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        # union 0 => both sketches empty => identical => 1.0
-                        # (unified empty-set algebra, ADVICE r04)
-                        res[idx] = np.where(est_u > 0, inter / est_u, 1.0)
-                else:
-                    res[idx] = inter
-    if op == "jaccard":
-        out = pd.Series(res, dtype="float64")
-        out[~valid] = None
-        return out
-    out = pd.Series(res, dtype="Int64")
-    out[~valid] = pd.NA
-    return out
+    a_list, b_list, rows = _pair_rows(a, b, _empty_hll_like)
+    res = np.zeros(len(a_list), dtype=np.float64 if op == "jaccard" else np.int64)
+    for idx, a_blobs, b_blobs, dense in _hll_pair_groups(a_list, b_list, rows):
+        if dense is None:
+            scalar = getattr(HllSketch, f"{op}_estimate")
+            res[idx] = [
+                scalar(HllSketch.from_bytes(x), HllSketch.from_bytes(y))
+                for x, y in zip(a_blobs, b_blobs)
+            ]
+            continue
+        ra, rb, p, _ = dense
+        est_u = estimates_from_histograms(histograms_from_registers(np.maximum(ra, rb)), p)
+        if op == "union":
+            res[idx] = est_u
+            continue
+        est_b = estimates_from_histograms(histograms_from_registers(rb), p)
+        if op == "difference":
+            # |A \ B| = |A∪B| - |B| by inclusion–exclusion, clamped
+            res[idx] = np.maximum(0, est_u - est_b)
+            continue
+        est_a = estimates_from_histograms(histograms_from_registers(ra), p)
+        inter = np.maximum(0, est_a + est_b - est_u)
+        if op == "jaccard":
+            with np.errstate(divide="ignore", invalid="ignore"):
+                # union 0 => both sketches empty => identical => 1.0
+                # (unified empty-set algebra, ADVICE r04)
+                res[idx] = np.where(est_u > 0, inter / est_u, 1.0)
+        else:
+            res[idx] = inter
+    return _null_outside(res, rows, "float64" if op == "jaccard" else "Int64")
 
 
 def register(spark: SparkSession, prefix: str = "", force: bool = False) -> None:
@@ -185,40 +208,19 @@ def register(spark: SparkSession, prefix: str = "", force: bool = False) -> None
 
     @F.pandas_udf(T.BinaryType())
     def hll_merge_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-        from .codec import KIND_HLL, pack_header
-        from .hll import registers_from_blobs
-
         a_list = [None if x is None else bytes(x) for x in a]
         b_list = [None if x is None else bytes(x) for x in b]
-        out: list = [None] * len(a_list)
-        by_cfg: dict[tuple, list[int]] = {}
-        for i in range(len(a_list)):
-            x, y = a_list[i], b_list[i]
-            if x is None and y is None:
-                continue
-            if x is None or y is None:
-                out[i] = x if x is not None else y
-                continue
-            by_cfg.setdefault((x[:16], y[:16]), []).append(i)
-        for idx in by_cfg.values():
-            # batch union per config group; byte-identical to the scalar
-            # merge().to_bytes() — dense rows encode as header+mode0+regs
-            # directly, sparse-winning rows via the shared codec
-            ra, p, seed = registers_from_blobs([a_list[i] for i in idx])
-            rb, pb, seedb = registers_from_blobs([b_list[i] for i in idx])
-            if (p, seed) != (pb, seedb):
-                raise ValueError(
-                    f"cannot merge sketches of different config: p={p}/seed={seed} vs p={pb}/seed={seedb}"
-                )
-            u = np.maximum(ra, rb)
-            head = pack_header(KIND_HLL, p, seed) + b"\x00"
-            dense_size = 1 << p
-            nnz = (u != 0).sum(axis=1)
-            for row, i in enumerate(idx):
-                if nnz[row] * 5 + 5 < dense_size:  # sparse wins: shared codec
-                    out[i] = HllSketch(p=p, seed=seed, registers=u[row]).to_bytes()
-                else:
-                    out[i] = head + u[row].tobytes()
+        # a one-sided NULL passes the present blob through unchanged
+        out = [y if x is None else x for x, y in zip(a_list, b_list)]
+        both = [i for i, (x, y) in enumerate(zip(a_list, b_list)) if x is not None and y is not None]
+        for idx, a_blobs, b_blobs, dense in _hll_pair_groups(a_list, b_list, both):
+            if dense is None:
+                merged = [HllSketch.from_bytes(x) | HllSketch.from_bytes(y) for x, y in zip(a_blobs, b_blobs)]
+            else:
+                ra, rb, p, seed = dense
+                merged = [HllSketch(p=p, seed=seed, registers=u) for u in np.maximum(ra, rb)]
+            for i, s in zip(idx, merged):
+                out[i] = s.to_bytes()
         return pd.Series(out)
 
     @F.pandas_udf(T.DoubleType())
@@ -334,79 +336,43 @@ def register(spark: SparkSession, prefix: str = "", force: bool = False) -> None
 
     # KMV set algebra carries the same NULL convention as the HLL pair UDFs
     # above: one-sided NULL = algebra with the empty set, both NULL = NULL.
-    # All three route through one batch decode (kmv.values_from_blobs) +
+    # All four route through one batch decode (kmv.values_from_blobs) +
     # kmv.pair_set_algebra over the pre-decoded value arrays — no per-row
     # from_bytes on the K²-matrix path (VERDICT r03 #5).
 
-    def _kmv_pairs(a: pd.Series, b: pd.Series):
-        """Shared decode/alignment: returns (a_list, b_list, both_idx,
-        (eu, ei, jac) aligned to both_idx).
-
-        Pairs are grouped by config — header + k prefix, blob[:20] — so a
-        column mixing sketch configs across ROWS works as long as each
-        row's own pair matches (per-group batch decode; a mismatched pair
-        raises, matching ``merge``)."""
+    def _kmv_pairs(a: pd.Series, b: pd.Series, which: int, dtype: str) -> pd.Series:
+        """Column ``which`` of ``pair_set_algebra`` (union, intersection,
+        jaccard, difference) per row. Pairs are grouped by config (header +
+        k field), so a column mixing sketch configs across ROWS works as
+        long as each row's own pair matches (per-group batch decode; a
+        mismatched pair raises, matching ``merge``)."""
         from .kmv import pair_set_algebra, values_from_blobs
 
-        a_list = [None if x is None else bytes(x) for x in a]
-        b_list = [None if x is None else bytes(x) for x in b]
-        n = len(a_list)
-        both_idx = [i for i in range(n) if a_list[i] is not None and b_list[i] is not None]
-        eu = np.zeros(len(both_idx), np.int64)
-        ei = np.zeros(len(both_idx), np.int64)
-        jac = np.zeros(len(both_idx), np.float64)
-        ed = np.zeros(len(both_idx), np.int64)
-        by_cfg: dict[tuple, list[int]] = {}
-        for pos, i in enumerate(both_idx):
-            by_cfg.setdefault((a_list[i][:20], b_list[i][:20]), []).append(pos)
-        for poss in by_cfg.values():
-            av, ka, sa = values_from_blobs([a_list[both_idx[p]] for p in poss])
-            bv, kb, sb = values_from_blobs([b_list[both_idx[p]] for p in poss])
+        def empty_like(blob):
+            s = KmvSketch.from_bytes(blob)
+            return KmvSketch.empty(s.k, s.seed).to_bytes()
+
+        a_list, b_list, rows = _pair_rows(a, b, empty_like)
+        res = np.zeros(len(a_list), dtype=dtype.lower())
+        for idx in _config_groups([a_list, b_list], rows, HEADER_LEN + 4):
+            av, ka, sa = values_from_blobs([a_list[i] for i in idx])
+            bv, kb, sb = values_from_blobs([b_list[i] for i in idx])
             if (ka, sa) != (kb, sb):
                 raise ValueError("cannot combine KMV sketches with different (k, seed)")
-            geu, gei, gjac, ged = pair_set_algebra(av, bv, ka)
-            pos_arr = np.asarray(poss)
-            eu[pos_arr], ei[pos_arr], jac[pos_arr], ed[pos_arr] = geu, gei, gjac, ged
-        return a_list, b_list, both_idx, (eu, ei, jac, ed)
+            res[idx] = pair_set_algebra(av, bv, ka)[which]
+        return _null_outside(res, rows, dtype)
 
     @F.pandas_udf(T.DoubleType())
     def kmv_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
-        a_list, b_list, both_idx, (_, _, jac, _) = _kmv_pairs(a, b)
-        out = [None] * len(a_list)
-        for pos, i in enumerate(both_idx):
-            out[i] = float(jac[pos])
-        for i in range(len(a_list)):
-            x, y = a_list[i], b_list[i]
-            if (x is None) != (y is None):
-                # one-sided NULL = jaccard against the EMPTY set, computed
-                # literally so an empty non-null sketch still gives 1.0
-                # (two empty sets are identical), matching blob-vs-blob
-                s = KmvSketch.from_bytes(x if x is not None else y)
-                out[i] = KmvSketch.jaccard(s, KmvSketch.empty(s.k, s.seed))
-        return pd.Series(out, dtype="float64")
+        return _kmv_pairs(a, b, 2, "float64")
 
     @F.pandas_udf(T.LongType())
     def kmv_intersection_estimate(a: pd.Series, b: pd.Series) -> pd.Series:
-        a_list, b_list, both_idx, (_, ei, _, _) = _kmv_pairs(a, b)
-        out = [None] * len(a_list)
-        for pos, i in enumerate(both_idx):
-            out[i] = int(ei[pos])
-        for i in range(len(a_list)):
-            if (a_list[i] is None) != (b_list[i] is None):
-                out[i] = 0  # intersection with an absent (empty) set
-        return pd.Series(out, dtype="Int64")
+        return _kmv_pairs(a, b, 1, "Int64")
 
     @F.pandas_udf(T.LongType())
     def kmv_union_estimate(a: pd.Series, b: pd.Series) -> pd.Series:
-        a_list, b_list, both_idx, (eu, _, _, _) = _kmv_pairs(a, b)
-        out = [None] * len(a_list)
-        for pos, i in enumerate(both_idx):
-            out[i] = int(eu[pos])
-        for i in range(len(a_list)):
-            x, y = a_list[i], b_list[i]
-            if (x is None) != (y is None):
-                out[i] = KmvSketch.from_bytes(x if x is not None else y).estimate()
-        return pd.Series(out, dtype="Int64")
+        return _kmv_pairs(a, b, 0, "Int64")
 
     @F.pandas_udf(T.LongType())
     def fi_point_lower(blobs: pd.Series, values: pd.Series) -> pd.Series:
@@ -449,15 +415,7 @@ def register(spark: SparkSession, prefix: str = "", force: bool = False) -> None
         """|A \\ B| — completes the SQL set algebra. One-sided NULL follows
         the empty-set convention: A minus the absent set is A's estimate;
         the absent set minus B is 0."""
-        a_list, b_list, both_idx, (_, _, _, ed) = _kmv_pairs(a, b)
-        out = [None] * len(a_list)
-        for pos, i in enumerate(both_idx):
-            out[i] = int(ed[pos])
-        for i in range(len(a_list)):
-            x, y = a_list[i], b_list[i]
-            if (x is None) != (y is None):
-                out[i] = KmvSketch.from_bytes(x).estimate() if x is not None else 0
-        return pd.Series(out, dtype="Int64")
+        return _kmv_pairs(a, b, 3, "Int64")
 
     @F.pandas_udf(T.DoubleType())
     def minhash_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:

@@ -37,7 +37,14 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .codec import HEADER_LEN, KIND_HLL, PayloadReader, pack_header, unpack_header
+from .codec import (
+    HEADER_LEN,
+    KIND_HLL,
+    PayloadReader,
+    checked_indices,
+    pack_header,
+    unpack_header,
+)
 from .kernels import (
     DEFAULT_SEED,
     hll_index_rank,
@@ -176,41 +183,96 @@ def histograms_from_registers(regs: np.ndarray) -> np.ndarray:
     return out
 
 
+def _check_ranks(ranks: np.ndarray, p: int) -> None:
+    """``ValueError`` on a rank above 64-p+1, the largest the index/rank split
+    can produce at ``p`` (src/hll.c:639-641)."""
+    if ranks.size and int(ranks.max()) > 65 - p:
+        raise ValueError(f"HLL rank {int(ranks.max())} exceeds 64-p+1 = {65 - p} at p={p}")
+
+
+def _parse(blob: bytes):
+    """The one HLL blob parser -> (p, seed, regs, pairs).
+
+    Exactly one of ``regs`` (the uint8[2^p] registers of a dense mode-0 or
+    packed6 mode-2 blob; mode 0 is a read-only view of ``blob``) and
+    ``pairs`` (int64 indices, uint8 ranks of a sparse mode-1 or mode-3
+    blob) is set. Indices and ranks are range-checked; repeated indices
+    are left for the consumer's max-fold (codec module docstring)."""
+    p, seed, payload = unpack_header(blob, KIND_HLL)
+    r = PayloadReader(payload)
+    (mode,) = r.unpack("<B")
+    regs = pairs = None
+    if mode in (1, 3):
+        (n,) = r.unpack("<I" if mode == 1 else "<Q")
+        idx = r.array(np.uint32 if mode == 1 else np.int64, n)
+        ranks = r.array(np.uint8, n)
+        pairs = (checked_indices(idx, 1 << p), ranks)
+    elif p > DENSE_MAX_P:
+        raise ValueError(f"dense HLL encoding {mode} is invalid at sparse-only p={p}")
+    elif mode == 0:
+        regs = r.array(np.uint8, 1 << p)
+    elif mode == 2:
+        m = 1 << p
+        bits = np.unpackbits(r.array(np.uint8, (6 * m + 7) // 8), bitorder="little")[
+            : 6 * m
+        ].reshape(m, 6)
+        regs = np.packbits(
+            np.pad(bits, ((0, 0), (0, 2))), axis=1, bitorder="little"
+        ).reshape(m)
+    else:
+        raise ValueError(f"unknown HLL register encoding {mode}")
+    r.end()
+    _check_ranks(regs if pairs is None else pairs[1], p)
+    return p, seed, regs, pairs
+
+
+def _fold_dense(target: np.ndarray, regs, pairs) -> None:
+    """Max-fold one parsed blob into a dense register array."""
+    if regs is not None:
+        np.maximum(target, regs, out=target)
+    else:
+        update_registers(target, *pairs)
+
+
 def registers_from_blobs(blobs) -> tuple[np.ndarray, int, int]:
     """Decode a batch of at-rest HLL blobs -> ((n, 2^p) uint8 matrix, p, seed).
 
-    All three encodings (dense / sparse / packed6) decode into one
-    preallocated matrix; the common all-dense-same-length case is a single
-    ``np.frombuffer`` reshape over the concatenated payloads. Mixed p or
-    seed raises (pairwise matrices are same-config by construction, like
-    ``merge``'s size guard, src/hll.c:781-788).
+    Every row is its blob max-folded into zeros through the one parser, so
+    every encoding decodes here exactly as ``from_bytes`` decodes it.
+    The one shortcut is the batched mode-0 read: when every blob is dense
+    and of the same length, the matrix is a single ``np.frombuffer``
+    reshape over the concatenated blobs, under the parser's rank bound.
+    Mixed p or seed raises (pairwise matrices are same-config by
+    construction, like ``merge``'s size guard, src/hll.c:781-788), and so
+    does p > DENSE_MAX_P, where a row of 2^p registers cannot be allocated.
     """
     blobs = [bytes(b) for b in blobs]
     n = len(blobs)
     if n == 0:
         return np.zeros((0, 0), dtype=np.uint8), 0, DEFAULT_SEED
-    p0, seed0, _ = unpack_header(blobs[0], KIND_HLL)
+    p0, seed0, _, _ = _parse(blobs[0])
     if p0 > DENSE_MAX_P:
         raise ValueError(
             f"batch register decode needs a dense-representable p <= {DENSE_MAX_P}, "
             f"got p={p0}; decode sparse sketches one at a time via from_bytes"
         )
     m = 1 << p0
-    first_len = len(blobs[0])
     hdr = HEADER_LEN  # mode byte sits right after the fixed-width header
-    if first_len == hdr + 1 + m and all(len(b) == first_len for b in blobs):
-        buf = np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(n, first_len)
+    if all(len(b) == hdr + 1 + m for b in blobs):
+        buf = np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(n, hdr + 1 + m)
         if (buf[:, hdr] == 0).all():
             # every blob dense: headers must agree (vectorized check)
             if not (buf[:, :hdr] == buf[0, :hdr]).all():
                 raise ValueError("cannot batch-decode HLL blobs with mixed p/seed")
-            return np.ascontiguousarray(buf[:, hdr + 1 :]), p0, seed0
+            regs = np.ascontiguousarray(buf[:, hdr + 1 :])
+            _check_ranks(regs, p0)
+            return regs, p0, seed0
     regs = np.zeros((n, m), dtype=np.uint8)
     for i, b in enumerate(blobs):
-        s = HllSketch.from_bytes(b)
-        if (s.p, s.seed) != (p0, seed0):
+        p, seed, dense, pairs = _parse(b)
+        if (p, seed) != (p0, seed0):
             raise ValueError("cannot batch-decode HLL blobs with mixed p/seed")
-        regs[i] = s.registers
+        _fold_dense(regs[i], dense, pairs)
     return regs, p0, seed0
 
 
@@ -331,9 +393,7 @@ class HllSketch:
         if self.p > DENSE_MAX_P or not self.is_sparse:
             return
         if len(self.sparse_indices) >= self._max_list:
-            regs = np.zeros(1 << self.p, dtype=np.uint8)
-            regs[self.sparse_indices] = self.sparse_ranks
-            self.registers = regs
+            self.registers = self._dense_registers()
             self.sparse_indices = None  # type: ignore[assignment]
             self.sparse_ranks = None  # type: ignore[assignment]
             self._pending = {}
@@ -403,13 +463,7 @@ class HllSketch:
         """Max-update registers from precomputed 64-bit hashes."""
         if len(hashes) == 0:
             return
-        idx, rank = hll_index_rank(np.asarray(hashes, dtype=np.uint64), self.p)
-        if self.is_sparse:
-            self._flush_buffer()
-            self._sparse_update(idx, rank)
-            self._maybe_densify()
-        else:
-            update_registers(self.registers, idx, rank)
+        self._fold(None, hll_index_rank(np.asarray(hashes, dtype=np.uint64), self.p))
 
     def update_batch(self, tokens: np.ndarray) -> None:
         """Vectorized equivalent of reference ``add()`` per int32 token
@@ -473,14 +527,29 @@ class HllSketch:
 
     # -- merge / finalize ---------------------------------------------------
 
-    def _check_mergeable(self, other: "HllSketch") -> None:
-        if self.size != other.size:
+    def _check_mergeable(self, p: int, seed: int) -> None:
+        if self.p != p:
             # reference raises on size mismatch (src/hll.c:781-788)
-            raise ValueError(
-                f"cannot merge sketches of different size: 2^{self.p} vs 2^{other.p}"
-            )
-        if self.seed != other.seed:
-            raise ValueError(f"cannot merge sketches with different seeds: {self.seed} vs {other.seed}")
+            raise ValueError(f"cannot merge sketches of different size: 2^{self.p} vs 2^{p}")
+        if self.seed != seed:
+            raise ValueError(f"cannot merge sketches with different seeds: {self.seed} vs {seed}")
+
+    def _fold(self, regs, pairs) -> None:
+        """Max-fold dense registers ``regs`` or (index, rank) ``pairs`` —
+        a parsed blob, another sketch or a hashed batch — into this
+        sketch, whatever its representation."""
+        if not self.is_sparse:
+            _fold_dense(self.registers, regs, pairs)
+            return
+        self._flush_buffer()
+        if regs is not None:
+            idx = np.flatnonzero(regs != 0)
+            self._sparse_update(idx, regs[idx])
+        else:
+            idx, ranks = pairs
+            keep = ranks > 0
+            self._sparse_update(idx[keep], ranks[keep])
+        self._maybe_densify()
 
     def merge(self, other: "HllSketch") -> "HllSketch":
         """In-place element-wise max merge (src/hll.c:776-815); returns self.
@@ -489,30 +558,15 @@ class HllSketch:
         loop (which reads/writes through the repr-agnostic get/setRegister,
         src/hll.c:791-811): a sparse self can densify mid-merge once the
         merged pair list crosses the transform threshold."""
-        self._check_mergeable(other)
+        self._check_mergeable(other.p, other.seed)
         if other.is_sparse:
             other._flush_buffer()
-        if self.is_sparse:
-            self._flush_buffer()
-            if other.is_sparse:
-                self._sparse_update(other.sparse_indices, other.sparse_ranks)
-            else:
-                nz = np.flatnonzero(other.registers)
-                self._sparse_update(nz, other.registers[nz])
-            self._maybe_densify()
-            return self
-        if other.is_sparse:
-            update_registers(self.registers, other.sparse_indices, other.sparse_ranks)
-            return self
-        np.maximum(self.registers, other.registers, out=self.registers)
+            self._fold(None, (other.sparse_indices, other.sparse_ranks))
+        else:
+            self._fold(other.registers, None)
         return self
 
     def __or__(self, other: "HllSketch") -> "HllSketch":
-        self._check_mergeable(other)
-        if not self.is_sparse and not other.is_sparse:
-            return HllSketch(
-                p=self.p, seed=self.seed, registers=np.maximum(self.registers, other.registers)
-            )
         return self.copy().merge(other)
 
     def cardinality(self) -> int:
@@ -525,68 +579,70 @@ class HllSketch:
         """Versioned at-rest blob: header + registers.
 
         The distributed analogue of the reference pickle (src/hll.c:847-909),
-        minus derivable state (histogram, cache) — SURVEY.md §3.4. Three
-        encodings:
+        minus derivable state (histogram, cache) — SURVEY.md §3.4. Four
+        encodings, selected by the mode byte after the header:
 
         - mode 0 (dense): raw uint8 registers;
-        - mode 1 (sparse): sorted (idx:u32, rank:u8) pairs — picked
-          automatically when fewer than ~1/6 of registers are set (per-doc
-          sketches at p>=14), mirroring the reference's dense/sparse duality
-          *at rest only* (in flight is always dense, SURVEY.md §4.1);
+        - mode 1 (sparse): u32 count + sorted u32 indices + u8 ranks of the
+          set registers — picked automatically when 5 bytes per set
+          register plus the count undercut 2^p (about 1/5 filled: per-doc
+          sketches at p>=14), mirroring the reference's dense/sparse
+          duality *at rest only* (in flight is always dense, SURVEY.md
+          §4.1). The choice is made from ``np.count_nonzero``, before any
+          pair is gathered;
         - mode 2 (packed6, ``mode="packed6"``): 6 bits per register, the
           reference's defining dense representation (src/hll.c:44-254
           semantics — ranks <= 64-p+1 <= 63 always fit) at 75% of the raw
           size. Explicit opt-in: for automatic blobs sparse already beats it
-          where it matters, but storage parity with the reference is kept.
+          where it matters, but storage parity with the reference is kept;
+        - mode 3 (sparse64): u64 count + sorted i64 indices + u8 ranks,
+          always and only for p > DENSE_MAX_P, where indices above p=32
+          don't fit mode 1's u32.
 
-        ``mode=None`` auto-picks min(dense, sparse) as in round 1, so
-        existing checkpoint bytes are unchanged.
-
-        Sparse-representation sketches at p > DENSE_MAX_P always encode as
-        mode 3 (sparse64: u64 count + sorted i64 indices + u8 ranks —
-        register indices above p=32 don't fit mode 1's u32). Runtime-sparse
-        sketches at dense-representable p (``sparse=True``) encode
-        byte-identically to their dense twin — the at-rest codec is
-        representation-agnostic, like the rest of the library's blobs.
+        ``mode=None`` auto-picks min(dense, sparse), so existing checkpoint
+        bytes are unchanged. Runtime-sparse sketches at dense-representable
+        p (``sparse=True``) encode byte-identically to their dense twin —
+        the at-rest codec is representation-agnostic, like the rest of the
+        library's blobs.
         """
+        if mode not in (None, "dense", "sparse", "packed6"):
+            raise ValueError(f"unknown HLL encoding mode {mode!r}")
         head = pack_header(KIND_HLL, self.p, self.seed)
         if self.is_sparse:
             self._flush_buffer()
-            if self.p > DENSE_MAX_P:
-                if mode not in (None, "sparse"):
-                    raise ValueError(
-                        f"p={self.p} sketches are sparse-only; mode {mode!r} unsupported"
-                    )
-                return (
-                    head
-                    + b"\x03"
-                    + struct.pack("<Q", len(self.sparse_indices))
-                    + self.sparse_indices.astype(np.int64).tobytes()
-                    + self.sparse_ranks.tobytes()
+        if self.p > DENSE_MAX_P:
+            if mode not in (None, "sparse"):
+                raise ValueError(
+                    f"p={self.p} sketches are sparse-only; mode {mode!r} unsupported"
                 )
-            keep = self.sparse_ranks > 0
-            nz = self.sparse_indices[keep]
-            nzv = self.sparse_ranks[keep]
-        else:
-            nz = np.flatnonzero(self.registers)
-            nzv = self.registers[nz] if len(nz) else np.empty(0, dtype=np.uint8)
-        dense_size = 1 << self.p
+            return (
+                head
+                + b"\x03"
+                + struct.pack("<Q", len(self.sparse_indices))
+                + self.sparse_indices.astype(np.int64).tobytes()
+                + self.sparse_ranks.tobytes()
+            )
         if mode == "packed6":
             bits = np.unpackbits(
                 self._dense_registers()[:, None], axis=1, bitorder="little"
             )[:, :6]
             return head + b"\x02" + np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-        if mode not in (None, "dense", "sparse"):
-            raise ValueError(f"unknown HLL encoding mode {mode!r}")
-        sparse_wins = len(nz) * 5 + 5 < dense_size
-        if mode == "sparse" or (mode is None and sparse_wins):
-            body = (
-                b"\x01"
+        values = self.sparse_ranks if self.is_sparse else self.registers
+        if mode == "sparse" or (mode is None and np.count_nonzero(values) * 5 + 5 < self.size):
+            if self.is_sparse:
+                keep = self.sparse_ranks > 0
+                nz, nzv = self.sparse_indices[keep], self.sparse_ranks[keep]
+            else:
+                # on a bool mask: numpy's nonzero is ~5x slower on uint8
+                nz = np.flatnonzero(self.registers != 0)
+                nzv = self.registers[nz]
+            return (
+                head
+                + b"\x01"
                 + struct.pack("<I", len(nz))
                 + nz.astype(np.uint32).tobytes()
                 + nzv.tobytes()
             )
-            return head + body
         return head + b"\x00" + self._dense_registers().tobytes()
 
     def _dense_registers(self) -> np.ndarray:
@@ -603,58 +659,24 @@ class HllSketch:
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "HllSketch":
-        p, seed, payload = unpack_header(blob, KIND_HLL)
-        r = PayloadReader(payload)
-        (mode,) = r.unpack("<B")
-        if mode == 3 or p > DENSE_MAX_P:
-            out = cls.empty(p, seed)
-            if mode == 3:
-                (n,) = r.unpack("<Q")
-                idx = r.array(np.int64, n)
-                ranks = r.array(np.uint8, n)
-            elif mode == 1:  # defensive: u32-index sparse blob at sparse-repr p
-                (n,) = r.unpack("<I")
-                idx = r.array(np.uint32, n).astype(np.int64)
-                ranks = r.array(np.uint8, n)
-            else:
-                raise ValueError(
-                    f"dense HLL encoding {mode} is invalid at sparse-only p={p}"
-                )
-            r.end()
-            if out.is_sparse:
-                out._sparse_update(idx, ranks)
-            else:  # mode-3 blob at dense-representable p
-                update_registers(out.registers, idx.astype(np.int64), ranks)
-            return out
-        if mode == 0:
-            regs = r.array(np.uint8, 1 << p).copy()
-        elif mode == 1:
-            (n,) = r.unpack("<I")
-            idx = r.array(np.uint32, n)
-            ranks = r.array(np.uint8, n)
-            regs = np.zeros(1 << p, dtype=np.uint8)
-            regs[idx.astype(np.int64)] = ranks
-        elif mode == 2:
-            m = 1 << p
-            bits = np.unpackbits(
-                r.array(np.uint8, (6 * m + 7) // 8), bitorder="little"
-            )[: 6 * m].reshape(m, 6)
-            regs = np.packbits(
-                np.pad(bits, ((0, 0), (0, 2))), axis=1, bitorder="little"
-            ).reshape(m)
-        else:
-            raise ValueError(f"unknown HLL register encoding {mode}")
-        r.end()
-        return cls(p=p, seed=seed, registers=regs)
+        """The blob max-folded into an empty sketch of its own config:
+        ``merge_blobs([blob], p, seed)`` by construction."""
+        p, seed, regs, pairs = _parse(blob)
+        out = cls.empty(p, seed)
+        out._fold(regs, pairs)
+        return out
 
     @staticmethod
     def merge_blobs(blobs, p: int, seed: int = DEFAULT_SEED) -> "HllSketch":
-        """Merge many at-rest blobs into one sketch (tree-merge leaf op)."""
+        """Merge many at-rest blobs into one sketch (tree-merge leaf op):
+        each blob max-folds straight into the output, no per-blob sketch."""
         out = HllSketch.empty(p, seed)
         for b in blobs:
             if b is None:
                 continue
-            out.merge(HllSketch.from_bytes(bytes(b)))
+            bp, bseed, regs, pairs = _parse(bytes(b))
+            out._check_mergeable(bp, bseed)
+            out._fold(regs, pairs)
         return out
 
     @staticmethod

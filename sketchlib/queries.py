@@ -2838,9 +2838,10 @@ def source_jaccard_matrix(
     """FULL pairwise source-similarity matrix via BOTH sketch families'
     set algebra over ONE shared exact companion (the <=2^K bitmask
     histogram of _exact_pair_counts — one token-keyed shuffle for all 66
-    pairs). HLL pairs go through the vectorized register-matrix estimator;
-    KMV pairs through the registered kmv_* SQL functions (native ratio
-    estimator, ~3x tighter bounds). Fuses round-4's
+    pairs). HLL pairs go through the registered hll_estimate and
+    hll_union_estimate SQL functions (the vectorized register-matrix
+    estimator); KMV pairs through the registered kmv_* SQL functions
+    (native ratio estimator, ~3x tighter bounds). Fuses round-4's
     hll_source_jaccard_matrix + kmv_source_jaccard_matrix."""
     from .functions import register
 
@@ -2869,32 +2870,19 @@ def source_jaccard_matrix(
             exact_leg,
         )
 
-        est_udf = hll_agg.estimate_udf()
-
-        @F.pandas_udf(T.LongType())
-        def union_est(a: pd.Series, b: pd.Series) -> pd.Series:
-            return pd.Series(
-                [
-                    HllSketch.from_bytes(bytes(x))
-                    .merge(HllSketch.from_bytes(bytes(y)))
-                    .cardinality()
-                    for x, y in zip(a, b)
-                ]
-            ).astype("int64")
-
         h_left = hll_merged.select(
             F.col("source").alias("source_a"),
             F.col("sketch").alias("sk_a"),
-            est_udf("sketch").alias("est_a"),
+            F.expr("hll_estimate(sketch)").alias("est_a"),
         )
         h_right = hll_merged.select(
             F.col("source").alias("source_b"),
             F.col("sketch").alias("sk_b"),
-            est_udf("sketch").alias("est_b"),
+            F.expr("hll_estimate(sketch)").alias("est_b"),
         )
         hll_est = (
             h_left.join(h_right, F.col("source_a") < F.col("source_b"))
-            .withColumn("hll_union", union_est("sk_a", "sk_b"))
+            .withColumn("hll_union", F.expr("hll_union_estimate(sk_a, sk_b)"))
             .withColumn(
                 "hll_inter",
                 F.greatest(F.lit(0), F.col("est_a") + F.col("est_b") - F.col("hll_union")),

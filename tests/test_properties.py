@@ -614,3 +614,86 @@ def test_group_slices_equal_mask_oracle(kind, n_groups, raw_codes, data):
         else:
             assert got.dtype == values.dtype
             assert np.array_equal(got, values[mask])
+
+
+
+def test_noncanonical_blobs_fold_by_the_merge_law():
+    """Hand-built sparse blobs the encoders never write: a repeated index
+    decodes exactly as the merge of one blob per entry (HLL max, count-min
+    sum, Bloom OR), through ``from_bytes`` and ``merge_blobs`` alike; an
+    index outside the grid and an HLL rank above 64-p+1 (sparse, dense or
+    packed6) raise ValueError from every decoder."""
+    import functools
+
+    from sketchlib.codec import KIND_BLOOM, KIND_CMS, KIND_HLL, pack_header
+    from sketchlib.hll import registers_from_blobs
+    from sketchlib.kernels import DEFAULT_SEED
+
+    def sparse_blob(kind, p, field, count_fmt, idx_dtype, val_dtype=None):
+        def build(entries):
+            idx = np.array([i for i, _ in entries], dtype=idx_dtype)
+            vals = np.array([v for _, v in entries], dtype=val_dtype or np.uint8)
+            return (
+                pack_header(kind, p, DEFAULT_SEED)
+                + field
+                + struct.pack(count_fmt, len(entries))
+                + idx.tobytes()
+                + (vals.tobytes() if val_dtype else b"")
+            )
+
+        return build
+
+    cms_field = struct.pack("<H", 3 | 0x8000)  # depth 3, sparse flag
+    bloom_field = struct.pack("<H", 3 | 0x8000)  # k 3, sparse flag
+    cases = [
+        # name, builder, from_bytes, merge_blobs at the blob's config, grid size, HLL p
+        ("hll mode 1 p=10", sparse_blob(KIND_HLL, 10, b"\x01", "<I", "<u4", np.uint8),
+         HllSketch.from_bytes, functools.partial(HllSketch.merge_blobs, p=10), 1 << 10, 10),
+        ("hll mode 3 p=10", sparse_blob(KIND_HLL, 10, b"\x03", "<Q", "<i8", np.uint8),
+         HllSketch.from_bytes, functools.partial(HllSketch.merge_blobs, p=10), 1 << 10, 10),
+        ("hll mode 3 p=30", sparse_blob(KIND_HLL, 30, b"\x03", "<Q", "<i8", np.uint8),
+         HllSketch.from_bytes, functools.partial(HllSketch.merge_blobs, p=30), 1 << 30, 30),
+        ("cms", sparse_blob(KIND_CMS, 6, cms_field, "<I", "<u8", "<u8"), CountMinSketch.from_bytes,
+         functools.partial(CountMinSketch.merge_blobs, width_log2=6, depth=3), 3 << 6, None),
+        ("bloom", sparse_blob(KIND_BLOOM, 10, bloom_field, "<I", "<u8"), BloomFilter.from_bytes,
+         functools.partial(BloomFilter.merge_blobs, m_log2=10, k=3), 1 << 10, None),
+    ]
+    for name, build, decode, merge, size, p in cases:
+        decoders = [decode, lambda b, merge=merge: merge([b])]
+        if p == 10:
+            decoders.append(lambda b: registers_from_blobs([b]))
+        # index 5 twice, larger value first: "last write wins" would differ
+        entries = [(5, 7), (size - 1, 2), (5, 3)]
+        want = merge([build([e]) for e in entries]).to_bytes()
+        assert decode(build(entries)).to_bytes() == want, name
+        assert merge([build(entries)]).to_bytes() == want, name
+        if p == 10:
+            regs, _, _ = registers_from_blobs([build(entries)])
+            assert np.array_equal(regs[0], decode(build(entries)).registers), name
+        for bad in [size, size + 12345] + ([-1] if "mode 3" in name else []):
+            for fn in decoders:
+                with pytest.raises(ValueError):
+                    fn(build([(1, 1), (bad, 1)]))
+        if p is not None:
+            for fn in decoders:
+                fn(build([(1, 65 - p)]))  # the largest rank at p is valid
+                with pytest.raises(ValueError):
+                    fn(build([(1, 66 - p)]))
+    # the same rank bound on dense and packed6 blobs; [b, b] takes the
+    # batched mode-0 read of registers_from_blobs
+    decoders = [
+        HllSketch.from_bytes,
+        lambda b: HllSketch.merge_blobs([b], 10),
+        lambda b: registers_from_blobs([b, b]),
+    ]
+    for mode in ("dense", "packed6"):
+        for rank in (55, 56):
+            regs = np.zeros(1 << 10, dtype=np.uint8)
+            regs[3] = rank
+            blob = HllSketch(p=10, registers=regs).to_bytes(mode=mode)
+            for fn in decoders:
+                if rank == 55:
+                    fn(blob)
+                else:
+                    with pytest.raises(ValueError):
+                        fn(blob)

@@ -221,36 +221,47 @@ def test_single_blob_functions_null_safe(sql):
 def test_hll_pair_functions_batch_parity(sql):
     """The vectorized pair path (registers_from_blobs + estimates_from_
     histograms) must return the SAME integers as per-row scalar algebra for
-    a full pairwise matrix, including mixed at-rest encodings."""
+    a full pairwise matrix, including mixed at-rest encodings; p=30 rows
+    (above the dense range) go through sketch objects to the same answers."""
     rng = np.random.default_rng(11)
     sketches = []
-    for i in range(12):
-        s = HllSketch(p=10)
+    for i in range(15):
+        s = HllSketch(p=10 if i < 12 else 30)
         s.update_batch(rng.integers(0, 2000 * (i + 1), 5000).astype(np.int32))
         sketches.append(s)
     rows = []
     for i, s in enumerate(sketches):
-        mode = (None, "dense", "packed6")[i % 3]
-        rows.append((i, bytearray(s.to_bytes(mode=mode))))
+        mode = (None, "dense", "packed6")[i % 3] if s.p == 10 else None
+        rows.append((i, s.p, bytearray(s.to_bytes(mode=mode))))
     from pyspark.sql import types as T
 
     schema = T.StructType(
-        [T.StructField("id", T.LongType(), False), T.StructField("sk", T.BinaryType(), False)]
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("p", T.LongType(), False),
+            T.StructField("sk", T.BinaryType(), False),
+        ]
     )
     sql.createDataFrame(rows, schema).createOrReplaceTempView("hllmat")
     got = sql.sql(
         """
         SELECT a.id AS ia, b.id AS ib,
+               hll_estimate(a.sk) AS ea,
                hll_union_estimate(a.sk, b.sk) AS u,
-               hll_intersection_estimate(a.sk, b.sk) AS i
-        FROM hllmat a JOIN hllmat b ON a.id < b.id
+               hll_intersection_estimate(a.sk, b.sk) AS i,
+               hll_difference_estimate(a.sk, b.sk) AS d,
+               hll_jaccard_estimate(a.sk, b.sk) AS j
+        FROM hllmat a JOIN hllmat b ON a.id < b.id AND a.p = b.p
         """
     ).collect()
-    assert len(got) == 66
+    assert len(got) == 66 + 3
     for r in got:
         sa, sb = sketches[r["ia"]], sketches[r["ib"]]
+        assert r["ea"] == sa.cardinality()
         assert r["u"] == HllSketch.union_estimate(sa, sb)
         assert r["i"] == HllSketch.intersection_estimate(sa, sb)
+        assert r["d"] == HllSketch.difference_estimate(sa, sb)
+        assert r["j"] == HllSketch.jaccard_estimate(sa, sb)
 
 
 def test_kmv_pair_functions_batch_parity(sql):
@@ -352,12 +363,13 @@ def test_pair_functions_mixed_configs_across_rows(sql):
 def test_hll_merge_pair_byte_parity_batched(sql):
     """The batched hll_merge_pair must produce bytes IDENTICAL to the
     scalar merge().to_bytes() in both the dense and sparse-at-rest
-    regimes, across mixed configs."""
+    regimes, across mixed configs, p=30 (sparse-only) included."""
     from pyspark.sql import types as T
 
     rng = np.random.default_rng(23)
     rows, expected = [], []
-    for i, (p, n_items) in enumerate(((10, 4000), (14, 20), (10, 3000), (14, 30))):
+    configs = ((10, 4000), (14, 20), (10, 3000), (14, 30), (30, 50), (30, 2000))
+    for i, (p, n_items) in enumerate(configs):
         a, b = HllSketch(p=p), HllSketch(p=p)
         a.update_batch(rng.integers(0, 100_000, n_items).astype(np.int32))
         b.update_batch(rng.integers(50_000, 150_000, n_items).astype(np.int32))
