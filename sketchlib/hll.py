@@ -190,14 +190,15 @@ def _check_ranks(ranks: np.ndarray, p: int) -> None:
         raise ValueError(f"HLL rank {int(ranks.max())} exceeds 64-p+1 = {65 - p} at p={p}")
 
 
-def _parse(blob: bytes):
-    """The one HLL blob parser -> (p, seed, regs, pairs).
+def _read(blob: bytes):
+    """The one HLL blob parser -> (p, seed, regs, pairs), before the value
+    checks of ``_checked``.
 
     Exactly one of ``regs`` (the uint8[2^p] registers of a dense mode-0 or
     packed6 mode-2 blob; mode 0 is a read-only view of ``blob``) and
-    ``pairs`` (int64 indices, uint8 ranks of a sparse mode-1 or mode-3
-    blob) is set. Indices and ranks are range-checked; repeated indices
-    are left for the consumer's max-fold (codec module docstring)."""
+    ``pairs`` (indices, uint8 ranks of a sparse mode-1 or mode-3 blob) is
+    set. Repeated indices are left for the consumer's max-fold (codec
+    module docstring)."""
     p, seed, payload = unpack_header(blob, KIND_HLL)
     r = PayloadReader(payload)
     (mode,) = r.unpack("<B")
@@ -205,8 +206,7 @@ def _parse(blob: bytes):
     if mode in (1, 3):
         (n,) = r.unpack("<I" if mode == 1 else "<Q")
         idx = r.array(np.uint32 if mode == 1 else np.int64, n)
-        ranks = r.array(np.uint8, n)
-        pairs = (checked_indices(idx, 1 << p), ranks)
+        pairs = (idx, r.array(np.uint8, n))
     elif p > DENSE_MAX_P:
         raise ValueError(f"dense HLL encoding {mode} is invalid at sparse-only p={p}")
     elif mode == 0:
@@ -222,8 +222,22 @@ def _parse(blob: bytes):
     else:
         raise ValueError(f"unknown HLL register encoding {mode}")
     r.end()
-    _check_ranks(regs if pairs is None else pairs[1], p)
     return p, seed, regs, pairs
+
+
+def _checked(p: int, regs, pairs):
+    """``(regs, pairs)`` with int64 indices once every index lies on the
+    2^p grid and every rank is at most 64-p+1; ``ValueError`` otherwise."""
+    if pairs is not None:
+        pairs = (checked_indices(pairs[0], 1 << p), pairs[1])
+    _check_ranks(regs if pairs is None else pairs[1], p)
+    return regs, pairs
+
+
+def _parse(blob: bytes):
+    """``_read`` plus ``_checked``: one blob, parsed and range-checked."""
+    p, seed, regs, pairs = _read(blob)
+    return (p, seed, *_checked(p, regs, pairs))
 
 
 def _fold_dense(target: np.ndarray, regs, pairs) -> None:
@@ -669,14 +683,25 @@ class HllSketch:
     @staticmethod
     def merge_blobs(blobs, p: int, seed: int = DEFAULT_SEED) -> "HllSketch":
         """Merge many at-rest blobs into one sketch (tree-merge leaf op):
-        each blob max-folds straight into the output, no per-blob sketch."""
+        each blob max-folds straight into the output, no per-blob sketch.
+        The max is order-free, so the sparse blobs' pairs are range-checked
+        and folded once, concatenated, and the dense blobs' ranks are
+        checked once, on the merged registers."""
         out = HllSketch.empty(p, seed)
+        sparse: list[tuple] = []
         for b in blobs:
             if b is None:
                 continue
-            bp, bseed, regs, pairs = _parse(bytes(b))
+            bp, bseed, regs, pairs = _read(bytes(b))
             out._check_mergeable(bp, bseed)
-            out._fold(regs, pairs)
+            if regs is not None:
+                out._fold(regs, None)
+            else:
+                sparse.append(pairs)
+        if sparse:
+            out._fold(*_checked(p, None, tuple(map(np.concatenate, zip(*sparse)))))
+        if not out.is_sparse:
+            _check_ranks(out.registers, p)
         return out
 
     @staticmethod
