@@ -191,14 +191,10 @@ def _check_ranks(ranks: np.ndarray, p: int) -> None:
 
 
 def _read(blob: bytes):
-    """The one HLL blob parser -> (p, seed, regs, pairs), before the value
-    checks of ``_checked``.
-
-    Exactly one of ``regs`` (the uint8[2^p] registers of a dense mode-0 or
-    packed6 mode-2 blob; mode 0 is a read-only view of ``blob``) and
-    ``pairs`` (indices, uint8 ranks of a sparse mode-1 or mode-3 blob) is
-    set. Repeated indices are left for the consumer's max-fold (codec
-    module docstring)."""
+    """The one HLL blob parser -> (p, seed, regs, pairs): the uint8[2^p]
+    registers of a dense mode-0 (a read-only view) or packed6 mode-2 blob,
+    or the (indices, ranks) of a sparse mode-1 or mode-3 blob. Consumers
+    fold it through ``_checked`` (codec module docstring)."""
     p, seed, payload = unpack_header(blob, KIND_HLL)
     r = PayloadReader(payload)
     (mode,) = r.unpack("<B")
@@ -234,12 +230,6 @@ def _checked(p: int, regs, pairs):
     return regs, pairs
 
 
-def _parse(blob: bytes):
-    """``_read`` plus ``_checked``: one blob, parsed and range-checked."""
-    p, seed, regs, pairs = _read(blob)
-    return (p, seed, *_checked(p, regs, pairs))
-
-
 def _fold_dense(target: np.ndarray, regs, pairs) -> None:
     """Max-fold one parsed blob into a dense register array."""
     if regs is not None:
@@ -251,20 +241,17 @@ def _fold_dense(target: np.ndarray, regs, pairs) -> None:
 def registers_from_blobs(blobs) -> tuple[np.ndarray, int, int]:
     """Decode a batch of at-rest HLL blobs -> ((n, 2^p) uint8 matrix, p, seed).
 
-    Every row is its blob max-folded into zeros through the one parser, so
-    every encoding decodes here exactly as ``from_bytes`` decodes it.
-    The one shortcut is the batched mode-0 read: when every blob is dense
-    and of the same length, the matrix is a single ``np.frombuffer``
-    reshape over the concatenated blobs, under the parser's rank bound.
-    Mixed p or seed raises (pairwise matrices are same-config by
-    construction, like ``merge``'s size guard, src/hll.c:781-788), and so
-    does p > DENSE_MAX_P, where a row of 2^p registers cannot be allocated.
+    Each row is its blob max-folded into zeros, exactly as ``from_bytes``
+    decodes it; the one shortcut, for all-dense same-length batches, is a
+    single ``np.frombuffer`` reshape under the same rank bound. Mixed p or
+    seed raises (like ``merge``'s size guard, src/hll.c:781-788), and so
+    does p > DENSE_MAX_P, where 2^p registers per row cannot be allocated.
     """
     blobs = [bytes(b) for b in blobs]
     n = len(blobs)
     if n == 0:
         return np.zeros((0, 0), dtype=np.uint8), 0, DEFAULT_SEED
-    p0, seed0, _, _ = _parse(blobs[0])
+    p0, seed0, _, _ = _read(blobs[0])
     if p0 > DENSE_MAX_P:
         raise ValueError(
             f"batch register decode needs a dense-representable p <= {DENSE_MAX_P}, "
@@ -283,10 +270,10 @@ def registers_from_blobs(blobs) -> tuple[np.ndarray, int, int]:
             return regs, p0, seed0
     regs = np.zeros((n, m), dtype=np.uint8)
     for i, b in enumerate(blobs):
-        p, seed, dense, pairs = _parse(b)
+        p, seed, dense, pairs = _read(b)
         if (p, seed) != (p0, seed0):
             raise ValueError("cannot batch-decode HLL blobs with mixed p/seed")
-        _fold_dense(regs[i], dense, pairs)
+        _fold_dense(regs[i], *_checked(p, dense, pairs))
     return regs, p0, seed0
 
 
@@ -643,9 +630,8 @@ class HllSketch:
             return head + b"\x02" + np.packbits(bits.reshape(-1), bitorder="little").tobytes()
         values = self.sparse_ranks if self.is_sparse else self.registers
         if mode == "sparse" or (mode is None and np.count_nonzero(values) * 5 + 5 < self.size):
-            if self.is_sparse:
-                keep = self.sparse_ranks > 0
-                nz, nzv = self.sparse_indices[keep], self.sparse_ranks[keep]
+            if self.is_sparse:  # folds and flushes hold ranks >= 1 only
+                nz, nzv = self.sparse_indices, self.sparse_ranks
             else:
                 # on a bool mask: numpy's nonzero is ~5x slower on uint8
                 nz = np.flatnonzero(self.registers != 0)
@@ -675,9 +661,9 @@ class HllSketch:
     def from_bytes(cls, blob: bytes) -> "HllSketch":
         """The blob max-folded into an empty sketch of its own config:
         ``merge_blobs([blob], p, seed)`` by construction."""
-        p, seed, regs, pairs = _parse(blob)
+        p, seed, regs, pairs = _read(blob)
         out = cls.empty(p, seed)
-        out._fold(regs, pairs)
+        out._fold(*_checked(p, regs, pairs))
         return out
 
     @staticmethod
