@@ -47,6 +47,71 @@ __all__ = [
 __version__ = "0.1.0"
 
 
+def _keep_unchanged_zip_importers() -> None:
+    """Inside a pyspark Python worker, stop the per-task cache invalidation
+    from re-reading zip archives that have not changed.
+
+    pyspark's ``worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every task, and each
+    ``zipimporter`` in ``sys.path_importer_cache`` then re-reads its whole
+    archive directory: ≈14 importers over the 1 328-entry ``pyspark.zip``,
+    most of the ≈0.3 s a Python task costs before it does any work. This
+    swaps ``worker_util``'s ``importlib`` for a namespace whose
+    ``invalidate_caches`` holds back every zipimporter whose archive
+    ``(st_mtime_ns, st_size)`` equals the one recorded at this process's
+    last invalidation; every other finder, and every archive seen for the
+    first time or changed since, is invalidated as before.
+
+    A no-op unless ``pyspark.worker_util`` is already loaded (only worker
+    processes load it) and still holds the real ``importlib``, so the
+    driver is never patched and a second call patches nothing. A reused
+    worker keeps the patch for every later task."""
+    import importlib
+    import os
+    import sys
+    import types
+    import zipimport
+
+    worker_util = sys.modules.get("pyspark.worker_util")
+    if worker_util is None or getattr(worker_util, "importlib", None) is not importlib:
+        return
+    seen: dict[str, tuple[int, int]] = {}
+
+    def invalidate_caches() -> None:
+        stats: dict[str, tuple[int, int] | None] = {}
+        held = {}
+        for path, finder in list(sys.path_importer_cache.items()):
+            if not isinstance(finder, zipimport.zipimporter):
+                continue
+            archive = finder.archive
+            if archive not in stats:
+                try:
+                    st = os.stat(archive)
+                    stats[archive] = (st.st_mtime_ns, st.st_size)
+                except OSError:
+                    stats[archive] = None
+            # relative entries are left to the real call, which drops them
+            unchanged = stats[archive] is not None and seen.get(archive) == stats[archive]
+            if unchanged and os.path.isabs(path):
+                held[path] = sys.path_importer_cache.pop(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            sys.path_importer_cache.update(held)
+        for archive, stat in stats.items():
+            if stat is None:
+                seen.pop(archive, None)
+            else:
+                seen[archive] = stat
+
+    worker_util.importlib = types.SimpleNamespace(
+        **{**vars(importlib), "invalidate_caches": invalidate_caches}
+    )
+
+
+_keep_unchanged_zip_importers()
+
+
 def __getattr__(name):
     # Spark-dependent surfaces load lazily so the numpy core stays importable
     # without a JVM (e.g. inside plain-python tooling).

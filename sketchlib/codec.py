@@ -20,7 +20,8 @@ adds, Bloom ORs. ``from_bytes(b)`` is therefore ``merge_blobs([b])`` under
 the blob's own config. The same fold fixes what input the encoders never
 write means: a sparse (index, value) list need not be sorted or unique,
 and a repeated index folds by the merge law, exactly as if each entry
-came from its own blob. An index outside the sketch's grid raises
+came from its own blob. A KMV value list folds the same way, to its
+sorted distinct k smallest values. An index outside the sketch's grid raises
 ``ValueError`` (``checked_indices``), and so does an HLL rank above
 64-p+1, in any encoding.
 """

@@ -93,7 +93,7 @@ class HyperLogLog:
                 b._flush_buffer()
                 b_idx, b_val = b.sparse_indices, b.sparse_ranks
             else:
-                b_idx = np.flatnonzero(b.registers)
+                b_idx = np.flatnonzero(b.registers != 0)
                 b_val = b.registers[b_idx]
             if a.is_sparse:
                 a._flush_buffer()
@@ -173,7 +173,7 @@ class HyperLogLog:
                 max_sparse_list_size=state["max_list_size"],
                 max_sparse_buffer_size=state["max_buffer_size"],
             )
-            nz = np.flatnonzero(sk.registers)
+            nz = np.flatnonzero(sk.registers != 0)
             sp._sparse_update(nz, sk.registers[nz])
             sk = sp
         self._sketch = sk

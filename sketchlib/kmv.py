@@ -208,8 +208,10 @@ class KmvSketch:
 
 
 def _parse(blob: bytes) -> tuple[int, int, np.ndarray]:
-    """The one KMV blob parser -> (k, seed, values); raw values are a
-    read-only view of ``blob``."""
+    """The one KMV blob parser -> (k, seed, values). The values fold by the
+    merge law (codec.py): sorted, distinct, the k smallest. Canonical raw
+    values, the only ones the encoder writes, are a read-only view of
+    ``blob``."""
     p, seed, payload = unpack_header(blob, KIND_KMV)
     r = PayloadReader(payload)
     k, n = r.unpack("<II")
@@ -228,6 +230,8 @@ def _parse(blob: bytes) -> tuple[int, int, np.ndarray]:
     else:
         raise ValueError(f"unknown KMV encoding {p}")
     r.end()
+    if n > k or np.any(values[1:] <= values[:-1]):
+        values = np.unique(values)[:k]
     return k, seed, values
 
 

@@ -620,14 +620,15 @@ def test_group_slices_equal_mask_oracle(kind, n_groups, raw_codes, data):
 def test_noncanonical_blobs_fold_by_the_merge_law():
     """Hand-built sparse blobs the encoders never write: a repeated index
     decodes exactly as the merge of one blob per entry (HLL max, count-min
-    sum, Bloom OR), through ``from_bytes`` and ``merge_blobs`` alike; an
-    index outside the grid and an HLL rank above 64-p+1 (sparse, dense or
-    packed6) raise ValueError from every decoder."""
+    sum, Bloom OR, KMV union), through ``from_bytes`` and ``merge_blobs``
+    alike; an index outside the grid and an HLL rank above 64-p+1 (sparse,
+    dense or packed6) raise ValueError from every decoder."""
     import functools
 
-    from sketchlib.codec import KIND_BLOOM, KIND_CMS, KIND_HLL, pack_header
+    from sketchlib.codec import KIND_BLOOM, KIND_CMS, KIND_HLL, KIND_KMV, pack_header
     from sketchlib.hll import registers_from_blobs
     from sketchlib.kernels import DEFAULT_SEED
+    from sketchlib.kmv import KmvSketch, values_from_blobs
 
     def sparse_blob(kind, p, field, count_fmt, idx_dtype, val_dtype=None):
         def build(entries):
@@ -697,3 +698,25 @@ def test_noncanonical_blobs_fold_by_the_merge_law():
                 else:
                     with pytest.raises(ValueError):
                         fn(blob)
+
+    # KMV raw (p=0) and delta (p=1, 8-byte deltas that wrap for unsorted
+    # values) blobs with duplicate, unsorted and more-than-k values
+    def kmv_blob(mode, values, k=8):
+        vals = np.array(values, dtype=np.uint64)
+        if mode == "raw":
+            head = struct.pack("<II", k, len(vals))
+            return pack_header(KIND_KMV, 0, DEFAULT_SEED) + head + vals.tobytes()
+        head = struct.pack("<IIBQ", k, len(vals), 8, int(vals[0]))
+        return pack_header(KIND_KMV, 1, DEFAULT_SEED) + head + np.diff(vals).tobytes()
+
+    for mode in ("raw", "delta"):
+        for values in ([9, 5, 5, 5], [40, 3, 2**64 - 1, 17, 3, 8, 1, 99, 17, 64, 2, 5, 7]):
+            want = KmvSketch.merge_blobs([kmv_blob(mode, [v]) for v in values], k=8)
+            blob = kmv_blob(mode, values)
+            for got in (
+                KmvSketch.from_bytes(blob).values,
+                KmvSketch.merge_blobs([blob], k=8).values,
+                values_from_blobs([blob])[0][0],
+            ):
+                assert np.array_equal(got, want.values), (mode, values)
+            assert KmvSketch.from_bytes(blob).estimate() == want.estimate()
