@@ -54,18 +54,20 @@ def _keep_unchanged_zip_importers() -> None:
     pyspark's ``worker_util.setup_spark_files`` calls
     ``importlib.invalidate_caches()`` at the start of every task, and each
     ``zipimporter`` in ``sys.path_importer_cache`` then re-reads its whole
-    archive directory: ≈14 importers over the 1 328-entry ``pyspark.zip``,
-    most of the ≈0.3 s a Python task costs before it does any work. This
-    swaps ``worker_util``'s ``importlib`` for a namespace whose
-    ``invalidate_caches`` holds back every zipimporter whose archive
-    ``(st_mtime_ns, st_size)`` equals the one recorded at this process's
-    last invalidation; every other finder, and every archive seen for the
-    first time or changed since, is invalidated as before.
+    archive directory: 14-16 importers over the 1 328-entry
+    ``pyspark.zip`` take 0.25-0.35 s, most of what a Python task costs
+    before it does any work. This swaps ``worker_util``'s ``importlib`` for
+    a namespace whose ``invalidate_caches`` holds back every zipimporter
+    whose archive ``(st_mtime_ns, st_size)`` equals the one recorded at
+    this process's last invalidation; every other finder, and every archive
+    seen for the first time or changed since, is invalidated as before.
 
-    A no-op unless ``pyspark.worker_util`` is already loaded (only worker
-    processes load it) and still holds the real ``importlib``, so the
-    driver is never patched and a second call patches nothing. A reused
-    worker keeps the patch for every later task."""
+    A no-op unless ``pyspark.worker_util`` is already loaded and still
+    holds the real ``importlib``. A worker has loaded it before its first
+    task and a classic driver never does, so the driver is not patched,
+    and a second call patches nothing. A reused worker keeps the patch for
+    every later task; a fresh one pays the old cost in the task that
+    imports sketchlib and in the next, which records each archive."""
     import importlib
     import os
     import sys
@@ -75,7 +77,7 @@ def _keep_unchanged_zip_importers() -> None:
     worker_util = sys.modules.get("pyspark.worker_util")
     if worker_util is None or getattr(worker_util, "importlib", None) is not importlib:
         return
-    seen: dict[str, tuple[int, int]] = {}
+    seen: dict[str, tuple[int, int] | None] = {}
 
     def invalidate_caches() -> None:
         stats: dict[str, tuple[int, int] | None] = {}
@@ -98,11 +100,7 @@ def _keep_unchanged_zip_importers() -> None:
             importlib.invalidate_caches()
         finally:
             sys.path_importer_cache.update(held)
-        for archive, stat in stats.items():
-            if stat is None:
-                seen.pop(archive, None)
-            else:
-                seen[archive] = stat
+        seen.update(stats)
 
     worker_util.importlib = types.SimpleNamespace(
         **{**vars(importlib), "invalidate_caches": invalidate_caches}

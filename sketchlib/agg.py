@@ -248,12 +248,14 @@ def _shard_table(spark, shards: list, parallelism: int | None = None):
     Range puts exactly id i in partition i, so the task that reads id i
     builds ``groups[i]`` (looked up in the mapInArrow closure): exactly one
     group per task, deterministically, with no Python RDD stage and no
-    shuffle. Every Python task pays a fixed ~0.2-0.3 s start-up on top of its
-    work (PLANS.md §6), so the task count is the session's parallelism, not
-    a multiple of it; the max-merge law makes merged sketches independent
-    of the shard-to-task assignment. The closure carries the whole shard
-    list; pyspark ships commands over 1 MB as a broadcast, once per
-    executor. No shards (a table with no rows) still gets one, empty, task.
+    shuffle. Every Python task pays a fixed start-up on top of its work,
+    ≈0.08 s of worker time once its worker has imported sketchlib (PLANS.md
+    §6); one task per core still beat 2x and 4x cores on the bulk partial
+    stage, so the task count is the session's parallelism, not a multiple
+    of it. The max-merge law makes merged sketches independent of the
+    shard-to-task assignment. The closure carries the whole shard list;
+    pyspark ships commands over 1 MB as a broadcast, once per executor. No
+    shards (a table with no rows) still gets one, empty, task.
     """
     n = max(1, min(len(shards), parallelism or spark.sparkContext.defaultParallelism))
     return spark.range(n, numPartitions=n), [shards[i::n] for i in range(n)]
