@@ -24,8 +24,10 @@ from .codec import HEADER_LEN
 from .hll import (
     DENSE_MAX_P,
     HllSketch,
+    cardinalities,
     estimates_from_histograms,
     histograms_from_registers,
+    pair_estimates,
     registers_from_blobs,
 )
 from .kll import KllSketch
@@ -133,9 +135,10 @@ def _empty_hll_like(blob: bytes) -> bytes:
 
 
 def _hll_pair_estimates(a: pd.Series, b: pd.Series, op: str) -> pd.Series:
-    """Vectorized union/intersection/difference/jaccard estimates over
-    paired blob columns — ONE decode per config group serves whichever
-    estimates the op needs.
+    """Union/intersection/difference/jaccard estimates over paired blob
+    columns: ``hll.pair_estimates`` over each config group's (|A|, |B|,
+    |A∪B|), from ONE register-matrix decode at dense-representable p and
+    from ``HllSketch`` objects above it.
 
     NULL convention (documented below at the registration site): both-NULL →
     NULL; one-sided NULL is the op against the EMPTY set (``_pair_rows``),
@@ -149,31 +152,19 @@ def _hll_pair_estimates(a: pd.Series, b: pd.Series, op: str) -> pd.Series:
     res = np.zeros(len(a_list), dtype=np.float64 if op == "jaccard" else np.int64)
     for idx, a_blobs, b_blobs, dense in _hll_pair_groups(a_list, b_list, rows):
         if dense is None:
-            scalar = getattr(HllSketch, f"{op}_estimate")
-            res[idx] = [
-                scalar(HllSketch.from_bytes(x), HllSketch.from_bytes(y))
-                for x, y in zip(a_blobs, b_blobs)
-            ]
-            continue
-        ra, rb, p, _ = dense
-        est_u = estimates_from_histograms(histograms_from_registers(np.maximum(ra, rb)), p)
-        if op == "union":
-            res[idx] = est_u
-            continue
-        est_b = estimates_from_histograms(histograms_from_registers(rb), p)
-        if op == "difference":
-            # |A \ B| = |A∪B| - |B| by inclusion–exclusion, clamped
-            res[idx] = np.maximum(0, est_u - est_b)
-            continue
-        est_a = estimates_from_histograms(histograms_from_registers(ra), p)
-        inter = np.maximum(0, est_a + est_b - est_u)
-        if op == "jaccard":
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # union 0 => both sketches empty => identical => 1.0
-                # (unified empty-set algebra, ADVICE r04)
-                res[idx] = np.where(est_u > 0, inter / est_u, 1.0)
+            ests = np.array(
+                [
+                    cardinalities(HllSketch.from_bytes(x), HllSketch.from_bytes(y))
+                    for x, y in zip(a_blobs, b_blobs)
+                ]
+            ).T
         else:
-            res[idx] = inter
+            ra, rb, p, _ = dense
+            ests = [
+                estimates_from_histograms(histograms_from_registers(r), p)
+                for r in (ra, rb, np.maximum(ra, rb))
+            ]
+        res[idx] = pair_estimates(*ests, op)
     return _null_outside(res, rows, "float64" if op == "jaccard" else "Int64")
 
 

@@ -294,6 +294,39 @@ def estimate_from_histogram(hist: np.ndarray, p: int) -> int:
     return int(round(alpha * m * (m / z)))
 
 
+def pair_estimates(est_a, est_b, est_u, op: str) -> np.ndarray:
+    """The one implementation of HLL pair algebra: ``op`` ("union",
+    "intersection", "difference" = |A \\ B|, or "jaccard") from the
+    estimates |A|, |B| and |A ∪ B| (the register-max union), elementwise
+    over arrays. The sketch methods and the SQL pair functions call it.
+
+    Intersection (|A|+|B|-|A∪B|) and difference (|A∪B|-|B|) are
+    inclusion–exclusion, clamped at 0. Their absolute error scales with
+    |A ∪ B| (three ±1.04/√m estimates combine), so the relative error blows
+    up for small intersections (SURVEY.md §2B set ops). Jaccard is
+    |A∩B|/|A∪B|, and 1.0 when the union estimate is 0: both sets are empty,
+    and two empty sets are identical (the KMV empty-set algebra, ADVICE r04).
+    """
+    est_a, est_b, est_u = (np.asarray(e, dtype=np.int64) for e in (est_a, est_b, est_u))
+    if op == "union":
+        return est_u
+    if op == "difference":
+        return np.maximum(0, est_u - est_b)
+    inter = np.maximum(0, est_a + est_b - est_u)
+    if op == "intersection":
+        return inter
+    if op == "jaccard":
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(est_u > 0, inter / est_u, 1.0)
+    raise ValueError(f"unknown HLL pair op {op!r}")
+
+
+def cardinalities(a: "HllSketch", b: "HllSketch") -> tuple[int, int, int]:
+    """(|A|, |B|, |A ∪ B|) estimates of two sketches, the ``pair_estimates``
+    inputs; a (p, seed) mismatch raises, as in ``merge``."""
+    return a.cardinality(), b.cardinality(), (a | b).cardinality()
+
+
 @dataclass
 class HllSketch:
     """A mergeable HyperLogLog sketch over 64-bit MurmurHash64A hashes.
@@ -690,44 +723,32 @@ class HllSketch:
             _check_ranks(out.registers, p)
         return out
 
+    # The four pair methods are ``pair_estimates`` over ``cardinalities``:
+    # the one implementation of HLL pair algebra, shared with the SQL pair
+    # functions.
+
     @staticmethod
     def union_estimate(a: "HllSketch", b: "HllSketch") -> int:
         """|A ∪ B| — exact register-max union (reference merge semantics,
-
         README.md:138-148): lossless, same error bound as a single sketch."""
-        return (a | b).cardinality()
+        return int(pair_estimates(*cardinalities(a, b), "union"))
 
     @staticmethod
     def intersection_estimate(a: "HllSketch", b: "HllSketch") -> int:
-        """|A ∩ B| by inclusion–exclusion: |A|+|B|-|A∪B|.
-
-        Documented caveat (SURVEY.md §2B set ops): the absolute error scales
-        with |A ∪ B| (three ±1.04/√m estimates combine), so relative error
-        blows up for small intersections. Clamped at 0.
-        """
-        return max(0, a.cardinality() + b.cardinality() - HllSketch.union_estimate(a, b))
+        """|A ∩ B| by inclusion–exclusion, clamped at 0 (``pair_estimates``)."""
+        return int(pair_estimates(*cardinalities(a, b), "intersection"))
 
     @staticmethod
     def difference_estimate(a: "HllSketch", b: "HllSketch") -> int:
-        """|A \\ B| by inclusion–exclusion: |A∪B| - |B| (clamped at 0).
-
-        Completes the set algebra alongside union/intersection/jaccard;
-        same caveat as intersection — the absolute error scales with
-        |A ∪ B|. KmvSketch.difference_estimate is the tighter native
-        ratio estimator when a KMV sketch is available."""
-        return max(0, HllSketch.union_estimate(a, b) - b.cardinality())
+        """|A \\ B| by inclusion–exclusion, clamped at 0 (``pair_estimates``).
+        KmvSketch.difference_estimate is the tighter native ratio estimator
+        when a KMV sketch is available."""
+        return int(pair_estimates(*cardinalities(a, b), "difference"))
 
     @staticmethod
     def jaccard_estimate(a: "HllSketch", b: "HllSketch") -> float:
-        """|A ∩ B| / |A ∪ B| with the same inclusion–exclusion caveat.
-
-        Empty-set algebra (unified with KmvSketch.jaccard, ADVICE r04):
-        union estimate 0 means both sketches are empty — two empty sets are
-        identical, so jaccard is 1.0."""
-        union = HllSketch.union_estimate(a, b)
-        if union == 0:
-            return 1.0
-        return HllSketch.intersection_estimate(a, b) / union
+        """|A ∩ B| / |A ∪ B|, 1.0 for two empty sketches (``pair_estimates``)."""
+        return float(pair_estimates(*cardinalities(a, b), "jaccard"))
 
     @staticmethod
     def std_error(p: int) -> float:

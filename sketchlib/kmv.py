@@ -95,52 +95,31 @@ class KmvSketch:
     # -- estimates --------------------------------------------------------------
 
     def estimate(self) -> int:
-        n = len(self.values)
-        if n < self.k:
-            return n  # exact: we have every distinct hash
-        theta = (float(self.values[self.k - 1]) + 1.0) / _TWO64
-        return int(round((self.k - 1) / theta))
+        return _estimate_values(self.values, self.k)
+
+    # Pair algebra: each method is one row of ``pair_set_algebra``, the one
+    # implementation the kmv_* SQL functions also call; ``union`` returns
+    # the union sketch itself.
 
     @staticmethod
     def union(a: "KmvSketch", b: "KmvSketch") -> "KmvSketch":
         a._check(b)
-        out = KmvSketch.empty(a.k, a.seed)
-        out._absorb(a.values)
-        out._absorb(b.values)
-        return out
+        return KmvSketch(k=a.k, seed=a.seed, values=np.union1d(a.values, b.values)[: a.k])
 
     @staticmethod
     def jaccard(a: "KmvSketch", b: "KmvSketch") -> float:
         """K_cap / k' ratio estimator over the union sketch's value set."""
-        u = KmvSketch.union(a, b)
-        if len(u.values) == 0:
-            return 1.0  # both empty: identical sets
-        both = np.isin(u.values, a.values, assume_unique=True) & np.isin(
-            u.values, b.values, assume_unique=True
-        )
-        return float(both.sum()) / float(len(u.values))
+        return float(_pair_row(a, b)[2])
 
     @staticmethod
     def intersection_estimate(a: "KmvSketch", b: "KmvSketch") -> int:
-        u = KmvSketch.union(a, b)
-        return int(round(KmvSketch.jaccard(a, b) * u.estimate()))
+        return int(_pair_row(a, b)[1])
 
     @staticmethod
     def difference_estimate(a: "KmvSketch", b: "KmvSketch") -> int:
-        """|A \\ B| estimate — the same union-sketch ratio estimator as
-        jaccard/intersection: the fraction of the union sketch's retained
-        hashes that came from ``a`` only, scaled by the union estimate.
-        Completes the set algebra (union/intersection/jaccard/difference);
-        A\\B + B\\A + A∩B partition the union by construction, so the three
-        ratio estimates are self-consistent (they share one denominator)."""
-        a._check(b)
-        u = KmvSketch.union(a, b)
-        if len(u.values) == 0:
-            return 0
-        only_a = np.isin(u.values, a.values, assume_unique=True) & ~np.isin(
-            u.values, b.values, assume_unique=True
-        )
-        return int(round(float(only_a.sum()) / float(len(u.values)) * u.estimate()))
+        """|A \\ B|: the fraction of the union sketch's hashes that came from
+        ``a`` only, scaled by the union estimate."""
+        return int(_pair_row(a, b)[3])
 
     # -- codec ------------------------------------------------------------------
     # header 'p' field is log2-shaped elsewhere; k need not be a power of two,
@@ -257,23 +236,32 @@ def values_from_blobs(blobs) -> tuple[list[np.ndarray], int, int]:
 def _estimate_values(values: np.ndarray, k: int) -> int:
     n = len(values)
     if n < k:
-        return n
+        return n  # exact: the sketch holds every distinct hash
     return int(round((k - 1) / ((float(values[k - 1]) + 1.0) / _TWO64)))
 
 
-def _union_values(a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:
-    return np.union1d(a, b)[:k]
+def _pair_row(a: KmvSketch, b: KmvSketch) -> list:
+    """(union, intersection, jaccard, difference) of one checked pair."""
+    a._check(b)
+    return [col[0] for col in pair_set_algebra([a.values], [b.values], a.k)]
 
 
 def pair_set_algebra(
     a_vals: list[np.ndarray], b_vals: list[np.ndarray], k: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(union_est, intersection_est, jaccard, difference_est) arrays for
-    pre-decoded pairs; difference is |A \\ B| (order matters).
+    """The one implementation of KMV pair algebra: (union_est,
+    intersection_est, jaccard, difference_est) arrays for pre-decoded
+    pairs; difference is |A \\ B| (order matters). The KmvSketch methods
+    and the kmv_* SQL functions call it.
+
+    Jaccard is K_cap / k' over the union sketch's k' retained hashes, and
+    the intersection and difference scale the fractions in both / in ``a``
+    only by the union estimate. A\\B + B\\A + A∩B partition the union, so
+    the three ratio estimates share one denominator and are
+    self-consistent. Two empty sketches have jaccard 1.0 (identical sets).
 
     Per-pair work is pure numpy set ops over <=k-element arrays; the Python
     loop only sequences them (no blob decode, no object construction).
-    Estimators identical to the KmvSketch methods (pinned by tests).
     """
     n = len(a_vals)
     est_u = np.zeros(n, dtype=np.int64)
@@ -281,7 +269,7 @@ def pair_set_algebra(
     jac = np.zeros(n, dtype=np.float64)
     est_d = np.zeros(n, dtype=np.int64)
     for i in range(n):
-        u = _union_values(a_vals[i], b_vals[i], k)
+        u = np.union1d(a_vals[i], b_vals[i])[:k]  # the union sketch's values
         eu = _estimate_values(u, k)
         if len(u) == 0:
             j = 1.0  # both empty: identical sets

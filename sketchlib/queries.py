@@ -84,6 +84,51 @@ def _streaming_conf(spark: SparkSession, shuffle_partitions: str = "4"):
     return _session_conf(spark, "spark.sql.shuffle.partitions", shuffle_partitions)
 
 
+def _drain_memory_sinks(
+    spark: SparkSession,
+    sinks: dict,
+    companion,
+    shuffle_partitions: str = "4",
+    read=DataFrame.collect,
+) -> tuple:
+    """Run each streaming DataFrame of ``sinks`` ({view prefix: (df,
+    output mode)}) to completion (``availableNow``) into its own memory-sink
+    view, and ``companion()`` — the batch build the streams are checked
+    against — while they drain: the streams execute JVM-side, and the
+    shuffle-partition conf is captured at stream START, so
+    ``_streaming_conf`` only wraps the starts. Returns ``(companion(),
+    {prefix: read(view)})``. Every exit path stops the queries, drops the
+    views and removes the stream checkpoints."""
+    import shutil
+
+    names = {tag: f"{tag}_{uuid.uuid4().hex[:8]}" for tag in sinks}
+    checkpoints = {tag: _scratch_dir(prefix=f"sketchlib_{tag}_") for tag in sinks}
+    queries = []
+    try:
+        try:
+            with _streaming_conf(spark, shuffle_partitions):
+                for tag, (df, output_mode) in sinks.items():
+                    queries.append(
+                        df.writeStream.format("memory")
+                        .queryName(names[tag])
+                        .outputMode(output_mode)
+                        .option("checkpointLocation", checkpoints[tag])
+                        .trigger(availableNow=True)
+                        .start()
+                    )
+            result = companion()
+            for q in queries:
+                q.awaitTermination()
+        finally:
+            for q in queries:
+                q.stop()
+        return result, {tag: read(spark.table(name)) for tag, name in names.items()}
+    finally:
+        for tag, name in names.items():
+            spark.catalog.dropTempView(name)
+            shutil.rmtree(checkpoints[tag], ignore_errors=True)
+
+
 def _within_3sigma(est, exact, p: int):
     """The HLL error law every distinct-count estimate is checked against:
     |est/exact - 1| <= 3 * 1.04/sqrt(2^p). A boolean Column for Column
@@ -1099,8 +1144,12 @@ def _exact_pair_counts(spark: SparkSession, seqs: DataFrame, srcs: list) -> Data
             n_b = int(cnts[(masks & bb) != 0].sum())
             n_i = int(cnts[((masks & ba) != 0) & ((masks & bb) != 0)].sum())
             pair_rows.append((sa, sb, n_a + n_b - n_i, n_i))
+    # built from pandas (Arrow), the frame is a JVM-side relation; built from
+    # a Python list it is a Python RDD, and every scan of it (the pair join,
+    # the sort's sampling pass) starts a Python task per partition
+    cols = ["source_a", "source_b", "exact_union", "exact_intersection"]
     return spark.createDataFrame(
-        pair_rows,
+        pd.DataFrame(pair_rows, columns=cols),
         "source_a string, source_b string, exact_union long, exact_intersection long",
     )
 
@@ -1650,23 +1699,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilistic near-dup path (near_dup_topk_pairs / near_dedup_documents);
     the 100 TB composition is LSH candidates -> exact verify -> THIS
     connected-components collapse on the verified edges.
-
-    Shuffle partitions are pinned low at toy SF (the CC loop's per-iteration
-    cost is task overhead on a few hundred label rows, measured 8 < 32);
-    the operators themselves are partition-agnostic.
     """
     from .dedup import connected_components, ngram_jaccard_edges
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    # edge generation wants full session parallelism (it scans the corpus);
-    # materialize the tiny edge set once so the CC loop — whose cost is
-    # per-iteration task overhead on a few hundred label rows — can run on
-    # few partitions without constraining the scan
+    # materialize the tiny edge set once: connected_components reads it
+    # once on its driver fast path and once per round in its loop
     edges = ngram_jaccard_edges(docs, n=3, threshold=(1, 2), df_cap=50)
     edges = edges.localCheckpoint(eager=True)
     try:
-        with _streaming_conf(spark, "8"):
-            comp = connected_components(edges)
+        comp = connected_components(edges)
         return (
             comp.groupBy(F.col("label").alias("cluster_id"))
             .agg(F.count("*").alias("size"))
@@ -2006,37 +2048,18 @@ def streaming_hll_parity(spark: SparkSession, sf_dir: str, p: int = 12) -> DataF
         .option("maxFilesPerTrigger", max(1, (n_files + 1) // 2))
         .parquet(path)
     )
-    name = f"hll_stream_{uuid.uuid4().hex[:8]}"
-    # start the stream, then run the batch companion while it drains: the
-    # stream executes JVM-side, so the blocking batch collect overlaps the
-    # micro-batch processing (conf is captured at stream START, so the
-    # _streaming_conf scope only needs to wrap the start)
-    with _streaming_conf(spark):
-        q = (
-            hll_streaming_estimates(stream, p=p)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch_dir(prefix="sketchlib_stream_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    try:
-        batch = {
+    batch, views = _drain_memory_sinks(
+        spark,
+        {"hll_stream": (hll_streaming_estimates(stream, p=p), "update")},
+        lambda: {
             r["source"]: r
-            for r in HllAggregator(p=p, key_cols=["source"])
-            .estimates(path, spark=spark)
-            .collect()
-        }
-        q.awaitTermination()
-    finally:
-        q.stop()
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
+            for r in HllAggregator(p=p, key_cols=["source"]).estimates(path, spark=spark).collect()
+        },
+    )
     latest: dict = {}
-    for r in rows:  # update mode emits once per key per micro-batch
+    for r in views["hll_stream"]:  # update mode emits once per key per micro-batch
         if r["source"] not in latest or r["n_rows"] > latest[r["source"]]["n_rows"]:
             latest[r["source"]] = r
-    spark.catalog.dropTempView(name)
     out = [
         (
             src,
@@ -2140,38 +2163,25 @@ def _daily_window_parity(
         value_col="user_id",
         value_kind="int64",
     )
-    name = f"{tag}_stream_{uuid.uuid4().hex[:8]}"
-    # start the stream, then run the batch companion while it drains (the
-    # stream executes JVM-side; conf is captured at stream START)
-    with _streaming_conf(spark):
-        q = (
-            est.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", _scratch_dir(prefix=f"sketchlib_{tag}ck_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    try:
-        batch_keyed = events.withColumn(
-            "day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-        )
+
+    def batch_build() -> dict:
+        keyed = events.withColumn("day", F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd"))
         agg = HllAggregator(
             p=p, key_cols=["day", "event_type"], value_col="user_id", value_kind="int64"
         )
-        batch = {
-            (r["day"], r["event_type"]): r for r in agg.estimates(batch_keyed).collect()
-        }
-        q.awaitTermination()
-    finally:
-        q.stop()
-    rows = spark.sql(
-        f"SELECT date_format(window_start, 'yyyy-MM-dd') AS day, "
-        f"event_type, est_distinct, n_rows FROM {name} "
-        f"WHERE event_type != '__sentinel__'"
-    ).collect()
-    spark.catalog.dropTempView(name)
-    return rows, batch
+        return {(r["day"], r["event_type"]): r for r in agg.estimates(keyed).collect()}
+
+    batch, views = _drain_memory_sinks(
+        spark,
+        {f"{tag}_stream": (est, output_mode)},
+        batch_build,
+        read=lambda view: view.where("event_type != '__sentinel__'")
+        .selectExpr(
+            "date_format(window_start, 'yyyy-MM-dd') AS day", "event_type", "est_distinct", "n_rows"
+        )
+        .collect(),
+    )
+    return views[f"{tag}_stream"], batch
 
 
 def streaming_windowed_users(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> DataFrame:
@@ -2724,11 +2734,8 @@ def textstats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("key_kind", "key")
 
 
-def source_overlap(
-    spark: SparkSession, sf_dir: str, p: int = DEFAULT_P, k: int = 4096
-) -> DataFrame:
-    """Token-set overlap between the two hottest sources via BOTH sketch
-    families over ONE shared scan and ONE exact companion:
+def _source_pair_checks(spark: SparkSession, source, exact_leg, p: int, k: int) -> DataFrame:
+    """Source-pair overlap checked through BOTH sketch families' set algebra:
 
     - HLL: lossless register-max union (reference merge semantics,
       src/hll.c:776-815) + inclusion-exclusion intersection, asserted
@@ -2737,169 +2744,52 @@ def source_overlap(
       ratio estimator) — the set algebra the reference's union-only merge
       cannot express, with ~3x tighter intersection bounds.
 
-    Fuses round-4's hll_source_overlap + kmv_source_overlap (each re-read
-    and re-exploded the corpus for its own exact companion). The filtered
-    two-source slice is persisted with a try/finally release (ADVICE r04:
-    an exception mid-collect must not leak executor storage).
-    """
-    import math
-
-    a_src, b_src = "s00", "s01"
-    filtered = (
-        sequences_for(spark, sf_dir)
-        .select("source", "tokens")
-        .where(F.col("source").isin(a_src, b_src))
-        .persist()
-    )
-    merged = None
-    try:
-        hll_agg = HllAggregator(
-            p=p, key_cols=["source"], value_col="tokens", value_kind="tokens"
-        )
-        kmv_agg = KmvAggregator(
-            k=k, key_cols=["source"], value_col="tokens", value_kind="tokens"
-        )
-
-        # the three legs (HLL estimates, KMV blobs, exact companion) are
-        # independent consumers of the persisted two-source slice — overlap
-        # them (guide §2.6; the block manager serializes the cache fill per
-        # partition, so concurrent first readers compute it exactly once)
-        def hll_leg():
-            nonlocal merged
-            merged = hll_agg.merged(filtered).localCheckpoint(eager=True)
-            est_udf = hll_agg.estimate_udf()
-            # ONE action for the three HLL estimates: per-source rows + the
-            # distributed keyless union merge, unioned before the collect
-            return (
-                merged.select("source", est_udf(F.col("sketch")).alias("est"))
-                .unionByName(
-                    hll_agg.rollup_total(merged).select(
-                        F.lit("__union__").alias("source"),
-                        est_udf(F.col("sketch")).alias("est"),
-                    )
-                )
-                .collect()
-            )
-
-        est_rows, blobs, exact_row = _overlap(
-            hll_leg,
-            lambda: {
-                r["source"]: bytes(r["sketch"]) for r in kmv_agg.merged(filtered).collect()
-            },
-            lambda: _exact_pair_counts(spark, filtered, [a_src, b_src]).collect()[0],
-        )
-    finally:
-        filtered.unpersist()
-        if merged is not None:
-            release(merged)
-
-    ests = {r["source"]: int(r["est"]) for r in est_rows}
-    hll_union = ests["__union__"]
-    hll_inter = max(0, ests[a_src] + ests[b_src] - hll_union)
-    sa, sb = KmvSketch.from_bytes(blobs[a_src]), KmvSketch.from_bytes(blobs[b_src])
-    kmv_union = KmvSketch.union(sa, sb).estimate()
-    kmv_inter = KmvSketch.intersection_estimate(sa, sb)
-    kmv_j = KmvSketch.jaccard(sa, sb)
-
-    exact_union = int(exact_row["exact_union"])
-    exact_inter = int(exact_row["exact_intersection"])
-    hll_sigma = HllSketch.std_error(p)
-    kmv_sigma = KmvSketch.std_error(k)
-    true_j = exact_inter / exact_union if exact_union else 1.0
-    j_bound = 4 * math.sqrt(max(true_j * (1 - true_j), 1.0 / k) / k)
-    return spark.createDataFrame(
-        [
-            (
-                a_src,
-                b_src,
-                exact_union,
-                exact_inter,
-                _within_3sigma(hll_union, exact_union, p),
-                # inclusion-exclusion: ~3 estimates' errors, each O(sigma*union)
-                bool(abs(hll_inter - exact_inter) <= 3 * hll_sigma * 3 * exact_union),
-                bool(abs(kmv_union / exact_union - 1.0) <= 3 * kmv_sigma),
-                bool(abs(kmv_j - true_j) <= j_bound),
-                bool(
-                    abs(kmv_inter - exact_inter)
-                    <= j_bound * exact_union + 3 * kmv_sigma * exact_inter
-                ),
-            )
-        ],
-        "source_a string, source_b string, exact_union long, exact_intersection long, "
-        "hll_union_within_3sigma boolean, hll_intersection_within_bound boolean, "
-        "kmv_union_within_3sigma boolean, kmv_jaccard_within_bound boolean, "
-        "kmv_intersection_within_bound boolean",
-    )
-
-
-def source_jaccard_matrix(
-    spark: SparkSession, sf_dir: str, p: int = DEFAULT_P, k: int = 4096
-) -> DataFrame:
-    """FULL pairwise source-similarity matrix via BOTH sketch families'
-    set algebra over ONE shared exact companion (the <=2^K bitmask
-    histogram of _exact_pair_counts — one token-keyed shuffle for all 66
-    pairs). HLL pairs go through the registered hll_estimate and
-    hll_union_estimate SQL functions (the vectorized register-matrix
-    estimator); KMV pairs through the registered kmv_* SQL functions
-    (native ratio estimator, ~3x tighter bounds). Fuses round-4's
-    hll_source_jaccard_matrix + kmv_source_jaccard_matrix."""
+    Per-source HLL and KMV sketches of ``source`` (the sequences parquet
+    path or a DataFrame of it) are paired on ``source_a < source_b`` and
+    estimated by the registered SQL pair functions, then checked against
+    ``exact_leg()``, an ``_exact_pair_counts`` frame. The two builds and the
+    exact companion are independent, so they overlap (guide §2.6)."""
     from .functions import register
 
     register(spark)
-    path = sequences_path(spark, sf_dir)
-    hll_agg = HllAggregator(p=p, key_cols=["source"], value_col="tokens", value_kind="tokens")
-    kmv_agg = KmvAggregator(k=k, key_cols=["source"], value_col="tokens", value_kind="tokens")
-    hll_merged = kmv_merged = None
+    built: list = []
+
+    def leg(agg, **estimates: str):
+        # one family: per-source sketches, then every pair's estimates,
+        # materialized inside the leg so the pair work overlaps the others
+        def run() -> DataFrame:
+            merged = agg.merged(source, spark=spark).select("source", "sketch")
+            merged = merged.localCheckpoint(eager=True)
+            try:
+                a = merged.select(F.col("source").alias("source_a"), F.col("sketch").alias("sk_a"))
+                b = merged.select(F.col("source").alias("source_b"), F.col("sketch").alias("sk_b"))
+                est = a.join(b, F.col("source_a") < F.col("source_b")).select(
+                    "source_a",
+                    "source_b",
+                    *(F.expr(f"{fn}(sk_a, sk_b)").alias(name) for name, fn in estimates.items()),
+                )
+                est = est.localCheckpoint(eager=True)
+                built.append(est)
+            finally:
+                release(merged)
+            return est
+
+        return run
+
     try:
-        # the two sketch-family builds and the exact bitmask-histogram
-        # companion are independent scans of the same parquet — overlap all
-        # three (guide §2.6); the exact leg derives the source list itself
-        # (a cheap distinct) instead of waiting on the sketch rows
-        def exact_leg():
-            seqs = sequences_for(spark, sf_dir)
-            srcs = sorted(r["source"] for r in seqs.select("source").distinct().collect())
-            return _exact_pair_counts(spark, seqs, srcs)
-
-        hll_merged, kmv_merged, exact = _overlap(
-            lambda: hll_agg.merged(path, spark=spark)
-            .select("source", "sketch")
-            .localCheckpoint(eager=True),
-            lambda: kmv_agg.merged(path, spark=spark)
-            .select("source", "sketch")
-            .localCheckpoint(eager=True),
+        hll_est, kmv_est, exact = _overlap(
+            leg(
+                HllAggregator(p=p, key_cols=["source"], value_col="tokens", value_kind="tokens"),
+                hll_union="hll_union_estimate",
+                hll_inter="hll_intersection_estimate",
+            ),
+            leg(
+                KmvAggregator(k=k, key_cols=["source"], value_col="tokens", value_kind="tokens"),
+                kmv_union="kmv_union_estimate",
+                kmv_inter="kmv_intersection_estimate",
+                kmv_j="kmv_jaccard",
+            ),
             exact_leg,
-        )
-
-        h_left = hll_merged.select(
-            F.col("source").alias("source_a"),
-            F.col("sketch").alias("sk_a"),
-            F.expr("hll_estimate(sketch)").alias("est_a"),
-        )
-        h_right = hll_merged.select(
-            F.col("source").alias("source_b"),
-            F.col("sketch").alias("sk_b"),
-            F.expr("hll_estimate(sketch)").alias("est_b"),
-        )
-        hll_est = (
-            h_left.join(h_right, F.col("source_a") < F.col("source_b"))
-            .withColumn("hll_union", F.expr("hll_union_estimate(sk_a, sk_b)"))
-            .withColumn(
-                "hll_inter",
-                F.greatest(F.lit(0), F.col("est_a") + F.col("est_b") - F.col("hll_union")),
-            )
-            .select("source_a", "source_b", "hll_union", "hll_inter")
-        )
-        k_left = kmv_merged.select(F.col("source").alias("source_a"), F.col("sketch").alias("sk_a"))
-        k_right = kmv_merged.select(F.col("source").alias("source_b"), F.col("sketch").alias("sk_b"))
-        kmv_est = (
-            k_left.join(k_right, F.col("source_a") < F.col("source_b"))
-            .select(
-                "source_a",
-                "source_b",
-                F.expr("kmv_union_estimate(sk_a, sk_b)").alias("kmv_union"),
-                F.expr("kmv_intersection_estimate(sk_a, sk_b)").alias("kmv_inter"),
-                F.expr("kmv_jaccard(sk_a, sk_b)").alias("kmv_j"),
-            )
         )
         hll_sigma = HllSketch.std_error(p)
         kmv_sigma = KmvSketch.std_error(k)
@@ -2916,6 +2806,7 @@ def source_jaccard_matrix(
                 _within_3sigma(F.col("hll_union"), F.col("exact_union"), p).alias(
                     "hll_union_within_3sigma"
                 ),
+                # inclusion-exclusion: ~3 estimates' errors, each O(sigma*union)
                 (
                     F.abs(F.col("hll_inter") - F.col("exact_intersection"))
                     <= 3 * hll_sigma * 3 * F.col("exact_union")
@@ -2931,13 +2822,50 @@ def source_jaccard_matrix(
             )
             .orderBy("source_a", "source_b")
         )
-        # materialize before releasing the sketch checkpoints the plan reads
+        # materialize before releasing the estimate checkpoints the plan reads
         return out.localCheckpoint(eager=True)
     finally:
-        if hll_merged is not None:
-            release(hll_merged)
-        if kmv_merged is not None:
-            release(kmv_merged)
+        for est in built:
+            release(est)
+
+
+def source_overlap(
+    spark: SparkSession, sf_dir: str, p: int = DEFAULT_P, k: int = 4096
+) -> DataFrame:
+    """Token-set overlap between the two hottest sources: the one row of
+    ``_source_pair_checks`` over the two-source slice, which is persisted
+    for the three legs and released in a finally (ADVICE r04: an exception
+    mid-collect must not leak executor storage)."""
+    srcs = ["s00", "s01"]
+    filtered = (
+        sequences_for(spark, sf_dir)
+        .select("source", "tokens")
+        .where(F.col("source").isin(*srcs))
+        .persist()
+    )
+    try:
+        return _source_pair_checks(
+            spark, filtered, lambda: _exact_pair_counts(spark, filtered, srcs), p, k
+        )
+    finally:
+        filtered.unpersist()
+
+
+def source_jaccard_matrix(
+    spark: SparkSession, sf_dir: str, p: int = DEFAULT_P, k: int = 4096
+) -> DataFrame:
+    """FULL pairwise source-similarity matrix: ``_source_pair_checks`` over
+    every source of the sequences parquet, with ONE shared exact companion
+    (the <=2^K bitmask histogram of _exact_pair_counts — one token-keyed
+    shuffle for all 66 pairs). The exact leg derives the source list itself
+    (a cheap distinct) instead of waiting on the sketch rows."""
+
+    def exact_leg():
+        seqs = sequences_for(spark, sf_dir)
+        srcs = sorted(r["source"] for r in seqs.select("source").distinct().collect())
+        return _exact_pair_counts(spark, seqs, srcs)
+
+    return _source_pair_checks(spark, sequences_path(spark, sf_dir), exact_leg, p, k)
 
 
 def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3096,62 +3024,29 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = _docs_fp_stream_dir(spark, sf_dir)
     schema = spark.read.parquet(src_dir).schema
 
-    def start_stream(builder, tag):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        name = f"{tag}_{uuid.uuid4().hex[:8]}"
-        q = (
-            builder(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch_dir(prefix="sketchlib_stream_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        return q, name
-
-    def finish_stream(q, name):
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        rows = spark.sql(f"SELECT * FROM {name}").collect()
-        spark.catalog.dropTempView(name)
-        return rows
+    def stream():
+        return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
 
     # the two state disciplines are independent streams over the same
-    # source: start BOTH, then await — the state-store/checkpoint fixed
-    # cost is paid concurrently, and the batch companion aggregation runs
-    # while the streams drain (shuffle-partition conf is read at START).
+    # source, drained together while the batch companion aggregates.
     # 16 partitions, not the windowed queries' 4: applyInPandasWithState
     # invokes Python once PER KEY, and this stream carries thousands of
     # fingerprint keys per batch (vs ~150 window keys) — measured 2.6s ->
     # 2.0s at sf0.1 moving 4 -> 16 (32 is flat); state rows stay tiny.
-    with _streaming_conf(spark, "16"):
-        q_exact, n_exact = start_stream(
-            lambda s: streaming_first_seen(s, "fp", "doc_id"), "dedup_stream"
-        )
-        q_bloom, n_bloom = start_stream(
-            lambda s: streaming_bloom_dedup(s, "fp", "doc_id"), "bloomdedup"
-        )
-    try:
-        batch = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", F.xxhash64("text").alias("fp"))
-            .groupBy("fp")
-            .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("cnt"))
-            .collect()
-        )
-    except BaseException:
-        q_exact.stop()
-        q_bloom.stop()
-        raise
-    exact_rows = finish_stream(q_exact, n_exact)
-    bloom_rows = finish_stream(q_bloom, n_bloom)
+    batch, views = _drain_memory_sinks(
+        spark,
+        {
+            "dedup_stream": (streaming_first_seen(stream(), "fp", "doc_id"), "update"),
+            "bloomdedup": (streaming_bloom_dedup(stream(), "fp", "doc_id"), "update"),
+        },
+        lambda: load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.xxhash64("text").alias("fp"))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("cnt"))
+        .collect(),
+        shuffle_partitions="16",
+    )
+    exact_rows, bloom_rows = views["dedup_stream"], views["bloomdedup"]
     batch_set = {(r["fp"], r["doc_id"]) for r in batch}
     n_docs = sum(r["cnt"] for r in batch)
 

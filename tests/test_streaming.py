@@ -752,3 +752,66 @@ def test_streaming_sketch_on_unbounded_rate_source(spark, tmp_path):
         expect.update_batch_int64(values[values % 3 == int(key)])
         assert r["estimate"] == expect.cardinality(), key
         assert r["n_items"] == int((values % 3 == int(key)).sum()), key
+
+
+class _CompanionFailed(RuntimeError):
+    pass
+
+
+def _fail(*args, **kwargs):
+    raise _CompanionFailed("batch companion failed")
+
+
+@pytest.mark.parametrize(
+    "query, companion",
+    [
+        ("streaming_hll_parity", "HllAggregator.estimates"),
+        ("streaming_windowed_users", "HllAggregator.estimates"),
+        ("streaming_finalized_windows", "HllAggregator.estimates"),
+        ("streaming_dedup_docs", "load_table"),
+    ],
+)
+def test_failed_companion_stops_streams_and_drops_sink_views(
+    spark, tmp_path, monkeypatch, query, companion
+):
+    """The stream-parity queries start their memory-sink streams, then run
+    the batch companion while they drain. When the companion raises, the
+    error must propagate with every stream stopped, every sink view
+    dropped and every stream checkpoint removed."""
+    import pandas as pd
+
+    from sketchlib import queries as Q
+    from sketchlib.agg import HllAggregator
+
+    sf_dir = tmp_path / "sf0.001"
+    sf_dir.mkdir()
+    n = 300
+    pd.DataFrame(
+        {
+            "ts": pd.date_range("2024-01-01", periods=n, freq="37min").astype("datetime64[us]"),
+            "user_id": np.arange(n, dtype=np.int64) % 17,
+            "event_type": np.array(["click", "view", "purchase"])[np.arange(n) % 3],
+        }
+    ).to_parquet(sf_dir / "events.parquet")
+    pd.DataFrame(
+        {"doc_id": np.arange(60, dtype=np.int64), "text": [f"doc {i % 25}" for i in range(60)]}
+    ).to_parquet(sf_dir / "documents.parquet")
+    sf_dir = str(sf_dir)
+    scratch = tmp_path / "scratch"
+    monkeypatch.setenv("SKETCHLIB_SCRATCH", str(scratch))
+    # the documents stream source is dataset prep built through load_table
+    # before any stream starts; build it now so only the companion fails
+    Q._docs_fp_stream_dir(spark, sf_dir)
+    if companion == "load_table":
+        monkeypatch.setattr(Q, "load_table", _fail)
+    else:
+        monkeypatch.setattr(HllAggregator, "estimates", _fail)
+
+    views_before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    with pytest.raises(_CompanionFailed):
+        getattr(Q, query)(spark, sf_dir)
+    assert spark.streams.active == []
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views_before
+    # only the cached stream sources (dataset prep) stay in the scratch root
+    prep = ("sketchlib_stream_src_", "sketchlib_stream_docs_")
+    assert [d for d in os.listdir(scratch) if not d.startswith(prep)] == []
