@@ -23,12 +23,13 @@ from .cms import CountMinSketch
 from .codec import HEADER_LEN
 from .hll import (
     DENSE_MAX_P,
+    PAIR_SIDES,
     HllSketch,
-    cardinalities,
     estimates_from_histograms,
     histograms_from_registers,
     pair_estimates,
     registers_from_blobs,
+    sketch_pair_estimate,
 )
 from .kll import KllSketch
 from .kmv import KmvSketch
@@ -136,9 +137,10 @@ def _empty_hll_like(blob: bytes) -> bytes:
 
 def _hll_pair_estimates(a: pd.Series, b: pd.Series, op: str) -> pd.Series:
     """Union/intersection/difference/jaccard estimates over paired blob
-    columns: ``hll.pair_estimates`` over each config group's (|A|, |B|,
-    |A∪B|), from ONE register-matrix decode at dense-representable p and
-    from ``HllSketch`` objects above it.
+    columns: ``hll.pair_estimates`` over each config group, from ONE
+    register-matrix decode at dense-representable p (one histogram per side
+    the op reads: the union alone for "union") and from
+    ``hll.sketch_pair_estimate`` per pair above it.
 
     NULL convention (documented below at the registration site): both-NULL →
     NULL; one-sided NULL is the op against the EMPTY set (``_pair_rows``),
@@ -152,19 +154,17 @@ def _hll_pair_estimates(a: pd.Series, b: pd.Series, op: str) -> pd.Series:
     res = np.zeros(len(a_list), dtype=np.float64 if op == "jaccard" else np.int64)
     for idx, a_blobs, b_blobs, dense in _hll_pair_groups(a_list, b_list, rows):
         if dense is None:
-            ests = np.array(
-                [
-                    cardinalities(HllSketch.from_bytes(x), HllSketch.from_bytes(y))
-                    for x, y in zip(a_blobs, b_blobs)
-                ]
-            ).T
-        else:
-            ra, rb, p, _ = dense
-            ests = [
-                estimates_from_histograms(histograms_from_registers(r), p)
-                for r in (ra, rb, np.maximum(ra, rb))
+            res[idx] = [
+                sketch_pair_estimate(HllSketch.from_bytes(x), HllSketch.from_bytes(y), op)
+                for x, y in zip(a_blobs, b_blobs)
             ]
-        res[idx] = pair_estimates(*ests, op)
+            continue
+        ra, rb, p, _ = dense
+        regs = {"a": ra, "b": rb, "u": np.maximum(ra, rb)}
+        res[idx] = pair_estimates(
+            {s: estimates_from_histograms(histograms_from_registers(regs[s]), p) for s in PAIR_SIDES[op]},
+            op,
+        )
     return _null_outside(res, rows, "float64" if op == "jaccard" else "Int64")
 
 

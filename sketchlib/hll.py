@@ -294,11 +294,17 @@ def estimate_from_histogram(hist: np.ndarray, p: int) -> int:
     return int(round(alpha * m * (m / z)))
 
 
-def pair_estimates(est_a, est_b, est_u, op: str) -> np.ndarray:
+# The estimates each pair op reads: |A| ("a"), |B| ("b") and |A ∪ B| ("u").
+PAIR_SIDES = {"union": "u", "difference": "bu", "intersection": "abu", "jaccard": "abu"}
+
+
+def pair_estimates(ests: dict, op: str) -> np.ndarray:
     """The one implementation of HLL pair algebra: ``op`` ("union",
     "intersection", "difference" = |A \\ B|, or "jaccard") from the
-    estimates |A|, |B| and |A ∪ B| (the register-max union), elementwise
-    over arrays. The sketch methods and the SQL pair functions call it.
+    estimates ``ests["a"]`` = |A|, ``ests["b"]`` = |B| and ``ests["u"]`` =
+    |A ∪ B| (the register-max union), elementwise over arrays. Only the
+    sides ``PAIR_SIDES[op]`` are read, so callers estimate no others. The
+    sketch methods and the SQL pair functions call it.
 
     Intersection (|A|+|B|-|A∪B|) and difference (|A∪B|-|B|) are
     inclusion–exclusion, clamped at 0. Their absolute error scales with
@@ -307,24 +313,23 @@ def pair_estimates(est_a, est_b, est_u, op: str) -> np.ndarray:
     |A∩B|/|A∪B|, and 1.0 when the union estimate is 0: both sets are empty,
     and two empty sets are identical (the KMV empty-set algebra, ADVICE r04).
     """
-    est_a, est_b, est_u = (np.asarray(e, dtype=np.int64) for e in (est_a, est_b, est_u))
+    e = {side: np.asarray(ests[side], dtype=np.int64) for side in PAIR_SIDES[op]}
     if op == "union":
-        return est_u
+        return e["u"]
     if op == "difference":
-        return np.maximum(0, est_u - est_b)
-    inter = np.maximum(0, est_a + est_b - est_u)
+        return np.maximum(0, e["u"] - e["b"])
+    inter = np.maximum(0, e["a"] + e["b"] - e["u"])
     if op == "intersection":
         return inter
-    if op == "jaccard":
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(est_u > 0, inter / est_u, 1.0)
-    raise ValueError(f"unknown HLL pair op {op!r}")
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(e["u"] > 0, inter / e["u"], 1.0)
 
 
-def cardinalities(a: "HllSketch", b: "HllSketch") -> tuple[int, int, int]:
-    """(|A|, |B|, |A ∪ B|) estimates of two sketches, the ``pair_estimates``
-    inputs; a (p, seed) mismatch raises, as in ``merge``."""
-    return a.cardinality(), b.cardinality(), (a | b).cardinality()
+def sketch_pair_estimate(a: "HllSketch", b: "HllSketch", op: str):
+    """``pair_estimates`` of one sketch pair, estimating only the sketches
+    ``op`` reads; a (p, seed) mismatch raises, as in ``merge``."""
+    sides = {"a": a, "b": b, "u": a | b}
+    return pair_estimates({s: sides[s].cardinality() for s in PAIR_SIDES[op]}, op)
 
 
 @dataclass
@@ -723,32 +728,31 @@ class HllSketch:
             _check_ranks(out.registers, p)
         return out
 
-    # The four pair methods are ``pair_estimates`` over ``cardinalities``:
-    # the one implementation of HLL pair algebra, shared with the SQL pair
-    # functions.
+    # The four pair methods are ``sketch_pair_estimate``: the one
+    # implementation of HLL pair algebra, shared with the SQL pair functions.
 
     @staticmethod
     def union_estimate(a: "HllSketch", b: "HllSketch") -> int:
         """|A ∪ B| — exact register-max union (reference merge semantics,
         README.md:138-148): lossless, same error bound as a single sketch."""
-        return int(pair_estimates(*cardinalities(a, b), "union"))
+        return int(sketch_pair_estimate(a, b, "union"))
 
     @staticmethod
     def intersection_estimate(a: "HllSketch", b: "HllSketch") -> int:
         """|A ∩ B| by inclusion–exclusion, clamped at 0 (``pair_estimates``)."""
-        return int(pair_estimates(*cardinalities(a, b), "intersection"))
+        return int(sketch_pair_estimate(a, b, "intersection"))
 
     @staticmethod
     def difference_estimate(a: "HllSketch", b: "HllSketch") -> int:
         """|A \\ B| by inclusion–exclusion, clamped at 0 (``pair_estimates``).
         KmvSketch.difference_estimate is the tighter native ratio estimator
         when a KMV sketch is available."""
-        return int(pair_estimates(*cardinalities(a, b), "difference"))
+        return int(sketch_pair_estimate(a, b, "difference"))
 
     @staticmethod
     def jaccard_estimate(a: "HllSketch", b: "HllSketch") -> float:
         """|A ∩ B| / |A ∪ B|, 1.0 for two empty sketches (``pair_estimates``)."""
-        return float(pair_estimates(*cardinalities(a, b), "jaccard"))
+        return float(sketch_pair_estimate(a, b, "jaccard"))
 
     @staticmethod
     def std_error(p: int) -> float:

@@ -75,8 +75,7 @@ class KmvSketch:
             hashes = hashes[hashes < self.values[-1]]
             if len(hashes) == 0:
                 return
-        merged = np.union1d(self.values, hashes)  # sorted + distinct
-        self.values = merged[: self.k]
+        self.values = _union_values(self.values, hashes, self.k)
 
     def update_batch(self, values, kind: str = "tokens") -> None:
         if len(values) == 0:
@@ -104,7 +103,7 @@ class KmvSketch:
     @staticmethod
     def union(a: "KmvSketch", b: "KmvSketch") -> "KmvSketch":
         a._check(b)
-        return KmvSketch(k=a.k, seed=a.seed, values=np.union1d(a.values, b.values)[: a.k])
+        return KmvSketch(k=a.k, seed=a.seed, values=_union_values(a.values, b.values, a.k))
 
     @staticmethod
     def jaccard(a: "KmvSketch", b: "KmvSketch") -> float:
@@ -240,6 +239,12 @@ def _estimate_values(values: np.ndarray, k: int) -> int:
     return int(round((k - 1) / ((float(values[k - 1]) + 1.0) / _TWO64)))
 
 
+def _union_values(a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:
+    """The values of the union sketch: the k smallest distinct hashes of
+    both, sorted (what ``merge``, ``union`` and the pair algebra keep)."""
+    return np.union1d(a, b)[:k]
+
+
 def _pair_row(a: KmvSketch, b: KmvSketch) -> list:
     """(union, intersection, jaccard, difference) of one checked pair."""
     a._check(b)
@@ -269,7 +274,7 @@ def pair_set_algebra(
     jac = np.zeros(n, dtype=np.float64)
     est_d = np.zeros(n, dtype=np.int64)
     for i in range(n):
-        u = np.union1d(a_vals[i], b_vals[i])[:k]  # the union sketch's values
+        u = _union_values(a_vals[i], b_vals[i], k)
         eu = _estimate_values(u, k)
         if len(u) == 0:
             j = 1.0  # both empty: identical sets
