@@ -45,7 +45,8 @@ from pyspark.sql import types as T
 from .bloom import BloomFilter
 from .cms import CountMinSketch
 from .fi import FrequentItemsSketch
-from .hll import DENSE_MAX_P, HllSketch
+from .functions import _hll_estimates
+from .hll import DENSE_MAX_P, HllSketch, registers_from_blobs, registers_to_blobs
 from .kernels import DEFAULT_SEED, hll_build_into, murmur64a, rechunk_record_batches
 from .kll import KllSketch
 from .kmv import KmvSketch
@@ -80,18 +81,6 @@ _VALUE_TYPES = {
 }
 
 
-_NAN_KEY = object()  # sentinel: one group for all float-NaN key values
-
-
-def _normalize_key(raw: tuple) -> tuple:
-    """Key tuple for equality comparison: float NaN -> a shared sentinel so
-    NaN-keyed runs merge into one group (Python NaN != NaN would otherwise
-    split them; Spark's groupBy normalizes NaN into a single group)."""
-    return tuple(
-        _NAN_KEY if isinstance(v, float) and v != v else v for v in raw
-    )
-
-
 def _adjacent_not_equal(arr: pa.Array) -> np.ndarray:
     """bool[n-1]: element i True iff arr[i+1] != arr[i], with null==null and
     NaN==NaN (group-key semantics). Vectorized Arrow compare over slices."""
@@ -106,6 +95,17 @@ def _adjacent_not_equal(arr: pa.Array) -> np.ndarray:
         )
         ne = pc.and_(ne, pc.invert(both_nan))
     return ne.to_numpy(zero_copy_only=False)
+
+
+def _run_starts(cols: list) -> np.ndarray:
+    """Row positions where a run of equal keys starts in key-sorted Arrow
+    columns (row 0 always does); null and NaN keys equal themselves."""
+    new_run = np.zeros(len(cols[0]), dtype=bool)
+    new_run[0] = True
+    if len(new_run) > 1:
+        for arr in cols:
+            new_run[1:] |= _adjacent_not_equal(arr)
+    return np.flatnonzero(new_run)
 
 
 def _group_codes(batch: pa.RecordBatch, key_cols: list[str]):
@@ -261,6 +261,78 @@ def _shard_table(spark, shards: list, parallelism: int | None = None):
     return spark.range(n, numPartitions=n), [shards[i::n] for i in range(n)]
 
 
+# largest (keys x 2^p) HLL register matrix a task holds: the keyed build's
+# task matrix and each batch of merged runs
+_MATRIX_BYTES = 64 << 20
+
+
+class _KeySketches:
+    """A partial task's sketches, one object per key (task row)."""
+
+    def __init__(self, agg: "SketchAggregator"):
+        self.agg = agg
+        self.sketches: list = []
+        # optional composite-sketch hook: aggregators that also sketch the
+        # per-ROW shape (e.g. ProfileAggregator's token-count quantiles) get
+        # the row-grain (counts, codes) the flat value batch can't carry
+        self.rows_hook = getattr(agg, "_update_rows_grouped", None)
+
+    def reserve(self, n_keys: int):
+        """This state, holding ``n_keys`` rows."""
+        self.sketches.extend(self.agg._empty() for _ in range(n_keys - len(self.sketches)))
+        return self
+
+    def update(self, rows, values, value_codes, counts, codes) -> None:
+        """Fold one batch in: batch group g is task row ``rows[g]``."""
+        group = [self.sketches[r] for r in rows.tolist()]
+        self.agg._update_grouped(group, values, value_codes, len(group))
+        if self.rows_hook is not None:
+            self.rows_hook(group, counts, codes, len(group))
+
+    def blobs(self) -> pa.Array:
+        return pa.array([s.to_bytes() for s in self.sketches], type=pa.binary())
+
+
+class _RegisterMatrix:
+    """A partial task's HLL registers at dense p: one (keys x 2^p) matrix,
+    grown by doubling, that each batch scatter-maxes into directly and one
+    vectorized encode turns into blobs. Past ``_MATRIX_BYTES`` the task's
+    keys move to per-key sketches (``_KeySketches``)."""
+
+    def __init__(self, agg: "HllAggregator"):
+        self.agg = agg
+        self.regs = np.zeros((0, 1 << agg.p), dtype=np.uint8)
+        self.n = 0
+
+    def reserve(self, n_keys: int):
+        a, m = self.agg, self.regs.shape[1]
+        if n_keys * m > _MATRIX_BYTES:
+            keyed = _KeySketches(a)
+            keyed.sketches = [
+                HllSketch(a.p, a.seed, registers=r.copy()) for r in self.regs[: self.n]
+            ]
+            return keyed.reserve(n_keys)
+        if n_keys > len(self.regs):
+            grown = np.zeros((min(max(n_keys, 2 * len(self.regs)), _MATRIX_BYTES // m), m), np.uint8)
+            grown[: self.n] = self.regs[: self.n]
+            self.regs = grown
+        self.n = n_keys
+        return self
+
+    def update(self, rows, values, value_codes, counts, codes) -> None:
+        a = self.agg
+        if len(rows) == 1:
+            hll_build_into(self.regs[rows[0]], values, None, a.seed, a.p, a.value_kind)
+        else:
+            # int32 rows: halves the per-value code stream (keys per task
+            # are far below 2^31)
+            value_rows = rows.astype(np.int32)[value_codes]
+            hll_build_into(self.regs.reshape(-1), values, value_rows, a.seed, a.p, a.value_kind)
+
+    def blobs(self) -> pa.Array:
+        return registers_to_blobs(self.regs[: self.n], self.agg.p, self.agg.seed)
+
+
 class SketchAggregator:
     """Base distributed aggregator for any MergeableSketch.
 
@@ -315,20 +387,19 @@ class SketchAggregator:
 
     # -- partial build ----------------------------------------------------------
 
+    def _task_sketches(self):
+        """A partial task's empty sketch state (``_KeySketches``)."""
+        return _KeySketches(self)
+
     def _make_build_fn(self):
         """Shared Arrow-batch accumulator: one sketch per key per task.
 
         Used by both the DataFrame path (mapInArrow over a Spark scan) and
         the direct-parquet path (pyarrow row-group reads inside the task).
+        Each key gets a task row on first sight; rows come out in that
+        order, with their sketches from ``_task_sketches``.
         """
         key_cols, value_col, kind = self.key_cols, self.value_col, self.value_kind
-        empty = self._empty
-        update_grouped = self._update_grouped
-        # optional composite-sketch hook: aggregators that also sketch the
-        # per-ROW shape (e.g. ProfileAggregator's token-count quantiles) get
-        # the row-grain (counts, codes) the flat value batch can't carry
-        update_rows_grouped = getattr(self, "_update_rows_grouped", None)
-        to_blob = lambda s: s.to_bytes()  # noqa: E731
 
         # token-array rows carry ~10^2 values each: slice big Arrow batches
         # (Spark's default is 10k rows) down to cache-resident chunks before
@@ -338,7 +409,9 @@ class SketchAggregator:
             return rechunk_record_batches(batches) if kind == "tokens" else batches
 
         def build(batches):
-            acc: dict[tuple, list] = {}
+            keys: dict[tuple, int] = {}  # key tuple -> task row
+            state = self._task_sketches()
+            n_rows = n_items = np.zeros(0, dtype=np.int64)
             key_types = None
             for batch in sliced(batches):
                 if batch.num_rows == 0:
@@ -347,33 +420,23 @@ class SketchAggregator:
                     key_types = [batch.schema.field(k).type for k in key_cols]
                 values, counts = _extract_values(batch, value_col, kind)
                 codes, value_codes, uniq_tuples = _batch_groups(batch, key_cols, counts, kind)
-                row_counts = np.bincount(codes, minlength=len(uniq_tuples))
-                item_counts = np.bincount(codes, weights=counts, minlength=len(uniq_tuples))
-                slots = []
-                for keyt in uniq_tuples:
-                    slot = acc.get(keyt)
-                    if slot is None:
-                        slot = acc[keyt] = [empty(), 0, 0]
-                    slots.append(slot)
-                update_grouped(
-                    [s[0] for s in slots], values, value_codes, len(uniq_tuples)
+                rows = np.fromiter(
+                    (keys.setdefault(k, len(keys)) for k in uniq_tuples),
+                    dtype=np.int64, count=len(uniq_tuples),
                 )
-                if update_rows_grouped is not None:
-                    update_rows_grouped(
-                        [s[0] for s in slots], counts, codes, len(uniq_tuples)
-                    )
-                for gi, slot in enumerate(slots):
-                    slot[1] += int(row_counts[gi])
-                    slot[2] += int(item_counts[gi])
-            if not acc:
+                if len(keys) > len(n_rows):
+                    grow = np.zeros(len(keys) - len(n_rows), dtype=np.int64)
+                    n_rows, n_items = np.append(n_rows, grow), np.append(n_items, grow)
+                    state = state.reserve(len(keys))
+                n_rows[rows] += np.bincount(codes, minlength=len(rows))
+                n_items[rows] += np.bincount(codes, weights=counts, minlength=len(rows)).astype(np.int64)
+                state.update(rows, values, value_codes, counts, codes)
+            if not keys:
                 return
-            keys_out = list(acc.keys())
-            arrays = []
-            for j, kname in enumerate(key_cols):
-                arrays.append(pa.array([kt[j] for kt in keys_out], type=key_types[j]))
-            arrays.append(pa.array([to_blob(v[0]) for v in acc.values()], type=pa.binary()))
-            arrays.append(pa.array([v[1] for v in acc.values()], type=pa.int64()))
-            arrays.append(pa.array([v[2] for v in acc.values()], type=pa.int64()))
+            arrays = [
+                pa.array([kt[j] for kt in keys], type=key_types[j]) for j in range(len(key_cols))
+            ]
+            arrays += [state.blobs(), pa.array(n_rows), pa.array(n_items)]
             yield pa.RecordBatch.from_arrays(
                 arrays, names=key_cols + ["sketch", "n_rows", "n_items"]
             )
@@ -491,6 +554,16 @@ class SketchAggregator:
 
     # -- tree merge -------------------------------------------------------------
 
+    def _merged_runs(self, blobs: pa.Array, starts: np.ndarray, merge_blobs) -> pa.Array:
+        """One merged blob per run of ``blobs``; run i is the rows from
+        ``starts[i]`` to the next start. One ``merge_blobs`` call per run."""
+        vals = blobs.to_pylist()
+        bounds = np.append(starts, len(vals)).tolist()
+        return pa.array(
+            [merge_blobs(vals[lo:hi]).to_bytes() for lo, hi in zip(bounds[:-1], bounds[1:])],
+            type=pa.binary(),
+        )
+
     def _merge_stage(
         self, partials: DataFrame, group_cols: Sequence[str], *, final: bool = True
     ) -> DataFrame:
@@ -501,9 +574,12 @@ class SketchAggregator:
         instead of one per key — groupBy().applyInPandas pays a per-group
         pandas/Arrow round trip that dominates when keys are high-cardinality
         (measured ~15 s for 5000 single-partial keys; runs-merge ~0.5 s).
-        Batches within a partition arrive in order, so a key straddling a
-        batch boundary is carried as open state and flushed on the next
-        batch (or at end of partition).
+        Each batch is merged whole: run keys are an Arrow ``take`` at the run
+        starts, counts an ``np.add.reduceat``, and sketches
+        ``_merged_runs`` (for HLL one batch decode, max-fold and encode).
+        Batches within a partition arrive in order, so the rows of a
+        batch's last run are held back and merged with the next batch's
+        rows of the same key (or at the end of the partition).
 
         ``final=False`` marks an INTERMEDIATE stage (the salted stage-1):
         aggregators whose finalize step is lossy (FiAggregator's trim)
@@ -518,77 +594,45 @@ class SketchAggregator:
             else getattr(self, "_merge_blobs_intermediate", self._merge_blobs)
         )
         group_cols = list(group_cols)
+        names = group_cols + ["sketch", "n_rows", "n_items"]
         by_name = {f.name: f for f in partials.schema.fields}
         schema = T.StructType([by_name[c] for c in group_cols] + _COUNT_FIELDS)
 
-        def merge_runs(batches):
-            open_key = None  # raw key values of the open run (for output)
-            open_norm = None  # NaN-normalized key values (for comparison)
-            open_blobs: list = []
-            open_rows = 0
-            open_items = 0
-            out_keys: list = []
-            out_blobs: list = []
-            out_rows: list = []
-            out_items: list = []
-            key_types = None
-
-            def flush():
-                nonlocal open_blobs, open_rows, open_items
-                s = merge_blobs(open_blobs)
-                out_keys.append(open_key)
-                out_blobs.append(s.to_bytes())
-                out_rows.append(open_rows)
-                out_items.append(open_items)
-                open_blobs = []
-                open_rows = 0
-                open_items = 0
-
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                if key_types is None:
-                    key_types = [batch.schema.field(c).type for c in group_cols]
-                karrs = [batch.column(c) for c in group_cols]
-                # vectorized run-boundary detection on the key-sorted input:
-                # row i starts a new run iff any key col differs from row i-1
-                # (Arrow slice compare — no per-row Python, VERDICT r02 #8);
-                # NaN/null compare EQUAL so float NaN keys form ONE group,
-                # matching Spark's groupBy normalization (ADVICE r02)
-                new_run = np.zeros(n, dtype=bool)
-                new_run[0] = True
-                for arr in karrs:
-                    if n > 1:
-                        new_run[1:] |= _adjacent_not_equal(arr)
-                starts = np.flatnonzero(new_run)
-                ends = np.append(starts[1:], n)
-                rows_np = batch.column("n_rows").to_numpy(zero_copy_only=False)
-                items_np = batch.column("n_items").to_numpy(zero_copy_only=False)
-                blob_col = batch.column("sketch")
-                for s, e in zip(starts, ends):
-                    raw = tuple(arr[int(s)].as_py() for arr in karrs)
-                    norm = _normalize_key(raw)
-                    if open_blobs and norm != open_norm:
-                        flush()
-                    open_key, open_norm = raw, norm
-                    open_blobs.extend(blob_col.slice(int(s), int(e - s)).to_pylist())
-                    open_rows += int(rows_np[s:e].sum())
-                    open_items += int(items_np[s:e].sum())
-            if open_blobs:
-                flush()
-            if not out_keys:
-                return
-            arrays = [
-                pa.array([k[j] for k in out_keys], type=key_types[j])
-                for j in range(len(group_cols))
+        def merge_block(pieces: list, starts: np.ndarray) -> pa.RecordBatch:
+            cols = {c: pa.concat_arrays([b.column(c) for b in pieces]) for c in names}
+            at = pa.array(starts)
+            counts = [
+                pa.array(np.add.reduceat(cols[c].to_numpy(zero_copy_only=False), starts))
+                for c in ("n_rows", "n_items")
             ]
-            arrays.append(pa.array(out_blobs, type=pa.binary()))
-            arrays.append(pa.array(out_rows, type=pa.int64()))
-            arrays.append(pa.array(out_items, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=group_cols + ["sketch", "n_rows", "n_items"]
+            sketches = self._merged_runs(cols["sketch"], starts, merge_blobs)
+            return pa.RecordBatch.from_arrays(
+                [cols[c].take(at) for c in group_cols] + [sketches] + counts, names=names
             )
+
+        def merge_runs(batches):
+            held: list = []  # the open run's rows: it may go on in the next batch
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                starts = _run_starts([batch.column(c) for c in group_cols])
+                if held:
+                    last = held[-1].slice(held[-1].num_rows - 1)
+                    seam = [pa.concat_arrays([last.column(c), batch.column(c)[:1]]) for c in group_cols]
+                    if len(_run_starts(seam)) == 1:
+                        starts = starts[1:]  # row 0 continues the held run
+                if not len(starts):
+                    held.append(batch)
+                    continue
+                block = held + [batch.slice(0, int(starts[-1]))]
+                block_starts = starts[:-1] + sum(b.num_rows for b in held)
+                if held:
+                    block_starts = np.r_[0, block_starts]
+                held = [batch.slice(int(starts[-1]))]
+                if len(block_starts):
+                    yield merge_block(block, block_starts)
+            if held:
+                yield merge_block(held, np.zeros(1, dtype=np.int64))
 
         arranged = partials.repartition(*group_cols).sortWithinPartitions(*group_cols)
         return arranged.mapInArrow(merge_runs, schema)
@@ -945,18 +989,46 @@ class HllAggregator(_DistinctAggregator):
     def _merge_blobs(self, blobs) -> HllSketch:
         return HllSketch.merge_blobs(blobs, self.p, self.seed)
 
+    def _task_sketches(self):
+        """A register matrix at dense p; per-key sketches above it."""
+        return _RegisterMatrix(self) if self.p <= DENSE_MAX_P else super()._task_sketches()
+
+    def _merged_runs(self, blobs: pa.Array, starts: np.ndarray, merge_blobs) -> pa.Array:
+        """At dense p: per ``_MATRIX_BYTES`` of runs, one batch decode that
+        max-folds each blob into its run's row (``registers_from_blobs``)
+        and one encode (``registers_to_blobs``), byte-identical to
+        ``merge_blobs`` per run. Per-run ``merge_blobs`` above it."""
+        if self.p > DENSE_MAX_P:
+            return super()._merged_runs(blobs, starts, merge_blobs)
+        bounds = np.append(starts, len(blobs))
+        run_of = np.repeat(np.arange(len(starts)), np.diff(bounds))
+        step = max(1, _MATRIX_BYTES >> self.p)  # runs per register matrix
+        out = []
+        for lo in range(0, len(starts), step):
+            hi = min(lo + step, len(starts))
+            a, b = int(bounds[lo]), int(bounds[hi])
+            regs, p, seed = registers_from_blobs(blobs.slice(a, b - a), run_of[a:b] - lo, hi - lo)
+            if (p, seed) != (self.p, self.seed):
+                raise ValueError(
+                    f"cannot merge HLL blobs of p={p}, seed={seed} into p={self.p}, seed={self.seed}"
+                )
+            out.append(registers_to_blobs(regs, p, seed))
+        return out[0] if len(out) == 1 else pa.concat_arrays(out)
+
     def _update_grouped(self, sketches, values, value_codes, n_groups: int) -> None:
-        """Grouped build through the one kernel, ``kernels.hll_build_into``.
+        """Grouped build of per-key sketches (``_KeySketches``: p >
+        DENSE_MAX_P, or a task past ``_MATRIX_BYTES``) through the one
+        kernel, ``kernels.hll_build_into``.
 
         - p > DENSE_MAX_P (sketches held sparse, no register array), or a
-          groups x 2^p matrix over 64 MB: the base per-group slices, each
-          hashed into its own sketch by ``_update``.
+          groups x 2^p matrix over ``_MATRIX_BYTES``: the base per-group
+          slices, each hashed into its own sketch by ``_update``.
         - one group: straight into that sketch's registers.
         - otherwise: one scatter-max into a zeroed (groups x 2^p) matrix,
           then a per-group ``np.maximum`` into each sketch.
         """
         p, m = self.p, 1 << self.p
-        if p > DENSE_MAX_P or n_groups * m > (64 << 20):
+        if p > DENSE_MAX_P or n_groups * m > _MATRIX_BYTES:
             super()._update_grouped(sketches, values, value_codes, n_groups)
         elif n_groups == 1:
             hll_build_into(sketches[0].registers, values, None, self.seed, p, self.value_kind)
@@ -969,15 +1041,7 @@ class HllAggregator(_DistinctAggregator):
     # -- finalize ---------------------------------------------------------------
 
     def estimate_udf(self) -> Callable:
-        p, seed = self.p, self.seed
-
-        @F.pandas_udf(T.LongType())
-        def est(blobs: pd.Series) -> pd.Series:
-            return blobs.map(
-                lambda b: HllSketch.from_bytes(bytes(b)).cardinality()
-            ).astype("int64")
-
-        return est
+        return F.pandas_udf(_hll_estimates, T.LongType())
 
 
 class CmsAggregator(SketchAggregator):

@@ -17,7 +17,11 @@ Each layout has exactly one parser, and every consumer (``from_bytes``,
 ``merge_blobs``, the batch decoders) folds that parser's output into its
 target with the sketch's own merge operator: HLL takes the max, count-min
 adds, Bloom ORs. ``from_bytes(b)`` is therefore ``merge_blobs([b])`` under
-the blob's own config. The same fold fixes what input the encoders never
+the blob's own config. The HLL layout's parser is ``hll.registers_from_blobs``,
+which reads a whole batch of blobs at once; ``hll._read`` is its one-blob
+form for ``from_bytes`` and ``merge_blobs`` (and for p > 26, which has no
+register matrix), held to the same checks and results by
+tests/test_properties.py. The same fold fixes what input the encoders never
 write means: a sparse (index, value) list need not be sorted or unique,
 and a repeated index folds by the merge law, exactly as if each entry
 came from its own blob. A KMV value list folds the same way, to its

@@ -93,10 +93,11 @@ def _null_outside(res: np.ndarray, rows: list[int], dtype: str) -> pd.Series:
 def _hll_estimates(blobs: pd.Series) -> pd.Series:
     """Cardinality estimates of an HLL blob column, NULL where it is NULL.
 
-    Groups rows by sketch config, batch-decodes each group with one
-    frombuffer reshape, and runs the vectorized estimator once per group —
-    the K²-pairwise-matrix path previously paid a per-row Python
-    from_bytes + power-series (VERDICT r03 #5).
+    Groups rows by sketch config, decodes each group with the batch parser
+    (``registers_from_blobs``), and runs the vectorized estimator once per
+    group — the K²-pairwise-matrix path previously paid a per-row Python
+    from_bytes + power-series (VERDICT r03 #5). ``HllAggregator.estimate_udf``
+    wraps this function too.
     """
     blob_list = [None if b is None else bytes(b) for b in blobs]
     rows = [i for i, b in enumerate(blob_list) if b is not None]

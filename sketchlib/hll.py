@@ -36,10 +36,13 @@ import struct
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 
 from .codec import (
     HEADER_LEN,
     KIND_HLL,
+    MAGIC,
+    VERSION,
     PayloadReader,
     checked_indices,
     pack_header,
@@ -59,6 +62,11 @@ DEFAULT_P = 12  # reference default, src/hll.c:702
 # uses the sorted sparse (index, rank) representation — the same dense/sparse
 # duality as the reference (src/hll.c:708-760), keyed on p instead of fill
 DENSE_MAX_P = 26
+
+# the codec header (codec._HEADER) as a numpy record, for whole-batch reads
+_HEADER_DTYPE = np.dtype(
+    [("magic", "<u4"), ("version", "<u2"), ("kind", "u1"), ("p", "u1"), ("seed", "<i8")]
+)
 
 
 def _sigma(x: float) -> float:
@@ -191,10 +199,12 @@ def _check_ranks(ranks: np.ndarray, p: int) -> None:
 
 
 def _read(blob: bytes):
-    """The one HLL blob parser -> (p, seed, regs, pairs): the uint8[2^p]
-    registers of a dense mode-0 (a read-only view) or packed6 mode-2 blob,
-    or the (indices, ranks) of a sparse mode-1 or mode-3 blob. Consumers
-    fold it through ``_checked`` (codec module docstring)."""
+    """The HLL blob parser for one blob -> (p, seed, regs, pairs): the
+    uint8[2^p] registers of a dense mode-0 (a read-only view) or packed6
+    mode-2 blob, or the (indices, ranks) of a sparse mode-1 or mode-3 blob.
+    Consumers fold it through ``_checked`` (codec module docstring). It is
+    ``registers_from_blobs`` for one blob, at any p and without the batch
+    set-up; tests hold the two to the same checks and registers."""
     p, seed, payload = unpack_header(blob, KIND_HLL)
     r = PayloadReader(payload)
     (mode,) = r.unpack("<B")
@@ -238,43 +248,203 @@ def _fold_dense(target: np.ndarray, regs, pairs) -> None:
         update_registers(target, *pairs)
 
 
-def registers_from_blobs(blobs) -> tuple[np.ndarray, int, int]:
-    """Decode a batch of at-rest HLL blobs -> ((n, 2^p) uint8 matrix, p, seed).
+def _blob_buffer(blobs):
+    """(data, starts, lengths) of a blob sequence: the uint8 bytes of every
+    blob back to back, and each blob's offset and length in them. An Arrow
+    binary array is read in place through its own buffers; anything else is
+    joined once."""
+    if isinstance(blobs, pa.ChunkedArray):
+        blobs = blobs.combine_chunks()
+    if isinstance(blobs, pa.Array):
+        if blobs.null_count:
+            raise ValueError("cannot batch-decode a NULL HLL blob")
+        wide = pa.types.is_large_binary(blobs.type)
+        _, offsets, data = blobs.buffers()
+        offsets = np.frombuffer(
+            offsets, dtype=np.int64 if wide else np.int32, count=len(blobs) + 1,
+            offset=blobs.offset * (8 if wide else 4),
+        ).astype(np.int64)
+        data = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
+    else:
+        blobs = [bytes(b) for b in blobs]
+        offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+        np.cumsum([len(b) for b in blobs], out=offsets[1:])
+        data = np.frombuffer(b"".join(blobs), np.uint8)
+    return data, offsets[:-1], np.diff(offsets)
 
-    Each row is its blob max-folded into zeros, exactly as ``from_bytes``
-    decodes it; the one shortcut, for all-dense same-length batches, is a
-    single ``np.frombuffer`` reshape under the same rank bound. Mixed p or
-    seed raises (like ``merge``'s size guard, src/hll.c:781-788), and so
-    does p > DENSE_MAX_P, where 2^p registers per row cannot be allocated.
+
+def _gather(data: np.ndarray, at: np.ndarray, width: int) -> np.ndarray:
+    """(len(at), width) uint8 copy of the ``width`` bytes at each offset."""
+    return data[at[:, None] + np.arange(width)]
+
+
+def _payload_rows(data: np.ndarray, at: np.ndarray, width: int) -> np.ndarray:
+    """(len(at), width) uint8 rows of the ``width`` bytes at each offset: a
+    strided view when the offsets are evenly spaced (a batch of same-size
+    blobs), one row copy per blob otherwise."""
+    step = np.diff(at)
+    if len(at) == 1 or (step == step[0]).all():
+        stride = int(step[0]) if len(at) > 1 else width
+        return np.lib.stride_tricks.as_strided(
+            data[at[0] :], shape=(len(at), width), strides=(stride, 1), writeable=False
+        )
+    return np.stack([data[a : a + width] for a in at.tolist()])
+
+
+def _fold_rows(out: np.ndarray, rows: np.ndarray, regs: np.ndarray) -> None:
+    """``out[rows[i]] = max(out[rows[i]], regs[i])`` for every i, repeated
+    rows included. The blobs are grouped by row (already so in a key-sorted
+    merge) and the j-th blob of every row folds in one vectorized max, so
+    the loop runs once per position in the longest run, not once per blob
+    (``np.maximum.reduceat`` along axis 0 measured 10-30x slower here)."""
+    if len(rows) > 1 and not (np.diff(rows) >= 0).all():
+        order = np.argsort(rows, kind="stable")
+        rows, regs = rows[order], regs[order]
+    first = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
+    length = np.diff(np.append(first, len(rows)))
+    target = rows[first]
+    for j in range(int(length.max())):
+        at = np.flatnonzero(length > j)
+        out[target[at]] = np.maximum(out[target[at]], regs[first[at] + j])
+
+
+def _check_size(size: np.ndarray, want: np.ndarray, mode: int) -> None:
+    """``ValueError`` unless every payload is exactly as long as its fields."""
+    bad = size != want
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"HLL mode-{mode} payload of {int(size[i])} bytes, its fields need {int(want[i])}"
+        )
+
+
+def registers_from_blobs(blobs, rows=None, n_out: int | None = None):
+    """The batch HLL blob parser -> ((n_out, 2^p) uint8 matrix, p, seed).
+
+    Blob i max-folds into row ``rows[i]`` (default: row i of n rows), so a
+    run of blobs mapped to one row is their merge, and a row no blob maps
+    to stays empty. Every mode (0-3) is read for the whole batch at once,
+    with the checks of ``_read`` plus ``_checked``: the header, a known
+    mode, each payload exactly as long as its fields, every sparse index
+    on the 2^p grid and every rank at most 64-p+1 (pinned against the
+    per-blob decoders by tests/test_properties.py). Mixed p or seed raises
+    (like ``merge``'s size guard, src/hll.c:781-788), and so does p >
+    DENSE_MAX_P, where 2^p registers per row cannot be allocated.
+    ``blobs`` is a sequence of bytes or an Arrow binary array.
     """
-    blobs = [bytes(b) for b in blobs]
-    n = len(blobs)
+    data, starts, lengths = _blob_buffer(blobs)
+    n = len(starts)
     if n == 0:
         return np.zeros((0, 0), dtype=np.uint8), 0, DEFAULT_SEED
-    p0, seed0, _, _ = _read(blobs[0])
-    if p0 > DENSE_MAX_P:
+    if (lengths <= HEADER_LEN).any():
+        short = int(lengths.min())
+        raise ValueError(f"HLL blob of {short} bytes is shorter than its header and mode byte")
+    head = _gather(data, starts, HEADER_LEN).view(_HEADER_DTYPE)[:, 0]
+    known = (head["magic"] == MAGIC) & (head["version"] == VERSION) & (head["kind"] == KIND_HLL)
+    if not known.all():
+        i = int(np.argmin(known))
+        unpack_header(data[starts[i] : starts[i] + HEADER_LEN].tobytes(), KIND_HLL)  # raises
+    p, seed = int(head["p"][0]), int(head["seed"][0])
+    if ((head["p"] != p) | (head["seed"] != seed)).any():
+        raise ValueError("cannot batch-decode HLL blobs with mixed p/seed")
+    if not 2 <= p <= DENSE_MAX_P:
         raise ValueError(
-            f"batch register decode needs a dense-representable p <= {DENSE_MAX_P}, "
-            f"got p={p0}; decode sparse sketches one at a time via from_bytes"
+            f"batch register decode needs a dense-representable p in [2, {DENSE_MAX_P}], "
+            f"got p={p}; decode sparse sketches one at a time via from_bytes"
         )
-    m = 1 << p0
-    hdr = HEADER_LEN  # mode byte sits right after the fixed-width header
-    if all(len(b) == hdr + 1 + m for b in blobs):
-        buf = np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(n, hdr + 1 + m)
-        if (buf[:, hdr] == 0).all():
-            # every blob dense: headers must agree (vectorized check)
-            if not (buf[:, :hdr] == buf[0, :hdr]).all():
-                raise ValueError("cannot batch-decode HLL blobs with mixed p/seed")
-            regs = np.ascontiguousarray(buf[:, hdr + 1 :])
-            _check_ranks(regs, p0)
-            return regs, p0, seed0
-    regs = np.zeros((n, m), dtype=np.uint8)
-    for i, b in enumerate(blobs):
-        p, seed, dense, pairs = _read(b)
-        if (p, seed) != (p0, seed0):
-            raise ValueError("cannot batch-decode HLL blobs with mixed p/seed")
-        _fold_dense(regs[i], *_checked(p, dense, pairs))
-    return regs, p0, seed0
+    m = 1 << p
+    rows = np.arange(n) if rows is None else np.asarray(rows, dtype=np.int64)
+    out = np.zeros((n if n_out is None else n_out, m), dtype=np.uint8)
+    mode = data[starts + HEADER_LEN]
+    body = starts + HEADER_LEN + 1  # first payload byte after the mode
+    size = lengths - HEADER_LEN - 1
+    unknown = ~np.isin(mode, (0, 1, 2, 3))
+    if unknown.any():
+        raise ValueError(f"unknown HLL register encoding {int(mode[np.argmax(unknown)])}")
+    for code, width in ((0, m), (2, (6 * m + 7) // 8)):
+        sel = np.flatnonzero(mode == code)
+        if not len(sel):
+            continue
+        _check_size(size[sel], np.full(len(sel), width), code)
+        regs = _payload_rows(data, body[sel], width)
+        if code == 2:
+            bits = np.unpackbits(regs, axis=1, bitorder="little")[:, : 6 * m]
+            regs = np.packbits(
+                np.pad(bits.reshape(len(sel), m, 6), ((0, 0), (0, 0), (0, 2))),
+                axis=2, bitorder="little",
+            ).reshape(len(sel), m)
+        _fold_rows(out, rows[sel], regs)
+    for code, count_dtype, idx_dtype in ((1, "<u4", "<u4"), (3, "<u8", "<i8")):
+        sel = np.flatnonzero(mode == code)
+        if not len(sel):
+            continue
+        cw, iw = np.dtype(count_dtype).itemsize, np.dtype(idx_dtype).itemsize
+        _check_size(np.minimum(size[sel], cw), np.full(len(sel), cw), code)
+        # a count beyond the payload fails the size check whatever its
+        # width, so clamping it there first keeps the arithmetic in int64
+        count = _gather(data, body[sel], cw).view(count_dtype)[:, 0]
+        count = np.minimum(count, size[sel].astype(count.dtype)).astype(np.int64)
+        _check_size(size[sel], cw + count * (iw + 1), code)
+        owner = np.repeat(np.arange(len(sel)), count)
+        j = np.arange(len(owner)) - np.repeat(np.cumsum(count) - count, count)
+        first = body[sel][owner] + cw
+        idx = checked_indices(_gather(data, first + iw * j, iw).view(idx_dtype)[:, 0], m)
+        update_registers(out.reshape(-1), rows[sel][owner] * m + idx, data[first + iw * count[owner] + j])
+    # the max-fold keeps every input rank, so one check of the output
+    # bounds them all (as in merge_blobs)
+    _check_ranks(out, p)
+    return out, p, seed
+
+
+def registers_to_blobs(regs: np.ndarray, p: int, seed: int = DEFAULT_SEED) -> pa.BinaryArray:
+    """The blobs of a (n, 2^p) register matrix, one per row, in one pass:
+    byte-identical to ``HllSketch(p, seed, registers=row).to_bytes()``. A
+    row whose set registers cost 5 bytes each plus the count below 2^p is
+    mode 1 (sorted u32 indices, then ranks), any other row mode 0."""
+    regs = np.ascontiguousarray(regs)
+    n, m = regs.shape
+    # set registers are found a 64-bit word at a time (8x fewer cells to
+    # scan), and only in rows that can be sparse: a row's set registers
+    # are at least its nonzero words
+    words = regs.view(np.uint64 if m >= 8 else np.uint8)
+    set_words = words != 0
+    may_be_sparse = np.count_nonzero(set_words, axis=1) * 5 + 5 < m
+    wrow, wcol = np.nonzero(set_words)
+    keep = may_be_sparse[wrow]
+    wrow, wcol = wrow[keep], wcol[keep]
+    width = words.itemsize
+    k, j = np.nonzero(words[wrow, wcol].view(np.uint8).reshape(-1, width) != 0)
+    row, idx = wrow[k], wcol[k] * width + j  # row-major: indices ascend per row
+    nnz = np.bincount(row, minlength=n)
+    sparse = may_be_sparse & (nnz * 5 + 5 < m)
+    keep = sparse[row]
+    row, idx = row[keep], idx[keep]
+    lengths = np.where(sparse, HEADER_LEN + 5 + 5 * nnz, HEADER_LEN + 1 + m)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    data = np.empty(int(offsets[-1]), dtype=np.uint8)
+    at = offsets[:-1]
+    data[at[:, None] + np.arange(HEADER_LEN)] = np.frombuffer(
+        pack_header(KIND_HLL, p, seed), dtype=np.uint8
+    )
+    data[at + HEADER_LEN] = sparse
+    for r in np.flatnonzero(~sparse).tolist():
+        o = int(at[r]) + HEADER_LEN + 1
+        data[o : o + m] = regs[r]
+    first = at + HEADER_LEN + 5  # first index byte of a sparse row
+    sp = np.flatnonzero(sparse)
+    data[(first[sp] - 4)[:, None] + np.arange(4)] = (
+        nnz[sp].astype("<u4").view(np.uint8).reshape(-1, 4)
+    )
+    kept = np.where(sparse, nnz, 0)
+    pos = np.arange(len(row)) - (np.cumsum(kept) - kept)[row]  # entry number within its row
+    data[(first[row] + 4 * pos)[:, None] + np.arange(4)] = (
+        idx.astype("<u4").view(np.uint8).reshape(-1, 4)
+    )
+    data[first[row] + 4 * nnz[row] + pos] = regs[row, idx]
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)]
+    )
 
 
 def estimate_from_histogram(hist: np.ndarray, p: int) -> int:

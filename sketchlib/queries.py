@@ -8,6 +8,7 @@ oracles. Column aliases here are load-bearing: they must match the oracle SQL.
 
 from __future__ import annotations
 
+import shutil
 import uuid
 from contextlib import contextmanager
 
@@ -99,8 +100,6 @@ def _drain_memory_sinks(
     ``_streaming_conf`` only wraps the starts. Returns ``(companion(),
     {prefix: read(view)})``. Every exit path stops the queries, drops the
     views and removes the stream checkpoints."""
-    import shutil
-
     names = {tag: f"{tag}_{uuid.uuid4().hex[:8]}" for tag in sinks}
     checkpoints = {tag: _scratch_dir(prefix=f"sketchlib_{tag}_") for tag in sinks}
     queries = []
@@ -1111,8 +1110,10 @@ def _source_mask_histogram(seqs: DataFrame, srcs: list) -> tuple:
         raise ValueError(f"{len(srcs)} sources exceed the 63-bit mask width")
     src_bit = {s: 1 << i for i, s in enumerate(srcs)}
     bit_map = F.create_map(*[F.lit(x) for s in srcs for x in (s, src_bit[s])])
+    # a source outside srcs has no bit: its rows would bit_or a NULL mask
     hist = (
-        seqs.select(bit_map[F.col("source")].alias("bit"), F.explode("tokens").alias("tok"))
+        seqs.where(F.col("source").isin(srcs))
+        .select(bit_map[F.col("source")].alias("bit"), F.explode("tokens").alias("tok"))
         .groupBy("tok")
         .agg(F.bit_or("bit").alias("mask"))
         .groupBy("mask")
@@ -1985,7 +1986,8 @@ def sql_over_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
     path = sequences_path(spark, sf_dir)
     agg = HllAggregator(p=14, key_cols=["source"])
-    ckpt = CheckpointedBuild(agg, _scratch_dir(prefix="sketchlib_sql_"))
+    ckpt_dir = _scratch_dir(prefix="sketchlib_sql_")
+    ckpt = CheckpointedBuild(agg, ckpt_dir)
     spark.read.parquet(path).createOrReplaceTempView("seqs_for_sql")
 
     # the checkpointed build and the exact-distinct companion (itself pure
@@ -2003,25 +2005,32 @@ def sql_over_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source string, exact_distinct long",
         ).createOrReplaceTempView("exact_for_sql")
 
-    _overlap(lambda: ckpt.run_to_completion(spark, path), exact_leg)
-    agg.merged(ckpt.partials(spark).drop("shard_id", "wall_secs"), is_partials=True).createOrReplaceTempView(
-        "merged_sketches"
-    )
-    return spark.sql(
-        """
-        SELECT m.source, m.n_rows, m.n_items,
-               hll_estimate(m.sketch) AS est, e.exact_distinct
-        FROM merged_sketches m
-        JOIN exact_for_sql e
-        USING (source)
-        ORDER BY m.source
-        """
-    ).select(
-        "source",
-        "n_rows",
-        "n_items",
-        _within_3sigma(F.col("est"), F.col("exact_distinct"), 14).alias("within_3sigma"),
-    )
+    try:
+        _overlap(lambda: ckpt.run_to_completion(spark, path), exact_leg)
+        agg.merged(
+            ckpt.partials(spark).drop("shard_id", "wall_secs"), is_partials=True
+        ).createOrReplaceTempView("merged_sketches")
+        out = spark.sql(
+            """
+            SELECT m.source, m.n_rows, m.n_items,
+                   hll_estimate(m.sketch) AS est, e.exact_distinct
+            FROM merged_sketches m
+            JOIN exact_for_sql e
+            USING (source)
+            ORDER BY m.source
+            """
+        ).select(
+            "source",
+            "n_rows",
+            "n_items",
+            _within_3sigma(F.col("est"), F.col("exact_distinct"), 14).alias("within_3sigma"),
+        )
+        # one row per source: materialized (from pandas, a JVM-side
+        # relation) so the checkpoint it reads can go
+        rows = out.toPandas()
+    finally:
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
+    return spark.createDataFrame(rows, out.schema)
 
 
 def streaming_hll_parity(spark: SparkSession, sf_dir: str, p: int = 12) -> DataFrame:
@@ -2648,12 +2657,16 @@ def merge_law_identity(spark: SparkSession, sf_dir: str, p: int = DEFAULT_P) -> 
     def resume_leg():
         # the checkpointed-resume protocol is internally sequential by
         # construction (interrupt -> resume -> no-op is the law under test)
-        ckpt = CheckpointedBuild(agg, _scratch_dir(prefix="sketchlib_ckpt_"))
-        first = ckpt.run(spark, path, max_shards=1)
-        resumed_shards = ckpt.run_to_completion(spark, path)
-        noop = ckpt.run(spark, path)
-        resumed = {r["source"]: bytes(r["sketch"]) for r in ckpt.merged(spark).collect()}
-        m = ckpt.metrics(spark).collect()[0]
+        ckpt_dir = _scratch_dir(prefix="sketchlib_ckpt_")
+        ckpt = CheckpointedBuild(agg, ckpt_dir)
+        try:
+            first = ckpt.run(spark, path, max_shards=1)
+            resumed_shards = ckpt.run_to_completion(spark, path)
+            noop = ckpt.run(spark, path)
+            resumed = {r["source"]: bytes(r["sketch"]) for r in ckpt.merged(spark).collect()}
+            m = ckpt.metrics(spark).collect()[0]
+        finally:
+            shutil.rmtree(ckpt_dir, ignore_errors=True)
         return first, resumed_shards, noop, resumed, m
 
     # the merge-topology leg and the resume leg are fully independent
@@ -3121,6 +3134,7 @@ def bucketed_join_docs(spark: SparkSession, sf_dir: str, n_buckets: int = 8) -> 
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {t_meta}")
             spark.sql(f"DROP TABLE IF EXISTS {t_stats}")
+            shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         [
             (r["source"], int(r["n_docs"]), int(r["total_chars"]), zero_exchange)

@@ -430,3 +430,50 @@ def test_time_rollup_multi_key_byte_identical_across_batches(spark):
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, old)
+
+
+def test_keyed_build_and_merge_past_the_matrix_bound(tiny_pdf, monkeypatch):
+    """A task whose keys outgrow the register-matrix bound moves them to
+    per-key sketches mid-build, and a merge batch with more runs than the
+    bound holds is folded one matrix at a time: both give the bytes of the
+    unbounded path (bound shrunk to 3 keys of p=10 registers here)."""
+    import pyarrow as pa
+
+    import sketchlib.agg as A
+
+    sub = tiny_pdf.head(400)
+    # 2-row batches: the first keys fit the bound, later ones outgrow it
+    batches = pa.Table.from_pandas(sub[["source", "tokens"]], preserve_index=False).to_batches(
+        max_chunksize=2
+    )
+    agg = HllAggregator(p=10, key_cols=["source"])
+    unbounded = pa.Table.from_batches(list(agg._make_build_fn()(iter(batches))))
+    blobs = pa.array([HllSketch.empty(10).to_bytes()] + unbounded.column("sketch").to_pylist())
+    starts = np.array([0, 1, 2, 4, 5, 9])
+    merged = agg._merged_runs(blobs, starts, None)
+    monkeypatch.setattr(A, "_MATRIX_BYTES", 3 << 10)
+    bounded = pa.Table.from_batches(list(agg._make_build_fn()(iter(batches))))
+    assert len(set(sub["source"])) > 3
+    assert bounded.to_pylist() == unbounded.to_pylist()
+    assert agg._merged_runs(blobs, starts, None).to_pylist() == merged.to_pylist()
+    for r in bounded.to_pylist():
+        direct = HllSketch(p=10)
+        toks = sub.loc[sub["source"] == r["source"], "tokens"].to_list()
+        direct.update_batch(np.concatenate(toks).astype(np.int32))
+        assert r["sketch"] == direct.to_bytes(), r["source"]
+
+
+def test_source_mask_histogram_of_a_source_subset(spark):
+    """Sources outside ``srcs`` are left out of the histogram, instead of
+    giving their tokens a NULL mask (which used to raise TypeError)."""
+    from sketchlib.data import SEQUENCES_SCHEMA, gen_sequences_pandas
+    from sketchlib.queries import _source_mask_histogram
+
+    pdf = gen_sequences_pandas(200)
+    df = spark.createDataFrame(pdf, schema=SEQUENCES_SCHEMA)
+    srcs = sorted(set(pdf["source"]))
+    assert len(srcs) > 1
+    masks, cnts = _source_mask_histogram(df, srcs[:1])
+    own = pdf.loc[pdf["source"] == srcs[0], "tokens"].to_list()
+    assert masks.tolist() == [1]
+    assert cnts.tolist() == [len(np.unique(np.concatenate(own)))]

@@ -89,3 +89,18 @@ def test_scratch_dir_tmpfs_only_under_a_local_master(monkeypatch):
     cluster = with_master("yarn")
     assert not cluster.startswith("/dev/shm/")
     assert os.path.dirname(cluster) == tempfile.gettempdir()
+
+
+def test_queries_remove_their_scratch_dirs(spark, tmp_path, monkeypatch):
+    """The ``queries()`` entries that take a scratch dir (checkpoints, bucketed
+    tables) remove it before they return; their rows are collected or
+    materialized first."""
+    from test_entry import SF
+
+    import sketchlib.queries as Q
+
+    monkeypatch.setenv("SKETCHLIB_SCRATCH", str(tmp_path))
+    for name in ("sql_over_checkpoint", "merge_law_identity", "bucketed_join_docs"):
+        rows = getattr(Q, name)(spark, SF).collect()
+        assert rows, name
+        assert os.listdir(tmp_path) == [], name

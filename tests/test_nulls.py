@@ -185,3 +185,16 @@ def test_profile_null_token_lists_count_as_empty(spark, null_df):
         null_df.select(F.explode("tokens").alias("t")).distinct().count()
     )
     assert abs(s.distinct_values() - exact_distinct) <= max(2, 0.03 * exact_distinct)
+
+
+def test_hll_estimate_udf_null_blob_is_null(spark):
+    """HllAggregator.estimate_udf is the batch estimate path of
+    ``hll_estimate``: a NULL sketch estimates to NULL."""
+    from sketchlib.hll import HllSketch
+
+    s = HllSketch(p=12)
+    s.update_batch(np.arange(1000, dtype=np.int32))
+    df = spark.createDataFrame([(s.to_bytes(),), (None,)], "sketch binary")
+    est = HllAggregator(p=12).estimate_udf()
+    got = [r[0] for r in df.select(est("sketch")).collect()]
+    assert got == [s.cardinality(), None]

@@ -720,3 +720,74 @@ def test_noncanonical_blobs_fold_by_the_merge_law():
             ):
                 assert np.array_equal(got, want.values), (mode, values)
             assert KmvSketch.from_bytes(blob).estimate() == want.estimate()
+
+
+def test_batch_parser_shares_the_per_blob_checks():
+    """registers_from_blobs (the batch parser) rejects every malformed HLL
+    blob that from_bytes and merge_blobs (the per-blob parser, ``_read``)
+    reject, alone or behind a valid blob, and decodes valid ones to the
+    same registers: truncated and over-long payloads in every mode, a
+    short header, bad magic/version/kind, an unknown mode, a sparse count
+    past the payload, an index equal to 2^p and a rank of 64-p+2."""
+    from sketchlib.codec import HEADER_LEN, KIND_CMS, KIND_HLL, pack_header
+    from sketchlib.hll import registers_from_blobs
+
+    p, m = 10, 1 << 10
+    s = HllSketch(p=p)
+    s.update_batch(np.arange(40, dtype=np.int32))
+    mode3 = lambda idx, ranks: (  # noqa: E731
+        pack_header(KIND_HLL, p, s.seed) + b"\x03" + struct.pack("<Q", len(idx))
+        + np.array(idx, "<i8").tobytes() + np.array(ranks, np.uint8).tobytes()
+    )
+    mode1 = lambda idx, ranks: (  # noqa: E731
+        pack_header(KIND_HLL, p, s.seed) + b"\x01" + struct.pack("<I", len(idx))
+        + np.array(idx, "<u4").tobytes() + np.array(ranks, np.uint8).tobytes()
+    )
+    high = np.zeros(m, np.uint8)
+    high[7] = 66 - p
+    valid = [s.to_bytes(mode=mode) for mode in ("sparse", "dense", "packed6")] + [
+        mode3([3, 9, 3], [2, 5, 4])
+    ]
+    bad = []
+    for b in valid:
+        bad += [b[:-1], b + b"\x00", b[: HEADER_LEN + 1] if b[HEADER_LEN] in (1, 3) else b[:-7]]
+    bad += [
+        valid[0][:10],
+        valid[0][:HEADER_LEN],
+        b"\x00" + valid[0][1:],
+        valid[0][:4] + b"\x07\x00" + valid[0][6:],
+        pack_header(KIND_CMS, p, s.seed) + valid[0][HEADER_LEN:],
+        valid[0][:HEADER_LEN] + b"\x07" + valid[0][HEADER_LEN + 1 :],
+        mode1([1, 2], [1, 1]).replace(struct.pack("<I", 2), struct.pack("<I", 9), 1),
+        mode3([1, 2], [1, 1]).replace(struct.pack("<Q", 2), struct.pack("<Q", 2**63), 1),
+        mode1([m], [1]),
+        mode3([m], [1]),
+        mode3([-1], [1]),
+        mode1([7], [66 - p]),
+        mode3([7], [66 - p]),
+        HllSketch(p=p, registers=high).to_bytes(mode="dense"),
+        HllSketch(p=p, registers=high).to_bytes(mode="packed6"),
+    ]
+    decoders = [
+        HllSketch.from_bytes,
+        lambda b: HllSketch.merge_blobs([b], p),
+        lambda b: registers_from_blobs([b]),
+        lambda b: registers_from_blobs([valid[0], b]),
+        lambda b: registers_from_blobs([b, valid[1]], [0, 0], 1),
+    ]
+    for b in bad:
+        for fn in decoders:
+            with pytest.raises(ValueError):
+                fn(b)
+    regs, got_p, _ = registers_from_blobs(valid)
+    assert got_p == p
+    for row, b in zip(regs, valid):
+        assert np.array_equal(row, HllSketch.from_bytes(b).registers)
+        assert np.array_equal(row, HllSketch.merge_blobs([b], p).registers)
+    other = HllSketch(p=p + 1).to_bytes()
+    reseeded = HllSketch(p=p, seed=s.seed + 1).to_bytes()
+    for b in (other, reseeded):
+        with pytest.raises(ValueError):
+            registers_from_blobs([valid[0], b])
+        with pytest.raises(ValueError):
+            HllSketch.merge_blobs([valid[0], b], p)

@@ -164,3 +164,152 @@ def test_registers_from_blobs_all_modes():
     other = HllSketch(p=9)
     with _pytest.raises(ValueError, match="mixed"):
         registers_from_blobs([dense[0], other.to_bytes(mode="dense")])
+
+
+def _rows_of_fill(p, counts, rng, clustered=False):
+    """One register row per entry of ``counts``: that many set registers,
+    at random (or adjacent) indices, with ranks up to 64-p+1."""
+    m = 1 << p
+    regs = np.zeros((len(counts), m), dtype=np.uint8)
+    for r, nnz in enumerate(counts):
+        at = np.arange(nnz) if clustered else rng.choice(m, nnz, replace=False)
+        regs[r, at] = rng.integers(1, 66 - p, nnz)
+    return regs
+
+
+@pytest.mark.parametrize("p", [4, 12, 14, 16])
+def test_register_matrix_encoder_matches_to_bytes(p):
+    """registers_to_blobs is byte-identical to a per-row to_bytes(), on
+    both sides of the sparse/dense boundary (5*nnz + 5 < 2^p), for empty
+    and full rows, rows in any order, and clustered registers (many set
+    bytes in one 64-bit word)."""
+    from sketchlib.hll import HllSketch, registers_from_blobs, registers_to_blobs
+
+    m = 1 << p
+    last_sparse = (m - 6) // 5
+    assert last_sparse * 5 + 5 < m <= (last_sparse + 1) * 5 + 5
+    counts = [0, 1, 2, last_sparse, last_sparse + 1, m // 3, m, 0, last_sparse]
+    rng = np.random.default_rng(p)
+    for clustered in (False, True):
+        regs = _rows_of_fill(p, rng.permutation(counts), rng, clustered)
+        blobs = registers_to_blobs(regs, p, 77)
+        assert blobs.to_pylist() == [
+            HllSketch(p=p, seed=77, registers=r.copy()).to_bytes() for r in regs
+        ]
+        back, bp, bseed = registers_from_blobs(blobs)
+        assert (bp, bseed) == (p, 77) and np.array_equal(back, regs)
+    assert registers_to_blobs(regs[:0], p, 77).to_pylist() == []
+
+
+def test_batch_run_fold_equals_merge_blobs_per_run():
+    """Blob i max-folded into row rows[i] (registers_from_blobs' row map)
+    is merge_blobs over each row's blobs, for a batch mixing modes 0, 1
+    and 2, sorted or shuffled; HllAggregator._merged_runs gives the same
+    bytes as merge_blobs(run).to_bytes() per run."""
+    import pyarrow as pa
+
+    from sketchlib.agg import HllAggregator
+    from sketchlib.hll import HllSketch, registers_from_blobs
+
+    p, rng = 10, np.random.default_rng(5)
+    blobs = []
+    for i in range(90):
+        s = HllSketch(p=p)
+        s.update_batch(rng.integers(0, 10**6, int(rng.integers(0, 3000))).astype(np.int32))
+        blobs.append(s.to_bytes(mode=(None, "dense", "packed6", None)[i % 4]))
+    lengths = rng.integers(1, 9, 40)
+    lengths = lengths[np.cumsum(lengths) <= len(blobs)]
+    blobs = blobs[: int(lengths.sum())]
+    rows = np.repeat(np.arange(len(lengths)), lengths)
+    want = [
+        HllSketch.merge_blobs([b for b, r in zip(blobs, rows) if r == k], p)
+        for k in range(len(lengths))
+    ]
+    order = rng.permutation(len(blobs))
+    for bs, rs in ((blobs, rows), ([blobs[i] for i in order], rows[order])):
+        regs, got_p, _ = registers_from_blobs(bs, rs, len(lengths))
+        assert got_p == p
+        for k, w in enumerate(want):
+            assert np.array_equal(regs[k], w.registers), k
+    starts = np.concatenate([[0], np.cumsum(lengths)[:-1]])
+    merged = HllAggregator(p=p)._merged_runs(pa.array(blobs, pa.binary()), starts, None)
+    assert merged.to_pylist() == [w.to_bytes() for w in want]
+
+
+def _merge_fn(agg, key_fields):
+    """The mapInArrow function of ``agg._merge_stage`` over partials with
+    these key fields, taken without a Spark session."""
+    from pyspark.sql import types as T
+
+    class Partials:  # stands in for the partials DataFrame
+        schema = T.StructType(
+            list(key_fields)
+            + [T.StructField(c, t) for c, t in (
+                ("sketch", T.BinaryType()), ("n_rows", T.LongType()), ("n_items", T.LongType()))]
+        )
+
+        def repartition(self, *cols):
+            return self
+
+        def sortWithinPartitions(self, *cols):
+            return self
+
+        def mapInArrow(self, fn, schema):
+            return fn
+
+    return agg._merge_stage(Partials(), [f.name for f in key_fields])
+
+
+@pytest.mark.parametrize("kind", ["hll", "cms"])
+def test_merge_runs_across_arrow_batch_boundaries(kind):
+    """Key-sorted partials cut into Arrow batches of every size from 1 row
+    to all of them: runs that straddle a boundary, a key spanning three or
+    more batches, a batch that is all one held run, and null, NaN and
+    -0.0/0.0 keys (each one group, as in Spark's groupBy) merge to one
+    row per key with the merge_blobs bytes and the summed counts."""
+    import math
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from sketchlib.agg import CmsAggregator, HllAggregator
+    from sketchlib.cms import CountMinSketch
+    from sketchlib.hll import HllSketch
+
+    rng = np.random.default_rng(11)
+    keys = (
+        [("a", None)] * 2 + [("a", -1.0), ("a", -0.0), ("a", 0.0), ("a", 0.0)]
+        + [("a", 2.5)] * 7 + [("a", math.nan)] * 3 + [("b", math.nan), (None, 1.0), (None, 1.0)]
+    )
+    if kind == "hll":
+        agg, sketch = HllAggregator(p=8), lambda: HllSketch(p=8)
+        merge = lambda bs: HllSketch.merge_blobs(bs, 8)  # noqa: E731
+    else:
+        agg, sketch = CmsAggregator(width_log2=6, depth=3), lambda: CountMinSketch.empty(6, 3)
+        merge = lambda bs: CountMinSketch.merge_blobs(bs, 6, 3)  # noqa: E731
+    blobs = []
+    for _ in keys:
+        s = sketch()
+        s.update_batch(rng.integers(0, 500, int(rng.integers(1, 300))).astype(np.int32))
+        blobs.append(s.to_bytes())
+    n_rows, n_items = rng.integers(1, 50, len(keys)), rng.integers(0, 999, len(keys))
+    table = pa.table({
+        "g": pa.array([k[0] for k in keys], pa.string()),
+        "k": pa.array([k[1] for k in keys], pa.float64()),
+        "sketch": pa.array(blobs, pa.binary()),
+        "n_rows": pa.array(n_rows, pa.int64()),
+        "n_items": pa.array(n_items, pa.int64()),
+    })
+    group = lambda g, k: (g, "nan" if k is not None and math.isnan(k) else k)  # noqa: E731
+    want: dict = {}
+    for (g, k), b, r, i in zip(keys, blobs, n_rows, n_items):
+        blobs_, rows_, items_ = want.setdefault(group(g, k), ([], 0, 0))
+        want[group(g, k)] = (blobs_ + [b], rows_ + int(r), items_ + int(i))
+    fn = _merge_fn(agg, [T.StructField("g", T.StringType()), T.StructField("k", T.DoubleType())])
+    for size in list(range(1, 8)) + [len(keys)]:
+        out = pa.Table.from_batches(list(fn(iter(table.to_batches(max_chunksize=size))))).to_pylist()
+        assert [group(r["g"], r["k"]) for r in out] == list(want), size
+        for r in out:
+            bs, rows_, items_ = want[group(r["g"], r["k"])]
+            assert (r["n_rows"], r["n_items"]) == (rows_, items_), size
+            assert r["sketch"] == merge(bs).to_bytes(), (size, r["g"], r["k"])
