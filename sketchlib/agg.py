@@ -195,19 +195,22 @@ def _extract_values(batch: pa.RecordBatch, value_col: str, kind: str):
     return arr.to_numpy(zero_copy_only=False).astype(np_dtype), counts
 
 
-def _batch_groups(batch: pa.RecordBatch, key_cols: list[str], counts: np.ndarray, kind: str):
-    """(row codes, value codes, unique key tuples) of one batch: the group
-    code of every row, and of every value ``_extract_values`` returned for
-    it. No key columns is one group, ``()``."""
+def _batch_groups(batch: pa.RecordBatch, key_cols: list[str]):
+    """(row codes, unique key tuples) of one batch: the group code of every
+    row. No key columns is one group, ``()``."""
     if key_cols:
-        codes, uniq_tuples = _group_codes(batch, key_cols)
-    else:
-        codes, uniq_tuples = np.zeros(batch.num_rows, dtype=np.int64), [()]
+        return _group_codes(batch, key_cols)
+    return np.zeros(batch.num_rows, dtype=np.int64), [()]
+
+
+def _value_codes(codes: np.ndarray, counts: np.ndarray, kind: str) -> np.ndarray:
+    """The code of every value ``_extract_values`` returned (``counts`` per
+    row), from its row's code: repeated per row, never gathered per value."""
     if kind == "tokens":
-        # int32 codes: halves the per-token code-stream traffic (group count
-        # per batch is far below 2^31)
-        return codes, np.repeat(codes.astype(np.int32), counts), uniq_tuples
-    return codes, codes[counts.astype(bool)], uniq_tuples
+        # int32 codes: halves the per-token code-stream traffic (codes are
+        # far below 2^31)
+        return np.repeat(codes.astype(np.int32), counts)
+    return codes[counts.astype(bool)]
 
 
 def _group_slices(values, codes: np.ndarray, n_groups: int) -> list:
@@ -261,8 +264,8 @@ def _shard_table(spark, shards: list, parallelism: int | None = None):
     return spark.range(n, numPartitions=n), [shards[i::n] for i in range(n)]
 
 
-# largest (keys x 2^p) HLL register matrix a task holds: the keyed build's
-# task matrix and each batch of merged runs
+# largest (keys x 2^p) HLL register matrix a task holds: each of the keyed
+# build's task matrices, and each batch of merged runs
 _MATRIX_BYTES = 64 << 20
 
 
@@ -282,9 +285,10 @@ class _KeySketches:
         self.sketches.extend(self.agg._empty() for _ in range(n_keys - len(self.sketches)))
         return self
 
-    def update(self, rows, values, value_codes, counts, codes) -> None:
+    def update(self, rows, values, counts, codes) -> None:
         """Fold one batch in: batch group g is task row ``rows[g]``."""
         group = [self.sketches[r] for r in rows.tolist()]
+        value_codes = _value_codes(codes, counts, self.agg.value_kind)
         self.agg._update_grouped(group, values, value_codes, len(group))
         if self.rows_hook is not None:
             self.rows_hook(group, counts, codes, len(group))
@@ -294,43 +298,54 @@ class _KeySketches:
 
 
 class _RegisterMatrix:
-    """A partial task's HLL registers at dense p: one (keys x 2^p) matrix,
-    grown by doubling, that each batch scatter-maxes into directly and one
-    vectorized encode turns into blobs. Past ``_MATRIX_BYTES`` the task's
-    keys move to per-key sketches (``_KeySketches``)."""
+    """A partial task's HLL registers at dense p: key row r is row r %
+    chunk_rows of matrix r // chunk_rows, each at most ``_MATRIX_BYTES`` and
+    the last grown by doubling. Each batch scatter-maxes straight into them;
+    one vectorized encode per matrix turns them into blobs."""
 
     def __init__(self, agg: "HllAggregator"):
         self.agg = agg
-        self.regs = np.zeros((0, 1 << agg.p), dtype=np.uint8)
+        self.chunk_rows = max(1, _MATRIX_BYTES >> agg.p)
+        self.chunks: list[np.ndarray] = []
         self.n = 0
 
     def reserve(self, n_keys: int):
-        a, m = self.agg, self.regs.shape[1]
-        if n_keys * m > _MATRIX_BYTES:
-            keyed = _KeySketches(a)
-            keyed.sketches = [
-                HllSketch(a.p, a.seed, registers=r.copy()) for r in self.regs[: self.n]
-            ]
-            return keyed.reserve(n_keys)
-        if n_keys > len(self.regs):
-            grown = np.zeros((min(max(n_keys, 2 * len(self.regs)), _MATRIX_BYTES // m), m), np.uint8)
-            grown[: self.n] = self.regs[: self.n]
-            self.regs = grown
+        c, m = self.chunk_rows, 1 << self.agg.p
+        self.chunks += [np.zeros((0, m), np.uint8)] * (-(-n_keys // c) - len(self.chunks))
+        for k, have in enumerate(self.chunks):
+            need = min(c, n_keys - k * c)
+            if len(have) < need:
+                grown = np.zeros((min(c, max(need, 2 * len(have))), m), np.uint8)
+                grown[: len(have)] = have
+                self.chunks[k] = grown
         self.n = n_keys
         return self
 
-    def update(self, rows, values, value_codes, counts, codes) -> None:
-        a = self.agg
+    def update(self, rows, values, counts, codes) -> None:
+        a, c = self.agg, self.chunk_rows
         if len(rows) == 1:
-            hll_build_into(self.regs[rows[0]], values, None, a.seed, a.p, a.value_kind)
-        else:
-            # int32 rows: halves the per-value code stream (keys per task
-            # are far below 2^31)
-            value_rows = rows.astype(np.int32)[value_codes]
-            hll_build_into(self.regs.reshape(-1), values, value_rows, a.seed, a.p, a.value_kind)
+            k, r = divmod(int(rows[0]), c)
+            hll_build_into(self.chunks[k][r], values, None, a.seed, a.p, a.value_kind)
+            return
+        value_rows = _value_codes(rows[codes], counts, a.value_kind)
+        lo, hi = int(rows.min()) // c, int(rows.max()) // c
+        for k in range(lo, hi + 1):
+            vals, vrows = values, value_rows
+            if lo < hi:  # the batch's keys span matrices: this one's values
+                at = np.flatnonzero(value_rows // c == k)
+                vals = values[at] if isinstance(values, np.ndarray) else values.take(at)
+                vrows = value_rows[at]
+            if k:
+                vrows = vrows - k * c
+            hll_build_into(self.chunks[k].reshape(-1), vals, vrows, a.seed, a.p, a.value_kind)
 
     def blobs(self) -> pa.Array:
-        return registers_to_blobs(self.regs[: self.n], self.agg.p, self.agg.seed)
+        a, c = self.agg, self.chunk_rows
+        out = [
+            registers_to_blobs(regs[: self.n - k * c], a.p, a.seed)
+            for k, regs in enumerate(self.chunks)
+        ]
+        return out[0] if len(out) == 1 else pa.concat_arrays(out)
 
 
 class SketchAggregator:
@@ -370,8 +385,8 @@ class SketchAggregator:
         ``value_codes`` gives each value's group. Every group's values reach
         ``_update`` as one slice in batch order (``_group_slices``), so
         order-sensitive sketches (KLL, t-digest, frequent items) see the same
-        sequence as a per-group scan would give them. HllAggregator overrides
-        this with one grouped scatter-max over the whole batch.
+        sequence as a per-group scan would give them. (HllAggregator at
+        dense p scatters into its task's ``_RegisterMatrix`` instead.)
         """
         if n_groups == 1:
             self._update(sketches[0], values)
@@ -419,7 +434,7 @@ class SketchAggregator:
                 if key_types is None:
                     key_types = [batch.schema.field(k).type for k in key_cols]
                 values, counts = _extract_values(batch, value_col, kind)
-                codes, value_codes, uniq_tuples = _batch_groups(batch, key_cols, counts, kind)
+                codes, uniq_tuples = _batch_groups(batch, key_cols)
                 rows = np.fromiter(
                     (keys.setdefault(k, len(keys)) for k in uniq_tuples),
                     dtype=np.int64, count=len(uniq_tuples),
@@ -430,7 +445,7 @@ class SketchAggregator:
                     state = state.reserve(len(keys))
                 n_rows[rows] += np.bincount(codes, minlength=len(rows))
                 n_items[rows] += np.bincount(codes, weights=counts, minlength=len(rows)).astype(np.int64)
-                state.update(rows, values, value_codes, counts, codes)
+                state.update(rows, values, counts, codes)
             if not keys:
                 return
             arrays = [
@@ -1000,43 +1015,25 @@ class HllAggregator(_DistinctAggregator):
         ``merge_blobs`` per run. Per-run ``merge_blobs`` above it."""
         if self.p > DENSE_MAX_P:
             return super()._merged_runs(blobs, starts, merge_blobs)
-        bounds = np.append(starts, len(blobs))
-        run_of = np.repeat(np.arange(len(starts)), np.diff(bounds))
+        run_of = np.repeat(np.arange(len(starts)), np.diff(np.append(starts, len(blobs))))
+        if blobs.null_count:  # a NULL partial merges as the empty sketch
+            valid = blobs.is_valid()
+            blobs, run_of = blobs.filter(valid), run_of[valid.to_numpy(zero_copy_only=False)]
         step = max(1, _MATRIX_BYTES >> self.p)  # runs per register matrix
         out = []
         for lo in range(0, len(starts), step):
             hi = min(lo + step, len(starts))
-            a, b = int(bounds[lo]), int(bounds[hi])
-            regs, p, seed = registers_from_blobs(blobs.slice(a, b - a), run_of[a:b] - lo, hi - lo)
+            a, b = np.searchsorted(run_of, [lo, hi]).tolist()
+            if a == b:  # every run here is all NULL
+                regs, p, seed = np.zeros((hi - lo, 1 << self.p), np.uint8), self.p, self.seed
+            else:
+                regs, p, seed = registers_from_blobs(blobs.slice(a, b - a), run_of[a:b] - lo, hi - lo)
             if (p, seed) != (self.p, self.seed):
                 raise ValueError(
                     f"cannot merge HLL blobs of p={p}, seed={seed} into p={self.p}, seed={self.seed}"
                 )
             out.append(registers_to_blobs(regs, p, seed))
         return out[0] if len(out) == 1 else pa.concat_arrays(out)
-
-    def _update_grouped(self, sketches, values, value_codes, n_groups: int) -> None:
-        """Grouped build of per-key sketches (``_KeySketches``: p >
-        DENSE_MAX_P, or a task past ``_MATRIX_BYTES``) through the one
-        kernel, ``kernels.hll_build_into``.
-
-        - p > DENSE_MAX_P (sketches held sparse, no register array), or a
-          groups x 2^p matrix over ``_MATRIX_BYTES``: the base per-group
-          slices, each hashed into its own sketch by ``_update``.
-        - one group: straight into that sketch's registers.
-        - otherwise: one scatter-max into a zeroed (groups x 2^p) matrix,
-          then a per-group ``np.maximum`` into each sketch.
-        """
-        p, m = self.p, 1 << self.p
-        if p > DENSE_MAX_P or n_groups * m > _MATRIX_BYTES:
-            super()._update_grouped(sketches, values, value_codes, n_groups)
-        elif n_groups == 1:
-            hll_build_into(sketches[0].registers, values, None, self.seed, p, self.value_kind)
-        else:
-            flat = np.zeros(n_groups * m, dtype=np.uint8)
-            hll_build_into(flat, values, value_codes, self.seed, p, self.value_kind)
-            for s, regs in zip(sketches, flat.reshape(n_groups, m)):
-                np.maximum(s.registers, regs, out=s.registers)
 
     # -- finalize ---------------------------------------------------------------
 
@@ -1174,8 +1171,8 @@ class CmsAggregator(SketchAggregator):
                 if key_types is None:
                     key_types = [batch.schema.field(k).type for k in key_cols]
                 values, item_counts = _extract_values(batch, value_col, kind)
-                _, value_codes, uniq_tuples = _batch_groups(batch, key_cols, item_counts, kind)
-                groups = _group_slices(values, value_codes, len(uniq_tuples))
+                codes, uniq_tuples = _batch_groups(batch, key_cols)
+                groups = _group_slices(values, _value_codes(codes, item_counts, kind), len(uniq_tuples))
                 for keyt, gvals in zip(uniq_tuples, groups):
                     if kind == "string":
                         counts.setdefault(keyt, Counter()).update(gvals.to_pylist())

@@ -219,12 +219,7 @@ def _read(blob: bytes):
         regs = r.array(np.uint8, 1 << p)
     elif mode == 2:
         m = 1 << p
-        bits = np.unpackbits(r.array(np.uint8, (6 * m + 7) // 8), bitorder="little")[
-            : 6 * m
-        ].reshape(m, 6)
-        regs = np.packbits(
-            np.pad(bits, ((0, 0), (0, 2))), axis=1, bitorder="little"
-        ).reshape(m)
+        regs = _unpack6(r.array(np.uint8, (6 * m + 7) // 8)[None], m)[0]
     else:
         raise ValueError(f"unknown HLL register encoding {mode}")
     r.end()
@@ -249,20 +244,16 @@ def _fold_dense(target: np.ndarray, regs, pairs) -> None:
 
 
 def _blob_buffer(blobs):
-    """(data, starts, lengths) of a blob sequence: the uint8 bytes of every
-    blob back to back, and each blob's offset and length in them. An Arrow
-    binary array is read in place through its own buffers; anything else is
-    joined once."""
-    if isinstance(blobs, pa.ChunkedArray):
-        blobs = blobs.combine_chunks()
+    """(data, starts, lengths) of a binary ``pa.Array`` or a list of bytes:
+    the uint8 bytes of every blob back to back, and each blob's offset and
+    length in them. The Arrow array is read in place through its buffers;
+    a list is joined once."""
     if isinstance(blobs, pa.Array):
         if blobs.null_count:
             raise ValueError("cannot batch-decode a NULL HLL blob")
-        wide = pa.types.is_large_binary(blobs.type)
         _, offsets, data = blobs.buffers()
         offsets = np.frombuffer(
-            offsets, dtype=np.int64 if wide else np.int32, count=len(blobs) + 1,
-            offset=blobs.offset * (8 if wide else 4),
+            offsets, dtype=np.int32, count=len(blobs) + 1, offset=blobs.offset * 4
         ).astype(np.int64)
         data = np.zeros(0, np.uint8) if data is None else np.frombuffer(data, np.uint8)
     else:
@@ -278,34 +269,18 @@ def _gather(data: np.ndarray, at: np.ndarray, width: int) -> np.ndarray:
     return data[at[:, None] + np.arange(width)]
 
 
-def _payload_rows(data: np.ndarray, at: np.ndarray, width: int) -> np.ndarray:
-    """(len(at), width) uint8 rows of the ``width`` bytes at each offset: a
-    strided view when the offsets are evenly spaced (a batch of same-size
-    blobs), one row copy per blob otherwise."""
-    step = np.diff(at)
-    if len(at) == 1 or (step == step[0]).all():
-        stride = int(step[0]) if len(at) > 1 else width
-        return np.lib.stride_tricks.as_strided(
-            data[at[0] :], shape=(len(at), width), strides=(stride, 1), writeable=False
-        )
-    return np.stack([data[a : a + width] for a in at.tolist()])
+def _unpack6(packed: np.ndarray, m: int) -> np.ndarray:
+    """(k, m) uint8 registers of k packed6 (mode-2) payloads, (k, 3m/4):
+    every 3 bytes hold 4 registers of 6 bits, little-endian."""
+    b = packed.reshape(len(packed), m // 4, 3).astype(np.uint32)
+    word = b[..., 0] | (b[..., 1] << 8) | (b[..., 2] << 16)
+    shifts = np.array([0, 6, 12, 18], dtype=np.uint32)
+    return ((word[..., None] >> shifts) & 63).astype(np.uint8).reshape(len(packed), m)
 
 
-def _fold_rows(out: np.ndarray, rows: np.ndarray, regs: np.ndarray) -> None:
-    """``out[rows[i]] = max(out[rows[i]], regs[i])`` for every i, repeated
-    rows included. The blobs are grouped by row (already so in a key-sorted
-    merge) and the j-th blob of every row folds in one vectorized max, so
-    the loop runs once per position in the longest run, not once per blob
-    (``np.maximum.reduceat`` along axis 0 measured 10-30x slower here)."""
-    if len(rows) > 1 and not (np.diff(rows) >= 0).all():
-        order = np.argsort(rows, kind="stable")
-        rows, regs = rows[order], regs[order]
-    first = np.flatnonzero(np.r_[True, rows[1:] != rows[:-1]])
-    length = np.diff(np.append(first, len(rows)))
-    target = rows[first]
-    for j in range(int(length.max())):
-        at = np.flatnonzero(length > j)
-        out[target[at]] = np.maximum(out[target[at]], regs[first[at] + j])
+# packed6 blobs are unpacked at about 9 bytes of scratch per register: this
+# much scratch per chunk of blobs
+_UNPACK_BYTES = 16 << 20
 
 
 def _check_size(size: np.ndarray, want: np.ndarray, mode: int) -> None:
@@ -321,16 +296,18 @@ def _check_size(size: np.ndarray, want: np.ndarray, mode: int) -> None:
 def registers_from_blobs(blobs, rows=None, n_out: int | None = None):
     """The batch HLL blob parser -> ((n_out, 2^p) uint8 matrix, p, seed).
 
-    Blob i max-folds into row ``rows[i]`` (default: row i of n rows), so a
-    run of blobs mapped to one row is their merge, and a row no blob maps
-    to stays empty. Every mode (0-3) is read for the whole batch at once,
-    with the checks of ``_read`` plus ``_checked``: the header, a known
-    mode, each payload exactly as long as its fields, every sparse index
-    on the 2^p grid and every rank at most 64-p+1 (pinned against the
-    per-blob decoders by tests/test_properties.py). Mixed p or seed raises
-    (like ``merge``'s size guard, src/hll.c:781-788), and so does p >
-    DENSE_MAX_P, where 2^p registers per row cannot be allocated.
-    ``blobs`` is a sequence of bytes or an Arrow binary array.
+    Blob i max-folds into row ``rows[i]`` (default: row i of n rows), so
+    the blobs mapped to one row are their merge, and a row no blob maps to
+    stays empty. Headers, modes, payload lengths and sparse fields are read
+    for the whole batch at once, with the checks of ``_read`` plus
+    ``_checked``: the header, a known mode, each payload exactly as long as
+    its fields, every sparse index on the 2^p grid and every rank at most
+    64-p+1 (pinned against the per-blob decoders by tests/test_properties.py).
+    Dense payloads fold one blob at a time, straight from the blob bytes
+    (packed6 ones unpacked ``_UNPACK_BYTES`` of scratch at a time). Mixed p
+    or seed raises (like ``merge``'s size guard, src/hll.c:781-788), and so
+    does p > DENSE_MAX_P, where 2^p registers per row cannot be allocated.
+    ``blobs`` is a list of bytes or a binary Arrow array, without NULLs.
     """
     data, starts, lengths = _blob_buffer(blobs)
     n = len(starts)
@@ -361,19 +338,25 @@ def registers_from_blobs(blobs, rows=None, n_out: int | None = None):
     unknown = ~np.isin(mode, (0, 1, 2, 3))
     if unknown.any():
         raise ValueError(f"unknown HLL register encoding {int(mode[np.argmax(unknown)])}")
+    # a row's first dense blob is copied in, later ones max-folded: writing
+    # a fresh row without reading its zeros first touches each page once
+    filled = np.zeros(len(out), dtype=bool)
     for code, width in ((0, m), (2, (6 * m + 7) // 8)):
         sel = np.flatnonzero(mode == code)
         if not len(sel):
             continue
         _check_size(size[sel], np.full(len(sel), width), code)
-        regs = _payload_rows(data, body[sel], width)
-        if code == 2:
-            bits = np.unpackbits(regs, axis=1, bitorder="little")[:, : 6 * m]
-            regs = np.packbits(
-                np.pad(bits.reshape(len(sel), m, 6), ((0, 0), (0, 0), (0, 2))),
-                axis=2, bitorder="little",
-            ).reshape(len(sel), m)
-        _fold_rows(out, rows[sel], regs)
+        step = len(sel) if code == 0 else max(1, _UNPACK_BYTES // (9 * m))
+        for lo in range(0, len(sel), step):
+            part = sel[lo : lo + step]
+            regs = [data[a : a + width] for a in body[part].tolist()]
+            if code == 2:
+                regs = _unpack6(np.stack(regs), m)
+            for r, reg in zip(rows[part].tolist(), regs):
+                if filled[r]:
+                    np.maximum(out[r], reg, out=out[r])
+                else:
+                    out[r], filled[r] = reg, True
     for code, count_dtype, idx_dtype in ((1, "<u4", "<u4"), (3, "<u8", "<i8")):
         sel = np.flatnonzero(mode == code)
         if not len(sel):

@@ -433,28 +433,35 @@ def test_time_rollup_multi_key_byte_identical_across_batches(spark):
 
 
 def test_keyed_build_and_merge_past_the_matrix_bound(tiny_pdf, monkeypatch):
-    """A task whose keys outgrow the register-matrix bound moves them to
-    per-key sketches mid-build, and a merge batch with more runs than the
-    bound holds is folded one matrix at a time: both give the bytes of the
-    unbounded path (bound shrunk to 3 keys of p=10 registers here)."""
+    """A task whose keys outgrow the register-matrix bound spreads them
+    over several matrices (batches whose keys span matrices included), and
+    a merge batch with more runs than the bound holds is folded one matrix
+    at a time: both give the bytes of the unbounded path (bound shrunk to 3
+    keys of p=10 registers here), for token and string values."""
     import pyarrow as pa
 
     import sketchlib.agg as A
 
-    sub = tiny_pdf.head(400)
-    # 2-row batches: the first keys fit the bound, later ones outgrow it
-    batches = pa.Table.from_pandas(sub[["source", "tokens"]], preserve_index=False).to_batches(
-        max_chunksize=2
-    )
+    sub = tiny_pdf.head(400).assign(word=lambda d: d["tokens"].map(lambda t: f"w{t[0] % 50}"))
+    assert len(set(sub["source"])) > 3
+    table = pa.Table.from_pandas(sub[["source", "tokens", "word"]], preserve_index=False)
+    for value_col, kind in (("tokens", "tokens"), ("word", "string")):
+        agg = HllAggregator(p=10, key_cols=["source"], value_col=value_col, value_kind=kind)
+        # 2-row batches: the first keys fit the bound, later ones outgrow
+        # it; 7-row batches: one batch's keys span matrices
+        for size in (2, 7):
+            monkeypatch.setattr(A, "_MATRIX_BYTES", 64 << 20)
+            build = lambda: list(agg._make_build_fn()(iter(table.to_batches(max_chunksize=size))))  # noqa: E731
+            unbounded = pa.Table.from_batches(build())
+            monkeypatch.setattr(A, "_MATRIX_BYTES", 3 << 10)
+            assert pa.Table.from_batches(build()).to_pylist() == unbounded.to_pylist(), (kind, size)
     agg = HllAggregator(p=10, key_cols=["source"])
-    unbounded = pa.Table.from_batches(list(agg._make_build_fn()(iter(batches))))
-    blobs = pa.array([HllSketch.empty(10).to_bytes()] + unbounded.column("sketch").to_pylist())
+    batches = table.to_batches(max_chunksize=2)
+    bounded = pa.Table.from_batches(list(agg._make_build_fn()(iter(batches))))
+    blobs = pa.array([HllSketch.empty(10).to_bytes()] + bounded.column("sketch").to_pylist())
     starts = np.array([0, 1, 2, 4, 5, 9])
     merged = agg._merged_runs(blobs, starts, None)
-    monkeypatch.setattr(A, "_MATRIX_BYTES", 3 << 10)
-    bounded = pa.Table.from_batches(list(agg._make_build_fn()(iter(batches))))
-    assert len(set(sub["source"])) > 3
-    assert bounded.to_pylist() == unbounded.to_pylist()
+    monkeypatch.setattr(A, "_MATRIX_BYTES", 64 << 20)
     assert agg._merged_runs(blobs, starts, None).to_pylist() == merged.to_pylist()
     for r in bounded.to_pylist():
         direct = HllSketch(p=10)
