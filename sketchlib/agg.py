@@ -41,6 +41,7 @@ import pyarrow.parquet as papq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
 
 from .bloom import BloomFilter
 from .cms import CountMinSketch
@@ -225,19 +226,75 @@ def _group_slices(values, codes: np.ndarray, n_groups: int) -> list:
     return [grouped[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
 
 
-def enumerate_shards(path: str) -> list[tuple[str, int]]:
-    """(file, row_group) work units for a parquet table — the lineage grain.
+def enumerate_shards(source: str | pads.Dataset) -> list[tuple[str, int]]:
+    """(file, row_group) work units for a parquet table (a path, or the
+    pyarrow dataset already open on it) — the lineage grain.
 
     Zero-row row groups are skipped: pyarrow writes an empty table as one,
     it builds no partial row, and a checkpoint would wait for it forever.
     """
+    if isinstance(source, str):
+        source = pads.dataset(source, format="parquet")
     shards = []
-    for frag in pads.dataset(path, format="parquet").get_fragments():
+    for frag in source.get_fragments():
         md = frag.metadata
         shards.extend(
             (frag.path, rg) for rg in range(md.num_row_groups) if md.row_group(rg).num_rows
         )
     return shards
+
+
+def _jvm_arrow_type(t: pa.DataType) -> pa.DataType:
+    """The Arrow type Spark itself writes for the Spark type of ``t``, when
+    the JVM reads ``t`` as that type: large strings and binaries as the
+    plain ones, a timestamp in any zone as one in UTC."""
+    if pa.types.is_large_string(t):
+        return pa.string()
+    if pa.types.is_large_binary(t):
+        return pa.binary()
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return pa.timestamp(t.unit, tz="UTC")
+    return t
+
+
+def _task_key_field(name: str, t: pa.DataType) -> T.StructField:
+    """The partial-schema field of key column ``name`` as the direct-parquet
+    task emits it: the Arrow type the file yields (a dictionary decoded to
+    its value type), nullable, mapped as pyspark maps Arrow to Spark.
+
+    Spark reads a task's Arrow column back only in the Arrow form it would
+    write for that Spark type itself (``_jvm_arrow_type``). Any other type
+    raises here, on the driver, naming the column: a timestamp Spark wrote
+    as INT96 (pyarrow reads it as ``timestamp[ns]``), other non-microsecond
+    timestamps, unsigned ints, fixed-size binary. In the executor it would
+    fail as UNSUPPORTED_ARROWTYPE."""
+    if pa.types.is_dictionary(t):
+        t = t.value_type
+    try:
+        spark_type = from_arrow_type(t, prefer_timestamp_ntz=True)
+        readable = to_arrow_type(spark_type) == _jvm_arrow_type(t)
+    except TypeError:  # pyspark maps no Spark type to it (PySparkTypeError)
+        readable = False
+    if not readable:
+        raise ValueError(
+            f"key column {name!r} has Arrow type {t}, which a partial row cannot "
+            f"carry to Spark; cast it in the parquet files, or sketch "
+            f"spark.read.parquet(...) through the DataFrame path"
+        )
+    return T.StructField(name, spark_type, True)
+
+
+def _decoded(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """``batch`` with every dictionary column decoded to its value type.
+    pyarrow restores a dictionary column from the Arrow schema a file
+    stores; a batch's dictionary may hold values no row of the batch has,
+    and neither the key grouping nor Spark's Arrow reader takes it."""
+    if not any(pa.types.is_dictionary(t) for t in batch.schema.types):
+        return batch
+    return pa.RecordBatch.from_arrays(
+        [c.dictionary_decode() if pa.types.is_dictionary(c.type) else c for c in batch.columns],
+        names=batch.schema.names,
+    )
 
 
 def shard_id(file: str, rg: int) -> str:
@@ -502,7 +559,8 @@ class SketchAggregator:
         are exactly the rows ``io.CheckpointedBuild`` appends, and
         ``merged(is_partials=True)`` ignores the extra columns.
         """
-        files = pads.dataset(path, format="parquet").files
+        dataset = pads.dataset(path, format="parquet")
+        files = dataset.files
         if not files:
             raise ValueError(f"no parquet files under {path}")
         # Shard granularity: row groups give the best load balance, but
@@ -511,20 +569,33 @@ class SketchAggregator:
         # threshold, plan by whole file (rg = -1 -> the task iterates that
         # file's row groups itself; it opens the footer anyway to read).
         if len(files) <= _RG_PLAN_MAX_FILES:
-            shards = enumerate_shards(path)
+            shards = enumerate_shards(dataset)
         else:
             shards = [(f, -1) for f in files]
-        return self._scan_shards(spark, path, shards, parallelism, per_shard)
+        return self._scan_shards(spark, dataset.schema, shards, parallelism, per_shard)
 
     def _scan_shards(
-        self, spark, path: str, shards: list, parallelism: int | None, per_shard: bool
+        self, spark, schema: pa.Schema, shards: list, parallelism: int | None, per_shard: bool
     ) -> DataFrame:
         """The one direct-parquet build: ``(file, row_group)`` shards dealt
         over ``_shard_table`` tasks, each reading its row groups with pyarrow
         into ``_make_build_fn``. One partial per task, or with ``per_shard``
         one per row group tagged with ``shard_id`` and ``wall_secs`` (the
-        seconds spent reading and sketching it)."""
+        seconds spent reading and sketching it).
+
+        ``schema`` is the table's Arrow schema, as the pyarrow dataset the
+        caller planned the shards from read it from a parquet footer. The
+        partial schema is derived from it (``_task_key_field`` per key
+        column, then the count and lineage fields): these are the types the
+        tasks yield, so Spark never runs a schema-inference job for the
+        input, and a key column Spark could not read back fails here, before
+        any job runs."""
         cols = self.key_cols + [self.value_col]
+        missing = [c for c in cols if c not in schema.names]
+        if missing:
+            raise ValueError(f"columns {missing} are not in the parquet files")
+        fields = [_task_key_field(k, schema.field(k).type) for k in self.key_cols]
+        fields += _COUNT_FIELDS + (_LINEAGE_FIELDS if per_shard else [])
         batch_rows = self._default_batch_rows()
         build = self._make_build_fn()
         source, groups = _shard_table(spark, shards, parallelism)
@@ -540,7 +611,8 @@ class SketchAggregator:
                         yield f, pf, row_groups
 
         def read(pf, row_groups):
-            return pf.iter_batches(batch_size=batch_rows, row_groups=row_groups, columns=cols)
+            batches = pf.iter_batches(batch_size=batch_rows, row_groups=row_groups, columns=cols)
+            return map(_decoded, batches)
 
         def scan_and_build(batches):
             if not per_shard:
@@ -560,12 +632,7 @@ class SketchAggregator:
                             names=out.schema.names + ["shard_id", "wall_secs"],
                         )
 
-        # partial schema: map the parquet arrow schema to Spark types via a
-        # zero-row read on the driver (footer only)
-        schema = self._partial_schema(spark.read.parquet(path).select(*cols))
-        if per_shard:
-            schema = T.StructType(schema.fields + _LINEAGE_FIELDS)
-        return source.mapInArrow(scan_and_build, schema)
+        return source.mapInArrow(scan_and_build, T.StructType(fields))
 
     # -- tree merge -------------------------------------------------------------
 

@@ -16,18 +16,36 @@ Merge associativity means a resumed run produces byte-identical sketches to
 an uninterrupted one (tested). Storage is parquet by default; the layout is
 Iceberg-ready (append-only partials keyed by shard) — swap the writer for
 ``df.writeTo(tbl).append()`` when an Iceberg catalog is configured.
+
+No read here asks Spark to infer a schema it can be told (inference is one
+Spark job per read). The shard build derives its partial schema from the
+input's parquet footer (``SketchAggregator._scan_shards``). The resume check
+reads the checkpoint with the one column it needs declared
+(``shard_id STRING``). The answers (``partials``, ``merged``, ``metrics``)
+read a local checkpoint directory with the StructType Spark wrote into its
+first part file's footer. A scheme-qualified checkpoint path (hdfs://,
+s3a://, file:) cannot be listed from the driver's file system, so Spark
+still infers its schema; an Iceberg table's schema is in the catalog.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as papq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .agg import SketchAggregator, enumerate_shards, shard_id
+
+# the parquet footer key under which Spark stores the StructType it wrote
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 # reader error conditions that mean "no partial committed yet"
 _NOTHING_CHECKPOINTED = frozenset(
@@ -116,8 +134,35 @@ def append_partials(df: DataFrame, target: str, spark: SparkSession) -> str:
     return "parquet"
 
 
-def read_partials(spark: SparkSession, target: str) -> DataFrame:
+def _written_schema(path: str) -> T.StructType | None:
+    """The StructType Spark wrote into the footer of the first part file of
+    the local directory ``path`` (the file Spark's own inference reads), or
+    None when there is none to read: no part file, a footer without Spark's
+    row metadata, or one pyarrow cannot parse (a corrupt file: Spark's
+    inference then raises its own error)."""
+    names = sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+    files = [f for f in (os.path.join(path, n) for n in names) if os.path.isfile(f)]
+    if not files:
+        return None
+    try:
+        written = (papq.read_schema(files[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+        return None if written is None else T.StructType.fromJson(json.loads(written))
+    except (pa.ArrowException, OSError, ValueError):
+        return None
+
+
+def read_partials(
+    spark: SparkSession, target: str, schema: T.StructType | str | None = None
+) -> DataFrame:
     """Read checkpoint partials back from either sink kind.
+
+    A path target is read with ``schema`` when given (a DDL string or
+    StructType; columns it leaves out are not read), else, for a local
+    directory, with the schema Spark wrote into its first part file
+    (``_written_schema``). Either way Spark runs no schema-inference job.
+    A scheme-qualified target (hdfs://, s3a://, file:) cannot be listed
+    here, so without ``schema`` Spark infers it, one job. A table
+    identifier reads through the catalog, which holds its schema.
 
     A path target that doesn't exist yet (first run of a fresh checkpoint)
     raises FileNotFoundError client-side INSTEAD of letting Spark probe it —
@@ -129,9 +174,13 @@ def read_partials(spark: SparkSession, target: str) -> DataFrame:
     # only LOCAL paths get the client-side existence probe — scheme-qualified
     # targets (hdfs://, s3a://, file:/) can't be os.path-checked and must go
     # straight to the Spark reader (which raises its own error if absent)
-    if "://" not in target and not target.startswith("file:") and not os.path.isdir(target):
-        raise FileNotFoundError(f"checkpoint partials path {target!r} does not exist yet")
-    return spark.read.parquet(target)
+    if "://" not in target and not target.startswith("file:"):
+        if not os.path.isdir(target):
+            raise FileNotFoundError(f"checkpoint partials path {target!r} does not exist yet")
+        if schema is None:
+            schema = _written_schema(target)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(target)
 
 
 class CheckpointedBuild:
@@ -172,7 +221,8 @@ class CheckpointedBuild:
         (a corrupt file, an unreadable store) raises — swallowing it would
         make :meth:`run` re-sketch every shard and append duplicates."""
         try:
-            rows = read_partials(spark, self.ckpt_dir).select("shard_id").distinct().collect()
+            done = read_partials(spark, self.ckpt_dir, "shard_id STRING")
+            rows = done.select("shard_id").distinct().collect()
         except FileNotFoundError:
             return set()
         except AnalysisException as e:
@@ -181,7 +231,9 @@ class CheckpointedBuild:
             return set()
         return {r["shard_id"] for r in rows}
 
-    def pending_shards(self, spark: SparkSession, input_path: str) -> list[tuple[str, int]]:
+    def pending_shards(
+        self, spark: SparkSession, input_path: str | pads.Dataset
+    ) -> list[tuple[str, int]]:
         done = self.completed_shards(spark)
         return [s for s in enumerate_shards(input_path) if shard_id(*s) not in done]
 
@@ -198,10 +250,11 @@ class CheckpointedBuild:
 
         The rows appended are ``partials_from_parquet(per_shard=True)``'s,
         restricted to the pending shards."""
-        pending = self.pending_shards(spark, input_path)[:max_shards]
+        dataset = pads.dataset(input_path, format="parquet")
+        pending = self.pending_shards(spark, dataset)[:max_shards]
         if not pending:
             return 0
-        partials = self.agg._scan_shards(spark, input_path, pending, parallelism, per_shard=True)
+        partials = self.agg._scan_shards(spark, dataset.schema, pending, parallelism, per_shard=True)
         append_partials(partials, self.ckpt_dir, spark)
         return len(pending)
 

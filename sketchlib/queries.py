@@ -8,6 +8,7 @@ oracles. Column aliases here are load-bearing: they must match the oracle SQL.
 
 from __future__ import annotations
 
+import atexit
 import shutil
 import uuid
 from contextlib import contextmanager
@@ -2092,8 +2093,16 @@ def streaming_hll_parity(spark: SparkSession, sf_dir: str, p: int = 12) -> DataF
 # time (the same contract bench.py applies to the sequences parquet): the
 # copies are pure deterministic functions of the immutable input table, so
 # they are built once per (sf_dir, variant) and reused; each query run still
-# gets its own fresh stream checkpoint.
+# gets its own fresh stream checkpoint. The process owns the copies: they are
+# removed when it exits.
 _STREAM_SRC_CACHE: dict = {}
+
+
+@atexit.register
+def _remove_stream_sources() -> None:
+    for src_dir in _STREAM_SRC_CACHE.values():
+        shutil.rmtree(src_dir, ignore_errors=True)
+    _STREAM_SRC_CACHE.clear()
 
 
 def _timeordered_events_dir(spark: SparkSession, sf_dir: str, sentinels: int) -> str:

@@ -154,6 +154,32 @@ def test_corrupt_checkpoint_raises_instead_of_reappending(spark, sharded_path, t
         ckpt.run(spark, sharded_path)
 
 
+def test_corrupt_first_part_file_raises_instead_of_reappending(spark, sharded_path, tmp_path):
+    """A garbage part file that sorts before every real one (the file whose
+    footer a schema would be read from) fails the resume too, and nothing
+    is appended; the answers raise rather than read around it."""
+    import os
+
+    from sketchlib.agg import CmsAggregator
+
+    agg = CmsAggregator(width_log2=8, key_cols=["source"])
+    ckpt = CheckpointedBuild(agg, str(tmp_path), run_id="bad-first")
+    assert ckpt.run(spark, sharded_path) == 8
+    garbage = f"{ckpt.ckpt_dir}/part-0-garbage.parquet"
+    with open(garbage, "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    files = sorted(f for f in os.listdir(ckpt.ckpt_dir) if not f.startswith(("_", ".")))
+    assert files[0] == os.path.basename(garbage)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        ckpt.run(spark, sharded_path)
+    with pytest.raises(Exception):
+        ckpt.merged(spark).collect()
+    assert sorted(f for f in os.listdir(ckpt.ckpt_dir) if not f.startswith(("_", "."))) == files
+    os.remove(garbage)
+    assert len(ckpt.completed_shards(spark)) == 8
+    assert ckpt.partials(spark).groupBy("shard_id", "source").count().where("count > 1").count() == 0
+
+
 def test_empty_checkpoint_dir_reads_as_nothing_done(spark, sharded_path, tmp_path):
     """The empty output directory a failed first append leaves behind holds
     no partials: resuming sketches every shard, exactly once."""

@@ -56,6 +56,7 @@ def test_load_table_unconditional_tier(spark, tmp_path, monkeypatch):
 
 
 def test_scratch_dir_fresh_and_overridable(tmp_path, monkeypatch):
+    monkeypatch.setenv("SKETCHLIB_SCRATCH", str(tmp_path / "root"))
     a, b = scratch_dir(prefix="t_"), scratch_dir(prefix="t_")
     assert a != b and os.path.isdir(a) and os.path.isdir(b)
     probe = os.path.join(a, "probe")
@@ -77,18 +78,25 @@ def test_scratch_dir_tmpfs_only_under_a_local_master(monkeypatch):
     monkeypatch.delenv("SKETCHLIB_SCRATCH", raising=False)
     tmpfs = os.path.isdir("/dev/shm")
 
+    made = []  # the default roots are real: remove what the test makes there
+
     def with_master(master):
         session = None if master is None else SimpleNamespace(
             sparkContext=SimpleNamespace(master=master)
         )
         monkeypatch.setattr(SparkSession, "getActiveSession", lambda: session)
-        return scratch_dir(prefix="t_")
+        made.append(scratch_dir(prefix="t_"))
+        return made[-1]
 
-    for master in (None, "local[4]", "local"):
-        assert with_master(master).startswith("/dev/shm/") == tmpfs, master
-    cluster = with_master("yarn")
-    assert not cluster.startswith("/dev/shm/")
-    assert os.path.dirname(cluster) == tempfile.gettempdir()
+    try:
+        for master in (None, "local[4]", "local"):
+            assert with_master(master).startswith("/dev/shm/") == tmpfs, master
+        cluster = with_master("yarn")
+        assert not cluster.startswith("/dev/shm/")
+        assert os.path.dirname(cluster) == tempfile.gettempdir()
+    finally:
+        for d in made:
+            os.rmdir(d)
 
 
 def test_queries_remove_their_scratch_dirs(spark, tmp_path, monkeypatch):
@@ -104,3 +112,28 @@ def test_queries_remove_their_scratch_dirs(spark, tmp_path, monkeypatch):
         rows = getattr(Q, name)(spark, SF).collect()
         assert rows, name
         assert os.listdir(tmp_path) == [], name
+
+
+def test_stream_sources_removed_at_exit(tmp_path):
+    """The cached stream-source copies live as long as the process that
+    made them: its exit hook removes them, files and all."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sketchlib.queries as Q\n"
+        "from sketchlib.io import scratch_dir\n"
+        "d = scratch_dir(prefix='sketchlib_stream_src_')\n"
+        "open(d + '/part-0.parquet', 'w').write('x')\n"
+        "Q._STREAM_SRC_CACHE[('sf', 0)] = d\n"
+        "print(d)\n"
+    )
+    env = {**os.environ, "SKETCHLIB_SCRATCH": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env, capture_output=True, text=True, check=True
+    )
+    src_dir = out.stdout.strip()
+    assert src_dir.startswith(str(tmp_path)), out
+    assert not os.path.exists(src_dir)
+    assert os.listdir(tmp_path) == []

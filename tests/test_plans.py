@@ -371,3 +371,40 @@ def test_parquet_and_checkpoint_partials_read_a_range_shard_table(
         assert "Range" in plan and "Scan ExistingRDD" not in plan, plan
         assert "MapInArrow" in plan and "Exchange" not in plan, plan
         assert df.rdd.getNumPartitions() == n_tasks
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs ``action`` launches, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sketch_builds_launch_no_schema_inference_job(spark, tmp_path):
+    """The direct-parquet build and the checkpoint reads tell Spark the
+    schema instead of asking it to infer one (a one-task parquet job per
+    read): a fresh checkpoint build is its one append job, planning the
+    checkpoint's answers runs no job, collecting them runs the merge's jobs
+    alone, and a direct-parquet partial stage is one job."""
+    from sketchlib.io import CheckpointedBuild
+
+    path = _row_group_layout(tmp_path, 2, 3)
+    agg = HllAggregator(p=10, key_cols=["source"])
+    ckpt = CheckpointedBuild(agg, str(tmp_path / "ckpt"))
+    assert _jobs(spark, lambda: ckpt.run(spark, path)) == 1
+
+    assert _jobs(spark, lambda: ckpt.merged(spark)) == 0
+    parts = spark.read.parquet(ckpt.ckpt_dir).drop("shard_id", "wall_secs")
+    merge_jobs = _jobs(spark, lambda: agg.merged(parts, is_partials=True).collect())
+    assert _jobs(spark, lambda: ckpt.merged(spark).collect()) == merge_jobs
+
+    noop = lambda df: df.write.format("noop").mode("overwrite").save()  # noqa: E731
+    assert _jobs(spark, lambda: noop(agg.partials_from_parquet(spark, path))) == 1
